@@ -2401,11 +2401,11 @@ def q_extract_pdf_encrypted(spark, sf_dir):
 
 
 def q_multimodal_decode_fake(spark, sf_dir):
-    """Stubbed pixel decode (fake=True deterministic stand-in; real decode
-    raises NotImplementedError — no image libs in this container)."""
+    """Stubbed pixel decode: decode_image's deterministic stand-in (IMG1
+    header dims + payload-byte gray stats)."""
     from pdf_extraction_spark.operators.multimodal import decode_image
 
-    out = decode_image(_synth_media(spark, sf_dir), "media_id", "blob", fake=True)
+    out = decode_image(_synth_media(spark, sf_dir), "media_id", "blob")
     return out.select(
         "media_id",
         F.col("width").cast("long").alias("width"),

@@ -1,6 +1,6 @@
 """Universal document-text dispatch: sniff the content type from magic
-bytes and route each blob to the matching in-repo extractor, in ONE
-Arrow-batched pass.
+bytes and route each blob to the matching in-repo extractor, one
+document per row.
 
 A real crawl/archive corpus is mixed — a tar of court records holds
 PDFs next to DOCX next to HTML next to plain text — and the operator a
@@ -30,19 +30,13 @@ Dispatch table (first match wins):
 
 Per-document containment (F18): an extractor raising on one blob yields
 (doc_type="error", text=NULL, error=<message>) for that row only.
-
-Scale shape: scan -> rebalance_if_undersplit -> MapInPandas -> project;
-no shuffle on well-split inputs, embarrassingly parallel.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 
-from pdf_extraction_spark.operators.balance import rebalance_if_undersplit
+from pdf_extraction_spark.operators.balance import map_documents
 
 _IMAGE_MAGIC = [
     (b"\x89PNG\r\n\x1a\n", "png"),
@@ -115,7 +109,12 @@ def sniff_doc_type(raw: bytes) -> str:
             return t
     if raw[:4] == b"RIFF":
         return "wav" if raw[8:12] == b"WAVE" else "riff"
-    if raw[4:8] == b"ftyp":  # ISO-BMFF: box size then 'ftyp'
+    if (  # ISO-BMFF: a box size that fits the blob, 'ftyp', printable brand
+        raw[4:8] == b"ftyp"
+        and len(raw) >= 12
+        and 8 <= int.from_bytes(raw[:4], "big") <= len(raw)
+        and all(0x20 <= c <= 0x7E for c in raw[8:12])
+    ):
         return "mp4"
     if len(raw) >= 2 and raw[0] == 0xFF and (raw[1] & 0xFE) == 0xFA:
         return "mp3"  # bare MPEG-1 Layer III frame sync (no ID3 tag);
@@ -369,6 +368,15 @@ def _refine_json(text: str) -> tuple[str, str | None] | None:
 ANY_TEXT_SCHEMA = "doc_id long, doc_type string, text string, error string"
 
 
+def _any_text_row(doc_id, raw):
+    try:
+        t, text = extract_any(bytes(raw))
+        err = None
+    except Exception as exc:  # containment: one bad doc != job
+        t, text, err = "error", None, f"{type(exc).__name__}: {exc}"
+    return int(doc_id), t, text, err
+
+
 def extract_any_text(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -385,29 +393,8 @@ def extract_any_text(
     re-scan the corpus and shuffle both sides; at 100 TB that doubles
     the job."""
     extra = list(passthrough or [])
-
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {"doc_id": []}
-            for c in extra:
-                out[c] = []
-            out.update({"doc_type": [], "text": [], "error": []})
-            for i, (doc_id, raw) in enumerate(zip(pdf[id_col], pdf[content_col])):
-                try:
-                    t, text = extract_any(bytes(raw))
-                    err = None
-                except Exception as exc:  # containment: one bad doc != job
-                    t, text, err = "error", None, f"{type(exc).__name__}: {exc}"
-                out["doc_id"].append(int(doc_id))
-                for c in extra:
-                    out[c].append(pdf[c].iloc[i])
-                out["doc_type"].append(t)
-                out["text"].append(text)
-                out["error"].append(err)
-            yield pd.DataFrame(out)
-
     schema = "doc_id long, " + "".join(f"{c} string, " for c in extra) + (
         "doc_type string, text string, error string"
     )
-    src = rebalance_if_undersplit(df.select(id_col, *extra, content_col))
-    return src.mapInPandas(_batches, schema=schema)
+    src = df.select(id_col, *extra, content_col)
+    return map_documents(src, _any_text_row, schema, passthrough=extra)

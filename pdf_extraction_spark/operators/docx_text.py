@@ -32,12 +32,10 @@ import io
 import re
 import zipfile
 import xml.etree.ElementTree as ET
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from pdf_extraction_spark.operators.balance import rebalance_if_undersplit
+from pdf_extraction_spark.operators.balance import map_documents
 
 _W_NS = "http://schemas.openxmlformats.org/wordprocessingml/2006/main"
 
@@ -178,33 +176,27 @@ DOCX_SCHEMA = (
 )
 
 
-def _docx_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = {
-            "doc_id": [],
-            "n_paragraphs": [],
-            "para1_chars": [],
-            "n_chars": [],
-            "extracted_text": [],
-        }
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            t = text if isinstance(text, str) else ""
-            half = len(t) // 2
-            blob = build_docx([t[:half], t[half:]])
-            paras = extract_docx_paragraphs(blob) or []
-            out["doc_id"].append(int(doc_id))
-            out["n_paragraphs"].append(len(paras))
-            out["para1_chars"].append(len(paras[0]) if paras else 0)
-            out["n_chars"].append(sum(len(p) for p in paras))
-            out["extracted_text"].append("".join(paras))
-        yield pd.DataFrame(out)
+def split_roundtrip(
+    df: DataFrame, id_col: str, text_col: str, build, extract, schema: str
+) -> DataFrame:
+    """The office-format round trip: each text split in half ->
+    ``build`` (two paragraphs/chapters/slides) -> real container bytes
+    -> ``extract`` -> (doc_id, n_parts, part1_chars, n_chars,
+    extracted_text) under ``schema``."""
 
+    def row(text):
+        t = text if isinstance(text, str) else ""
+        half = len(t) // 2
+        parts = extract(build([t[:half], t[half:]])) or []
+        return len(parts), len(parts[0]) if parts else 0, sum(map(len, parts)), "".join(parts)
 
-def extract_docx_roundtrip(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """text -> real .docx bytes -> stdlib-zip + XML extraction -> text,
-    one Arrow-batched mapInPandas pass (the PDF round trip's shape)."""
     src = df.select(
         F.col(id_col).cast("long").alias("doc_id"),
         F.col(text_col).cast("string").alias("text"),
     )
-    return rebalance_if_undersplit(src).mapInPandas(_docx_batches, schema=DOCX_SCHEMA)
+    return map_documents(src, row, schema, passthrough=("doc_id",))
+
+
+def extract_docx_roundtrip(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """text -> real .docx bytes -> stdlib-zip + XML extraction -> text."""
+    return split_roundtrip(df, id_col, text_col, build_docx, extract_docx_paragraphs, DOCX_SCHEMA)

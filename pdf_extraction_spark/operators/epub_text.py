@@ -24,14 +24,10 @@ import posixpath
 import re
 import zipfile
 import xml.etree.ElementTree as ET
-from typing import Iterator
 
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
-from pdf_extraction_spark.operators.docx_text import _esc, sanitize_for_xml
-
-from pdf_extraction_spark.operators.balance import rebalance_if_undersplit
+from pdf_extraction_spark.operators.docx_text import _esc, sanitize_for_xml, split_roundtrip
 
 _CONTAINER = (
     '<?xml version="1.0"?>'
@@ -182,33 +178,6 @@ EPUB_SCHEMA = (
 )
 
 
-def _epub_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = {
-            "doc_id": [],
-            "n_chapters": [],
-            "chap1_chars": [],
-            "n_chars": [],
-            "extracted_text": [],
-        }
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            t = text if isinstance(text, str) else ""
-            half = len(t) // 2
-            blob = build_epub([t[:half], t[half:]])
-            chaps = extract_epub_chapters(blob) or []
-            out["doc_id"].append(int(doc_id))
-            out["n_chapters"].append(len(chaps))
-            out["chap1_chars"].append(len(chaps[0]) if chaps else 0)
-            out["n_chars"].append(sum(len(c) for c in chaps))
-            out["extracted_text"].append("".join(chaps))
-        yield pd.DataFrame(out)
-
-
 def extract_epub_roundtrip(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """text -> real .epub bytes -> container/OPF/spine resolution ->
-    text, one Arrow-batched mapInPandas pass."""
-    src = df.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        F.col(text_col).cast("string").alias("text"),
-    )
-    return rebalance_if_undersplit(src).mapInPandas(_epub_batches, schema=EPUB_SCHEMA)
+    """text -> real .epub bytes -> container/OPF/spine resolution -> text."""
+    return split_roundtrip(df, id_col, text_col, build_epub, extract_epub_chapters, EPUB_SCHEMA)

@@ -1,5 +1,5 @@
-"""Spark-side extraction operator: Arrow-batched ``mapInPandas`` around the
-pure-Python kernels (pdf_extraction_spark.kernel).
+"""Spark-side extraction operator: the pure-Python kernels
+(pdf_extraction_spark.kernel) behind ``balance.map_documents``.
 
 Design (SURVEY §1.4, §3): one row = one document end-to-end through the
 UDF — pages/lines of a document never cross a partition boundary, because
@@ -13,9 +13,8 @@ text-layer columns.
 
 from __future__ import annotations
 
-from typing import Iterator
+import functools
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -26,7 +25,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from pdf_extraction_spark.operators.balance import rebalance_if_undersplit
+from pdf_extraction_spark.kernel import extract_document, extract_fields_direct
+from pdf_extraction_spark.operators.balance import map_documents
 
 FIELD_PAIR = StructType(
     [StructField("field", StringType()), StructField("value", StringType())]
@@ -50,55 +50,25 @@ EXTRACT_SCHEMA = StructType(
     ]
 )
 
-_COLS = ["url", "doc_kind", "extracted_text", "fields", "page_fields", "spans", "error"]
-
-
 def _pairs(items):
     if items is None:
         return None
     return [{"field": f, "value": v} for f, v in items]
 
 
-def _extract_batches(batches: Iterator[pd.DataFrame], max_doc_chars=None) -> Iterator[pd.DataFrame]:
-    # import inside the worker so the kernel module pickles by name
-    from pdf_extraction_spark.kernel import extract_document
-
-    for pdf in batches:
-        # columnar accumulation: building a DataFrame from per-column lists
-        # is several times faster than from a list of per-row dicts, and
-        # this is the hottest loop of the flagship metric (docs/sec)
-        c_url, c_kind, c_text, c_fields, c_pages, c_spans, c_err = (
-            [], [], [], [], [], [], []
-        )
-        for url, html, text in zip(pdf["url"], pdf["html"], pdf["text"]):
-            url, kind, etext, fields, page_fields, spans, err = extract_document(
-                url, html if html is not None else None, text, max_doc_chars
-            )
-            c_url.append(url)
-            c_kind.append(kind)
-            c_text.append(etext)
-            c_fields.append(_pairs(fields))
-            c_pages.append(
-                None if page_fields is None else [_pairs(p) for p in page_fields]
-            )
-            c_spans.append(
-                None
-                if spans is None
-                else [{"label": l, "start": s, "end": e} for l, s, e in spans]
-            )
-            c_err.append(err)
-        yield pd.DataFrame(
-            {
-                "url": c_url,
-                "doc_kind": c_kind,
-                "extracted_text": c_text,
-                "fields": c_fields,
-                "page_fields": c_pages,
-                "spans": c_spans,
-                "error": c_err,
-            },
-            columns=_COLS,
-        )
+def _extract_row(url, html, text, max_doc_chars=None):
+    url, kind, etext, fields, page_fields, spans, err = extract_document(
+        url, html, text, max_doc_chars
+    )
+    return (
+        url,
+        kind,
+        etext,
+        _pairs(fields),
+        None if page_fields is None else [_pairs(p) for p in page_fields],
+        None if spans is None else [{"label": l, "start": s, "end": e} for l, s, e in spans],
+        err,
+    )
 
 
 def extract_documents(pages: DataFrame, max_doc_chars: int | None = None) -> DataFrame:
@@ -109,12 +79,8 @@ def extract_documents(pages: DataFrame, max_doc_chars: int | None = None) -> Dat
     ``max_doc_chars``: per-document input-size cap; oversize documents land
     on the ``error`` column (F18) instead of stalling a worker.
     """
-    import functools
-
-    fn = functools.partial(_extract_batches, max_doc_chars=max_doc_chars)
-    return rebalance_if_undersplit(pages.select("url", "html", "text")).mapInPandas(
-        fn, schema=EXTRACT_SCHEMA
-    )
+    fn = functools.partial(_extract_row, max_doc_chars=max_doc_chars)
+    return map_documents(pages.select("url", "html", "text"), fn, EXTRACT_SCHEMA)
 
 
 KV_LONG_SCHEMA = StructType(
@@ -127,23 +93,9 @@ KV_LONG_SCHEMA = StructType(
 )
 
 
-def _kv_long_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from pdf_extraction_spark.kernel import extract_fields_direct
-
-    for pdf in batches:
-        ids, fields, values, ords = [], [], [], []
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            pairs = extract_fields_direct(text or "")
-            if not pairs:
-                continue
-            for i, (f, v) in enumerate(pairs):
-                ids.append(doc_id)
-                fields.append(f)
-                values.append(v)
-                ords.append(i)
-        yield pd.DataFrame(
-            {"doc_id": ids, "field": fields, "value": values, "ord": ords}
-        )
+def _kv_long_rows(doc_id, text):
+    pairs = extract_fields_direct(text or "") or ()
+    return [(doc_id, f, v, i) for i, (f, v) in enumerate(pairs)]
 
 
 def extract_fields_long(df: DataFrame, id_col, text_col) -> DataFrame:
@@ -156,7 +108,7 @@ def extract_fields_long(df: DataFrame, id_col, text_col) -> DataFrame:
     src = df.select(
         F.col(id_col).cast("string").alias("doc_id"), F.col(text_col).alias("text")
     )
-    return rebalance_if_undersplit(src).mapInPandas(_kv_long_batches, schema=KV_LONG_SCHEMA)
+    return map_documents(src, _kv_long_rows, KV_LONG_SCHEMA)
 
 
 def salted_repartition(df: DataFrame, num_partitions: int, salt_buckets: int = 0) -> DataFrame:

@@ -17,22 +17,20 @@ PNG-inside-ICO dispatch in a single value hash.
 
 from __future__ import annotations
 
-import hashlib
 import struct
-from typing import Iterator
 
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
 from pdf_extraction_spark.operators.multimodal import (
     _PNG_SIG,
+    invalid_row,
+    map_blobs,
     parse_png,
+    synth_blobs,
     synth_png_bytes,
 )
 
-
-from pdf_extraction_spark.operators.balance import rebalance_if_undersplit
 
 def _ico_dib_dims(media_id: int) -> tuple[int, int]:
     return media_id % 5 + 4, media_id % 4 + 4
@@ -157,57 +155,27 @@ ICO_DECODE_SCHEMA = StructType(
 )
 
 
-def _ico_synth_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        yield pd.DataFrame(
-            {
-                "media_id": [int(m) for m in pdf["media_id"]],
-                "blob": [synth_ico_bytes(int(m)) for m in pdf["media_id"]],
-            }
-        )
-
-
 def synth_ico(df: DataFrame, id_col: str) -> DataFrame:
     """(media_id, blob) with a real two-entry favicon per id."""
-    src = df.select(F.col(id_col).cast("long").alias("media_id"))
-    return rebalance_if_undersplit(src).mapInPandas(_ico_synth_batches, schema="media_id long, blob binary")
+    return synth_blobs(df, id_col, synth_ico_bytes)
 
 
-def _ico_decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = {f.name: [] for f in ICO_DECODE_SCHEMA.fields}
-        for mid, blob in zip(pdf["media_id"], pdf["blob"]):
-            parsed = parse_ico(bytes(blob))
-            out["media_id"].append(int(mid))
-            if not parsed:
-                for k in out:
-                    if k not in ("media_id", "is_valid"):
-                        out[k].append(None)
-                out["is_valid"].append(0)
-                continue
-            w, h, px = parsed[0]  # the DIB entry
-            sums = [0, 0, 0, 0]
-            for p in px:
-                for c in range(4):
-                    sums[c] += p[c]
-            n = w * h
-            out["n_images"].append(len(parsed))
-            out["dib_width"].append(w)
-            out["dib_height"].append(h)
-            out["mean_r_milli"].append(sums[0] * 1000 // n)
-            out["mean_g_milli"].append(sums[1] * 1000 // n)
-            out["mean_b_milli"].append(sums[2] * 1000 // n)
-            out["mean_a_milli"].append(sums[3] * 1000 // n)
-            out["png_width"].append(parsed[1][0] if len(parsed) > 1 else None)
-            out["png_height"].append(parsed[1][1] if len(parsed) > 1 else None)
-            out["is_valid"].append(1)
-        yield pd.DataFrame(out)
+def _ico_row(blob):
+    parsed = parse_ico(bytes(blob))
+    if not parsed:
+        return invalid_row(ICO_DECODE_SCHEMA)
+    w, h, px = parsed[0]  # the DIB entry
+    n = w * h
+    png = parsed[1] if len(parsed) > 1 else (None, None)
+    return (
+        len(parsed), w, h,
+        *(sum(p[c] for p in px) * 1000 // n for c in range(4)),
+        png[0], png[1],
+        1,
+    )
 
 
 def decode_ico(df: DataFrame, id_col: str, blob_col: str) -> DataFrame:
-    """REAL favicon decode (Arrow-batched mapInPandas): directory walk
-    plus per-entry DIB or PNG-in-ICO decode."""
-    src = df.select(
-        F.col(id_col).cast("long").alias("media_id"), F.col(blob_col).alias("blob")
-    )
-    return rebalance_if_undersplit(src).mapInPandas(_ico_decode_batches, schema=ICO_DECODE_SCHEMA)
+    """REAL favicon decode: directory walk plus per-entry DIB or
+    PNG-in-ICO decode."""
+    return map_blobs(df, id_col, blob_col, _ico_row, ICO_DECODE_SCHEMA)

@@ -43,19 +43,17 @@ from __future__ import annotations
 
 import hashlib
 from functools import lru_cache
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import IntegerType, LongType, StructField, StructType
+
+from pdf_extraction_spark.operators.multimodal import invalid_row, map_blobs, synth_blobs
 
 # ---------------------------------------------------------------------------
 # DCT: 8x8 orthonormal DCT-II matrix.  M[u, x] = 0.5 * c(u) * cos((2x+1)u pi/16)
 # with c(0) = 1/sqrt(2).  M is orthogonal, so FDCT = M s M^T, IDCT = M^T S M.
 # ---------------------------------------------------------------------------
-
-from pdf_extraction_spark.operators.balance import rebalance_if_undersplit
 
 _DCT_M = np.zeros((8, 8))
 for _u in range(8):
@@ -1363,35 +1361,16 @@ JPEG_META_SCHEMA = StructType(
 )
 
 
-def _jpeg_meta_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = {f.name: [] for f in JPEG_META_SCHEMA.fields}
-        for mid, blob in zip(pdf["media_id"], pdf["blob"]):
-            meta = jpeg_dimensions(bytes(blob))
-            out["media_id"].append(int(mid))
-            if meta is None:
-                for k in ("width", "height", "channels", "progressive", "orientation"):
-                    out[k].append(None)
-                out["is_valid"].append(0)
-                continue
-            w, h, ch, prog, orient = meta
-            out["width"].append(w)
-            out["height"].append(h)
-            out["channels"].append(ch)
-            out["progressive"].append(prog)
-            out["orientation"].append(orient)
-            out["is_valid"].append(1)
-        yield pd.DataFrame(out)
+def _jpeg_meta_row(blob):
+    meta = jpeg_dimensions(bytes(blob))
+    return invalid_row(JPEG_META_SCHEMA) if meta is None else (*meta, 1)
 
 
 def probe_jpeg(df: DataFrame, id_col: str, blob_col: str) -> DataFrame:
-    """Header-only JPEG metadata (Arrow-batched mapInPandas over
-    jpeg_dimensions): no entropy decode, no IDCT — scan-local and
-    orders of magnitude cheaper than decode_jpeg."""
-    src = df.select(
-        F.col(id_col).cast("long").alias("media_id"), F.col(blob_col).alias("blob")
-    )
-    return rebalance_if_undersplit(src).mapInPandas(_jpeg_meta_batches, schema=JPEG_META_SCHEMA)
+    """Header-only JPEG metadata over jpeg_dimensions: no entropy
+    decode, no IDCT — scan-local and orders of magnitude cheaper than
+    decode_jpeg."""
+    return map_blobs(df, id_col, blob_col, _jpeg_meta_row, JPEG_META_SCHEMA)
 
 
 JPEG_DECODE_SCHEMA = StructType(
@@ -1411,37 +1390,15 @@ JPEG_DECODE_SCHEMA = StructType(
 )
 
 
-def _jpeg_synth_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        yield pd.DataFrame(
-            {
-                "media_id": [int(m) for m in pdf["media_id"]],
-                "blob": [synth_jpeg_bytes(int(m)) for m in pdf["media_id"]],
-            }
-        )
-
-
 def synth_jpeg(df: DataFrame, id_col: str) -> DataFrame:
-    """(media_id, blob) with a real baseline JPEG per id (Arrow-batched
-    mapInPandas, same shape as synth_png/synth_gif)."""
-    src = df.select(F.col(id_col).cast("long").alias("media_id"))
-    return rebalance_if_undersplit(src).mapInPandas(_jpeg_synth_batches, schema="media_id long, blob binary")
-
-
-def _jpeg_prog_synth_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        yield pd.DataFrame(
-            {
-                "media_id": [int(m) for m in pdf["media_id"]],
-                "blob": [synth_jpeg_progressive_bytes(int(m)) for m in pdf["media_id"]],
-            }
-        )
+    """(media_id, blob) with a real baseline JPEG per id (same shape as
+    synth_png/synth_gif)."""
+    return synth_blobs(df, id_col, synth_jpeg_bytes)
 
 
 def synth_jpeg_progressive(df: DataFrame, id_col: str) -> DataFrame:
     """(media_id, blob) with a real progressive (SOF2) JPEG per id."""
-    src = df.select(F.col(id_col).cast("long").alias("media_id"))
-    return rebalance_if_undersplit(src).mapInPandas(_jpeg_prog_synth_batches, schema="media_id long, blob binary")
+    return synth_blobs(df, id_col, synth_jpeg_progressive_bytes)
 
 
 def synth_jpeg_mixed_bytes(media_id: int) -> bytes:
@@ -1460,57 +1417,31 @@ def synth_jpeg_mixed_bytes(media_id: int) -> bytes:
     return encode_progressive_jpeg(img, extra_segments=exif)
 
 
-def _jpeg_mixed_synth_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        yield pd.DataFrame(
-            {
-                "media_id": [int(m) for m in pdf["media_id"]],
-                "blob": [synth_jpeg_mixed_bytes(int(m)) for m in pdf["media_id"]],
-            }
-        )
-
-
 def synth_jpeg_mixed(df: DataFrame, id_col: str) -> DataFrame:
     """(media_id, blob): baseline JPEG for even ids, progressive for odd
     — so a downstream probe/decode must classify the frame type itself."""
-    src = df.select(F.col(id_col).cast("long").alias("media_id"))
-    return rebalance_if_undersplit(src).mapInPandas(_jpeg_mixed_synth_batches, schema="media_id long, blob binary")
+    return synth_blobs(df, id_col, synth_jpeg_mixed_bytes)
 
 
-def _jpeg_decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = {f.name: [] for f in JPEG_DECODE_SCHEMA.fields}
-        for mid, blob in zip(pdf["media_id"], pdf["blob"]):
-            parsed = parse_jpeg(bytes(blob))
-            out["media_id"].append(int(mid))
-            if parsed is None:
-                for k in out:
-                    if k not in ("media_id", "is_valid"):
-                        out[k].append(None)
-                out["is_valid"].append(0)
-                continue
-            w, h, ch, px = parsed
-            npx = w * h
-            sums = px.astype(np.int64).sum(axis=(0, 1))
-            out["width"].append(w)
-            out["height"].append(h)
-            out["channels"].append(ch)
-            out["mean_r_milli"].append(int(sums[0]) * 1000 // npx)
-            out["mean_g_milli"].append(int(sums[min(1, ch - 1)]) * 1000 // npx)
-            out["mean_b_milli"].append(int(sums[min(2, ch - 1)]) * 1000 // npx)
-            out["tl_r"].append(int(px[0, 0, 0]))
-            out["tl_g"].append(int(px[0, 0, min(1, ch - 1)]))
-            out["tl_b"].append(int(px[0, 0, min(2, ch - 1)]))
-            out["is_valid"].append(1)
-        yield pd.DataFrame(out)
+def _jpeg_decode_row(blob):
+    parsed = parse_jpeg(bytes(blob))
+    if parsed is None:
+        return invalid_row(JPEG_DECODE_SCHEMA)
+    w, h, ch, px = parsed
+    npx = w * h
+    sums = px.astype(np.int64).sum(axis=(0, 1))
+    rgb = (0, min(1, ch - 1), min(2, ch - 1))  # grayscale repeats channel 0
+    return (
+        w, h, ch,
+        *(int(sums[c]) * 1000 // npx for c in rgb),
+        *(int(px[0, 0, c]) for c in rgb),
+        1,
+    )
 
 
 def decode_jpeg(df: DataFrame, id_col: str, blob_col: str) -> DataFrame:
-    """REAL baseline-JPEG pixel decode (Arrow-batched mapInPandas):
-    marker walk + Huffman + dequant + IDCT + 4:2:0 upsample + fixed-
-    point colour conversion, then per-channel means and the top-left
-    pixel — the same stats contract as decode_png/decode_gif."""
-    src = df.select(
-        F.col(id_col).cast("long").alias("media_id"), F.col(blob_col).alias("blob")
-    )
-    return rebalance_if_undersplit(src).mapInPandas(_jpeg_decode_batches, schema=JPEG_DECODE_SCHEMA)
+    """REAL baseline-JPEG pixel decode: marker walk + Huffman + dequant +
+    IDCT + 4:2:0 upsample + fixed-point colour conversion, then
+    per-channel means and the top-left pixel — the same stats contract
+    as decode_png/decode_gif."""
+    return map_blobs(df, id_col, blob_col, _jpeg_decode_row, JPEG_DECODE_SCHEMA)

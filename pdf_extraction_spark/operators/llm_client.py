@@ -5,8 +5,8 @@ The reference posts one request per document to a hosted LLM endpoint
 {"max_new_tokens": 500}}``, success read as
 ``output[0]["generated_text"]`` (`app.py:88`), failure surfaced as a JSON
 error dict (`app.py:80-81`).  This operator productionizes that dataflow
-for a cluster: requests run inside Arrow-batched ``mapInPandas`` (one
-Python worker dispatch per batch, not per row), with
+for a cluster: requests run inside the per-document operator (one
+Python worker dispatch per Arrow batch, not per row), with
 
 * per-request timeout + bounded exponential-backoff retries on 429/5xx
   and transport failures (a flaky inference service must not fail a
@@ -33,16 +33,11 @@ is built in; a deployment wraps the transport, e.g.
 from __future__ import annotations
 
 import time
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from pdf_extraction_spark.operators.llm_stub import LLM_SCHEMA
+from pdf_extraction_spark.operators.llm_stub import enrich_with
 
-
-from pdf_extraction_spark.operators.balance import rebalance_if_undersplit
 
 class TransportError(Exception):
     """A request that never produced an HTTP response (DNS, connect,
@@ -155,48 +150,18 @@ def enrich_llm_http(
     ``(generated_text, error)`` is non-null per row.
     """
     transport = transport or urllib_transport
+    limiter = _RateLimiter(requests_per_sec)  # pickled: each task gets its own
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pdf_extraction_spark.kernel import build_prompt
+    def generate(prompt, raw):
+        payload = {"inputs": prompt, "parameters": {"max_new_tokens": max_new_tokens}}
+        return _call_with_policy(
+            transport,
+            endpoint,
+            payload,
+            timeout_sec=timeout_sec,
+            max_retries=max_retries,
+            backoff_sec=backoff_sec,
+            limiter=limiter,
+        )
 
-        limiter = _RateLimiter(requests_per_sec)
-        for pdf in batches:
-            ids, prompts, outs, errs = [], [], [], []
-            for doc_id, raw in zip(pdf["doc_id"], pdf["text"]):
-                prompt = build_prompt(task, raw or "")
-                ids.append(doc_id)
-                prompts.append(prompt)
-                if max_input_chars is not None and len(prompt) > max_input_chars:
-                    outs.append(None)
-                    errs.append(
-                        f"input too long: {len(prompt)} > {max_input_chars} chars"
-                    )
-                    continue
-                payload = {
-                    "inputs": prompt,
-                    "parameters": {"max_new_tokens": max_new_tokens},
-                }
-                text, err = _call_with_policy(
-                    transport,
-                    endpoint,
-                    payload,
-                    timeout_sec=timeout_sec,
-                    max_retries=max_retries,
-                    backoff_sec=backoff_sec,
-                    limiter=limiter,
-                )
-                outs.append(text)
-                errs.append(err)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "prompt": prompts,
-                    "generated_text": outs,
-                    "error": errs,
-                }
-            )
-
-    src = df.select(
-        F.col(id_col).cast("string").alias("doc_id"), F.col(text_col).alias("text")
-    )
-    return rebalance_if_undersplit(src).mapInPandas(fn, schema=LLM_SCHEMA)
+    return enrich_with(df, id_col, text_col, task, max_input_chars, generate)

@@ -6,9 +6,9 @@ response field ``output[0]["generated_text"]`` at :88; note `app.py:12`
 assigns a list literal instead of reading the secret, so the call as
 written never authenticates).  A remote GPU model is non-deterministic and
 out of scope for a byte-identical engine (SURVEY §2 F17), so this operator
-keeps the exact dataflow shape — batched requests from inside
-``mapInPandas``, one `generated_text` per document — behind a pure
-function of the prompt.  The production counterpart is
+keeps the exact dataflow shape — one `generated_text` per document from
+inside the per-document operator — behind a pure function of the
+prompt.  The production counterpart is
 ``operators/llm_client.enrich_llm_http`` (real batched HTTP with
 timeout/retry/rate-limit and an injectable transport); both share
 LLM_SCHEMA and the F16 prompt assembly, so they are interchangeable
@@ -18,14 +18,13 @@ behind one operator contract.
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
-from pdf_extraction_spark.operators.balance import rebalance_if_undersplit
+from pdf_extraction_spark.kernel import build_prompt, truncate_prompt
+from pdf_extraction_spark.operators.balance import map_documents
 
 LLM_SCHEMA = StructType(
     [
@@ -44,39 +43,29 @@ def _stub_generate(task: str, prompt: str, truncated: str) -> str:
     return f"[stub:{tag}] {task}: {truncated[:64]}"
 
 
-def _llm_batches(task: str, max_input_chars=None):
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pdf_extraction_spark.kernel import build_prompt, truncate_prompt
+def enrich_with(
+    df: DataFrame, id_col: str, text_col: str, task: str, max_input_chars, generate
+) -> DataFrame:
+    """The enrichment shape the stub and the HTTP client share: F16
+    prompt assembly, then ``generate(prompt, raw) -> (generated_text,
+    error)`` per document.
 
-        for pdf in batches:
-            ids, prompts, outs, errs = [], [], [], []
-            for doc_id, raw in zip(pdf["doc_id"], pdf["text"]):
-                raw = raw or ""
-                prompt = build_prompt(task, raw)          # F16 + assembly
-                ids.append(doc_id)
-                prompts.append(prompt)
-                # Error-dict branch of the reference (app.py:80-81): a
-                # failed generation yields output["error"], not text.  The
-                # stub's failure predicate is deterministic: the hosted
-                # model rejects prompts above its context budget.
-                if max_input_chars is not None and len(prompt) > max_input_chars:
-                    outs.append(None)
-                    errs.append(
-                        f"input too long: {len(prompt)} > {max_input_chars} chars"
-                    )
-                else:
-                    outs.append(_stub_generate(task, prompt, truncate_prompt(raw)))
-                    errs.append(None)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "prompt": prompts,
-                    "generated_text": outs,
-                    "error": errs,
-                }
-            )
+    Error-dict branch of the reference (app.py:80-81): a failed
+    generation yields output["error"], not text.  Prompts above
+    ``max_input_chars`` are rejected locally — the hosted model's
+    context budget — without calling ``generate``."""
 
-    return fn
+    def row(raw):
+        raw = raw or ""
+        prompt = build_prompt(task, raw)
+        if max_input_chars is not None and len(prompt) > max_input_chars:
+            return prompt, None, f"input too long: {len(prompt)} > {max_input_chars} chars"
+        return (prompt, *generate(prompt, raw))
+
+    src = df.select(
+        F.col(id_col).cast("string").alias("doc_id"), F.col(text_col).alias("text")
+    )
+    return map_documents(src, row, LLM_SCHEMA, passthrough=("doc_id",))
 
 
 def enrich_llm(
@@ -87,15 +76,19 @@ def enrich_llm(
     task: str = "summarize",
     max_input_chars: int | None = None,
 ) -> DataFrame:
-    """(id, prompt, generated_text, error) per document via the batched stub.
+    """(id, prompt, generated_text, error) per document via the stub.
 
-    On a real cluster the per-batch loop becomes one batched HTTP request
-    per Arrow batch — bounded fan-out to the inference service, retries
-    contained per batch, no per-row Python dispatch either way.  ``error``
-    mirrors the reference's API error-dict branch (app.py:80-81): exactly
-    one of (generated_text, error) is non-null per document.
+    On a real cluster the generation becomes an HTTP request per
+    document (``llm_client.enrich_llm_http``) — bounded fan-out to the
+    inference service, retries contained per document.  ``error``
+    mirrors the reference's API error-dict branch (app.py:80-81):
+    exactly one of (generated_text, error) is non-null per document.
     """
-    src = df.select(
-        F.col(id_col).cast("string").alias("doc_id"), F.col(text_col).alias("text")
+    return enrich_with(
+        df,
+        id_col,
+        text_col,
+        task,
+        max_input_chars,
+        lambda prompt, raw: (_stub_generate(task, prompt, truncate_prompt(raw)), None),
     )
-    return rebalance_if_undersplit(src).mapInPandas(_llm_batches(task, max_input_chars), schema=LLM_SCHEMA)

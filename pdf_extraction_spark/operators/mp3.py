@@ -16,15 +16,13 @@ case); other versions/layers and free-format bitrates return None.
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
 
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
-# MPEG-1 Layer III tables (index 0 = free format, 15 = invalid)
-from pdf_extraction_spark.operators.balance import rebalance_if_undersplit
+from pdf_extraction_spark.operators.multimodal import invalid_row, map_blobs, synth_blobs
 
+# MPEG-1 Layer III tables (index 0 = free format, 15 = invalid)
 _BITRATE_KBPS = [0, 32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320, 0]
 _SAMPLE_RATE = [44100, 48000, 32000, 0]
 _SAMPLES_PER_FRAME = 1152
@@ -152,49 +150,16 @@ MP3_META_SCHEMA = StructType(
 )
 
 
-def _mp3_synth_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        yield pd.DataFrame(
-            {
-                "media_id": [int(m) for m in pdf["media_id"]],
-                "blob": [synth_mp3_bytes(int(m)) for m in pdf["media_id"]],
-            }
-        )
-
-
 def synth_mp3(df: DataFrame, id_col: str) -> DataFrame:
-    src = df.select(F.col(id_col).cast("long").alias("media_id"))
-    return rebalance_if_undersplit(src).mapInPandas(_mp3_synth_batches, schema="media_id long, blob binary")
+    return synth_blobs(df, id_col, synth_mp3_bytes)
 
 
-def _mp3_probe_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = {f.name: [] for f in MP3_META_SCHEMA.fields}
-        for mid, blob in zip(pdf["media_id"], pdf["blob"]):
-            meta = probe_mp3(bytes(blob))
-            out["media_id"].append(int(mid))
-            if meta is None:
-                for k in (
-                    "id3v2_bytes", "bitrate_kbps", "sample_rate", "n_frames",
-                    "duration_ms",
-                ):
-                    out[k].append(None)
-                out["is_valid"].append(0)
-                continue
-            id3, br, sr, nf, dur = meta
-            out["id3v2_bytes"].append(id3)
-            out["bitrate_kbps"].append(br)
-            out["sample_rate"].append(sr)
-            out["n_frames"].append(nf)
-            out["duration_ms"].append(dur)
-            out["is_valid"].append(1)
-        yield pd.DataFrame(out)
+def _mp3_row(blob):
+    meta = probe_mp3(bytes(blob))
+    return invalid_row(MP3_META_SCHEMA) if meta is None else (*meta, 1)
 
 
 def probe_mp3_df(df: DataFrame, id_col: str, blob_col: str) -> DataFrame:
-    """Header-only MP3 metadata (Arrow-batched mapInPandas): ID3 skip +
-    frame-header walk, 4 bytes read per frame, no decode."""
-    src = df.select(
-        F.col(id_col).cast("long").alias("media_id"), F.col(blob_col).alias("blob")
-    )
-    return rebalance_if_undersplit(src).mapInPandas(_mp3_probe_batches, schema=MP3_META_SCHEMA)
+    """Header-only MP3 metadata: ID3 skip + frame-header walk, 4 bytes
+    read per frame, no decode."""
+    return map_blobs(df, id_col, blob_col, _mp3_row, MP3_META_SCHEMA)

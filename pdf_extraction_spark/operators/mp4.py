@@ -18,14 +18,12 @@ DuckDB oracle replays.
 from __future__ import annotations
 
 import struct
-from typing import Iterator
 
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.types import IntegerType, LongType, StringType, StructField, StructType
 
+from pdf_extraction_spark.operators.multimodal import invalid_row, map_blobs, synth_blobs
 
-from pdf_extraction_spark.operators.balance import rebalance_if_undersplit
 
 def _box(btype: bytes, payload: bytes, large: bool = False) -> bytes:
     if large:
@@ -153,47 +151,17 @@ MP4_META_SCHEMA = StructType(
 )
 
 
-def _mp4_synth_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        yield pd.DataFrame(
-            {
-                "media_id": [int(m) for m in pdf["media_id"]],
-                "blob": [synth_mp4_bytes(int(m)) for m in pdf["media_id"]],
-            }
-        )
-
-
 def synth_mp4(df: DataFrame, id_col: str) -> DataFrame:
     """(media_id, blob) with a real ISO-BMFF shell per id."""
-    src = df.select(F.col(id_col).cast("long").alias("media_id"))
-    return rebalance_if_undersplit(src).mapInPandas(_mp4_synth_batches, schema="media_id long, blob binary")
+    return synth_blobs(df, id_col, synth_mp4_bytes)
 
 
-def _mp4_probe_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = {f.name: [] for f in MP4_META_SCHEMA.fields}
-        for mid, blob in zip(pdf["media_id"], pdf["blob"]):
-            meta = probe_mp4(bytes(blob))
-            out["media_id"].append(int(mid))
-            if meta is None:
-                for k in ("brand", "duration_ms", "n_tracks", "max_width", "max_height"):
-                    out[k].append(None)
-                out["is_valid"].append(0)
-                continue
-            brand, dur, nt, w, h = meta
-            out["brand"].append(brand)
-            out["duration_ms"].append(dur)
-            out["n_tracks"].append(nt)
-            out["max_width"].append(w)
-            out["max_height"].append(h)
-            out["is_valid"].append(1)
-        yield pd.DataFrame(out)
+def _mp4_row(blob):
+    meta = probe_mp4(bytes(blob))
+    return invalid_row(MP4_META_SCHEMA) if meta is None else (*meta, 1)
 
 
 def probe_mp4_df(df: DataFrame, id_col: str, blob_col: str) -> DataFrame:
-    """Header-only MP4 metadata (Arrow-batched mapInPandas): box walk,
-    no codec work, no mdat reads."""
-    src = df.select(
-        F.col(id_col).cast("long").alias("media_id"), F.col(blob_col).alias("blob")
-    )
-    return rebalance_if_undersplit(src).mapInPandas(_mp4_probe_batches, schema=MP4_META_SCHEMA)
+    """Header-only MP4 metadata: box walk, no codec work, no mdat
+    reads."""
+    return map_blobs(df, id_col, blob_col, _mp4_row, MP4_META_SCHEMA)

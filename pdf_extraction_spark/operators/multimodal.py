@@ -3,12 +3,12 @@
 The reference (`ajmal624/Pdf_extraction`) renders PDF pages to images and
 OCRs them (pdfextraction.py:72-73, via poppler + tesseract subprocesses).
 Neither library exists in this environment and shelling out is forbidden,
-so the *pixel/sample decode* step is stubbed (``decode_image`` raises
-``NotImplementedError`` unless given ``fake=True``), while everything
+so ``decode_image`` over the IMG1 container below is a deterministic
+stand-in (header dimensions + payload-byte stats), while everything
 Spark-side is REAL and tested: the binary container format, header parse
-(pure JVM expressions), Arrow batch shape through ``mapInPandas``,
-byte-level feature extraction, and video-style frame sampling (byte
-slicing + hashing — no image lib needed).
+(pure JVM expressions), byte-level feature extraction, video-style frame
+sampling (byte slicing + hashing — no image lib needed), and from-scratch
+BMP/WAV/PNG/GIF decoders (JPEG, TIFF and ICO live in their own modules).
 
 Container format ``IMG1`` (ours, deterministic):
 
@@ -28,9 +28,7 @@ from __future__ import annotations
 
 import hashlib
 import zlib
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -42,10 +40,42 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from pdf_extraction_spark.operators.balance import rebalance_if_undersplit
+from pdf_extraction_spark.operators.balance import map_documents
 
 MAGIC_HEX = "494d4731"  # b"IMG1"
 HEADER_LEN = 9
+BLOB_SCHEMA = "media_id long, blob binary"
+
+
+def synth_blobs(df: DataFrame, id_col: str, make) -> DataFrame:
+    """(media_id, blob) with ``make(media_id)`` per id: the shape of
+    every Python-side ``synth_*`` generator."""
+    src = df.select(F.col(id_col).cast("long").alias("media_id"))
+    return map_documents(src, lambda m: (m, make(m)), BLOB_SCHEMA)
+
+
+def map_blobs(df: DataFrame, id_col: str, blob_col: str, fn, schema) -> DataFrame:
+    """(media_id, *fn(blob)) under ``schema``: the shape of every
+    decoder and probe.  The id is cast to long and carried through;
+    ``fn`` sees the blob alone and returns the remaining fields."""
+    src = df.select(
+        F.col(id_col).cast("long").alias("media_id"), F.col(blob_col).alias("blob")
+    )
+    return map_documents(src, fn, schema, passthrough=("media_id",))
+
+
+def invalid_row(schema: StructType) -> tuple:
+    """A decoder's contained failure row: null stats, ``is_valid=0``."""
+    return (None,) * (len(schema.fields) - 2) + (0,)
+
+
+def channel_sums(rows, nch: int) -> list[int]:
+    """Per-channel sums over rows of ``nch``-interleaved samples."""
+    sums = [0] * nch
+    for row in rows:
+        for c in range(nch):
+            sums[c] += sum(row[c::nch])
+    return sums
 
 
 # ---------------------------------------------------------------------------
@@ -121,7 +151,7 @@ def decode_metadata(df: DataFrame, id_col: str, blob_col: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Byte-level feature extraction — Arrow-batched Pandas UDF (real)
+# Byte-level feature extraction (real)
 # ---------------------------------------------------------------------------
 
 BYTE_FEATURES_SCHEMA = StructType(
@@ -135,27 +165,16 @@ BYTE_FEATURES_SCHEMA = StructType(
 )
 
 
-def _byte_feature_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = {"media_id": [], "n_bytes": [], "byte_sum": [], "byte_max": [], "n_zero": []}
-        for mid, blob in zip(pdf["media_id"], pdf["blob"]):
-            payload = bytes(blob)[HEADER_LEN:]
-            out["media_id"].append(int(mid))
-            out["n_bytes"].append(len(payload))
-            out["byte_sum"].append(sum(payload))
-            out["byte_max"].append(max(payload) if payload else 0)
-            out["n_zero"].append(sum(1 for x in payload if x == 0))
-        yield pd.DataFrame(out)
+def _byte_feature_row(blob):
+    payload = bytes(blob)[HEADER_LEN:]
+    return len(payload), sum(payload), max(payload) if payload else 0, payload.count(0)
 
 
 def byte_features(df: DataFrame, id_col: str, blob_col: str) -> DataFrame:
-    """Payload byte statistics via ``mapInPandas`` (the feature-extract
-    plumbing an image featurizer would use — batch shape, schema, and
-    partitioning are production-real; only the pixel semantics are fake)."""
-    src = df.select(
-        F.col(id_col).cast("long").alias("media_id"), F.col(blob_col).alias("blob")
-    )
-    return rebalance_if_undersplit(src).mapInPandas(_byte_feature_batches, schema=BYTE_FEATURES_SCHEMA)
+    """Payload byte statistics (the feature-extract plumbing an image
+    featurizer would use — batch shape, schema, and partitioning are
+    production-real; only the pixel semantics are fake)."""
+    return map_blobs(df, id_col, blob_col, _byte_feature_row, BYTE_FEATURES_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -173,31 +192,6 @@ FRAME_SCHEMA = StructType(
 )
 
 
-def _frame_sample_batches(frame_size: int, stride: int):
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "media_id": [],
-                "frame_no": [],
-                "frame_len": [],
-                "frame_hex": [],
-                "frame_md5": [],
-            }
-            for mid, blob in zip(pdf["media_id"], pdf["blob"]):
-                payload = bytes(blob)[HEADER_LEN:]
-                n_frames = len(payload) // frame_size
-                for f_no in range(0, n_frames, stride):
-                    frame = payload[f_no * frame_size : (f_no + 1) * frame_size]
-                    out["media_id"].append(int(mid))
-                    out["frame_no"].append(f_no)
-                    out["frame_len"].append(len(frame))
-                    out["frame_hex"].append(frame.hex())
-                    out["frame_md5"].append(hashlib.md5(frame).hexdigest())
-            yield pd.DataFrame(out)
-
-    return fn
-
-
 def frame_sample(
     df: DataFrame, id_col: str, blob_col: str, *, frame_size: int = 16, stride: int = 2
 ) -> DataFrame:
@@ -207,16 +201,20 @@ def frame_sample(
     a *longer* batch than it receives, which is exactly the shape a real
     video frame-sampler has. Trailing partial frames are dropped.
     """
-    src = df.select(
-        F.col(id_col).cast("long").alias("media_id"), F.col(blob_col).alias("blob")
-    )
-    return rebalance_if_undersplit(src).mapInPandas(
-        _frame_sample_batches(frame_size, stride), schema=FRAME_SCHEMA
-    )
+
+    def frames(blob):
+        payload = bytes(blob)[HEADER_LEN:]
+        out = []
+        for f_no in range(0, len(payload) // frame_size, stride):
+            frame = payload[f_no * frame_size : (f_no + 1) * frame_size]
+            out.append((f_no, len(frame), frame.hex(), hashlib.md5(frame).hexdigest()))
+        return out
+
+    return map_blobs(df, id_col, blob_col, frames, FRAME_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
-# Pixel decode / resize — STUBBED (no image libs in this environment)
+# Pixel decode — deterministic stand-in over the IMG1 container
 # ---------------------------------------------------------------------------
 
 DECODE_SCHEMA = StructType(
@@ -230,60 +228,30 @@ DECODE_SCHEMA = StructType(
 )
 
 
-def _decode_batches(fake: bool):
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "media_id": [],
-                "width": [],
-                "height": [],
-                "gray_mean_milli": [],
-                "pixels_sampled": [],
-            }
-            for mid, blob in zip(pdf["media_id"], pdf["blob"]):
-                raw = bytes(blob)
-                if not fake:
-                    # Real implementation: PIL.Image.open(io.BytesIO(raw))
-                    # then .convert("L") / .resize(...).  Image libraries are
-                    # not available in this container (SURVEY §7 hard-parts).
-                    raise NotImplementedError(
-                        "real image decode requires PIL/opencv, which this "
-                        "environment does not ship; use fake=True for the "
-                        "deterministic stand-in"
-                    )
-                w = int.from_bytes(raw[4:6], "big")
-                h = int.from_bytes(raw[6:8], "big")
-                payload = raw[HEADER_LEN:]
-                mean_milli = (
-                    sum(payload) * 1000 // len(payload) if payload else 0
-                )
-                out["media_id"].append(int(mid))
-                out["width"].append(w)
-                out["height"].append(h)
-                out["gray_mean_milli"].append(mean_milli)
-                out["pixels_sampled"].append(list(payload[:8]))
-            yield pd.DataFrame(out)
-
-    return fn
-
-
-def decode_image(
-    df: DataFrame, id_col: str, blob_col: str, *, fake: bool = False
-) -> DataFrame:
-    """Decode pixels from the blob. STUB: the pixel decode itself needs an
-    image library this container lacks; with ``fake=True`` a deterministic
-    stand-in (payload-byte gray stats) exercises the identical Spark
-    plumbing — schema, Arrow batches, partitioning, error shape."""
-    src = df.select(
-        F.col(id_col).cast("long").alias("media_id"), F.col(blob_col).alias("blob")
+def _decode_image_row(blob):
+    raw = bytes(blob)
+    payload = raw[HEADER_LEN:]
+    return (
+        int.from_bytes(raw[4:6], "big"),
+        int.from_bytes(raw[6:8], "big"),
+        sum(payload) * 1000 // len(payload) if payload else 0,
+        list(payload[:8]),
     )
-    return rebalance_if_undersplit(src).mapInPandas(_decode_batches(fake), schema=DECODE_SCHEMA)
+
+
+def decode_image(df: DataFrame, id_col: str, blob_col: str) -> DataFrame:
+    """Deterministic stand-in for a pixel decode: the IMG1 header's
+    dimensions plus payload-byte gray stats.  A real decode of arbitrary
+    compressed images needs an image library this engine does not ship
+    (the codec-specific decoders below are the real ones); the stand-in
+    exercises the identical Spark plumbing — schema, Arrow batches,
+    partitioning."""
+    return map_blobs(df, id_col, blob_col, _decode_image_row, DECODE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
 # REAL pixel decode: BMP (uncompressed 24-bit) — no image library needed.
-# The compressed-format decode (JPEG/PNG) remains stubbed above; BMP's
-# layout (little-endian headers, 4-byte row stride, bottom-up row order,
+# BMP's layout (little-endian headers, 4-byte row stride, bottom-up row order,
 # BGR channel order) is fully specified, so this is a genuine decoder,
 # not a stand-in.
 # ---------------------------------------------------------------------------
@@ -391,44 +359,21 @@ def parse_bmp(raw: bytes):
     return w, height, rows
 
 
-def _bmp_decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = {k.name: [] for k in BMP_DECODE_SCHEMA.fields}
-        for mid, blob in zip(pdf["media_id"], pdf["blob"]):
-            parsed = parse_bmp(bytes(blob))
-            out["media_id"].append(int(mid))
-            if parsed is None:
-                for k in ("width", "height", "mean_b_milli", "mean_g_milli",
-                          "mean_r_milli", "tl_b", "tl_g", "tl_r"):
-                    out[k].append(None)
-                out["is_valid"].append(0)
-                continue
-            w, h, rows = parsed
-            sums = [0, 0, 0]
-            for row in rows:
-                for i, v in enumerate(row):
-                    sums[i % 3] += v
-            n = w * h
-            out["width"].append(w)
-            out["height"].append(h)
-            out["mean_b_milli"].append(sums[0] * 1000 // n)
-            out["mean_g_milli"].append(sums[1] * 1000 // n)
-            out["mean_r_milli"].append(sums[2] * 1000 // n)
-            out["tl_b"].append(rows[0][0])
-            out["tl_g"].append(rows[0][1])
-            out["tl_r"].append(rows[0][2])
-            out["is_valid"].append(1)
-        yield pd.DataFrame(out)
+def _bmp_row(blob):
+    parsed = parse_bmp(bytes(blob))
+    if parsed is None:
+        return invalid_row(BMP_DECODE_SCHEMA)
+    w, h, rows = parsed
+    n = w * h
+    means = [s * 1000 // n for s in channel_sums(rows, 3)]
+    return (w, h, *means, *rows[0][:3], 1)
 
 
 def decode_bmp(df: DataFrame, id_col: str, blob_col: str) -> DataFrame:
-    """REAL pixel decode for 24-bit BMP blobs (Arrow-batched mapInPandas):
-    per-channel means (BGR) and the top-left pixel — the top-left value
-    proves the decoder honors BMP's bottom-up row storage."""
-    src = df.select(
-        F.col(id_col).cast("long").alias("media_id"), F.col(blob_col).alias("blob")
-    )
-    return rebalance_if_undersplit(src).mapInPandas(_bmp_decode_batches, schema=BMP_DECODE_SCHEMA)
+    """REAL pixel decode for 24-bit BMP blobs: per-channel means (BGR)
+    and the top-left pixel — the top-left value proves the decoder
+    honors BMP's bottom-up row storage."""
+    return map_blobs(df, id_col, blob_col, _bmp_row, BMP_DECODE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -516,36 +461,19 @@ def parse_wav(raw: bytes):
     return rate, samples
 
 
-def _wav_decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = {f.name: [] for f in WAV_DECODE_SCHEMA.fields}
-        for mid, blob in zip(pdf["media_id"], pdf["blob"]):
-            parsed = parse_wav(bytes(blob))
-            out["media_id"].append(int(mid))
-            if not parsed or not parsed[1]:
-                for k in ("sample_rate", "n_samples", "mean_abs_milli",
-                          "max_abs", "first_sample"):
-                    out[k].append(None)
-                out["is_valid"].append(0)
-                continue
-            rate, samples = parsed
-            abs_s = [abs(s) for s in samples]
-            out["sample_rate"].append(rate)
-            out["n_samples"].append(len(samples))
-            out["mean_abs_milli"].append(sum(abs_s) * 1000 // len(samples))
-            out["max_abs"].append(max(abs_s))
-            out["first_sample"].append(samples[0])
-            out["is_valid"].append(1)
-        yield pd.DataFrame(out)
+def _wav_row(blob):
+    parsed = parse_wav(bytes(blob))
+    if not parsed or not parsed[1]:
+        return invalid_row(WAV_DECODE_SCHEMA)
+    rate, samples = parsed
+    abs_s = [abs(s) for s in samples]
+    return rate, len(samples), sum(abs_s) * 1000 // len(samples), max(abs_s), samples[0], 1
 
 
 def decode_wav(df: DataFrame, id_col: str, blob_col: str) -> DataFrame:
-    """REAL audio decode for 16-bit PCM WAV blobs (Arrow-batched
-    mapInPandas): amplitude stats over little-endian signed samples."""
-    src = df.select(
-        F.col(id_col).cast("long").alias("media_id"), F.col(blob_col).alias("blob")
-    )
-    return rebalance_if_undersplit(src).mapInPandas(_wav_decode_batches, schema=WAV_DECODE_SCHEMA)
+    """REAL audio decode for 16-bit PCM WAV blobs: amplitude stats over
+    little-endian signed samples."""
+    return map_blobs(df, id_col, blob_col, _wav_row, WAV_DECODE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -698,22 +626,9 @@ def synth_png_interlaced_bytes(media_id: int) -> bytes:
     )
 
 
-def _png_interlaced_synth_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        yield pd.DataFrame(
-            {
-                "media_id": [int(m) for m in pdf["media_id"]],
-                "blob": [synth_png_interlaced_bytes(int(m)) for m in pdf["media_id"]],
-            }
-        )
-
-
 def synth_png_interlaced(df: DataFrame, id_col: str) -> DataFrame:
     """(media_id, blob) with a real Adam7-interlaced PNG per id."""
-    src = df.select(F.col(id_col).cast("long").alias("media_id"))
-    return rebalance_if_undersplit(src).mapInPandas(
-        _png_interlaced_synth_batches, schema="media_id long, blob binary"
-    )
+    return synth_blobs(df, id_col, synth_png_interlaced_bytes)
 
 
 # Adam7 pass geometry: (x0, y0, dx, dy) per pass (PNG spec 8.2)
@@ -860,68 +775,37 @@ PNG_DECODE_SCHEMA = StructType(
 )
 
 
-def _png_synth_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        yield pd.DataFrame(
-            {
-                "media_id": [int(m) for m in pdf["media_id"]],
-                "blob": [synth_png_bytes(int(m)) for m in pdf["media_id"]],
-            }
-        )
-
-
 def synth_png(df: DataFrame, id_col: str) -> DataFrame:
     """(media_id, blob) with a real PNG per id.  Unlike synth_bmp this
     cannot be pure JVM expressions (zlib compression), so it runs in the
-    same Arrow-batched mapInPandas shape as the decoders."""
-    src = df.select(F.col(id_col).cast("long").alias("media_id"))
-    return rebalance_if_undersplit(src).mapInPandas(
-        _png_synth_batches, schema="media_id long, blob binary"
+    decoders' per-document Python shape."""
+    return synth_blobs(df, id_col, synth_png_bytes)
+
+
+def _png_row(blob):
+    parsed = parse_png(bytes(blob))
+    if parsed is None:
+        return invalid_row(PNG_DECODE_SCHEMA)
+    w, h, ch, rows = parsed
+    n = w * h
+    sums = channel_sums(rows, ch)
+    tl = rows[0]
+    alpha = ch == 4
+    return (
+        w, h, ch,
+        sums[0] * 1000 // n, sums[1] * 1000 // n, sums[2] * 1000 // n,
+        sums[3] * 1000 // n if alpha else None,
+        tl[0], tl[1], tl[2], tl[3] if alpha else None,
+        1,
     )
-
-
-def _png_decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = {f.name: [] for f in PNG_DECODE_SCHEMA.fields}
-        for mid, blob in zip(pdf["media_id"], pdf["blob"]):
-            parsed = parse_png(bytes(blob))
-            out["media_id"].append(int(mid))
-            if parsed is None:
-                for k in out:
-                    if k not in ("media_id", "is_valid"):
-                        out[k].append(None)
-                out["is_valid"].append(0)
-                continue
-            w, h, ch, rows = parsed
-            sums = [0, 0, 0, 0]
-            for row in rows:
-                for i, v in enumerate(row):
-                    sums[i % ch] += v
-            n = w * h
-            out["width"].append(w)
-            out["height"].append(h)
-            out["channels"].append(ch)
-            out["mean_r_milli"].append(sums[0] * 1000 // n)
-            out["mean_g_milli"].append(sums[1] * 1000 // n)
-            out["mean_b_milli"].append(sums[2] * 1000 // n)
-            out["mean_a_milli"].append(sums[3] * 1000 // n if ch == 4 else None)
-            out["tl_r"].append(rows[0][0])
-            out["tl_g"].append(rows[0][1])
-            out["tl_b"].append(rows[0][2])
-            out["tl_a"].append(rows[0][3] if ch == 4 else None)
-            out["is_valid"].append(1)
-        yield pd.DataFrame(out)
 
 
 def decode_png(df: DataFrame, id_col: str, blob_col: str) -> DataFrame:
-    """REAL pixel decode for 8-bit RGB/RGBA PNG blobs (Arrow-batched
-    mapInPandas): chunk walk + CRC check + zlib inflate + unfilter, then
-    per-channel means and the top-left pixel (PNG rows are top-down —
-    the opposite of BMP, which the tl_* columns pin)."""
-    src = df.select(
-        F.col(id_col).cast("long").alias("media_id"), F.col(blob_col).alias("blob")
-    )
-    return rebalance_if_undersplit(src).mapInPandas(_png_decode_batches, schema=PNG_DECODE_SCHEMA)
+    """REAL pixel decode for 8-bit RGB/RGBA PNG blobs: chunk walk + CRC
+    check + zlib inflate + unfilter, then per-channel means and the
+    top-left pixel (PNG rows are top-down — the opposite of BMP, which
+    the tl_* columns pin)."""
+    return map_blobs(df, id_col, blob_col, _png_row, PNG_DECODE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -1338,63 +1222,25 @@ GIF_DECODE_SCHEMA = StructType(
 )
 
 
-def _gif_synth_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        yield pd.DataFrame(
-            {
-                "media_id": [int(m) for m in pdf["media_id"]],
-                "blob": [synth_gif_bytes(int(m)) for m in pdf["media_id"]],
-            }
-        )
-
-
 def synth_gif(df: DataFrame, id_col: str) -> DataFrame:
-    """(media_id, blob) with a real GIF89a per id, Arrow-batched."""
-    src = df.select(F.col(id_col).cast("long").alias("media_id"))
-    return rebalance_if_undersplit(src).mapInPandas(
-        _gif_synth_batches, schema="media_id long, blob binary"
-    )
+    """(media_id, blob) with a real GIF89a per id."""
+    return synth_blobs(df, id_col, synth_gif_bytes)
 
 
-def _gif_decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = {f.name: [] for f in GIF_DECODE_SCHEMA.fields}
-        for mid, blob in zip(pdf["media_id"], pdf["blob"]):
-            parsed = parse_gif(bytes(blob))
-            out["media_id"].append(int(mid))
-            if parsed is None:
-                for k in out:
-                    if k not in ("media_id", "is_valid"):
-                        out[k].append(None)
-                out["is_valid"].append(0)
-                continue
-            w, h, px = parsed
-            n = w * h
-            sums = [0, 0, 0]
-            for p in px:
-                sums[0] += p[0]
-                sums[1] += p[1]
-                sums[2] += p[2]
-            out["width"].append(w)
-            out["height"].append(h)
-            out["mean_r_milli"].append(sums[0] * 1000 // n)
-            out["mean_g_milli"].append(sums[1] * 1000 // n)
-            out["mean_b_milli"].append(sums[2] * 1000 // n)
-            out["tl_r"].append(px[0][0])
-            out["tl_g"].append(px[0][1])
-            out["tl_b"].append(px[0][2])
-            out["is_valid"].append(1)
-        yield pd.DataFrame(out)
+def _gif_row(blob):
+    parsed = parse_gif(bytes(blob))
+    if parsed is None:
+        return invalid_row(GIF_DECODE_SCHEMA)
+    w, h, px = parsed
+    n = w * h
+    sums = [sum(p[c] for p in px) for c in range(3)]
+    return (w, h, *(s * 1000 // n for s in sums), *px[0][:3], 1)
 
 
 def decode_gif(df: DataFrame, id_col: str, blob_col: str) -> DataFrame:
-    """REAL pixel decode for GIF blobs (Arrow-batched mapInPandas):
-    from-scratch LZW + palette mapping, then per-channel means and the
-    top-left pixel."""
-    src = df.select(
-        F.col(id_col).cast("long").alias("media_id"), F.col(blob_col).alias("blob")
-    )
-    return rebalance_if_undersplit(src).mapInPandas(_gif_decode_batches, schema=GIF_DECODE_SCHEMA)
+    """REAL pixel decode for GIF blobs: from-scratch LZW + palette
+    mapping, then per-channel means and the top-left pixel."""
+    return map_blobs(df, id_col, blob_col, _gif_row, GIF_DECODE_SCHEMA)
 
 
 GIF_ANIM_SCHEMA = StructType(
@@ -1415,68 +1261,36 @@ GIF_ANIM_SCHEMA = StructType(
 )
 
 
-def _gif_anim_synth_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        yield pd.DataFrame(
-            {
-                "media_id": [int(m) for m in pdf["media_id"]],
-                "blob": [synth_gif_animated_bytes(int(m)) for m in pdf["media_id"]],
-            }
-        )
-
-
 def synth_gif_animated(df: DataFrame, id_col: str) -> DataFrame:
     """(media_id, blob) with a real animated GIF89a per id."""
-    src = df.select(F.col(id_col).cast("long").alias("media_id"))
-    return rebalance_if_undersplit(src).mapInPandas(
-        _gif_anim_synth_batches, schema="media_id long, blob binary"
+    return synth_blobs(df, id_col, synth_gif_animated_bytes)
+
+
+def _gif_anim_row(blob):
+    parsed = parse_gif_frames(bytes(blob))
+    if parsed is None:
+        return invalid_row(GIF_ANIM_SCHEMA)
+    sw, sh, frames = parsed
+    sums = [0, 0, 0]
+    for _, canvas in frames:
+        for r, g, b in canvas:
+            sums[0] += r
+            sums[1] += g
+            sums[2] += b
+    npx = sw * sh * len(frames)
+    last = frames[-1][1][0]
+    return (
+        sw, sh, len(frames),
+        *(s * 1000 // npx for s in sums),
+        *last[:3],
+        sum(delay_cs for delay_cs, _ in frames),
+        1,
     )
-
-
-def _gif_anim_decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = {f.name: [] for f in GIF_ANIM_SCHEMA.fields}
-        for mid, blob in zip(pdf["media_id"], pdf["blob"]):
-            parsed = parse_gif_frames(bytes(blob))
-            out["media_id"].append(int(mid))
-            if parsed is None:
-                for k in out:
-                    if k not in ("media_id", "is_valid"):
-                        out[k].append(None)
-                out["is_valid"].append(0)
-                continue
-            sw, sh, frames = parsed
-            sums = [0, 0, 0]
-            delay_total = 0
-            for delay_cs, canvas in frames:
-                delay_total += delay_cs
-                for r, g, b in canvas:
-                    sums[0] += r
-                    sums[1] += g
-                    sums[2] += b
-            npx = sw * sh * len(frames)
-            last = frames[-1][1][0]
-            out["width"].append(sw)
-            out["height"].append(sh)
-            out["n_frames"].append(len(frames))
-            out["mean_r_milli"].append(sums[0] * 1000 // npx)
-            out["mean_g_milli"].append(sums[1] * 1000 // npx)
-            out["mean_b_milli"].append(sums[2] * 1000 // npx)
-            out["last_r"].append(last[0])
-            out["last_g"].append(last[1])
-            out["last_b"].append(last[2])
-            out["total_delay_cs"].append(delay_total)
-            out["is_valid"].append(1)
-        yield pd.DataFrame(out)
 
 
 def decode_gif_animated(df: DataFrame, id_col: str, blob_col: str) -> DataFrame:
-    """Multi-frame GIF decode (Arrow-batched mapInPandas): every frame
-    LZW-decoded and composited (GCE delay/transparency/disposal), then
-    whole-animation stats — frame count, per-channel means across all
-    composited frames, the final frame's top-left pixel, and the total
-    animation delay."""
-    src = df.select(
-        F.col(id_col).cast("long").alias("media_id"), F.col(blob_col).alias("blob")
-    )
-    return rebalance_if_undersplit(src).mapInPandas(_gif_anim_decode_batches, schema=GIF_ANIM_SCHEMA)
+    """Multi-frame GIF decode: every frame LZW-decoded and composited
+    (GCE delay/transparency/disposal), then whole-animation stats —
+    frame count, per-channel means across all composited frames, the
+    final frame's top-left pixel, and the total animation delay."""
+    return map_blobs(df, id_col, blob_col, _gif_anim_row, GIF_ANIM_SCHEMA)

@@ -26,29 +26,23 @@ render->compress->decode->recognize dataflow and its failure modes
 (binarization after lossy compression), NOT general-purpose OCR of
 arbitrary scanned documents, which remains impossible without
 poppler/tesseract.
-
-Scale shape: one Arrow-batched mapInPandas pass, embarrassingly
-parallel, plan-asserted shuffle-free like the other codec entries.
 """
 
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import IntegerType, LongType, StringType, StructField, StructType
 
+from pdf_extraction_spark.operators.balance import map_documents
 from pdf_extraction_spark.operators.ccitt import decode_ccitt_pdf_image, g4_encode
 from pdf_extraction_spark.operators.jpeg import encode_baseline_jpeg, parse_jpeg
 from pdf_extraction_spark.pdf_parse import build_pdf, extract_pdf_images
 
 # Printable ASCII; everything else sanitizes to '?' (mirrored by the
 # DuckDB oracle's regexp_replace('[^ -~]', '?', 'g')).
-from pdf_extraction_spark.operators.balance import rebalance_if_undersplit
-
 CHARSET = [chr(c) for c in range(0x20, 0x7F)]
 GLYPH = 8  # glyph cell is 8x8 pixels — one JPEG block per cell
 COLS, ROWS = 16, 8  # one 128x64 page
@@ -142,26 +136,18 @@ OCR_SCHEMA = StructType(
 )
 
 
-def _ocr_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        ids, n_chars, recovered = [], [], []
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            rec = ocr_roundtrip_one(text if isinstance(text, str) else "")
-            ids.append(int(doc_id))
-            n_chars.append(len(rec))
-            recovered.append(rec)
-        yield pd.DataFrame(
-            {"doc_id": ids, "n_chars": n_chars, "recovered_text": recovered}
-        )
+def _ocr_row(text):
+    rec = ocr_roundtrip_one(text if isinstance(text, str) else "")
+    return len(rec), rec
 
 
 def ocr_roundtrip(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """text -> raster -> JPEG -> scanned-style PDF -> image listing ->
-    decode -> OCR, one Arrow-batched mapInPandas pass per document."""
+    decode -> OCR, per document."""
     src = df.select(
         F.col(id_col).cast("long").alias("doc_id"), F.col(text_col).alias("text")
     )
-    return rebalance_if_undersplit(src).mapInPandas(_ocr_batches, schema=OCR_SCHEMA)
+    return map_documents(src, _ocr_row, OCR_SCHEMA, passthrough=("doc_id",))
 
 
 SCANNED_SCHEMA = StructType(
@@ -228,21 +214,8 @@ def _scanned_one(doc_id: int, text: str) -> tuple[int, int, int, str, str]:
     )
 
 
-def _scanned_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = {k.name: [] for k in SCANNED_SCHEMA.fields}
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            doc_id = int(doc_id)
-            n, w, h, filt, rec = _scanned_one(
-                doc_id, text if isinstance(text, str) else ""
-            )
-            out["doc_id"].append(doc_id)
-            out["n_images"].append(n)
-            out["img_width"].append(w)
-            out["img_height"].append(h)
-            out["img_filter"].append(filt)
-            out["recovered_text"].append(rec)
-        yield pd.DataFrame(out)
+def _scanned_row(doc_id, text):
+    return doc_id, *_scanned_one(doc_id, text if isinstance(text, str) else "")
 
 
 def scanned_pdf_extract(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -254,4 +227,4 @@ def scanned_pdf_extract(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     src = df.select(
         F.col(id_col).cast("long").alias("doc_id"), F.col(text_col).alias("text")
     )
-    return rebalance_if_undersplit(src).mapInPandas(_scanned_batches, schema=SCANNED_SCHEMA)
+    return map_documents(src, _scanned_row, SCANNED_SCHEMA)

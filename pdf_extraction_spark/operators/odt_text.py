@@ -28,13 +28,10 @@ import io
 import re
 import zipfile
 import xml.etree.ElementTree as ET
-from typing import Iterator
 
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
-from pdf_extraction_spark.operators.balance import rebalance_if_undersplit
-from pdf_extraction_spark.operators.docx_text import sanitize_for_xml
+from pdf_extraction_spark.operators.docx_text import sanitize_for_xml, split_roundtrip
 
 ODT_MIME = "application/vnd.oasis.opendocument.text"
 _OFFICE = "urn:oasis:names:tc:opendocument:xmlns:office:1.0"
@@ -169,32 +166,6 @@ ODT_SCHEMA = (
 )
 
 
-def _odt_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = {
-            "doc_id": [],
-            "n_paragraphs": [],
-            "para1_chars": [],
-            "n_chars": [],
-            "extracted_text": [],
-        }
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            t = text if isinstance(text, str) else ""
-            half = len(t) // 2
-            paras = extract_odt_paragraphs(build_odt([t[:half], t[half:]])) or []
-            out["doc_id"].append(int(doc_id))
-            out["n_paragraphs"].append(len(paras))
-            out["para1_chars"].append(len(paras[0]) if paras else 0)
-            out["n_chars"].append(sum(len(p) for p in paras))
-            out["extracted_text"].append("".join(paras))
-        yield pd.DataFrame(out)
-
-
 def extract_odt_roundtrip(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """text -> real .odt bytes -> ODF whitespace-element inversion ->
-    text, one Arrow-batched mapInPandas pass."""
-    src = df.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        F.col(text_col).cast("string").alias("text"),
-    )
-    return rebalance_if_undersplit(src).mapInPandas(_odt_batches, schema=ODT_SCHEMA)
+    """text -> real .odt bytes -> ODF whitespace-element inversion -> text."""
+    return split_roundtrip(df, id_col, text_col, build_odt, extract_odt_paragraphs, ODT_SCHEMA)

@@ -29,24 +29,17 @@ run exercises every parser path:
   into an ``/ObjStm`` (type-2 entries); ``% 8 == 1`` adds the PNG Up
   ``/Predictor`` on the xref rows — so odd vandalized ids (e.g. 17)
   drive scan recovery THROUGH an object stream.
-
-Scale shape: one Arrow-batched ``mapInPandas`` pass, no shuffle, no
-driver collection — identical to the production extraction kernel's
-batch shape, so the plan is a single scan -> Python stage -> project.
 """
 
 from __future__ import annotations
 
 import re
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pdf_extraction_spark.operators.balance import map_documents
 from pdf_extraction_spark.pdf_parse import build_pdf, extract_pdf_pages
-
-from pdf_extraction_spark.operators.balance import rebalance_if_undersplit
 
 PDF_ROUNDTRIP_SCHEMA = (
     "doc_id long, n_pages int, page1_chars int, n_chars int, "
@@ -72,101 +65,69 @@ def _vandalize_startxref(pdf: bytes) -> bytes:
     return _STARTXREF_RE.sub(b"startxref\n0", pdf)
 
 
-def _roundtrip_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf_batch in batches:
-        out = {
-            "doc_id": [],
-            "n_pages": [],
-            "page1_chars": [],
-            "n_chars": [],
-            "extracted_text": [],
-        }
-        for doc_id, text in zip(pdf_batch["doc_id"], pdf_batch["text"]):
-            doc_id = int(doc_id)
-            t = text if isinstance(text, str) else ""
-            half = len(t) // 2
-            blob = build_pdf(
-                [t[:half], t[half:]],
-                compress=_FILTER_BY_MOD.get(doc_id % 9, True),
-                font=_FONT_BY_MOD[doc_id % 5],
-                indirect_length=doc_id % 5 == 0,
-                # PDF-1.5 layouts (odd ids): cross-reference stream,
-                # with objects packed into an /ObjStm every 4th id and
-                # the PNG Up predictor on the xref rows every 8th —
-                # the layouts modern writers actually emit
-                xref_stream=doc_id % 2 == 1,
-                use_objstm=doc_id % 4 == 1,
-                predictor=doc_id % 8 == 1,
-            )
-            if doc_id % 7 == 3:
-                blob = _vandalize_startxref(blob)
-            pages = extract_pdf_pages(blob)
-            out["doc_id"].append(doc_id)
-            out["n_pages"].append(len(pages))
-            out["page1_chars"].append(len(pages[0]))
-            out["n_chars"].append(sum(len(p) for p in pages))
-            out["extracted_text"].append("".join(pages))
-        yield pd.DataFrame(out)
+def _plain_layout(doc_id: int) -> dict:
+    return dict(
+        compress=_FILTER_BY_MOD.get(doc_id % 9, True),
+        font=_FONT_BY_MOD[doc_id % 5],
+        indirect_length=doc_id % 5 == 0,
+        # PDF-1.5 layouts (odd ids): cross-reference stream, with
+        # objects packed into an /ObjStm every 4th id and the PNG Up
+        # predictor on the xref rows every 8th — the layouts modern
+        # writers actually emit
+        xref_stream=doc_id % 2 == 1,
+        use_objstm=doc_id % 4 == 1,
+        predictor=doc_id % 8 == 1,
+    )
 
 
-def extract_pdf_roundtrip(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """text -> real %PDF bytes -> from-scratch parser -> text, one
-    Arrow-batched mapInPandas pass.  Output equals the input text iff
-    builder and parser are both correct; the driver oracle asserts
-    exactly that identity."""
+def _encrypted_layout(doc_id: int) -> dict:
+    return dict(
+        # all five handler flavors — RC4 R2, RC4 R3, V4/R4 AES-128
+        # crypt filters, V5/R6 AES-256 (ISO 32000-2 Algorithm 2.B hash +
+        # /UE key unwrap + /Perms check) and the deprecated Acrobat-9
+        # V5/R5; layouts alternate so decryption composes with xref
+        # streams, ObjStm packing (the whole packed payload is one
+        # encrypted stream), and — every 7th id — the damaged-xref scan
+        # recovery
+        encrypt={
+            0: "rc4-40",
+            1: "rc4-128",
+            2: "aes-128",
+            3: "aes-256",
+            4: "aes-256-r5",
+        }[doc_id % 5],
+        xref_stream=doc_id % 3 == 0,
+        # % 6 keeps ObjStm inside xref_stream ids AND cycles it across
+        # all five ciphers (6 mod 5 walks 1,2,3,4,0)
+        use_objstm=doc_id % 6 == 0,
+    )
+
+
+def _pdf_roundtrip(df: DataFrame, id_col: str, text_col: str, layout) -> DataFrame:
+    """Each text split into two pages -> ``build_pdf(**layout(doc_id))``
+    (startxref vandalized every 7th id) -> extract_pdf_pages -> stats."""
+
+    def row(doc_id, text):
+        t = text if isinstance(text, str) else ""
+        half = len(t) // 2
+        blob = build_pdf([t[:half], t[half:]], **layout(doc_id))
+        if doc_id % 7 == 3:
+            blob = _vandalize_startxref(blob)
+        pages = extract_pdf_pages(blob)
+        return doc_id, len(pages), len(pages[0]), sum(map(len, pages)), "".join(pages)
+
     src = df.select(
         F.col(id_col).cast("long").alias("doc_id"),
         F.col(text_col).cast("string").alias("text"),
     )
-    return rebalance_if_undersplit(src).mapInPandas(_roundtrip_batches, schema=PDF_ROUNDTRIP_SCHEMA)
+    return map_documents(src, row, PDF_ROUNDTRIP_SCHEMA)
 
 
-def _encrypted_roundtrip_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf_batch in batches:
-        out = {
-            "doc_id": [],
-            "n_pages": [],
-            "page1_chars": [],
-            "n_chars": [],
-            "extracted_text": [],
-        }
-        for doc_id, text in zip(pdf_batch["doc_id"], pdf_batch["text"]):
-            doc_id = int(doc_id)
-            t = text if isinstance(text, str) else ""
-            half = len(t) // 2
-            blob = build_pdf(
-                [t[:half], t[half:]],
-                # all five handler flavors — RC4 R2, RC4 R3, V4/R4
-                # AES-128 crypt filters, V5/R6 AES-256 (ISO 32000-2
-                # Algorithm 2.B hash + /UE key unwrap + /Perms check)
-                # and the deprecated Acrobat-9 V5/R5; layouts alternate
-                # so decryption composes with xref streams, ObjStm
-                # packing (the whole packed payload is one encrypted
-                # stream), and — every 7th id — the damaged-xref scan
-                # recovery
-                encrypt={
-                    0: "rc4-40",
-                    1: "rc4-128",
-                    2: "aes-128",
-                    3: "aes-256",
-                    4: "aes-256-r5",
-                }[doc_id % 5],
-                xref_stream=doc_id % 3 == 0,
-                # % 6 keeps ObjStm inside xref_stream ids AND cycles it
-                # across all five ciphers (6 mod 5 walks 1,2,3,4,0)
-                use_objstm=doc_id % 6 == 0,
-            )
-            if doc_id % 7 == 3:
-                blob = _vandalize_startxref(blob)
-            pages = extract_pdf_pages(blob)
-            out["doc_id"].append(doc_id)
-            out["n_pages"].append(len(pages))
-            out["page1_chars"].append(len(pages[0]))
-            out["n_chars"].append(sum(len(p) for p in pages))
-            out["extracted_text"].append("".join(pages))
-        yield pd.DataFrame(out)
+def extract_pdf_roundtrip(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """text -> real %PDF bytes -> from-scratch parser -> text.  Output
+    equals the input text iff builder and parser are both correct; the
+    driver oracle asserts exactly that identity."""
+    return _pdf_roundtrip(df, id_col, text_col, _plain_layout)
 
 
 def extract_pdf_encrypted_roundtrip(
@@ -178,8 +139,4 @@ def extract_pdf_encrypted_roundtrip(
     V5/R5 AES-256) with empty passwords — the parser must verify /U,
     derive (V5: unwrap from /UE) the file key, walk /CF for V4/V5, and
     decrypt every stream before any filter runs."""
-    src = df.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        F.col(text_col).cast("string").alias("text"),
-    )
-    return rebalance_if_undersplit(src).mapInPandas(_encrypted_roundtrip_batches, schema=PDF_ROUNDTRIP_SCHEMA)
+    return _pdf_roundtrip(df, id_col, text_col, _encrypted_layout)

@@ -28,13 +28,10 @@ import io
 import posixpath
 import zipfile
 import xml.etree.ElementTree as ET
-from typing import Iterator
 
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
-from pdf_extraction_spark.operators.balance import rebalance_if_undersplit
-from pdf_extraction_spark.operators.docx_text import sanitize_for_xml
+from pdf_extraction_spark.operators.docx_text import sanitize_for_xml, split_roundtrip
 
 _DML = "http://schemas.openxmlformats.org/drawingml/2006/main"
 _PML = "http://schemas.openxmlformats.org/presentationml/2006/main"
@@ -205,34 +202,8 @@ PPTX_SCHEMA = (
 )
 
 
-def _pptx_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = {
-            "doc_id": [],
-            "n_slides": [],
-            "slide1_chars": [],
-            "n_chars": [],
-            "extracted_text": [],
-        }
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            t = text if isinstance(text, str) else ""
-            half = len(t) // 2
-            slides = extract_pptx_slides(build_pptx([t[:half], t[half:]])) or []
-            # each slide is the sanitize of its source segment with ONE
-            # '\n' inserted at the segment midpoint (two <a:p> paras)
-            out["doc_id"].append(int(doc_id))
-            out["n_slides"].append(len(slides))
-            out["slide1_chars"].append(len(slides[0]) if slides else 0)
-            out["n_chars"].append(sum(len(s) for s in slides))
-            out["extracted_text"].append("".join(slides))
-        yield pd.DataFrame(out)
-
-
 def extract_pptx_roundtrip(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """text -> real .pptx -> rels-ordered slide extraction -> text, one
-    Arrow-batched mapInPandas pass (the docx round trip's shape)."""
-    src = df.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        F.col(text_col).cast("string").alias("text"),
-    )
-    return rebalance_if_undersplit(src).mapInPandas(_pptx_batches, schema=PPTX_SCHEMA)
+    """text -> real .pptx -> rels-ordered slide extraction -> text.  Each
+    slide is the sanitize of its source segment with ONE '\\n' inserted
+    at the segment midpoint (two <a:p> paras)."""
+    return split_roundtrip(df, id_col, text_col, build_pptx, extract_pptx_slides, PPTX_SCHEMA)

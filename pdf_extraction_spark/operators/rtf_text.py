@@ -31,12 +31,9 @@ nothing is read from the reference implementation.
 
 from __future__ import annotations
 
-from typing import Iterator
+from pyspark.sql import DataFrame
 
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F
-
-from pdf_extraction_spark.operators.balance import rebalance_if_undersplit
+from pdf_extraction_spark.operators.docx_text import split_roundtrip
 
 # destinations whose content is NOT document text (RTF 1.9.1 §"Document
 # Area" / "Header"): group is skipped entirely when one of these is the
@@ -328,35 +325,8 @@ RTF_SCHEMA = (
 )
 
 
-def _rtf_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = {
-            "doc_id": [],
-            "n_paragraphs": [],
-            "para1_chars": [],
-            "n_chars": [],
-            "extracted_text": [],
-        }
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            t = text if isinstance(text, str) else ""
-            half = len(t) // 2
-            blob = build_rtf([t[:half], t[half:]])
-            paras = extract_rtf_paragraphs(blob) or []
-            out["doc_id"].append(int(doc_id))
-            out["n_paragraphs"].append(len(paras))
-            out["para1_chars"].append(len(paras[0]) if paras else 0)
-            out["n_chars"].append(sum(len(p) for p in paras))
-            out["extracted_text"].append("".join(paras))
-        yield pd.DataFrame(out)
-
-
 def extract_rtf_roundtrip(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """text -> real RTF bytes -> tokenizer extraction -> text, one
-    Arrow-batched mapInPandas pass (the docx round trip's shape).  The
+    """text -> real RTF bytes -> tokenizer extraction -> text.  The
     identity is EXACT (no sanitize projection): RTF carries every
     character via \\'hh / \\uN escapes."""
-    src = df.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        F.col(text_col).cast("string").alias("text"),
-    )
-    return rebalance_if_undersplit(src).mapInPandas(_rtf_batches, schema=RTF_SCHEMA)
+    return split_roundtrip(df, id_col, text_col, build_rtf, extract_rtf_paragraphs, RTF_SCHEMA)

@@ -23,11 +23,7 @@ from an md5 row formula the DuckDB oracle replays analytically.
 
 from __future__ import annotations
 
-import hashlib
-from typing import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
 from pdf_extraction_spark.operators.ccitt import (
@@ -38,10 +34,15 @@ from pdf_extraction_spark.operators.ccitt import (
     mh_decode,
     mh_encode,
 )
+from pdf_extraction_spark.operators.multimodal import (
+    channel_sums,
+    invalid_row,
+    map_blobs,
+    synth_blobs,
+)
 from pdf_extraction_spark.pdf_parse import _pdf_lzw_decode, _pdf_lzw_encode
 
 # the IFD tags baseline RGB needs
-from pdf_extraction_spark.operators.balance import rebalance_if_undersplit
 
 _T_WIDTH, _T_HEIGHT, _T_BPS, _T_COMPRESSION = 256, 257, 258, 259
 _T_PHOTOMETRIC, _T_STRIP_OFFSETS, _T_SPP = 262, 273, 277
@@ -439,22 +440,9 @@ def synth_tiff_g4_bytes(media_id: int) -> bytes:
     return _assemble_tiff(bo, entries, strips)
 
 
-def _tiff_g4_synth_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        yield pd.DataFrame(
-            {
-                "media_id": [int(m) for m in pdf["media_id"]],
-                "blob": [synth_tiff_g4_bytes(int(m)) for m in pdf["media_id"]],
-            }
-        )
-
-
 def synth_tiff_g4(df: DataFrame, id_col: str) -> DataFrame:
     """(media_id, blob) with a real G4-compressed bilevel TIFF per id."""
-    src = df.select(F.col(id_col).cast("long").alias("media_id"))
-    return rebalance_if_undersplit(src).mapInPandas(
-        _tiff_g4_synth_batches, schema="media_id long, blob binary"
-    )
+    return synth_blobs(df, id_col, synth_tiff_g4_bytes)
 
 
 TIFF_DECODE_SCHEMA = StructType(
@@ -473,57 +461,22 @@ TIFF_DECODE_SCHEMA = StructType(
 )
 
 
-def _tiff_synth_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        yield pd.DataFrame(
-            {
-                "media_id": [int(m) for m in pdf["media_id"]],
-                "blob": [synth_tiff_bytes(int(m)) for m in pdf["media_id"]],
-            }
-        )
-
-
 def synth_tiff(df: DataFrame, id_col: str) -> DataFrame:
     """(media_id, blob) with a real baseline RGB TIFF per id."""
-    src = df.select(F.col(id_col).cast("long").alias("media_id"))
-    return rebalance_if_undersplit(src).mapInPandas(_tiff_synth_batches, schema="media_id long, blob binary")
+    return synth_blobs(df, id_col, synth_tiff_bytes)
 
 
-def _tiff_decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = {f.name: [] for f in TIFF_DECODE_SCHEMA.fields}
-        for mid, blob in zip(pdf["media_id"], pdf["blob"]):
-            parsed = parse_tiff(bytes(blob))
-            out["media_id"].append(int(mid))
-            if parsed is None:
-                for k in out:
-                    if k not in ("media_id", "is_valid"):
-                        out[k].append(None)
-                out["is_valid"].append(0)
-                continue
-            w, h, rows = parsed
-            sums = [0, 0, 0]
-            for row in rows:
-                for i, v in enumerate(row):
-                    sums[i % 3] += v
-            n = w * h
-            out["width"].append(w)
-            out["height"].append(h)
-            out["mean_r_milli"].append(sums[0] * 1000 // n)
-            out["mean_g_milli"].append(sums[1] * 1000 // n)
-            out["mean_b_milli"].append(sums[2] * 1000 // n)
-            out["tl_r"].append(rows[0][0])
-            out["tl_g"].append(rows[0][1])
-            out["tl_b"].append(rows[0][2])
-            out["is_valid"].append(1)
-        yield pd.DataFrame(out)
+def _tiff_row(blob):
+    parsed = parse_tiff(bytes(blob))
+    if parsed is None:
+        return invalid_row(TIFF_DECODE_SCHEMA)
+    w, h, rows = parsed
+    n = w * h
+    return (w, h, *(s * 1000 // n for s in channel_sums(rows, 3)), *rows[0][:3], 1)
 
 
 def decode_tiff(df: DataFrame, id_col: str, blob_col: str) -> DataFrame:
-    """REAL TIFF pixel decode (Arrow-batched mapInPandas): IFD walk in
-    both byte orders, strip assembly, PackBits / TIFF-LZW (+Predictor 2)
-    decompression, then the same stats contract as the other codecs."""
-    src = df.select(
-        F.col(id_col).cast("long").alias("media_id"), F.col(blob_col).alias("blob")
-    )
-    return rebalance_if_undersplit(src).mapInPandas(_tiff_decode_batches, schema=TIFF_DECODE_SCHEMA)
+    """REAL TIFF pixel decode: IFD walk in both byte orders, strip
+    assembly, PackBits / TIFF-LZW (+Predictor 2) decompression, then the
+    same stats contract as the other codecs."""
+    return map_blobs(df, id_col, blob_col, _tiff_row, TIFF_DECODE_SCHEMA)

@@ -30,12 +30,10 @@ import io
 import posixpath
 import zipfile
 import xml.etree.ElementTree as ET
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from pdf_extraction_spark.operators.balance import rebalance_if_undersplit
+from pdf_extraction_spark.operators.balance import map_documents
 from pdf_extraction_spark.operators.docx_text import sanitize_for_xml
 
 _SSML = "http://schemas.openxmlformats.org/spreadsheetml/2006/main"
@@ -234,36 +232,21 @@ XLSX_SCHEMA = (
 )
 
 
-def _xlsx_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = {
-            "doc_id": [],
-            "n_rows": [],
-            "n_cells": [],
-            "n_chars": [],
-            "extracted_text": [],
-        }
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            t = text if isinstance(text, str) else ""
-            q = (len(t) + 3) // 4
-            # 2x2 grid of text quarters + one numeric cell (the length),
-            # so all three cell encodings are on the round trip
-            grid = [[t[:q], t[q : 2 * q]], [t[2 * q : 3 * q], t[3 * q :]], [str(len(t))]]
-            rows = extract_xlsx_rows(build_xlsx(grid)) or []
-            flat = [c for row in rows for c in row]
-            out["doc_id"].append(int(doc_id))
-            out["n_rows"].append(len(rows))
-            out["n_cells"].append(len(flat))
-            out["n_chars"].append(sum(len(c) for c in flat))
-            out["extracted_text"].append("".join(flat))
-        yield pd.DataFrame(out)
+def _xlsx_roundtrip_row(text):
+    t = text if isinstance(text, str) else ""
+    q = (len(t) + 3) // 4
+    # 2x2 grid of text quarters + one numeric cell (the length),
+    # so all three cell encodings are on the round trip
+    grid = [[t[:q], t[q : 2 * q]], [t[2 * q : 3 * q], t[3 * q :]], [str(len(t))]]
+    rows = extract_xlsx_rows(build_xlsx(grid)) or []
+    flat = [c for row in rows for c in row]
+    return len(rows), len(flat), sum(map(len, flat)), "".join(flat)
 
 
 def extract_xlsx_roundtrip(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """text -> real .xlsx bytes -> stdlib-zip + XML extraction -> text,
-    one Arrow-batched mapInPandas pass (the docx round trip's shape)."""
+    """text -> real .xlsx bytes -> stdlib-zip + XML extraction -> text."""
     src = df.select(
         F.col(id_col).cast("long").alias("doc_id"),
         F.col(text_col).cast("string").alias("text"),
     )
-    return rebalance_if_undersplit(src).mapInPandas(_xlsx_batches, schema=XLSX_SCHEMA)
+    return map_documents(src, _xlsx_roundtrip_row, XLSX_SCHEMA, passthrough=("doc_id",))

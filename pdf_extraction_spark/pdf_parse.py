@@ -2349,7 +2349,8 @@ def _parse_inline_image(lex: "_Lexer") -> tuple[dict, bytes]:
     an EXACT length (width x height x bits, row-padded) so an embedded
     'EI' byte pair cannot truncate them; filtered payloads scan for a
     whitespace-delimited EI (the standard heuristic — real encoders'
-    CCITT/DCT streams do not contain one by construction).  Leaves the
+    CCITT/DCT streams do not contain one by construction), falling back
+    to the first EI that ends at whitespace, a delimiter or EOF.  Leaves the
     lexer positioned after EI; raises ValueError on malformed input."""
     meta: dict = {}
     while True:
@@ -2382,21 +2383,26 @@ def _parse_inline_image(lex: "_Lexer") -> tuple[dict, bytes]:
         lex.pos = pos + nbytes
         lex.expect("EI")
         return meta, d[pos : pos + nbytes]
-    i = pos
     n = len(d)
-    while True:
-        j = d.find(b"EI", i)
-        if j < 0:
-            raise ValueError("pdf parse: unterminated inline image data")
-        after = d[j + 2] if j + 2 < n else None
-        if (
-            j > pos
-            and d[j - 1] in _WS
-            and (after is None or after in _WS or after in _DELIM)
-        ):
+
+    def ends_operator(j: int) -> bool:
+        return j + 2 >= n or d[j + 2] in _WS or d[j + 2] in _DELIM
+
+    j = d.find(b"EI", pos)
+    while j >= 0:
+        if j > pos and d[j - 1] in _WS and ends_operator(j):
             lex.pos = j + 2
             return meta, d[pos : j - 1]
-        i = j + 2
+        j = d.find(b"EI", j + 2)
+    # PDF 32000-1 does not require whitespace before EI: with no
+    # whitespace-delimited EI, take the first one that ends the operator
+    j = d.find(b"EI", pos)
+    while j >= 0:
+        if ends_operator(j):
+            lex.pos = j + 2
+            return meta, d[pos:j]
+        j = d.find(b"EI", j + 2)
+    raise ValueError("pdf parse: unterminated inline image data")
 
 
 def _inline_image_listing(content: bytes) -> list[dict]:

@@ -55,7 +55,8 @@ def test_sniff_types():
         (b"PK\x03\x04 corrupt zip that is not a zip", "zip"),
         (b"RIFF\x24\x00\x00\x00WAVEfmt ", "wav"),
         (b"RIFF\x24\x00\x00\x00AVI LIST", "riff"),
-        (b"\x00\x00\x00\x18ftypisom rest", "mp4"),
+        (b"\x00\x00\x00\x18ftypisom\x00\x00\x02\x00isomiso2", "mp4"),
+        (b"abcdftyp is a word here, not an mp4 box", "text"),
         (b"ID3\x04\x00\x00\x00\x00\x00\x00", "mp3"),
         (b"\xff\xfb\x90\x00 frame", "mp3"),
         (b"\xff\xfe\x00\x01 utf16-bom-ish", "text"),  # even length, decodes

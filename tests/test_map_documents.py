@@ -1,0 +1,88 @@
+"""balance.map_documents — the one per-document operator shape — and the
+structure guard that keeps the batch loop in that one place."""
+
+from __future__ import annotations
+
+import pathlib
+import re
+
+from pyspark.sql import functions as F
+
+from pdf_extraction_spark.operators.any_text import extract_any_text
+from pdf_extraction_spark.operators.balance import map_documents
+from pdf_extraction_spark.operators.docx_text import build_docx
+from pdf_extraction_spark.pdf_parse import build_pdf
+
+OPERATORS = pathlib.Path(__file__).resolve().parent.parent / "pdf_extraction_spark" / "operators"
+
+
+def test_passthrough_columns_keep_position_and_values(spark):
+    blobs = [build_pdf(["pdf body"]), build_docx(["docx body"]), b"plain words"]
+    df = spark.createDataFrame(
+        [(i, f"src-{i}", f"s3://bucket/{i}", b) for i, b in enumerate(blobs)],
+        "doc_id long, source string, uri string, content binary",
+    )
+    out = extract_any_text(df, passthrough=["source", "uri"])
+    assert out.columns == ["doc_id", "source", "uri", "doc_type", "text", "error"]
+    rows = sorted(tuple(r) for r in out.collect())
+    assert rows == [
+        (0, "src-0", "s3://bucket/0", "pdf", "pdf body", None),
+        (1, "src-1", "s3://bucket/1", "docx", "docx body", None),
+        (2, "src-2", "s3://bucket/2", "text", "plain words", None),
+    ]
+
+
+def test_passthrough_between_row_fields(spark):
+    """A passthrough column lands in its schema position even when the
+    row function's fields surround it."""
+    df = spark.createDataFrame([("a", 1), ("b", 2)], "tag string, n long")
+    out = map_documents(
+        df, lambda n: (n * 10, -n), "ten long, tag string, neg long", passthrough=("tag",)
+    )
+    assert out.columns == ["ten", "tag", "neg"]
+    assert sorted(tuple(r) for r in out.collect()) == [(10, "a", -1), (20, "b", -2)]
+
+
+def test_empty_partition_yields_empty_frame_with_declared_schema(spark):
+    schema = "doc_id long, n_chars int, text string"
+    # 4 partitions over 2 rows: two partitions are empty
+    sparse = spark.range(0, 2, 1, 4).select(
+        F.col("id").alias("doc_id"), F.lit("abc").alias("text")
+    )
+    out = map_documents(sparse, lambda text: (len(text), text), schema, passthrough=("doc_id",))
+    assert out.schema.simpleString() == "struct<doc_id:bigint,n_chars:int,text:string>"
+    assert sorted(tuple(r) for r in out.collect()) == [(0, 3, "abc"), (1, 3, "abc")]
+
+    empty = spark.range(0, 0, 1, 2).select(
+        F.col("id").alias("doc_id"), F.lit("abc").alias("text")
+    )
+    pdf = map_documents(empty, lambda text: (len(text), text), schema, passthrough=("doc_id",)).toPandas()
+    assert len(pdf) == 0
+    assert list(pdf.columns) == ["doc_id", "n_chars", "text"]
+
+
+def test_one_to_many_rows_keep_input_order(spark):
+    """A row function returning a list fans one input row out to many
+    (an empty list drops the row); rows come out in input order.  The
+    input is already split wide, so no rebalance reorders it."""
+    wide = spark.sparkContext.defaultParallelism
+    df = spark.range(0, 40, 1, wide).select(
+        F.col("id").alias("doc_id"), (F.col("id") % 4).alias("k")
+    )
+    out = map_documents(
+        df, lambda doc_id, k: [(doc_id, j) for j in range(k)], "doc_id long, j long"
+    )
+    got = [tuple(r) for r in out.collect()]
+    assert got == [(i, j) for i in range(40) for j in range(i % 4)]
+
+
+def test_mapinpandas_only_in_balance():
+    """Every operator goes through map_documents: no other module in
+    operators/ builds its own mapInPandas node or under-split guard."""
+    offenders = [
+        p.name
+        for p in sorted(OPERATORS.glob("*.py"))
+        if p.name != "balance.py"
+        and re.search(r"mapInPandas\(|rebalance_if_undersplit\(", p.read_text())
+    ]
+    assert offenders == []

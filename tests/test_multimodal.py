@@ -94,20 +94,12 @@ def test_frame_sample_fanout_and_bytes(media):
 
 
 def test_decode_image_fake_deterministic(media):
-    out = decode_image(media, "media_id", "blob", fake=True)
+    out = decode_image(media, "media_id", "blob")
     r = {x["media_id"]: x for x in out.collect()}[5]
     payload = _blob_bytes(media, 5)[HEADER_LEN:]
     assert r["width"] == 5 % 64 + 1
     assert r["gray_mean_milli"] == sum(payload) * 1000 // len(payload)
     assert r["pixels_sampled"] == list(payload[:8])
-
-
-def test_decode_image_real_is_stubbed(media):
-    with pytest.raises(Exception) as ei:
-        decode_image(media, "media_id", "blob", fake=False).collect()
-    assert "NotImplementedError" in str(ei.value) or isinstance(
-        ei.value, NotImplementedError
-    )
 
 
 def test_bmp_decode_real_semantics(spark):

@@ -169,3 +169,23 @@ def test_inline_unfiltered_exact_length():
     meta, data = _parse_inline_image(lex)
     assert data == pixels[:-1] or data == pixels  # exact 9 bytes
     assert len(data) == 9
+
+
+def test_inline_filtered_ei_without_preceding_whitespace():
+    """PDF 32000-1 allows EI straight after the payload's last byte: with
+    no whitespace-delimited EI, the first EI ending at whitespace, a
+    delimiter or EOF closes the image; a whitespace-delimited EI still
+    wins when one exists."""
+    from pdf_extraction_spark.pdf_parse import _Lexer, _parse_inline_image
+
+    payload = b"\xff\xd8EIx\x00\xff\xd9"  # an 'EI' pair inside, not an operator
+    for tail in (b"EI Q", b"EI/Im0 Do", b"EI"):
+        lex = _Lexer(b"BI /W 2 /H 2 /F /DCT ID " + payload + tail)
+        assert lex.keyword() == "BI"
+        meta, data = _parse_inline_image(lex)
+        assert meta["Filter"] == "DCT" and data == payload, tail
+        assert lex.data[lex.pos - 2 : lex.pos] == b"EI"
+
+    lex = _Lexer(b"BI /F /CCF ID \x01EI\x02 EI Q")
+    assert lex.keyword() == "BI"
+    assert _parse_inline_image(lex)[1] == b"\x01EI\x02"
