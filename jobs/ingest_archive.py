@@ -67,15 +67,17 @@ def main(argv=None) -> int:
     # provenance rides THROUGH the kernel — no join-back, no second scan
     extracted = extract_any_text(keyed, passthrough=["source", "name"])
     extracted.write.mode("overwrite").parquet(args.output)
-    back = spark.read.parquet(args.output)
-    by_type = {
-        r["doc_type"]: int(r["n"])
-        for r in back.groupBy("doc_type").agg(F.count("*").alias("n")).collect()
-    }
+    # one aggregate over the written table; totals are summed here
+    per_type = (
+        spark.read.parquet(args.output)
+        .groupBy("doc_type")
+        .agg(F.count("*").alias("n"), F.count("text").alias("with_text"))
+        .collect()
+    )
     summary = {
-        "rows": int(back.count()),
-        "with_text": int(back.filter(F.col("text").isNotNull()).count()),
-        "by_type": dict(sorted(by_type.items())),
+        "rows": sum(int(r["n"]) for r in per_type),
+        "with_text": sum(int(r["with_text"]) for r in per_type),
+        "by_type": dict(sorted((r["doc_type"], int(r["n"])) for r in per_type)),
         "total_wall_sec": round(time.monotonic() - t0, 3),
     }
     print(json.dumps(summary))

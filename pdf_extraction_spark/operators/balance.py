@@ -23,6 +23,24 @@ the kernel's output.  At 100 TB the scan provides >= cores splits and
 the guard is a no-op: no Exchange appears in the plan, preserving the
 shuffle-free scale shape (asserted both ways in
 tests/test_plan_quality.py).
+
+The guard reads the partition count from the physical plan and runs no
+Spark job.  Asking the input's RDD would: when the plan holds an
+exchange, AQE wraps it in ``AdaptiveSparkPlanExec``, and building its
+RDD executes every shuffle map stage below it — the whole upstream runs
+once for the count and again for the real job.  So:
+
+* an exchange-free plan is not adaptive, and its RDD is built without
+  running anything (a scan's split count, a ``range``'s slices);
+* an adaptive plan whose every exchange is a user ``repartition(n[,
+  cols])`` shuffle (origin ``REPARTITION_BY_NUM``, which AQE never
+  coalesces) reports its exact count as the pre-AQE plan's
+  ``outputPartitioning``;
+* any other adaptive plan — an aggregate, join or broadcast exchange
+  AQE may coalesce or rewrite, or a partitioning the plan cannot name
+  (``UnknownPartitioning(0)``) — counts as under-split: the guard
+  inserts its round-robin exchange rather than execute the upstream to
+  find out.
 """
 
 from __future__ import annotations
@@ -34,17 +52,39 @@ from pyspark.sql import DataFrame
 from pyspark.sql.types import DataType, StructType
 
 
+def _planned_partitions(df: DataFrame) -> int:
+    """``df``'s partition count as its physical plan states it, without
+    running a job; 0 where an adaptive plan cannot state it exactly."""
+    qe = df._jdf.queryExecution()
+    plan = qe.executedPlan()
+    if plan.getClass().getSimpleName() != "AdaptiveSparkPlanExec":
+        return qe.toRdd().getNumPartitions()
+    plan = plan.inputPlan()
+    nodes = [plan]
+    while nodes:
+        node = nodes.pop()
+        kind = node.getClass().getSimpleName()
+        if "Exchange" in kind and not (
+            kind == "ShuffleExchangeExec"
+            and node.shuffleOrigin().toString() == "REPARTITION_BY_NUM"
+        ):
+            return 0
+        children = node.children()
+        nodes.extend(children.apply(i) for i in range(children.size()))
+    return plan.outputPartitioning().numPartitions()
+
+
 def rebalance_if_undersplit(df: DataFrame) -> DataFrame:
     """Round-robin repartition ``df`` to the cluster's default
-    parallelism iff its current partitioning is narrower.  Streaming
-    DataFrames and anything whose partition count cannot be probed are
-    returned unchanged."""
+    parallelism iff its planned partitioning is narrower, or cannot be
+    read from the plan without running it.  Streaming DataFrames and
+    anything whose plan cannot be probed are returned unchanged."""
     try:
         if df.isStreaming:
             return df
         spark = df.sparkSession
         target = spark.sparkContext.defaultParallelism
-        if df.rdd.getNumPartitions() < target:
+        if _planned_partitions(df) < target:
             return df.repartition(target)
     except Exception:
         pass

@@ -12,13 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from pdf_extraction_spark.functions.text import (
-    STOPWORDS,
-    hash60,
-    stopword_hits,
-    tokens,
-    word_ngrams,
-)
+from pdf_extraction_spark.functions.text import hash60, stopword_hits, tokens
 
 # language marker tokens: tiny per-language stopword sets (heuristic n-gram
 # language ID in the classic Cavnar-Trenkle spirit, reduced to word unigrams

@@ -69,6 +69,15 @@ def _row_hash():
     )
 
 
+def _lineage_record(r) -> dict:
+    """Manifest lineage entry from a lineage aggregate row."""
+    return {
+        "input_file": r["input_file"],
+        "n_rows": int(r["n_rows"]),
+        "input_checksum": int(r["chk"] or 0),
+    }
+
+
 def _checksum_exprs():
     """(count, order-independent xxhash64-xor) over the semantic columns."""
     return [
@@ -152,9 +161,11 @@ def run_extraction(
     """Run the pipeline; returns a summary dict (also persisted per group).
 
     All uncommitted groups are processed in ONE pass by default: the input
-    is scanned once (plus one column-pruned lineage aggregate over `url`),
-    extracted, and written ``partitionBy(group)`` into a staging directory;
-    groups are then COMMITTED in order by an atomic per-group rename +
+    is scanned once, plus ONE column-pruned per-(group, file) lineage
+    aggregate over `url` (a second, per-file aggregate runs only when the
+    first overflows ``lineage_detail_limit`` rows), extracted, and
+    written ``partitionBy(group)`` into a staging directory; groups are
+    then COMMITTED in order by an atomic per-group rename +
     manifest write, preserving the per-group resume granularity without
     the per-group input re-scan the previous formulation paid on plain
     parquet (on an Iceberg bucket spec the group predicate was pruned, but
@@ -238,41 +249,39 @@ def run_extraction(
             if input_format in ("warc", "zip", "tar")
             else F.input_file_name()
         )
-        # per-file totals first: its row count IS the file count (no
-        # separate distinct-count pass), and it alone suffices for the
-        # coarse mode
-        per_file = [
-            {
-                "input_file": r["input_file"],
-                "n_rows": int(r["n_rows"]),
-                "input_checksum": int(r["chk"] or 0),
-            }
-            for r in batch_pages.groupBy(file_expr.alias("input_file"))
-            .agg(
-                F.count("*").alias("n_rows"),
-                F.bit_xor(F.xxhash64("url")).alias("chk"),
+        totals = [
+            F.count("*").alias("n_rows"),
+            F.bit_xor(F.xxhash64("url")).alias("chk"),
+        ]
+        # collected one row past the limit: a full collect says the
+        # detailed cross product fits, and its distinct files give the
+        # file count; an overflowing one means coarse lineage for sure
+        detail = [
+            (int(r["grp"]), _lineage_record(r))
+            for r in batch_pages.groupBy(
+                group_col.alias("grp"), file_expr.alias("input_file")
             )
+            .agg(*totals)
+            .limit(lineage_detail_limit + 1)
             .collect()
         ]
+        per_file: dict[str, dict] = {}
+        if len(detail) <= lineage_detail_limit:
+            for _, rec in detail:
+                tot = per_file.setdefault(
+                    rec["input_file"], dict(rec, n_rows=0, input_checksum=0)
+                )
+                tot["n_rows"] += rec["n_rows"]
+                tot["input_checksum"] ^= rec["input_checksum"]
+        else:
+            # the cross product overflows: per-file totals JVM-side
+            by_file = batch_pages.groupBy(file_expr.alias("input_file"))
+            for r in by_file.agg(*totals).collect():
+                per_file[r["input_file"]] = _lineage_record(r)
         n_files = len(per_file)
         if n_files * len(batch) <= lineage_detail_limit:
-            for r in (
-                batch_pages.groupBy(
-                    group_col.alias("grp"), file_expr.alias("input_file")
-                )
-                .agg(
-                    F.count("*").alias("n_rows"),
-                    F.bit_xor(F.xxhash64("url")).alias("chk"),
-                )
-                .collect()
-            ):
-                lineage[int(r["grp"])].append(
-                    {
-                        "input_file": r["input_file"],
-                        "n_rows": int(r["n_rows"]),
-                        "input_checksum": int(r["chk"] or 0),
-                    }
-                )
+            for g, rec in detail:
+                lineage[g].append(rec)
         else:
             lineage_ref = f"lineage-pass-{i}.json"
             _write_manifest_atomic(
@@ -280,7 +289,9 @@ def run_extraction(
                 {
                     "groups": [int(g) for g in batch],
                     "n_files": n_files,
-                    "lineage": sorted(per_file, key=lambda r: r["input_file"]),
+                    "lineage": sorted(
+                        per_file.values(), key=lambda r: r["input_file"]
+                    ),
                 },
             )
 

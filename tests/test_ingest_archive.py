@@ -54,6 +54,10 @@ def _check_output(spark, out, capsys):
     summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert summary["rows"] == len(_MEMBERS)
     assert summary["with_text"] == 5
+    assert summary["by_type"] == {
+        "binary": 1, "docx": 1, "error": 1, "html": 1, "pdf": 1,
+        "pdf_scanned": 1, "text": 1,
+    }
 
 
 def test_ingest_tar(spark, tmp_path, capsys):

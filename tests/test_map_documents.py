@@ -3,17 +3,19 @@ structure guard that keeps the batch loop in that one place."""
 
 from __future__ import annotations
 
+import datetime
 import pathlib
 import re
 
 from pyspark.sql import functions as F
 
 from pdf_extraction_spark.operators.any_text import extract_any_text
-from pdf_extraction_spark.operators.balance import map_documents
+from pdf_extraction_spark.operators.balance import map_documents, rebalance_if_undersplit
 from pdf_extraction_spark.operators.docx_text import build_docx
 from pdf_extraction_spark.pdf_parse import build_pdf
 
-OPERATORS = pathlib.Path(__file__).resolve().parent.parent / "pdf_extraction_spark" / "operators"
+PACKAGE = pathlib.Path(__file__).resolve().parent.parent / "pdf_extraction_spark"
+OPERATORS = PACKAGE / "operators"
 
 
 def test_passthrough_columns_keep_position_and_values(spark):
@@ -76,13 +78,63 @@ def test_one_to_many_rows_keep_input_order(spark):
     assert got == [(i, j) for i in range(40) for j in range(i % 4)]
 
 
+def _jobs_run(spark, action) -> int:
+    """Number of Spark jobs started while ``action()`` runs."""
+    sc = spark.sparkContext
+    tag = f"guard-probe-{id(action)}"
+    sc.addJobTag(tag)
+    try:
+        action()
+    finally:
+        sc.removeJobTag(tag)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc._jsc.sc().statusTracker().getJobIdsForTag(tag))
+
+
+def test_undersplit_guard_runs_no_job_on_exchange_topped_input(spark, tmp_path):
+    """The guard reads the partition count from the plan: over input
+    topped by a shuffle exchange (a user repartition, the WARC source's
+    own repartition) it decides without executing the upstream."""
+    from pdf_extraction_spark.sources.warc import read_pages_warc, write_pages_warc
+
+    target = spark.sparkContext.defaultParallelism
+    wide = spark.range(0, 64).repartition(target)
+    # the probe sees jobs: an action under the same tag is counted
+    assert _jobs_run(spark, wide.count) >= 1
+
+    out = []
+    assert _jobs_run(spark, lambda: out.append(rebalance_if_undersplit(wide))) == 0
+    assert out[0] is wide  # exactly target partitions: not under-split
+
+    ts = datetime.datetime(2026, 3, 1, 12, 0, 0)
+    html = b"<html><body><p>" + b"warc page words " * 8 + b"</p></body></html>"
+    for k in range(2):
+        write_pages_warc(
+            [(f"http://{k}.example/{j}", ts, html) for j in range(3)],
+            str(tmp_path / f"seg-{k}.warc.gz"),
+        )
+    pages = read_pages_warc(spark, str(tmp_path / "*.warc.gz"))
+    out.clear()
+    assert _jobs_run(spark, lambda: out.append(rebalance_if_undersplit(pages))) == 0
+    # two archives plan two partitions: under-split, so rebalanced
+    assert out[0] is not pages
+
+
 def test_mapinpandas_only_in_balance():
     """Every operator goes through map_documents: no other module in
-    operators/ builds its own mapInPandas node or under-split guard."""
+    operators/ builds its own mapInPandas node or under-split guard, and
+    no module anywhere in the package asks a DataFrame's RDD for its
+    partition count — on an adaptive plan that runs the whole upstream
+    (operators/balance.py reads the count from the plan instead)."""
     offenders = [
         p.name
         for p in sorted(OPERATORS.glob("*.py"))
         if p.name != "balance.py"
         and re.search(r"mapInPandas\(|rebalance_if_undersplit\(", p.read_text())
+    ]
+    offenders += [
+        str(p.relative_to(PACKAGE))
+        for p in sorted(PACKAGE.rglob("*.py"))
+        if ".rdd.getNumPartitions(" in p.read_text()
     ]
     assert offenders == []

@@ -175,6 +175,73 @@ def test_lineage_coarsens_above_detail_limit(spark, pages_unit, tmp_path):
     assert pass_lineage["groups"] == [0, 1, 2]
 
 
+@pytest.mark.parametrize("layout", ["as_written", "one_group_per_file"])
+def test_lineage_detail_limit_boundary(spark, pages_unit, tmp_path, layout):
+    """At lineage_detail_limit == |files| x |groups| lineage stays
+    detailed; one lower it coarsens, and the pass file's per-file totals
+    are the detailed run's sums.  ``one_group_per_file`` makes the
+    (group, file) aggregate sparse, so the coarse totals are folded from
+    it; ``as_written`` overflows it and runs the per-file aggregate."""
+    from pdf_extraction_spark.plans.pipeline import (
+        MANIFEST_DIR,
+        run_extraction,
+    )
+
+    groups = 3
+    pages = pages_unit
+    if layout == "one_group_per_file":
+        pages = str(tmp_path / "by_group.parquet")
+        src = spark.read.parquet(pages_unit)
+        grp = F.pmod(F.xxhash64("url"), F.lit(groups))
+        for g in range(groups):
+            src.filter(grp == g).coalesce(1).write.mode("append").parquet(pages)
+    n_files = (
+        spark.read.parquet(pages).select(F.input_file_name()).distinct().count()
+    )
+    limit = n_files * groups
+
+    def manifests(out):
+        d = os.path.join(out, MANIFEST_DIR)
+        return [
+            json.load(open(os.path.join(d, f)))
+            for f in sorted(os.listdir(d))
+            if f.startswith("group-")
+        ]
+
+    fine = str(tmp_path / "fine")
+    run_extraction(spark, pages, fine, groups=groups, lineage_detail_limit=limit)
+    mf = manifests(fine)
+    assert len(mf) == groups
+    assert all("lineage_ref" not in m and m["lineage"] for m in mf)
+    sums: dict[str, list] = {}
+    for m in mf:
+        for r in m["lineage"]:
+            tot = sums.setdefault(r["input_file"], [0, 0])
+            tot[0] += r["n_rows"]
+            tot[1] ^= r["input_checksum"]
+    assert len(sums) == n_files
+    n_detail = sum(len(m["lineage"]) for m in mf)
+    assert n_detail < limit if layout == "one_group_per_file" else n_detail == limit
+
+    coarse = str(tmp_path / "coarse")
+    run_extraction(
+        spark, pages, coarse, groups=groups, lineage_detail_limit=limit - 1
+    )
+    mc = manifests(coarse)
+    assert [(m["n_rows"], m["output_checksum"]) for m in mc] == [
+        (m["n_rows"], m["output_checksum"]) for m in mf
+    ]
+    assert all(m["lineage"] == [] for m in mc)
+    refs = {m["lineage_ref"] for m in mc}
+    assert len(refs) == 1
+    pass_lineage = json.load(open(os.path.join(coarse, MANIFEST_DIR, refs.pop())))
+    assert pass_lineage["n_files"] == n_files
+    assert {
+        r["input_file"]: [r["n_rows"], r["input_checksum"]]
+        for r in pass_lineage["lineage"]
+    } == sums
+
+
 def test_empty_groups_are_readable_and_compactable(spark, tmp_path):
     """A committed group with zero rows must still be a schema-bearing
     parquet directory: direct reads and compaction work (regression — the
