@@ -29,7 +29,7 @@ from collections.abc import Callable
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
@@ -125,31 +125,6 @@ def _dk_grams(n: int, toks: str = "toks") -> str:
 # Extraction family (SURVEY §2 F4–F16)
 # ---------------------------------------------------------------------------
 
-def q_extract_kv_sql(spark, sf_dir):
-    """F7–F10 declaratively: split/explode/first-colon-split/last-wins."""
-    pages = _load(spark, sf_dir, "documents").select("doc_id", _page_col().alias("page"))
-    lines = pages.select(
-        "doc_id", F.posexplode(F.split("page", "\n")).alias("line_no", "raw")
-    ).select("doc_id", "line_no", F.trim("raw").alias("line"))
-    kv = lines.filter(F.instr("line", ":") > 0).select(
-        "doc_id",
-        "line_no",
-        F.trim(F.substring_index("line", ":", 1)).alias("field"),
-        F.trim(F.expr("substring(line, instr(line, ':') + 1)")).alias("value"),
-    )
-    agg = kv.groupBy("doc_id", "field").agg(
-        F.max_by("value", "line_no").alias("value"),
-        F.min("line_no").alias("first_line"),
-    )
-    w = Window.partitionBy("doc_id").orderBy("first_line")
-    return agg.select(
-        "doc_id",
-        "field",
-        "value",
-        (F.row_number().over(w) - 1).cast("long").alias("ord"),
-    )
-
-
 def q_extract_kv_kernel(spark, sf_dir):
     """Same semantics through the Arrow-batched Python kernel (F6–F10)."""
     from pdf_extraction_spark.operators.extract import extract_fields_long
@@ -178,7 +153,7 @@ FROM agg
 
 def q_extract_kv_wide(spark, sf_dir):
     """F14 pivot long->wide (export-scale), fixed column set."""
-    kv = q_extract_kv_sql(spark, sf_dir)
+    kv = q_extract_kv_kernel(spark, sf_dir)
     return kv.groupBy("doc_id").agg(
         F.max(F.when(F.col("field") == "Title", F.col("value"))).alias("title"),
         F.max(F.when(F.col("field") == "Lang", F.col("value"))).alias("lang_field"),
@@ -200,44 +175,6 @@ SELECT doc_id,
 FROM agg GROUP BY doc_id
 """
 )
-
-
-def q_extract_page_concat(spark, sf_dir):
-    """F4 fold: skip empty pages, append '\\n' after every kept page."""
-    d = _load(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.expr("substring(text, 1, 50)").alias("p1"),
-        F.lit("").alias("p2"),
-        F.expr("substring(text, 51, 50)").alias("p3"),
-    )
-    kept = lambda c: F.when(F.col(c) != "", F.concat(F.col(c), F.lit("\n"))).otherwise(
-        F.lit("")
-    )
-    return d.select(
-        "doc_id",
-        F.concat(kept("p1"), kept("p2"), kept("p3")).alias("extracted_text"),
-        (
-            F.when(F.col("p1") != "", 1).otherwise(0)
-            + F.when(F.col("p2") != "", 1).otherwise(0)
-            + F.when(F.col("p3") != "", 1).otherwise(0)
-        ).cast("long").alias("n_kept_pages"),
-    )
-
-
-_ORACLE_PAGE_CONCAT = """
-WITH d AS (
-  SELECT doc_id, substr(text, 1, 50) AS p1, '' AS p2, substr(text, 51, 50) AS p3
-  FROM documents
-)
-SELECT doc_id,
-       (CASE WHEN p1 <> '' THEN p1 || chr(10) ELSE '' END)
-       || (CASE WHEN p2 <> '' THEN p2 || chr(10) ELSE '' END)
-       || (CASE WHEN p3 <> '' THEN p3 || chr(10) ELSE '' END) AS extracted_text,
-       CAST((CASE WHEN p1 <> '' THEN 1 ELSE 0 END)
-          + (CASE WHEN p2 <> '' THEN 1 ELSE 0 END)
-          + (CASE WHEN p3 <> '' THEN 1 ELSE 0 END) AS BIGINT) AS n_kept_pages
-FROM d
-"""
 
 
 def q_extract_prompt_truncate(spark, sf_dir):
@@ -287,59 +224,6 @@ FROM documents GROUP BY lang
 # ---------------------------------------------------------------------------
 # Text analysis (training-data curation operators)
 # ---------------------------------------------------------------------------
-
-def q_text_stats(spark, sf_dir):
-    from pdf_extraction_spark.operators.text_analysis import text_stats
-
-    out = text_stats(_load(spark, sf_dir, "documents"), "doc_id", "text")
-    return out.select(
-        "doc_id",
-        F.col("n_chars_actual").cast("long").alias("n_chars_actual"),
-        F.col("n_tokens").cast("long").alias("n_tokens"),
-        F.col("n_distinct_tokens").cast("long").alias("n_distinct_tokens"),
-        F.col("stopword_hits").cast("long").alias("stopword_hits"),
-        F.col("n_punct").cast("long").alias("n_punct"),
-    )
-
-
-_ORACLE_TEXT_STATS = f"""
-WITH t AS (SELECT doc_id, text, {_DK_TOKS} AS toks FROM documents)
-SELECT doc_id,
-       CAST(length(text) AS BIGINT) AS n_chars_actual,
-       CAST(len(toks) AS BIGINT) AS n_tokens,
-       CAST(len(list_distinct(toks)) AS BIGINT) AS n_distinct_tokens,
-       CAST(len(list_filter(toks, x -> x IN ('a','and','in','of','the'))) AS BIGINT) AS stopword_hits,
-       CAST(length(regexp_replace(text, '[^\\.\\,\\!\\?\\;\\:]', '', 'g')) AS BIGINT) AS n_punct
-FROM t
-"""
-
-
-def q_text_quality(spark, sf_dir):
-    from pdf_extraction_spark.operators.text_analysis import quality_score
-
-    out = quality_score(_load(spark, sf_dir, "documents"), "doc_id", "text")
-    return out.select(
-        "doc_id",
-        F.col("n_tokens").cast("long").alias("n_tokens"),
-        F.col("quality_score").cast("long").alias("quality_score"),
-    )
-
-
-_ORACLE_QUALITY = f"""
-WITH t AS (SELECT doc_id, {_DK_TOKS} AS toks FROM documents),
-s AS (
-  SELECT doc_id, len(toks) AS n,
-         len(list_distinct(toks)) AS d,
-         len(list_filter(toks, x -> x IN ('a','and','in','of','the'))) AS sw
-  FROM t
-)
-SELECT doc_id, CAST(n AS BIGINT) AS n_tokens,
-       CAST(least(40, n)
-          + least(30, floor(CAST(d * 30 AS DOUBLE) / greatest(n, 1)))
-          + least(30, floor(CAST(sw * 300 AS DOUBLE) / greatest(n, 1))) AS BIGINT) AS quality_score
-FROM s
-"""
-
 
 def q_sample_stratified(spark, sf_dir):
     """Deterministic per-source sampling (mixing weights): src0 kept at
@@ -416,34 +300,6 @@ SELECT doc_id,
        CAST(least(64, n - cid*56) AS BIGINT) AS chunk_n_tokens,
        array_to_string(list_slice(toks, CAST(cid*56 + 1 AS INT), CAST(cid*56 + 64 AS INT)), ' ') AS chunk_text
 FROM c
-"""
-
-
-def q_events_json_props(spark, sf_dir):
-    """Semi-structured column handling: parse the JSON `props` string
-    with a typed schema (from_json — JVM-side Jackson, no UDF) and
-    aggregate the extracted field per event type.  DuckDB twin uses its
-    native json_extract."""
-    ev = _load(spark, sf_dir, "events")
-    parsed = ev.select(
-        "event_type",
-        F.from_json("props", "k INT").alias("p"),
-    )
-    return parsed.groupBy("event_type").agg(
-        F.count("*").cast("long").alias("n_events"),
-        F.sum(F.col("p.k")).cast("long").alias("sum_k"),
-        F.min(F.col("p.k")).cast("int").alias("min_k"),
-        F.max(F.col("p.k")).cast("int").alias("max_k"),
-    )
-
-
-_ORACLE_JSON_PROPS = """
-SELECT event_type,
-       CAST(count(*) AS BIGINT) AS n_events,
-       CAST(sum(CAST(json_extract(props, '$.k') AS INT)) AS BIGINT) AS sum_k,
-       CAST(min(CAST(json_extract(props, '$.k') AS INT)) AS INT) AS min_k,
-       CAST(max(CAST(json_extract(props, '$.k') AS INT)) AS INT) AS max_k
-FROM events GROUP BY event_type
 """
 
 
@@ -645,18 +501,6 @@ FROM h
 """
 
 
-def q_fingerprint_md5(spark, sf_dir):
-    from pdf_extraction_spark.operators.text_analysis import fingerprint_md5
-
-    return fingerprint_md5(_load(spark, sf_dir, "documents"), "doc_id", "text")
-
-
-_ORACLE_FP_MD5 = r"""
-SELECT doc_id, md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fingerprint
-FROM documents
-"""
-
-
 def q_fingerprint_winnow(spark, sf_dir):
     """Winnowing sketch (k=5 grams, window=4), exploded to rows."""
     from pdf_extraction_spark.operators.text_analysis import fingerprint_winnow
@@ -719,32 +563,6 @@ SELECT doc_id,
             AS BIGINT) AS n_bpe_tokens,
        CAST(n_ws AS BIGINT) AS n_ws_tokens
 FROM t
-"""
-
-
-def q_token_stats_by_source(spark, sf_dir):
-    from pdf_extraction_spark.functions.text import tokens
-
-    d = _load(spark, sf_dir, "documents")
-    return (
-        d.select("source", F.size(tokens(F.col("text"))).alias("nt"), "n_chars")
-        .groupBy("source")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("nt").cast("long").alias("total_tokens"),
-            F.max("nt").cast("long").alias("max_tokens"),
-            F.min("n_chars").cast("long").alias("min_chars"),
-        )
-    )
-
-
-_ORACLE_TOKEN_STATS = f"""
-WITH t AS (SELECT source, len({_DK_TOKS}) AS nt, n_chars FROM documents)
-SELECT source, count(*) AS n_docs,
-       CAST(sum(nt) AS BIGINT) AS total_tokens,
-       CAST(max(nt) AS BIGINT) AS max_tokens,
-       CAST(min(n_chars) AS BIGINT) AS min_chars
-FROM t GROUP BY source
 """
 
 
@@ -961,39 +779,16 @@ WHERE fingerprint NOT IN (SELECT fingerprint FROM seen)
 """
 
 
-def q_dedup_clusters(spark, sf_dir):
+def q_dedup_clusters_star(spark, sf_dir):
     """Connected-components dedup clustering: the near-dup PAIRS from the
     MinHash-LSH pipeline (same corpus/params as `dedup_minhash_lsh`) are
     folded into canonical-id clusters — every doc in the pair graph maps
-    to the minimum doc id reachable from it.  Iterative min-label
-    propagation in Spark (driver loop, lineage-truncated per round); the
-    DuckDB twin computes the same fixpoint with a recursive CTE."""
-    from pdf_extraction_spark.operators.dedup import (
-        dedup_components,
-        minhash_lsh_dedup_pairs,
-    )
-
-    d = _load(spark, sf_dir, "documents").select("doc_id", "text")
-    pert = d.select(
-        (F.col("doc_id") + 1000000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" zz yy xx ww vv")).alias("text"),
-    )
-    corpus = _spread(d.unionByName(pert))
-    pairs = minhash_lsh_dedup_pairs(
-        corpus, "doc_id", "text", n=3, num_perms=16, bands=8,
-        num_threshold=1, den_threshold=2, max_bucket=64,
-    )
-    return dedup_components(pairs)
-
-
-def q_dedup_clusters_star(spark, sf_dir):
-    """Same pair graph and cluster semantics as `dedup_clusters`, folded
-    by the alternating small-star/large-star contraction instead of
-    min-label propagation (O(log n) rounds vs component diameter — the
-    variant for chain-shaped near-dup graphs).  Both must reach the same
-    fixpoint, so this entry shares `dedup_clusters`' recursive-CTE
-    oracle verbatim — the driver independently confirms the two
-    algorithms agree with the SQL ground truth."""
+    to the minimum doc id reachable from it — by the alternating
+    small-star/large-star contraction (O(log n) rounds vs component
+    diameter, the variant for chain-shaped near-dup graphs).  The DuckDB
+    twin computes the same fixpoint with a recursive CTE; agreement with
+    plain min-label propagation (`dedup_components`) is pinned in
+    tests/test_curation.py."""
     from pdf_extraction_spark.operators.dedup import (
         dedup_components_star,
         minhash_lsh_dedup_pairs,
@@ -1082,44 +877,6 @@ SELECT doc_id, n_emails,
        CAST(len(regexp_extract_all(t1, '{_PII_PHONE}')) AS BIGINT) AS n_phones,
        regexp_replace(t1, '{_PII_PHONE}', '[PHONE]', 'g') AS scrubbed_text
 FROM s1
-"""
-
-
-def q_source_skew_profile(spark, sf_dir):
-    """Per-source skew diagnosis (rows, bytes, share in basis points, and
-    the worst salted-bucket count at 8 salts) — the measurement that
-    decides whether a key needs salting before a shuffle."""
-    from pdf_extraction_spark.operators.extract import skew_profile
-
-    return skew_profile(
-        _load(spark, sf_dir, "documents"),
-        "source",
-        "doc_id",
-        size_col="text",
-        salt_buckets=8,
-    )
-
-
-_ORACLE_SKEW = """
-WITH pk AS (
-  SELECT source AS key, count(*) AS n_rows, sum(length(text)) AS n_bytes
-  FROM documents GROUP BY source
-),
-tot AS (SELECT sum(n_rows) AS total_rows FROM pk),
-sb AS (
-  SELECT key, max(bn) AS max_salted_bucket FROM (
-    SELECT source AS key,
-           CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS UBIGINT) % 8 AS salt,
-           count(*) AS bn
-    FROM documents GROUP BY 1, 2
-  ) GROUP BY key
-)
-SELECT pk.key AS source,
-       CAST(pk.n_rows AS BIGINT) AS n_rows,
-       CAST(pk.n_bytes AS BIGINT) AS n_bytes,
-       CAST(pk.n_rows * 10000 // tot.total_rows AS BIGINT) AS share_bp,
-       CAST(sb.max_salted_bucket AS BIGINT) AS max_salted_bucket
-FROM pk CROSS JOIN tot JOIN sb ON sb.key = pk.key
 """
 
 
@@ -1246,62 +1003,6 @@ WHERE {_DK_DOT.format(a='a.embedding', b='b.embedding')}
 # Similarity search (ANN)
 # ---------------------------------------------------------------------------
 
-def q_similarity_topk(spark, sf_dir):
-    """Brute-force cosine top-10 for query vectors vec_id < 8."""
-    from pdf_extraction_spark.operators.similarity import brute_force_topk
-
-    e = _load(spark, sf_dir, "embeddings")
-    out = brute_force_topk(e, e.filter(F.col("vec_id") < 8), k=10)
-    return out.select(
-        "query_id", "neighbor_id", F.col("rank").cast("long").alias("rank")
-    )
-
-
-_ORACLE_TOPK = f"""
-WITH q AS (SELECT vec_id AS query_id, embedding AS q_vec FROM embeddings WHERE vec_id < 8),
-v AS (SELECT vec_id AS neighbor_id, embedding AS n_vec FROM embeddings),
-scored AS (
-  SELECT query_id, neighbor_id,
-         {_DK_DOT.format(a='q_vec', b='n_vec')}
-         / (sqrt({_DK_DOT.format(a='q_vec', b='q_vec')})
-            * sqrt({_DK_DOT.format(a='n_vec', b='n_vec')})) AS cos
-  FROM v CROSS JOIN q WHERE query_id <> neighbor_id
-)
-SELECT query_id, neighbor_id,
-       CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS BIGINT) AS rank
-FROM scored
-QUALIFY rank <= 10
-"""
-
-
-def q_similarity_topk_bucketed(spark, sf_dir):
-    """IVF-style: top-5 within the query's coarse bucket (label)."""
-    from pdf_extraction_spark.operators.similarity import bucketed_topk
-
-    e = _load(spark, sf_dir, "embeddings")
-    out = bucketed_topk(e, e.filter(F.col("vec_id") < 8), k=5)
-    return out.select(
-        "query_id", "neighbor_id", F.col("rank").cast("long").alias("rank")
-    )
-
-
-_ORACLE_TOPK_BUCKET = f"""
-WITH q AS (SELECT vec_id AS query_id, embedding AS q_vec, label FROM embeddings WHERE vec_id < 8),
-v AS (SELECT vec_id AS neighbor_id, embedding AS n_vec, label FROM embeddings),
-scored AS (
-  SELECT query_id, neighbor_id,
-         {_DK_DOT.format(a='q_vec', b='n_vec')}
-         / (sqrt({_DK_DOT.format(a='q_vec', b='q_vec')})
-            * sqrt({_DK_DOT.format(a='n_vec', b='n_vec')})) AS cos
-  FROM v JOIN q USING (label) WHERE query_id <> neighbor_id
-)
-SELECT query_id, neighbor_id,
-       CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS BIGINT) AS rank
-FROM scored
-QUALIFY rank <= 5
-"""
-
-
 def q_similarity_ivf_topk(spark, sf_dir):
     """ANN top-5 with an IVF coarse quantizer (the centroid-based scale
     path, complementing the hyperplane-LSH one): centroids are the 8
@@ -1404,168 +1105,8 @@ QUALIFY rank <= 5
 
 
 # ---------------------------------------------------------------------------
-# Multimodal columns (binary blobs + typed metadata; decode stubbed)
+# Multimodal columns (binary blobs + typed metadata)
 # ---------------------------------------------------------------------------
-
-# DuckDB twin of multimodal.synth_blob's payload (4 md5 blocks = 64 bytes)
-_DK_PAYLOAD_HEX = (
-    "md5(CAST(doc_id AS VARCHAR) || ':0') || md5(CAST(doc_id AS VARCHAR) || ':1') || "
-    "md5(CAST(doc_id AS VARCHAR) || ':2') || md5(CAST(doc_id AS VARCHAR) || ':3')"
-)
-
-
-def _synth_media(spark, sf_dir):
-    from pdf_extraction_spark.operators.multimodal import synth_media
-
-    return synth_media(_load(spark, sf_dir, "documents"), "doc_id")
-
-
-def q_multimodal_metadata(spark, sf_dir):
-    """JVM-side binary header parse; oracle recomputes ground truth
-    arithmetically from the synthesis spec (independent check)."""
-    from pdf_extraction_spark.operators.multimodal import decode_metadata
-
-    return decode_metadata(_synth_media(spark, sf_dir), "media_id", "blob")
-
-
-_ORACLE_MM_META = """
-SELECT doc_id AS media_id, true AS is_valid,
-       CAST(doc_id % 64 + 1 AS BIGINT) AS width,
-       CAST(doc_id % 48 + 1 AS BIGINT) AS height,
-       CAST(3 AS BIGINT) AS channels,
-       CAST(64 AS BIGINT) AS payload_bytes
-FROM documents
-"""
-
-
-def q_multimodal_byte_features(spark, sf_dir):
-    from pdf_extraction_spark.operators.multimodal import byte_features
-
-    out = byte_features(_synth_media(spark, sf_dir), "media_id", "blob")
-    return out.select(
-        "media_id", "n_bytes", "byte_sum",
-        F.col("byte_max").cast("long").alias("byte_max"), "n_zero",
-    )
-
-
-_ORACLE_MM_BYTES = f"""
-WITH p AS (SELECT doc_id AS media_id, {_DK_PAYLOAD_HEX} AS ph FROM documents),
-b AS (
-  SELECT media_id,
-         [CAST(('0x' || substr(ph, i*2+1, 2)) AS UBIGINT)::INT for i in range(64)] AS bs
-  FROM p
-)
-SELECT media_id, CAST(64 AS BIGINT) AS n_bytes,
-       CAST(list_sum(bs) AS BIGINT) AS byte_sum,
-       CAST(list_max(bs) AS BIGINT) AS byte_max,
-       CAST(len(list_filter(bs, x -> x = 0)) AS BIGINT) AS n_zero
-FROM b
-"""
-
-
-def q_multimodal_frame_sample(spark, sf_dir):
-    """Video-style frame sampling (16-byte frames, stride 2) — the UDF fans
-    one row out to several; frame bytes cross-checked as hex."""
-    from pdf_extraction_spark.operators.multimodal import frame_sample
-
-    out = frame_sample(
-        _synth_media(spark, sf_dir), "media_id", "blob", frame_size=16, stride=2
-    )
-    return out.select("media_id", "frame_no", "frame_len", "frame_hex")
-
-
-_ORACLE_MM_FRAMES = f"""
-WITH p AS (SELECT doc_id AS media_id, {_DK_PAYLOAD_HEX} AS ph FROM documents)
-SELECT media_id, CAST(f AS BIGINT) AS frame_no, CAST(16 AS BIGINT) AS frame_len,
-       substr(ph, f*32 + 1, 32) AS frame_hex
-FROM p, (SELECT unnest([0, 2]) AS f)
-"""
-
-
-def q_multimodal_bmp_decode(spark, sf_dir):
-    """REAL pixel decode: spec-conformant 24-bit BMPs are synthesized
-    JVM-side from doc ids (bottom-up rows, 4-byte stride, BGR), then the
-    pure-Python decoder in mapInPandas parses them — headers, row flip,
-    stride, channel order — and emits per-channel means + the top-left
-    pixel.  The DuckDB twin never parses BMP: it recomputes the expected
-    stats analytically from the generator formula, so any decoder error
-    (off-by-one stride, unflipped rows, RGB/BGR swap) breaks the match."""
-    from pdf_extraction_spark.operators.multimodal import decode_bmp, synth_bmp
-
-    d = _load(spark, sf_dir, "documents").select("doc_id")
-    blobs = d.select("doc_id", synth_bmp(F.col("doc_id")).alias("blob"))
-    return decode_bmp(blobs, "doc_id", "blob")
-
-
-_ORACLE_BMP_DECODE = """
-WITH m AS (
-  SELECT doc_id, CAST(doc_id % 5 + 4 AS INT) AS w, CAST(doc_id % 4 + 4 AS INT) AS h
-  FROM documents
-),
-rows_ AS (SELECT doc_id, w, h, unnest(range(h)) AS j FROM m),
-rh AS (
-  SELECT doc_id, w, h, j,
-         substr(md5(CAST(doc_id AS VARCHAR) || ':' || CAST(j AS VARCHAR) || ':a')
-                || md5(CAST(doc_id AS VARCHAR) || ':' || CAST(j AS VARCHAR) || ':b'),
-                1, w*6) AS hx
-  FROM rows_
-),
-b AS (SELECT doc_id, w, h, j, unnest(range(w*3)) AS k, hx FROM rh),
-v AS (
-  SELECT doc_id, w, h, j, k,
-         CAST(('0x' || substr(hx, CAST(k*2 + 1 AS INT), 2)) AS INT) AS val,
-         k % 3 AS chan
-  FROM b
-)
-SELECT doc_id AS media_id, w AS width, h AS height,
-       CAST(sum(CASE WHEN chan = 0 THEN val END) * 1000 // (w*h) AS BIGINT) AS mean_b_milli,
-       CAST(sum(CASE WHEN chan = 1 THEN val END) * 1000 // (w*h) AS BIGINT) AS mean_g_milli,
-       CAST(sum(CASE WHEN chan = 2 THEN val END) * 1000 // (w*h) AS BIGINT) AS mean_r_milli,
-       CAST(max(CASE WHEN j = h-1 AND k = 0 THEN val END) AS INT) AS tl_b,
-       CAST(max(CASE WHEN j = h-1 AND k = 1 THEN val END) AS INT) AS tl_g,
-       CAST(max(CASE WHEN j = h-1 AND k = 2 THEN val END) AS INT) AS tl_r,
-       CAST(1 AS INT) AS is_valid
-FROM v GROUP BY doc_id, w, h
-"""
-
-
-def q_multimodal_wav_decode(spark, sf_dir):
-    """REAL audio decode: 16-bit PCM WAVs synthesized JVM-side, parsed by
-    a chunk-walking RIFF parser in mapInPandas (little-endian signed
-    samples).  Oracle recomputes amplitude stats analytically from the
-    generator formula — a sign error, an endianness swap, or a chunk
-    mis-walk breaks the match."""
-    from pdf_extraction_spark.operators.multimodal import decode_wav, synth_wav
-
-    d = _load(spark, sf_dir, "documents").select("doc_id")
-    blobs = d.select("doc_id", synth_wav(F.col("doc_id")).alias("blob"))
-    return decode_wav(blobs, "doc_id", "blob")
-
-
-_ORACLE_WAV_DECODE = """
-WITH m AS (SELECT doc_id, CAST(doc_id % 17 + 16 AS INT) AS n FROM documents),
-s AS (SELECT doc_id, n, unnest(range(n)) AS k FROM m),
-hx AS (
-  SELECT doc_id, n, k,
-         md5(CAST(doc_id AS VARCHAR) || ':w' || CAST(k // 8 AS VARCHAR)) AS h,
-         CAST(k % 8 AS INT) AS o
-  FROM s
-),
-v AS (
-  SELECT doc_id, n, k,
-         CAST(('0x' || substr(h, o*4 + 1, 2)) AS INT)
-           + CAST(('0x' || substr(h, o*4 + 3, 2)) AS INT) * 256 AS u
-  FROM hx
-),
-sv AS (SELECT doc_id, n, k, CASE WHEN u >= 32768 THEN u - 65536 ELSE u END AS smp FROM v)
-SELECT doc_id AS media_id, CAST(8000 AS INT) AS sample_rate, n AS n_samples,
-       CAST(sum(abs(smp)) * 1000 // n AS BIGINT) AS mean_abs_milli,
-       CAST(max(abs(smp)) AS INT) AS max_abs,
-       CAST(max(CASE WHEN k = 0 THEN smp END) AS INT) AS first_sample,
-       CAST(1 AS INT) AS is_valid
-FROM sv GROUP BY doc_id, n
-"""
-
 
 def q_multimodal_png_decode(spark, sf_dir):
     """REAL compressed-image decode: spec-conformant 8-bit RGB/RGBA PNGs
@@ -1576,9 +1117,8 @@ def q_multimodal_png_decode(spark, sf_dir):
     recomputes the expected per-channel stats analytically from the
     generator's md5 pixel formula, so any codec error (a wrong filter
     inverse, a missed IDAT, top-down/bottom-up confusion) breaks the
-    match.  Covers the compressed-format gap the IMG1 stub documented
-    (multimodal.py decode_image); reference analogue: the PIL image side
-    of pdfextraction.py:72-73."""
+    match.  Reference analogue: the PIL image side of
+    pdfextraction.py:72-73."""
     from pdf_extraction_spark.operators.multimodal import decode_png, synth_png
 
     d = _load(spark, sf_dir, "documents").select("doc_id")
@@ -2400,41 +1940,6 @@ def q_extract_pdf_encrypted(spark, sf_dir):
     return extract_pdf_encrypted_roundtrip(d, "doc_id", "text")
 
 
-def q_multimodal_decode_fake(spark, sf_dir):
-    """Stubbed pixel decode: decode_image's deterministic stand-in (IMG1
-    header dims + payload-byte gray stats)."""
-    from pdf_extraction_spark.operators.multimodal import decode_image
-
-    out = decode_image(_synth_media(spark, sf_dir), "media_id", "blob")
-    return out.select(
-        "media_id",
-        F.col("width").cast("long").alias("width"),
-        F.col("height").cast("long").alias("height"),
-        "gray_mean_milli",
-        # Serialized (not array<long>): the driver's canonicalizer sorts
-        # result columns with pandas and dies on list-valued cells.
-        F.array_join(F.col("pixels_sampled").cast("array<string>"), ",").alias(
-            "pixels_csv"
-        ),
-    )
-
-
-_ORACLE_MM_DECODE = f"""
-WITH p AS (SELECT doc_id AS media_id, {_DK_PAYLOAD_HEX} AS ph FROM documents),
-b AS (
-  SELECT media_id,
-         [CAST(('0x' || substr(ph, i*2+1, 2)) AS UBIGINT)::INT for i in range(64)] AS bs
-  FROM p
-)
-SELECT media_id,
-       CAST(media_id % 64 + 1 AS BIGINT) AS width,
-       CAST(media_id % 48 + 1 AS BIGINT) AS height,
-       CAST(list_sum(bs) * 1000 // 64 AS BIGINT) AS gray_mean_milli,
-       array_to_string([CAST(x AS BIGINT) for x in list_slice(bs, 1, 8)], ',') AS pixels_csv
-FROM b
-"""
-
-
 # ---------------------------------------------------------------------------
 # Relational coverage (scan/filter/agg/join/window/sort/set ops)
 # ---------------------------------------------------------------------------
@@ -2465,83 +1970,6 @@ SELECT l_returnflag, l_linestatus,
 FROM lineitem
 WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
 GROUP BY l_returnflag, l_linestatus
-"""
-
-
-def q_top_customers(spark, sf_dir):
-    """3-way join (broadcast dims) + decimal revenue + top-10."""
-    li = _load(spark, sf_dir, "lineitem")
-    orders = _load(spark, sf_dir, "orders")
-    cust = _load(spark, sf_dir, "customer")
-    rev = F.col("l_extendedprice").cast("decimal(18,2)") * (
-        F.lit(1).cast("decimal(18,2)") - F.col("l_discount").cast("decimal(18,2)")
-    )
-    return (
-        li.join(F.broadcast(orders), li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .groupBy("c_custkey", "c_name")
-        .agg(F.sum(rev).cast("double").alias("revenue"))
-        .orderBy(F.col("revenue").desc(), F.col("c_custkey"))
-        .limit(10)
-    )
-
-
-_ORACLE_TOP_CUSTOMERS = """
-SELECT c_custkey, c_name,
-       CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
-                * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-GROUP BY c_custkey, c_name
-ORDER BY revenue DESC, c_custkey
-LIMIT 10
-"""
-
-
-def q_window_top_events(spark, sf_dir):
-    e = _load(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(F.col("value").desc(), F.col("event_id"))
-    return (
-        e.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
-        .select("user_id", "event_id", F.col("rk").cast("long").alias("rk"))
-    )
-
-
-_ORACLE_WINDOW_TOP = """
-SELECT user_id, event_id,
-       CAST(row_number() OVER (PARTITION BY user_id ORDER BY value DESC, event_id) AS BIGINT) AS rk
-FROM events
-QUALIFY rk <= 3
-"""
-
-
-def q_sessionize_events(spark, sf_dir):
-    """Session windows: a >30-min gap starts a new session (batch analog of
-    streaming session windows)."""
-    e = _load(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
-    flagged = e.withColumn(
-        "new_session", F.when(gap > 1800, 1).otherwise(0)
-    )
-    return flagged.groupBy("user_id").agg(
-        (F.sum("new_session") + 1).cast("long").alias("n_sessions"),
-        F.count("*").alias("n_events"),
-    )
-
-
-_ORACLE_SESSIONIZE = """
-WITH w AS (
-  SELECT user_id,
-         CASE WHEN epoch(ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)) > 1800
-              THEN 1 ELSE 0 END AS new_session
-  FROM events
-)
-SELECT user_id, CAST(sum(new_session) + 1 AS BIGINT) AS n_sessions,
-       count(*) AS n_events
-FROM w GROUP BY user_id
 """
 
 
@@ -2600,33 +2028,6 @@ def q_topk_docs_by_chars(spark, sf_dir):
 _ORACLE_TOPK_DOCS = """
 SELECT doc_id, n_chars FROM documents
 ORDER BY n_chars DESC, doc_id LIMIT 20
-"""
-
-
-def q_llm_enrich_stub(spark, sf_dir):
-    """F17 enrichment through the deterministic stub: prompt assembly (F16)
-    + md5-tagged fake generation, value-checked against a DuckDB twin."""
-    from pdf_extraction_spark.operators.llm_stub import enrich_llm
-
-    d = _load(spark, sf_dir, "documents")
-    out = enrich_llm(d, "doc_id", "text", task="summarize")
-    return out.select(
-        F.col("doc_id").cast("long").alias("doc_id"), "prompt", "generated_text"
-    )
-
-
-_ORACLE_LLM_STUB = """
-WITH p AS (
-  SELECT doc_id,
-         'Task: summarize' || chr(10) || chr(10) || 'PDF Content:' || chr(10)
-           || substr(text, 1, 3000) AS prompt,
-         substr(substr(text, 1, 3000), 1, 64) AS body
-  FROM documents
-)
-SELECT doc_id, prompt,
-       '[stub:' || substr(md5(prompt), 1, 8) || '] summarize: ' || body
-         AS generated_text
-FROM p
 """
 
 
@@ -2843,41 +2244,6 @@ FROM e
 """
 
 
-def q_extract_errors(spark, sf_dir):
-    """F18 per-document error containment, value-checked: the kernel's
-    ``max_doc_chars`` input-size guard raises deterministically for
-    oversize documents (message embeds the measured length), the
-    containment path routes it onto the ``error`` column, and the oracle
-    reconstructs the exact error string from ``length(text)``."""
-    from pdf_extraction_spark.operators.extract import extract_documents
-
-    d = _load(spark, sf_dir, "documents")
-    pages = d.select(
-        F.col("doc_id").cast("string").alias("url"),
-        F.lit(None).cast("binary").alias("html"),
-        F.col("text").alias("text"),
-    )
-    out = extract_documents(pages, max_doc_chars=200)
-    return out.select(
-        F.col("url").cast("long").alias("doc_id"),
-        "doc_kind",
-        F.col("error").isNotNull().alias("failed"),
-        "error",
-    )
-
-
-_ORACLE_EXTRACT_ERRORS = """
-SELECT doc_id,
-       CASE WHEN length(text) > 200 THEN 'error' ELSE 'text' END AS doc_kind,
-       length(text) > 200 AS failed,
-       CASE WHEN length(text) > 200
-            THEN 'ValueError: document exceeds max_doc_chars=200 ('
-                 || CAST(length(text) AS VARCHAR) || ')'
-            ELSE NULL END AS error
-FROM documents
-"""
-
-
 def q_extraction_skewed(spark, sf_dir):
     """Flagship kernel over a SIZE-SKEWED corpus with the oversize guard:
     every 25th document's body is replicated 12x (a >10x size outlier —
@@ -3042,62 +2408,45 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Full registry: every implemented query, including twins retired from
-    the driver-facing ``queries()`` subset (see _DRIVER_ORDER).  bench.py and
-    pytest exercise this full set; the driver snapshots only ``queries()``.
+    """Full registry: every implemented query, including the entries kept
+    outside the 50-entry ``queries()`` subset (see _DRIVER_ORDER).
+    bench.py, pytest and ``check_oracle.py --all`` exercise this full set.
     """
     return {
         # extraction operators (SURVEY §2)
-        "extract_kv_sql": q_extract_kv_sql,
         "extract_kv_kernel": q_extract_kv_kernel,
         "extract_kv_wide": q_extract_kv_wide,
-        "extract_page_concat": q_extract_page_concat,
         "extract_prompt_truncate": q_extract_prompt_truncate,
         "extract_html_main": q_extract_html_main,
-        "llm_enrich_stub": q_llm_enrich_stub,
         "filter_nonempty_by_lang": q_filter_nonempty_by_lang,
         "extraction_pipeline": q_extraction_pipeline,
         "extract_ocr_fields": q_extract_ocr_fields,
-        "extract_errors": q_extract_errors,
         "extraction_skewed": q_extraction_skewed,
         "extract_pdf_text": q_extract_pdf_text,
         "llm_enrich_error": q_llm_enrich_error,
         "csv_export_bytes": q_csv_export_bytes,
         # text analysis
-        "text_stats": q_text_stats,
-        "text_quality": q_text_quality,
         "quality_filter": q_quality_filter,
         "lang_id": q_lang_id,
-        "fingerprint_md5": q_fingerprint_md5,
         "fingerprint_winnow": q_fingerprint_winnow,
-        "token_stats_by_source": q_token_stats_by_source,
         "token_stats_bpe": q_token_stats_bpe,
         # dedup
         "dedup_exact": q_dedup_exact,
         "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
         "dedup_minhash_lsh": q_dedup_minhash_lsh,
         "dedup_simhash": q_dedup_simhash,
-        "dedup_clusters": q_dedup_clusters,
         "dedup_clusters_star": q_dedup_clusters_star,
         "dedup_incremental": q_dedup_incremental,
         "dedup_embedding_cosine": q_dedup_embedding_cosine,
         # training-data curation extras
         "pii_scrub": q_pii_scrub,
-        "source_skew_profile": q_source_skew_profile,
         "sample_stratified": q_sample_stratified,
         "token_budget_pack": q_token_budget_pack,
         "chunk_documents": q_chunk_documents,
         # similarity search
-        "similarity_topk": q_similarity_topk,
-        "similarity_topk_bucketed": q_similarity_topk_bucketed,
         "similarity_lsh_bucketed": q_similarity_lsh_bucketed,
         "similarity_ivf_topk": q_similarity_ivf_topk,
-        # multimodal (binary columns; pixel decode stubbed per SURVEY §7)
-        "multimodal_metadata": q_multimodal_metadata,
-        "multimodal_byte_features": q_multimodal_byte_features,
-        "multimodal_frame_sample": q_multimodal_frame_sample,
-        "multimodal_bmp_decode": q_multimodal_bmp_decode,
-        "multimodal_wav_decode": q_multimodal_wav_decode,
+        # multimodal (binary columns)
         "multimodal_png_decode": q_multimodal_png_decode,
         "multimodal_png_interlaced": q_multimodal_png_interlaced,
         "multimodal_gif_decode": q_multimodal_gif_decode,
@@ -3119,13 +2468,8 @@ def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "multimodal_ico_decode": q_multimodal_ico_decode,
         "multimodal_mp4_meta": q_multimodal_mp4_meta,
         "multimodal_mp3_meta": q_multimodal_mp3_meta,
-        "multimodal_decode_fake": q_multimodal_decode_fake,
         # relational coverage
         "pricing_summary": q_pricing_summary,
-        "top_customers": q_top_customers,
-        "window_top_events": q_window_top_events,
-        "sessionize_events": q_sessionize_events,
-        "events_json_props": q_events_json_props,
         "events_asof_join": q_events_asof_join,
         "events_interval_join": q_events_interval_join,
         "events_hourly": q_events_hourly,
@@ -3142,68 +2486,14 @@ def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 # defensively: entries that have never had a driver row come first, then the
 # entries displaced past the cap in round 3, then everything else.
 #
-# Redundant twins retired from the driver subset (still implemented, still
-# in all_queries()/all_oracles(), still covered by pytest and bench.py):
-#   extract_kv_sql          — same F7-F10 semantics as extract_kv_kernel
-#                             (kernel path is the production mechanism)
-#   dedup_clusters          — min-label CC; dedup_clusters_star is the
-#                             O(log n) variant the judge asked to keep
-#   multimodal_decode_fake  — subsumed by real BMP/WAV/PNG decoders
-#   similarity_topk_bucketed— ANN space covered by brute + LSH + IVF entries
-#   fingerprint_md5         — md5 fingerprinting exercised by dedup_exact
-#                             and dedup_incremental
-#   text_quality            — its scores are recomputed inside quality_filter
-#   window_top_events       — window ranking covered by topk_docs_by_chars
-#                             and sessionize_events
-#   top_customers           — relational join+agg+topk covered by
-#                             pricing_summary + topk_docs_by_chars
-#   multimodal_byte_features— byte histogram/entropy; weakest multimodal
-#                             twin, superseded by the real decoders
-#
-# Retired in round 5 to make room for the 13 round-4 newcomers promoted
-# below (round-4 verdict ask #1).  Every retiree has 3-4 green driver
-# rounds (CORRECTNESS_r01-r04) plus dedicated pytest coverage, and its
-# semantics stay driver-covered by a named surviving entry:
-#   llm_enrich_stub         — llm_enrich_error exercises the same F17
-#                             contract PLUS the error branch (verdict's
-#                             own first retirement candidate)
-#   multimodal_frame_sample — frame sampling subsumed by the real animated
-#                             GIF decoder (multimodal_gif_animated walks
-#                             and composites every frame)
-#   token_stats_by_source   — tokenization driver-covered by
-#                             token_stats_bpe; per-source aggregation by
-#                             quality_filter/docs_rollup
-#   extract_page_concat     — F4 also proven inside extraction_pipeline
-#                             (verdict-suggested)
-#   sessionize_events       — 4x green; session windows also exercised by
-#                             the streaming pytest suite + events_hourly
-#   multimodal_metadata     — superseded by the real metadata probes now
-#                             in the driver set (multimodal_jpeg_meta,
-#                             multimodal_mp4_meta, multimodal_mp3_meta)
-#   multimodal_bmp_decode   — codec-family dataflow driver-covered by the
-#   multimodal_wav_decode     png/gif/jpeg/tiff/ico entries; both 3x green
-#                             and guarded by the containment fuzz suite
-#   extract_errors          — F18 containment driver-covered by
-#                             extraction_skewed + tests/test_codec_containment.py
-#   text_stats              — its stats are recomputed inside quality_filter
-#                             (same rationale as the text_quality retirement)
-#   similarity_topk         — brute-force baseline; the scale paths
-#                             (similarity_lsh_bucketed, similarity_ivf_topk)
-#                             stay; brute==exact equality pinned in pytest
-#   source_skew_profile     — skew handling driver-covered by
-#                             extraction_skewed (salted repartition)
-#   events_json_props       — events family keeps asof/interval/hourly
-#                             driver rows; JSON path extraction pinned in
-#                             pytest
-#
-# Round-4 newcomers promoted in round 5's FIRST commit (verdict ask #1).
-# One stays all_queries()-only as a documented twin:
-#   multimodal_jpeg_progressive — SOF2 multi-scan decode shares the exact
-#                                 analytic oracle (identical coefficients)
-#                                 with multimodal_jpeg_decode, and is a
-#                                 deliberate slow path; pixel-exact
-#                                 progressive==baseline equality is pinned
-#                                 in tests/test_jpeg.py
+# Entries in all_queries() but not in queries(), one line each:
+#   extract_pdf_scanned         — round-5 newcomer, parked at the 50-entry cap
+#   multimodal_tiff_g4          — round-5 newcomer, parked at the 50-entry cap
+#   extract_xlsx_text           — round-5 newcomer, parked at the 50-entry cap
+#   extract_pptx_text           — round-5 newcomer, parked at the 50-entry cap
+#   extract_odt_text            — round-5 newcomer, parked at the 50-entry cap
+#   extract_rtf_text            — round-5 newcomer, parked at the 50-entry cap
+#   multimodal_jpeg_progressive — shares multimodal_jpeg_decode's oracle
 _DRIVER_ORDER = [
     # round-4 newcomers with no driver row yet (round-4 verdict ask #1) —
     # FIRST, so they get rows even if a future cap shrinks
@@ -3260,7 +2550,7 @@ _DRIVER_ORDER = [
     "sample_stratified",
     "token_budget_pack",
     "chunk_documents",
-    # similarity search (scale paths; brute baseline retired, see above)
+    # similarity search
     "similarity_lsh_bucketed",
     "similarity_ivf_topk",
     # relational coverage
@@ -3283,51 +2573,34 @@ def oracle_sql() -> dict[str, str]:
 
 def all_oracles() -> dict[str, str]:
     return {
-        "extract_kv_sql": _ORACLE_KV,
         "extract_kv_kernel": _ORACLE_KV,
         "extract_kv_wide": _ORACLE_KV_WIDE,
-        "extract_page_concat": _ORACLE_PAGE_CONCAT,
         "extract_prompt_truncate": _ORACLE_PROMPT,
         "extract_html_main": _ORACLE_HTML_MAIN,
-        "llm_enrich_stub": _ORACLE_LLM_STUB,
         "filter_nonempty_by_lang": _ORACLE_NONEMPTY,
         "extract_ocr_fields": _ORACLE_OCR_FIELDS,
-        "extract_errors": _ORACLE_EXTRACT_ERRORS,
         "extraction_skewed": _ORACLE_EXTRACTION_SKEWED,
         "extract_pdf_text": _ORACLE_PDF_TEXT,
         "llm_enrich_error": _ORACLE_LLM_ERROR,
         "csv_export_bytes": _ORACLE_CSV_BYTES,
         "extraction_pipeline": _ORACLE_PIPELINE,
-        "text_stats": _ORACLE_TEXT_STATS,
-        "text_quality": _ORACLE_QUALITY,
         "quality_filter": _ORACLE_QUALITY_FILTER,
         "lang_id": _ORACLE_LANG_ID,
-        "fingerprint_md5": _ORACLE_FP_MD5,
         "fingerprint_winnow": _ORACLE_WINNOW,
-        "token_stats_by_source": _ORACLE_TOKEN_STATS,
         "token_stats_bpe": _ORACLE_TOKEN_BPE,
         "dedup_exact": _ORACLE_DEDUP_EXACT,
         "dedup_ngram_jaccard": _ORACLE_JACCARD,
         "dedup_minhash_lsh": _ORACLE_MINHASH,
         "dedup_simhash": _ORACLE_SIMHASH,
-        "dedup_clusters": _ORACLE_CLUSTERS,
         "dedup_clusters_star": _ORACLE_CLUSTERS,
         "dedup_incremental": _ORACLE_INCREMENTAL,
         "dedup_embedding_cosine": _ORACLE_EMB_NEARDUP,
         "pii_scrub": _ORACLE_PII,
-        "source_skew_profile": _ORACLE_SKEW,
         "sample_stratified": _ORACLE_SAMPLE,
         "token_budget_pack": _ORACLE_BUDGET,
         "chunk_documents": _ORACLE_CHUNKS,
-        "similarity_topk": _ORACLE_TOPK,
-        "similarity_topk_bucketed": _ORACLE_TOPK_BUCKET,
         "similarity_lsh_bucketed": _ORACLE_TOPK_LSH,
         "similarity_ivf_topk": _ORACLE_IVF_TOPK,
-        "multimodal_metadata": _ORACLE_MM_META,
-        "multimodal_byte_features": _ORACLE_MM_BYTES,
-        "multimodal_frame_sample": _ORACLE_MM_FRAMES,
-        "multimodal_bmp_decode": _ORACLE_BMP_DECODE,
-        "multimodal_wav_decode": _ORACLE_WAV_DECODE,
         "multimodal_png_decode": _ORACLE_PNG_DECODE,
         "multimodal_png_interlaced": _ORACLE_PNG_DECODE,
         "multimodal_gif_decode": _ORACLE_GIF_DECODE,
@@ -3349,12 +2622,7 @@ def all_oracles() -> dict[str, str]:
         "multimodal_ico_decode": _ORACLE_ICO_DECODE,
         "multimodal_mp4_meta": _ORACLE_MP4_META,
         "multimodal_mp3_meta": _ORACLE_MP3_META,
-        "multimodal_decode_fake": _ORACLE_MM_DECODE,
         "pricing_summary": _ORACLE_PRICING,
-        "top_customers": _ORACLE_TOP_CUSTOMERS,
-        "window_top_events": _ORACLE_WINDOW_TOP,
-        "sessionize_events": _ORACLE_SESSIONIZE,
-        "events_json_props": _ORACLE_JSON_PROPS,
         "events_asof_join": _ORACLE_ASOF,
         "events_interval_join": _ORACLE_INTERVAL,
         "events_hourly": _ORACLE_EVENTS_HOURLY,

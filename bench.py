@@ -24,39 +24,27 @@ from pyspark.sql import functions as F
 
 REPLICATION = int(os.environ.get("BENCH_REPLICATION", "20"))
 
-# headline queries (subset of __spark_entry__.queries() chosen to cover every
-# operator family while keeping the run a few minutes)
+# headline queries (subset of __spark_entry__.all_queries() chosen to cover
+# every operator family while keeping the run a few minutes)
 HEADLINE = [
-    "extract_kv_sql",
     "extract_kv_kernel",
     "extract_ocr_fields",
     "extraction_skewed",
-    "text_stats",
-    "text_quality",
     "quality_filter",
     "lang_id",
-    "fingerprint_md5",
     "fingerprint_winnow",
     "dedup_exact",
     "dedup_ngram_jaccard",
     "dedup_minhash_lsh",
     "dedup_simhash",
-    "dedup_clusters",
     "dedup_incremental",
     "dedup_embedding_cosine",
     "pii_scrub",
-    "source_skew_profile",
     "sample_stratified",
     "token_budget_pack",
     "chunk_documents",
-    "similarity_topk",
-    "similarity_topk_bucketed",
     "similarity_lsh_bucketed",
     "similarity_ivf_topk",
-    "multimodal_metadata",
-    "multimodal_frame_sample",
-    "multimodal_bmp_decode",
-    "multimodal_wav_decode",
     "multimodal_png_decode",
     "multimodal_gif_decode",
     "multimodal_jpeg_decode",
@@ -76,9 +64,6 @@ HEADLINE = [
     # extract_pdf_encrypted (pure-Python RC4 over every stream).  All
     # four stay value-checked by scripts/check_oracle.py --all.
     "pricing_summary",
-    "top_customers",
-    "window_top_events",
-    "sessionize_events",
     "events_asof_join",
     "events_interval_join",
     "events_hourly",
@@ -204,9 +189,8 @@ def main():
     )
 
     # --- headline query timings --------------------------------------------
-    # all_queries(): the headline set intentionally includes twins retired
-    # from the driver-facing queries() subset so round-over-round bench
-    # comparisons stay like-for-like
+    # all_queries(): the headline set includes parked entries outside
+    # queries() (multimodal_tiff_g4, the office family)
     qs = entrymod.all_queries()
     timings = {
         "extraction_pipeline_bulk": round(extract_sec, 3),

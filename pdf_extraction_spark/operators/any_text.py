@@ -37,6 +37,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from pdf_extraction_spark.operators.balance import map_documents
+from pdf_extraction_spark.operators.docx_text import extract_docx_paragraphs
+from pdf_extraction_spark.operators.epub_text import extract_epub_chapters
+from pdf_extraction_spark.operators.odt_text import extract_odt_paragraphs
+from pdf_extraction_spark.operators.pptx_text import extract_pptx_slides
+from pdf_extraction_spark.operators.rtf_text import extract_rtf_paragraphs
+from pdf_extraction_spark.operators.xlsx_text import extract_xlsx_rows
 
 _IMAGE_MAGIC = [
     (b"\x89PNG\r\n\x1a\n", "png"),
@@ -229,6 +235,19 @@ def _unwrap_compressed(raw: bytes) -> tuple[str, bytes] | None:
     return suffix, inner
 
 
+# Office and e-book containers: doc_type -> (extractor, join of the
+# parts it returns).  An extractor returns None for a package it cannot
+# read; xlsx rows are lists of cells, tab-joined within a row.
+_OFFICE_EXTRACTORS = {
+    "docx": (extract_docx_paragraphs, "\n".join),
+    "xlsx": (extract_xlsx_rows, lambda rows: "\n".join("\t".join(r) for r in rows)),
+    "pptx": (extract_pptx_slides, "\n".join),
+    "odt": (extract_odt_paragraphs, "\n".join),
+    "epub": (extract_epub_chapters, "\n".join),
+    "rtf": (extract_rtf_paragraphs, "\n".join),
+}
+
+
 def extract_any(raw: bytes, _depth: int = 0) -> tuple[str, str | None]:
     """(doc_type, extracted_text_or_None) for one blob.  Compressed
     members (crawl dumps ship .txt.gz/.html.gz/.json.gz everywhere;
@@ -269,42 +288,10 @@ def extract_any(raw: bytes, _depth: int = 0) -> tuple[str, str | None]:
             else:
                 merged.append(p)
         return ("pdf_scanned" if used_ocr else t), "\n".join(merged)
-    if t == "docx":
-        from pdf_extraction_spark.operators.docx_text import (
-            extract_docx_paragraphs,
-        )
-
-        paras = extract_docx_paragraphs(raw)
-        return t, None if paras is None else "\n".join(paras)
-    if t == "xlsx":
-        from pdf_extraction_spark.operators.xlsx_text import extract_xlsx_rows
-
-        rows = extract_xlsx_rows(raw)
-        return t, None if rows is None else "\n".join(
-            "\t".join(row) for row in rows
-        )
-    if t == "pptx":
-        from pdf_extraction_spark.operators.pptx_text import extract_pptx_slides
-
-        slides = extract_pptx_slides(raw)
-        return t, None if slides is None else "\n".join(slides)
-    if t == "odt":
-        from pdf_extraction_spark.operators.odt_text import extract_odt_paragraphs
-
-        paras = extract_odt_paragraphs(raw)
-        return t, None if paras is None else "\n".join(paras)
-    if t == "epub":
-        from pdf_extraction_spark.operators.epub_text import (
-            extract_epub_chapters,
-        )
-
-        chaps = extract_epub_chapters(raw)
-        return t, None if chaps is None else "\n".join(chaps)
-    if t == "rtf":
-        from pdf_extraction_spark.operators.rtf_text import extract_rtf_paragraphs
-
-        paras = extract_rtf_paragraphs(raw)
-        return t, None if paras is None else "\n".join(paras)
+    if t in _OFFICE_EXTRACTORS:
+        extract, join = _OFFICE_EXTRACTORS[t]
+        parts = extract(raw)
+        return t, None if parts is None else join(parts)
     if t == "html":
         from pdf_extraction_spark.html_extract import extract_main_text
 

@@ -36,6 +36,8 @@ once for the count and again for the real job.  So:
   cols])`` shuffle (origin ``REPARTITION_BY_NUM``, which AQE never
   coalesces) reports its exact count as the pre-AQE plan's
   ``outputPartitioning``;
+* a union of such plans reports the sum of its children's counts, as
+  the union's RDD concatenates its children's partitions;
 * any other adaptive plan — an aggregate, join or broadcast exchange
   AQE may coalesce or rewrite, or a partitioning the plan cannot name
   (``UnknownPartitioning(0)``) — counts as under-split: the guard
@@ -59,7 +61,18 @@ def _planned_partitions(df: DataFrame) -> int:
     plan = qe.executedPlan()
     if plan.getClass().getSimpleName() != "AdaptiveSparkPlanExec":
         return qe.toRdd().getNumPartitions()
-    plan = plan.inputPlan()
+    return _stated_partitions(plan.inputPlan())
+
+
+def _stated_partitions(plan) -> int:
+    """The partition count a pre-AQE physical plan states: its
+    ``outputPartitioning`` when every exchange in it is a
+    ``REPARTITION_BY_NUM`` shuffle, the sum over a union's children when
+    each of them states one, else 0."""
+    if plan.getClass().getSimpleName() == "UnionExec":
+        children = plan.children()
+        counts = [_stated_partitions(children.apply(i)) for i in range(children.size())]
+        return sum(counts) if all(counts) else 0
     nodes = [plan]
     while nodes:
         node = nodes.pop()

@@ -127,60 +127,3 @@ def salted_repartition(df: DataFrame, num_partitions: int, salt_buckets: int = 0
         )
         key = F.xxhash64("url", (size_col % salt_buckets).cast("string"))
     return df.repartition(num_partitions, key)
-
-
-
-def skew_profile(
-    df: DataFrame,
-    key_col: str,
-    id_col: str,
-    *,
-    size_col: str | None = None,
-    salt_buckets: int = 8,
-) -> DataFrame:
-    """Per-key skew diagnosis feeding the salting decision: how unevenly do
-    rows (and bytes) pile onto each partition key, and how flat does a
-    ``salt_buckets``-way salt make the worst key?
-
-    Two shuffles, both over aggregated data: groupBy(key) and
-    groupBy(key, salt) — never a row-level wide operation.  The grand
-    total is a 1-row aggregate broadcast back over the per-key rows (NOT
-    an over-() window, which would collapse all rows onto one partition).
-    The salt is md5-derived from the row id — deterministic and
-    engine-portable, the same bucketing a salted repartition would use.
-    All metrics are integers; share_bp is basis points of the total
-    (truncating division, `div` in Spark == `//` in DuckDB for
-    non-negative operands).
-    """
-    key = F.col(key_col).alias("key")
-    sz = (F.length(size_col) if size_col else F.lit(1)).cast("long")
-    per_key = (
-        df.select(key, sz.alias("sz"))
-        .groupBy("key")
-        .agg(F.count("*").alias("n_rows"), F.sum("sz").alias("n_bytes"))
-    )
-    totals = per_key.agg(F.sum("n_rows").alias("total_rows"))
-    salt = (
-        F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 8), 16, 10).cast(
-            "long"
-        )
-        % salt_buckets
-    )
-    salted = (
-        df.select(key, salt.alias("salt"))
-        .groupBy("key", "salt")
-        .agg(F.count("*").alias("bn"))
-        .groupBy("key")
-        .agg(F.max("bn").alias("max_salted_bucket"))
-    )
-    return (
-        per_key.crossJoin(F.broadcast(totals))
-        .join(salted, "key")
-        .select(
-            F.col("key").alias(key_col),
-            "n_rows",
-            "n_bytes",
-            F.expr("n_rows * 10000 div total_rows").alias("share_bp"),
-            "max_salted_bucket",
-        )
-    )

@@ -3,21 +3,9 @@
 The reference (`ajmal624/Pdf_extraction`) renders PDF pages to images and
 OCRs them (pdfextraction.py:72-73, via poppler + tesseract subprocesses).
 Neither library exists in this environment and shelling out is forbidden,
-so ``decode_image`` over the IMG1 container below is a deterministic
-stand-in (header dimensions + payload-byte stats), while everything
-Spark-side is REAL and tested: the binary container format, header parse
-(pure JVM expressions), byte-level feature extraction, video-style frame
-sampling (byte slicing + hashing — no image lib needed), and from-scratch
-BMP/WAV/PNG/GIF decoders (JPEG, TIFF and ICO live in their own modules).
-
-Container format ``IMG1`` (ours, deterministic):
-
-    offset  size  field
-    0       4     magic  b"IMG1"
-    4       2     width  uint16 big-endian
-    6       2     height uint16 big-endian
-    8       1     channels uint8
-    9       n     payload (opaque pixel/sample/frame bytes)
+so the decoders here are from-scratch: BMP/WAV/PNG/GIF below (JPEG, TIFF
+and ICO live in their own modules), each behind the shared ``map_blobs``
+shape with per-row containment (a malformed blob yields ``is_valid=0``).
 
 At 100 TB scale the blobs live in their own parquet files; every operator
 below selects only the columns it needs so Catalyst prunes the fat binary
@@ -32,18 +20,14 @@ import zlib
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType,
     IntegerType,
     LongType,
-    StringType,
     StructField,
     StructType,
 )
 
 from pdf_extraction_spark.operators.balance import map_documents
 
-MAGIC_HEX = "494d4731"  # b"IMG1"
-HEADER_LEN = 9
 BLOB_SCHEMA = "media_id long, blob binary"
 
 
@@ -79,181 +63,9 @@ def channel_sums(rows, nch: int) -> list[int]:
 
 
 # ---------------------------------------------------------------------------
-# Synthesis (tests/bench only): deterministic blob from an integer id
-# ---------------------------------------------------------------------------
-
-def synth_blob(id_col: Column) -> Column:
-    """Deterministic IMG1 blob from an integer id — pure JVM expressions.
-
-    width = 1 + id % 64, height = 1 + id % 48, channels = 3,
-    payload = 64 bytes: md5(id || ':' || i) for i in 0..3 concatenated.
-    The DuckDB oracle builds the identical hex string with printf/md5.
-    """
-    sid = id_col.cast("string")
-    payload = F.concat(
-        *[F.md5(F.concat(sid, F.lit(f":{i}"))) for i in range(4)]
-    )
-    header = F.concat(
-        F.lit(MAGIC_HEX),
-        F.format_string("%04x", (id_col % 64 + 1).cast("int")),
-        F.format_string("%04x", (id_col % 48 + 1).cast("int")),
-        F.lit("03"),
-    )
-    return F.unhex(F.concat(header, payload))
-
-
-def synth_media(df: DataFrame, id_col: str) -> DataFrame:
-    """(id, media_kind, blob) — a fake multimodal table for tests/bench."""
-    return df.select(
-        F.col(id_col).alias("media_id"),
-        F.when(F.col(id_col) % 3 == 0, "image")
-        .when(F.col(id_col) % 3 == 1, "audio")
-        .otherwise("video")
-        .alias("media_kind"),
-        synth_blob(F.col(id_col)).alias("blob"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Metadata decode — JVM-side header parse (no Python)
-# ---------------------------------------------------------------------------
-
-def _be_uint(blob: Column, pos: int, nbytes: int) -> Column:
-    """Big-endian unsigned int from ``nbytes`` bytes at 1-based ``pos``."""
-    return F.conv(F.hex(F.expr(f"substring(blob, {pos}, {nbytes})")), 16, 10).cast(
-        "long"
-    )
-
-
-def decode_metadata(df: DataFrame, id_col: str, blob_col: str) -> DataFrame:
-    """Parse the IMG1 header into typed metadata columns, fully JVM-side.
-
-    Output: (media_id, is_valid, width, height, channels, payload_bytes).
-    Invalid magic -> is_valid=false with null dims (per-row containment,
-    mirroring the reference's per-document try/except F18).
-    """
-    b = df.select(
-        F.col(id_col).alias("media_id"), F.col(blob_col).alias("blob")
-    )
-    valid = (F.length("blob") >= HEADER_LEN) & (
-        F.lower(F.hex(F.expr("substring(blob, 1, 4)"))) == MAGIC_HEX
-    )
-    return b.select(
-        "media_id",
-        valid.alias("is_valid"),
-        F.when(valid, _be_uint(F.col("blob"), 5, 2)).alias("width"),
-        F.when(valid, _be_uint(F.col("blob"), 7, 2)).alias("height"),
-        F.when(valid, _be_uint(F.col("blob"), 9, 1)).alias("channels"),
-        F.when(valid, F.length("blob") - HEADER_LEN).cast("long").alias(
-            "payload_bytes"
-        ),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Byte-level feature extraction (real)
-# ---------------------------------------------------------------------------
-
-BYTE_FEATURES_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("n_bytes", LongType()),
-        StructField("byte_sum", LongType()),
-        StructField("byte_max", IntegerType()),
-        StructField("n_zero", LongType()),
-    ]
-)
-
-
-def _byte_feature_row(blob):
-    payload = bytes(blob)[HEADER_LEN:]
-    return len(payload), sum(payload), max(payload) if payload else 0, payload.count(0)
-
-
-def byte_features(df: DataFrame, id_col: str, blob_col: str) -> DataFrame:
-    """Payload byte statistics (the feature-extract plumbing an image
-    featurizer would use — batch shape, schema, and partitioning are
-    production-real; only the pixel semantics are fake)."""
-    return map_blobs(df, id_col, blob_col, _byte_feature_row, BYTE_FEATURES_SCHEMA)
-
-
-# ---------------------------------------------------------------------------
-# Video-style frame sampling — byte slicing + hashing (real)
-# ---------------------------------------------------------------------------
-
-FRAME_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("frame_no", LongType()),
-        StructField("frame_len", LongType()),
-        StructField("frame_hex", StringType()),
-        StructField("frame_md5", StringType()),
-    ]
-)
-
-
-def frame_sample(
-    df: DataFrame, id_col: str, blob_col: str, *, frame_size: int = 16, stride: int = 2
-) -> DataFrame:
-    """Sample every ``stride``-th fixed-size frame from the payload.
-
-    One input row fans out to n_frames/stride output rows — the UDF returns
-    a *longer* batch than it receives, which is exactly the shape a real
-    video frame-sampler has. Trailing partial frames are dropped.
-    """
-
-    def frames(blob):
-        payload = bytes(blob)[HEADER_LEN:]
-        out = []
-        for f_no in range(0, len(payload) // frame_size, stride):
-            frame = payload[f_no * frame_size : (f_no + 1) * frame_size]
-            out.append((f_no, len(frame), frame.hex(), hashlib.md5(frame).hexdigest()))
-        return out
-
-    return map_blobs(df, id_col, blob_col, frames, FRAME_SCHEMA)
-
-
-# ---------------------------------------------------------------------------
-# Pixel decode — deterministic stand-in over the IMG1 container
-# ---------------------------------------------------------------------------
-
-DECODE_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("gray_mean_milli", LongType()),
-        StructField("pixels_sampled", ArrayType(IntegerType())),
-    ]
-)
-
-
-def _decode_image_row(blob):
-    raw = bytes(blob)
-    payload = raw[HEADER_LEN:]
-    return (
-        int.from_bytes(raw[4:6], "big"),
-        int.from_bytes(raw[6:8], "big"),
-        sum(payload) * 1000 // len(payload) if payload else 0,
-        list(payload[:8]),
-    )
-
-
-def decode_image(df: DataFrame, id_col: str, blob_col: str) -> DataFrame:
-    """Deterministic stand-in for a pixel decode: the IMG1 header's
-    dimensions plus payload-byte gray stats.  A real decode of arbitrary
-    compressed images needs an image library this engine does not ship
-    (the codec-specific decoders below are the real ones); the stand-in
-    exercises the identical Spark plumbing — schema, Arrow batches,
-    partitioning."""
-    return map_blobs(df, id_col, blob_col, _decode_image_row, DECODE_SCHEMA)
-
-
-# ---------------------------------------------------------------------------
 # REAL pixel decode: BMP (uncompressed 24-bit) — no image library needed.
 # BMP's layout (little-endian headers, 4-byte row stride, bottom-up row order,
-# BGR channel order) is fully specified, so this is a genuine decoder,
-# not a stand-in.
+# BGR channel order) is fully specified.
 # ---------------------------------------------------------------------------
 
 def _u32le_hex(v: Column) -> Column:

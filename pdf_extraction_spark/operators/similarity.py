@@ -1,12 +1,10 @@
 """Approximate-nearest-neighbor search over an embedding column.
 
-* brute_force_topk — exact cosine top-k: the correctness baseline.  The
-  query side is small by construction, so Spark broadcasts it; candidates
-  stream through a single projection + window, no all-pairs shuffle.
 * bucketed_topk — the scale path: restrict candidates to a coarse bucket
   (IVF cell id, LSH bucket, or any precomputed partition key).  At 10^12
-  rows the bucket join prunes candidate sets by orders of magnitude while
-  the per-bucket math is identical to the baseline.
+  rows the bucket join prunes candidate sets by orders of magnitude; the
+  query side is small by construction, so Spark broadcasts it and
+  candidates stream through a single projection + window.
 * lsh_bucket — deterministic random-hyperplane LSH bucket id, derived from
   md5-seeded ±1 projections (no model state to ship, reproducible across
   engines).
@@ -18,42 +16,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from pdf_extraction_spark.functions.vectors import cosine
-
-
-def brute_force_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-) -> DataFrame:
-    """Exact top-k neighbors per query row: (query_id, neighbor_id, rank).
-
-    Ties break on neighbor id, so ranks are fully deterministic.
-    """
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
-    )
-    v = vectors.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("n_vec")
-    )
-    # broadcast the small query side; candidates never shuffle
-    scored = v.crossJoin(F.broadcast(q)).filter(
-        F.col("query_id") != F.col("neighbor_id")
-    ).select(
-        "query_id",
-        "neighbor_id",
-        cosine(F.col("q_vec"), F.col("n_vec")).alias("cos"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
 
 
 def bucketed_topk(

@@ -25,25 +25,6 @@ LANG_MARKERS = {
 }
 
 
-def token_count(text_col) -> Column:
-    return F.size(tokens(text_col))
-
-
-def text_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Per-document token/char statistics (all integers)."""
-    toks = tokens(F.col(text_col))
-    return df.select(
-        F.col(id_col),
-        F.length(text_col).alias("n_chars_actual"),
-        F.size(toks).alias("n_tokens"),
-        F.size(F.array_distinct(toks)).alias("n_distinct_tokens"),
-        stopword_hits(toks).alias("stopword_hits"),
-        F.length(F.regexp_replace(F.col(text_col), r"[^\.\,\!\?\;\:]", "")).alias(
-            "n_punct"
-        ),
-    )
-
-
 def quality_score_col(text_col: str) -> Column:
     """Heuristic quality score in [0, 100], integer (engine-exact).
 
@@ -67,15 +48,6 @@ def quality_score_col(text_col: str) -> Column:
             F.floor((s * 300).cast("double") / F.greatest(n, F.lit(1))).cast("long"),
         )
     ).cast("long")
-
-
-def quality_score(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Per-doc (id, n_tokens, quality_score) — see quality_score_col."""
-    return df.select(
-        F.col(id_col),
-        F.size(tokens(F.col(text_col))).alias("n_tokens"),
-        quality_score_col(text_col).alias("quality_score"),
-    )
 
 
 def quality_filter(
@@ -144,12 +116,6 @@ def lang_id(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         expr_lang.alias("pred_lang"),
         expr_hits.alias("marker_hits"),
     )
-
-
-def fingerprint_md5(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Whole-document content fingerprint (normalized md5)."""
-    norm = F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
-    return df.select(F.col(id_col), F.md5(norm).alias("fingerprint"))
 
 
 def fingerprint_winnow(

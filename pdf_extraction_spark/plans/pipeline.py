@@ -185,6 +185,14 @@ def run_extraction(
     record set written once per pass and referenced from each group
     manifest via ``lineage_ref``.
 
+    Output contract: the SET of rows in each group (and in each of its
+    files), pinned by the manifest's row count and order-insensitive xor
+    checksums (``output_checksum``, each lineage ``input_checksum``).
+    Row order inside a file follows the order in which shuffle blocks
+    arrive, so two runs over one input write the same rows to the same
+    files but not byte-identical parquet; compare sorted rows or the
+    checksums, never file bytes.
+
     ``fail_after_group`` is a test hook: raise after committing that many
     groups, simulating a killed job for the resume test.
     ``input_format``: "parquet" (Iceberg/parquet table), "jsonl"

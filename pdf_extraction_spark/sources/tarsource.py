@@ -23,7 +23,8 @@ record.  A task whose alignment lands on a file header walks back over
 contiguous meta headers; if that walk crosses below its split start the
 record belongs to the previous task (which reads past its own end to
 finish it) and is skipped here — no record is ever emitted twice or
-dropped.
+dropped.  The walk back is bounded (``_BACK_BLOCKS``); a meta header too
+long for it that straddles a split end makes the owning task raise.
 
 Format scope: POSIX ustar + PAX extended headers (path/size overrides)
 + GNU longname/longlink + GNU base-256 numeric fields (members > 8 GiB).
@@ -47,7 +48,6 @@ from __future__ import annotations
 
 import gzip
 import io
-import struct
 from typing import Iterator
 
 import pandas as pd
@@ -201,7 +201,9 @@ def _chain_verifies(rd: _BlockReader, off: int, file_length: int, depth: int = 2
 # Backward-probe bound for locating the true logical-record start from
 # an aligned file-header candidate.  Meta payloads are small (PAX records
 # are a few lines; GNU longnames are path-length), so 64 blocks = 32 KiB
-# of preceding metadata is a generous ceiling.
+# of preceding metadata is a generous ceiling.  A longer meta header that
+# straddles a split boundary is out of the next task's reach, so the task
+# owning it raises (see _iter_tar_records) rather than let both emit it.
 _BACK_BLOCKS = 64
 
 
@@ -290,7 +292,17 @@ def _iter_tar_records(
             elif hdr["typeflag"] == b"L":
                 longname = data.split(b"\x00", 1)[0]
             # 'K' (longlink) parsed and skipped: links are skipped anyway
-            off += BLOCK + _data_blocks(size) * BLOCK
+            next_off = off + BLOCK + _data_blocks(size) * BLOCK
+            if off < end <= next_off < file_length and next_off - off > _BACK_BLOCKS * BLOCK:
+                # the next split's scan lands on next_off and its backward
+                # probe cannot see this header: it would emit the record too
+                raise ValueError(
+                    f"tar source: meta header at offset {off} spans"
+                    f" {next_off - off} bytes across the split boundary at"
+                    f" {end}, past the {_BACK_BLOCKS * BLOCK}-byte backward"
+                    " probe; read this archive with exact_index=True"
+                )
+            off = next_off
             hdr = _parse_header(rd.block(off))
             if hdr is None:
                 raise ValueError(
@@ -387,14 +399,17 @@ def _tar_split_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame
                     f.seek(0, 2)
                     file_length = f.tell()
                     rd = _BlockReader(f)
-                    for name, content in _iter_tar_records(
-                        rd, start, end, file_length,
-                        aligned_at_zero=(start == 0),
-                    ):
-                        out["archive"].append(path)
-                        out["name"].append(name)
-                        out["size"].append(len(content))
-                        out["content"].append(content)
+                    try:
+                        for name, content in _iter_tar_records(
+                            rd, start, end, file_length,
+                            aligned_at_zero=(start == 0),
+                        ):
+                            out["archive"].append(path)
+                            out["name"].append(name)
+                            out["size"].append(len(content))
+                            out["content"].append(content)
+                    except ValueError as e:
+                        raise ValueError(f"{path}: {e}") from e
         yield pd.DataFrame(out)
 
 
@@ -419,10 +434,12 @@ def read_docs_tar(
     if exact_index:
         rows = []
         for r in meta:
-            for name, off, size in list_tar_entries(r["path"], int(r["length"])):
-                # one record-aligned range per member: [off, off+1) holds
-                # exactly the record starting at off
-                rows.append((r["path"], off, off + 1))
+            offs = [off for _, off, _ in list_tar_entries(r["path"], int(r["length"]))]
+            # one range per member, tiled at logical record starts:
+            # [off, next member's off) holds exactly the record at off,
+            # and no meta chain crosses a range end
+            ends = offs[1:] + [int(r["length"])]
+            rows.extend((r["path"], a, b) for a, b in zip(offs, ends))
         if not rows:
             return spark.createDataFrame([], TAR_DOC_SCHEMA)
         df = spark.createDataFrame(rows, "path string, start long, end long")

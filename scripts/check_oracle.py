@@ -4,10 +4,9 @@ column names, and order-insensitive values.
 
 Usage: python scripts/check_oracle.py [--all] [sf_dir] [query ...]
 
---all checks the FULL registry (all_queries/all_oracles, 73 entries)
-instead of the 50-entry driver-facing queries() surface — the 23 entries
-past the driver snapshot cap stay value-checked even though the driver
-never snapshots them.
+--all checks the FULL registry (all_queries/all_oracles, 57 entries)
+instead of the 50-entry queries() surface, so the 7 entries outside
+queries() stay value-checked too.
 """
 
 from __future__ import annotations

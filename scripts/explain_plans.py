@@ -26,10 +26,9 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 PLANS = [
     ("extraction (bucketed map-only)", "pipeline shape: scan -> MapInPandas -> sink; no exchange"),
     ("extraction (salted shuffle)", "unbucketed-input shape: one explicit exchange on xxhash64(url)+size-salt"),
-    ("extract_kv_sql", "declarative F7-F10: explode/agg with partial aggregation below the exchange"),
+    ("extract_kv_kernel", "F7-F10 through the per-document kernel: one Arrow-batched MapInPandas pass, no hash shuffle"),
     ("dedup_exact", "single hash shuffle with map-side partial agg"),
     ("dedup_minhash_lsh", "single groupBy(band_key) + in-JVM pair expansion + candidate-only hash-set verify"),
-    ("similarity_topk", "broadcast query side; candidates never shuffle before the window"),
     ("similarity_lsh_bucketed", "computed LSH quantizer bucket; broadcast bucket-join prunes candidates"),
     ("extraction_skewed", "size-outlier corpus: exchange keys on xxhash64(url, size-salt); Arrow-batched kernel with oversize-guard containment"),
     ("events_asof_join", "as-of via union+window: ONE exchange on the key, NO join node"),
@@ -71,10 +70,9 @@ def main() -> int:
         "extraction (salted shuffle)": extract_documents(
             salted_repartition(pages, 8, salt_buckets=8)
         ),
-        "extract_kv_sql": qs["extract_kv_sql"](spark, SF_DIR),
+        "extract_kv_kernel": qs["extract_kv_kernel"](spark, SF_DIR),
         "dedup_exact": qs["dedup_exact"](spark, SF_DIR),
         "dedup_minhash_lsh": qs["dedup_minhash_lsh"](spark, SF_DIR),
-        "similarity_topk": qs["similarity_topk"](spark, SF_DIR),
         "similarity_lsh_bucketed": qs["similarity_lsh_bucketed"](spark, SF_DIR),
         "extraction_skewed": qs["extraction_skewed"](spark, SF_DIR),
         "events_asof_join": qs["events_asof_join"](spark, SF_DIR),

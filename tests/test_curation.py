@@ -1,5 +1,5 @@
 """Training-data-curation operator tests: connected-components dedup
-clustering, PII scrub, and key-skew profiling.
+clustering and PII scrub.
 
 These cover semantics the driver oracles exercise only at corpus level:
   * dedup_components on a hand-built graph with known components,
@@ -7,13 +7,9 @@ These cover semantics the driver oracles exercise only at corpus level:
   * pii_scrub on fixed strings with known emails/phones, including
     a phone-digit sequence inside an email local part (must NOT be
     double-counted after redaction).
-  * skew_profile invariants: shares sum to <= 10000 bp, a uniform salt
-    never exceeds the unsalted count, dominant key identified.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
 
 
 def test_dedup_components_chain_and_pair(spark):
@@ -74,23 +70,6 @@ def test_pii_scrub_counts_and_redaction(spark):
     assert got[2]["scrubbed_text"] == "no pii here just text 123-45"
     assert (got[3]["n_emails"], got[3]["n_phones"]) == (2, 2)
     assert got[3]["scrubbed_text"] == "two mails [EMAIL] [EMAIL] and [PHONE] [PHONE]"
-
-
-def test_skew_profile_invariants(spark):
-    rows = [(i, "hot" if i % 10 < 8 else f"cold{i % 10}", "x" * (i % 7 + 1)) for i in range(200)]
-    df = spark.createDataFrame(rows, "doc_id long, source string, text string")
-    from pdf_extraction_spark.operators.extract import skew_profile
-
-    out = skew_profile(df, "source", "doc_id", size_col="text", salt_buckets=8).collect()
-    by_key = {r["source"]: r for r in out}
-    assert sum(r["n_rows"] for r in out) == 200
-    assert sum(r["share_bp"] for r in out) <= 10000
-    assert by_key["hot"]["n_rows"] == 160 and by_key["hot"]["share_bp"] == 8000
-    for r in out:
-        assert 0 < r["max_salted_bucket"] <= r["n_rows"]
-    # salting must spread the hot key: no single salted bucket holds
-    # more than half of a 160-row key split 8 ways (uniform ~20)
-    assert by_key["hot"]["max_salted_bucket"] < 80
 
 
 def test_quality_filter_reason_composition(spark):

@@ -120,6 +120,24 @@ def test_undersplit_guard_runs_no_job_on_exchange_topped_input(spark, tmp_path):
     assert out[0] is not pages
 
 
+def test_undersplit_guard_sums_union_children(spark):
+    """A union of repartitioned inputs has as many partitions as its
+    children together; when that reaches the cluster's parallelism the
+    guard adds no round-robin exchange of its own."""
+    target = spark.sparkContext.defaultParallelism
+    half = -(-target // 2)
+    parts = [
+        spark.range(lo, lo + 32).repartition(half).select(F.col("id").alias("n"))
+        for lo in (0, 100)
+    ]
+    union = parts[0].union(parts[1])
+    assert union.rdd.getNumPartitions() == 2 * half
+    out = map_documents(union, lambda n: (n + 1,), "m long")
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("RoundRobinPartitioning") == 2, plan
+    assert sorted(r["m"] for r in out.collect()) == list(range(1, 33)) + list(range(101, 133))
+
+
 def test_mapinpandas_only_in_balance():
     """Every operator goes through map_documents: no other module in
     operators/ builds its own mapInPandas node or under-split guard, and

@@ -1,105 +1,5 @@
-"""Multimodal binary-column operators: container parse, byte features,
-frame sampling, and the stubbed pixel decode (SURVEY §7 hard-parts: no
-image libraries ship in this environment, so decode is a deterministic
-fake behind the same Spark plumbing)."""
-
-import hashlib
-
-import pytest
-from pyspark.sql import functions as F
-
-from pdf_extraction_spark.operators.multimodal import (
-    HEADER_LEN,
-    byte_features,
-    decode_image,
-    decode_metadata,
-    frame_sample,
-    synth_blob,
-    synth_media,
-)
-
-
-@pytest.fixture(scope="module")
-def media(spark):
-    ids = spark.range(0, 50).select(F.col("id").alias("doc_id"))
-    return synth_media(ids, "doc_id").cache()
-
-
-def _blob_bytes(media, mid):
-    return bytes(
-        media.filter(F.col("media_id") == mid).select("blob").collect()[0][0]
-    )
-
-
-def test_synth_blob_layout(media):
-    raw = _blob_bytes(media, 7)
-    assert raw[:4] == b"IMG1"
-    assert int.from_bytes(raw[4:6], "big") == 7 % 64 + 1
-    assert int.from_bytes(raw[6:8], "big") == 7 % 48 + 1
-    assert raw[8] == 3
-    payload = raw[HEADER_LEN:]
-    assert len(payload) == 64
-    assert payload == bytes.fromhex(
-        "".join(hashlib.md5(f"7:{i}".encode()).hexdigest() for i in range(4))
-    )
-
-
-def test_decode_metadata_jvm_side(media):
-    out = decode_metadata(media, "media_id", "blob")
-    rows = {r["media_id"]: r for r in out.collect()}
-    assert len(rows) == 50
-    for mid, r in rows.items():
-        assert r["is_valid"] is True
-        assert r["width"] == mid % 64 + 1
-        assert r["height"] == mid % 48 + 1
-        assert r["channels"] == 3
-        assert r["payload_bytes"] == 64
-    # no Python in the plan: header parse must not contain Arrow/Python eval
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEval" not in plan and "BatchEval" not in plan
-
-
-def test_decode_metadata_invalid_magic(spark):
-    bad = spark.range(0, 3).select(
-        F.col("id").alias("media_id"), F.unhex(F.lit("00112233445566778899")).alias("blob")
-    )
-    rows = decode_metadata(bad, "media_id", "blob").collect()
-    for r in rows:
-        assert r["is_valid"] is False
-        assert r["width"] is None and r["height"] is None
-
-
-def test_byte_features_matches_python(media):
-    out = {r["media_id"]: r for r in byte_features(media, "media_id", "blob").collect()}
-    for mid in (0, 13, 49):
-        payload = _blob_bytes(media, mid)[HEADER_LEN:]
-        r = out[mid]
-        assert r["n_bytes"] == len(payload)
-        assert r["byte_sum"] == sum(payload)
-        assert r["byte_max"] == max(payload)
-        assert r["n_zero"] == sum(1 for x in payload if x == 0)
-
-
-def test_frame_sample_fanout_and_bytes(media):
-    out = frame_sample(media, "media_id", "blob", frame_size=16, stride=2)
-    rows = out.filter(F.col("media_id") == 3).orderBy("frame_no").collect()
-    # 64-byte payload / 16 = 4 frames, stride 2 -> frames 0 and 2
-    assert [r["frame_no"] for r in rows] == [0, 2]
-    payload = _blob_bytes(media, 3)[HEADER_LEN:]
-    for r in rows:
-        frame = payload[r["frame_no"] * 16 : (r["frame_no"] + 1) * 16]
-        assert r["frame_hex"] == frame.hex()
-        assert r["frame_md5"] == hashlib.md5(frame).hexdigest()
-        assert r["frame_len"] == 16
-
-
-def test_decode_image_fake_deterministic(media):
-    out = decode_image(media, "media_id", "blob")
-    r = {x["media_id"]: x for x in out.collect()}[5]
-    payload = _blob_bytes(media, 5)[HEADER_LEN:]
-    assert r["width"] == 5 % 64 + 1
-    assert r["gray_mean_milli"] == sum(payload) * 1000 // len(payload)
-    assert r["pixels_sampled"] == list(payload[:8])
+"""Multimodal binary-column decoders: BMP, WAV, PNG and GIF, each checked
+against a Python reference parse and for containment of malformed blobs."""
 
 
 def test_bmp_decode_real_semantics(spark):

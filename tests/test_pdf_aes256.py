@@ -77,6 +77,50 @@ def test_r6_hash_shape_and_sensitivity():
     assert h != _hash_r6(b"", b"saltsalt", b"udata-block")
 
 
+def _algorithm_2b(password: bytes, salt: bytes, udata: bytes = b"") -> bytes:
+    """ISO 32000-2 §7.6.4.3.4 Algorithm 2.B, transcribed step by step
+    from the spec text with an independent AES (the ``cryptography``
+    package) instead of crypto_aes."""
+    from cryptography.hazmat.primitives.ciphers import Cipher, algorithms, modes
+
+    # SHA-256 of the original input (password, salt, user key) is K
+    k = hashlib.sha256(password + salt + udata).digest()
+    round_number = 0
+    while True:
+        # (a) K1 = 64 repetitions of: password, K, the 48-byte user key
+        k1 = (password + k + udata) * 64
+        # (b) E = AES-128 (CBC, no padding) of K1; key = first 16 bytes
+        # of K, initialization vector = second 16 bytes of K
+        enc = Cipher(algorithms.AES(k[:16]), modes.CBC(k[16:32])).encryptor()
+        e = enc.update(k1) + enc.finalize()
+        # (c) first 16 bytes of E as an unsigned big-endian integer, mod 3
+        # selects SHA-256 (0), SHA-384 (1) or SHA-512 (2)
+        digest = (hashlib.sha256, hashlib.sha384, hashlib.sha512)[
+            int.from_bytes(e[:16], "big") % 3
+        ]
+        # (d) the hash of E is the new K
+        k = digest(e).digest()
+        round_number += 1
+        # (e)/(f) after rounds 0..63, repeat while the last byte of E is
+        # greater than the round number - 32
+        if round_number >= 64 and e[-1] <= round_number - 32:
+            return k[:32]  # the first 32 bytes of the final K
+
+
+def test_r6_hash_matches_spec_transcription():
+    """_hash_r6 equals Algorithm 2.B as written in the spec, run on an
+    independent AES-128-CBC, for empty, ASCII and 127-byte (the spec's
+    password cap) passwords, with and without the 48-byte user key."""
+    salt = bytes(range(8))
+    udata = hashlib.sha384(b"user key").digest()
+    for password in (b"", b"ascii password", bytes(range(1, 128))):
+        for u in (b"", udata):
+            assert _hash_r6(password, salt, u) == _algorithm_2b(password, salt, u)
+    assert _algorithm_2b(b"", b"saltsalt").hex() == (
+        "f383e1cdcd8e7e67f45a599473d3f5a7bd181c381364391074cafe0713e3331d"
+    )
+
+
 def test_r5_hash_is_plain_sha256():
     assert _hash_v5(b"pw", b"saltsalt", 5, b"u") == hashlib.sha256(
         b"pw" + b"saltsalt" + b"u"

@@ -74,6 +74,47 @@ def test_resume_checksums_match_between_runs(spark, pages_unit, tmp_path):
     assert checksums(a) == checksums(b)  # content invariant to partitioning
 
 
+def test_two_runs_write_the_same_rows_to_the_same_files(
+    spark, pages_unit, tmp_path
+):
+    """run_extraction's output contract: equal manifests (minus the
+    wall-clock fields), the same files per group, and the same row set
+    in each file.  Row order inside a file is not part of it."""
+    import re
+
+    import pyarrow.parquet as pq
+
+    from pdf_extraction_spark.plans.pipeline import MANIFEST_DIR, run_extraction
+
+    def manifests(out):
+        d = os.path.join(out, MANIFEST_DIR)
+        clock = ("wall_sec", "pass_wall_sec")
+        return {
+            name: {k: v for k, v in json.load(open(os.path.join(d, name))).items()
+                   if k not in clock}
+            for name in os.listdir(d)
+        }
+
+    def rows_per_file(out):
+        got = {}
+        for group in (g for g in os.listdir(out) if g.startswith("group=")):
+            for name in os.listdir(os.path.join(out, group)):
+                if name.endswith(".parquet"):
+                    rows = pq.read_table(os.path.join(out, group, name)).to_pylist()
+                    # part files carry a per-write uuid; the part index stays
+                    part = re.sub(r"-[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}", "", name)
+                    got[group, part] = sorted(json.dumps(r, sort_keys=True) for r in rows)
+        return got
+
+    a, b = str(tmp_path / "a"), str(tmp_path / "b")
+    run_extraction(spark, pages_unit, a, groups=3)
+    run_extraction(spark, pages_unit, b, groups=3)
+    assert manifests(a) == manifests(b)
+    files_a = rows_per_file(a)
+    assert len(files_a) >= 3 and sum(map(len, files_a.values())) == 200
+    assert files_a == rows_per_file(b)
+
+
 def test_groups_per_pass_batches_and_matches_single_pass(
     spark, pages_unit, tmp_path
 ):

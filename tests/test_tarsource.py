@@ -117,6 +117,40 @@ def test_split_start_on_pax_file_header(tmp_path):
     assert split == whole == members
 
 
+def test_meta_header_past_back_probe_never_emits_twice(spark, tmp_path):
+    """A PAX header longer than the backward probe's reach, cut by a
+    split boundary: the next split's scan lands on the file header and
+    cannot see the 'x' header behind it.  The byte-range read must
+    raise (naming the archive and offset) rather than emit the record
+    from both splits; whole-file and exact-index reads emit it once."""
+    import pandas as pd
+
+    from pdf_extraction_spark.sources.tarsource import _BACK_BLOCKS, _tar_split_batches
+
+    p = str(tmp_path / "long_pax.tar")
+    with tarfile.open(p, "w", format=tarfile.PAX_FORMAT) as t:
+        for name, data, pax in [
+            ("first.txt", b"x" * 600, {}),
+            ("long_meta.txt", b"owned by split 0", {"comment": "c" * (_BACK_BLOCKS * BLOCK + 4000)}),
+            ("after.txt", b"tail", {}),
+        ]:
+            info = tarfile.TarInfo(name)
+            info.size, info.mtime, info.pax_headers = len(data), 0, pax
+            t.addfile(info, io.BytesIO(data))
+    ln = os.path.getsize(p)
+    rec_start = dict((n, off) for n, off, _ in list_tar_entries(p, ln))["long_meta.txt"]
+    split_bytes = rec_start + 8 * BLOCK  # inside the 'x' payload
+    ranges = [(p, s, min(s + split_bytes, ln)) for s in range(0, ln, split_bytes)]
+    batches = iter([pd.DataFrame(ranges, columns=["path", "start", "end"])])
+    with pytest.raises(ValueError, match=rf"{p}: .* at offset {rec_start} "):
+        list(_tar_split_batches(batches))
+
+    expect = ["after.txt", "first.txt", "long_meta.txt"]
+    assert sorted(n for n, _ in _read_range_all(p, ln, split_bytes=ln)) == expect
+    exact = read_docs_tar(spark, p, exact_index=True).collect()
+    assert sorted(r["name"] for r in exact) == expect
+
+
 def test_decoy_header_in_member_content(tmp_path):
     """A checksum-valid fake header inside member CONTENT whose chain
     does not verify must be skipped by the alignment scan."""
