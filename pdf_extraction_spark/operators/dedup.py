@@ -13,8 +13,10 @@ no Python in the hot path) and designed for 100 TB scale:
                   buckets before the self-join; their members are still
                   covered by the other bands and by exact dedup.
                   Verification runs only on candidates, never all pairs.
-* SimHash:        per-row 60-bit fingerprint; near-dup = same fingerprint
-                  bucket (or small Hamming radius via banding).
+* SimHash:        per-row 60-bit fingerprint (functions/text.py,
+                  ``simhash_from_hashes`` over ``hash60`` token hashes);
+                  near-dup = same fingerprint bucket (or small Hamming
+                  radius via banding).
 * n-gram Jaccard: exact pairwise check, to be used only inside a blocking
                   key (LSH candidates or small blocks) — the quadratic path
                   is the verifier, not the discovery mechanism.
@@ -29,9 +31,7 @@ from pyspark.sql import functions as F
 from pdf_extraction_spark.functions.text import (
     band_keys,
     hash32,
-    hash60,
     minhash_signature,
-    simhash_from_hashes,
     tokens,
     word_ngrams,
 )
@@ -320,19 +320,6 @@ def minhash_lsh_dedup_pairs(
         )
         .distinct()
     )
-
-
-def simhash_fingerprints(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, simhash) — 60-bit SimHash per document, fully JVM-side.
-
-    Token hashes are materialized in a first projection so the 60-bit fold
-    reads them once, not once per bit position.
-    """
-    hashed = df.select(
-        F.col(id_col).alias("_id"),
-        F.transform(tokens(F.col(text_col)), hash60).alias("_hashes"),
-    )
-    return hashed.select("_id", simhash_from_hashes("_hashes").alias("simhash"))
 
 
 def embedding_near_dup_pairs(

@@ -74,13 +74,6 @@ def _u32le_hex(v: Column) -> Column:
     return F.concat(*b)
 
 
-def _u16le_hex(v: Column) -> Column:
-    return F.concat(
-        F.format_string("%02x", (v % 256).cast("int")),
-        F.format_string("%02x", (v / 256).cast("int")),
-    )
-
-
 def synth_bmp(id_col: Column) -> Column:
     """A REAL, spec-conformant 24-bit BMP built from an integer id with
     pure JVM expressions: width = 4 + id%5, height = 4 + id%4, stored

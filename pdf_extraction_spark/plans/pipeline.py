@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pdf_extraction_spark.operators.extract import extract_documents
+from pdf_extraction_spark.session import local_frame
 
 MANIFEST_DIR = "_manifests"
 
@@ -129,7 +130,7 @@ def _commit_staged_groups(
             # write job each would serialize pure overhead), then copied
             if empty_template is None:
                 empty_template = os.path.join(staging, "_empty-template")
-                spark.createDataFrame([], empty_schema).write.mode(
+                local_frame(spark, [], empty_schema).write.mode(
                     "overwrite"
                 ).parquet(empty_template)
             shutil.copytree(empty_template, dst)

@@ -6,13 +6,19 @@ Local-mode defaults mirror what we would set on a real cluster: AQE on
 the `html` column is fat binary (~KBs/row); at the default 10k rows/batch
 a single Arrow batch could exceed Python-worker memory at 100 TB-scale
 row widths (SURVEY §4.3).
+
+:func:`local_frame` is the one way the package turns driver-side rows
+into a DataFrame.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
 def get_spark(
@@ -45,3 +51,21 @@ def get_spark(
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: StructType) -> DataFrame:
+    """A DataFrame over driver-side ``rows`` (tuples in ``schema`` order)
+    that plans as a JVM ``LocalTableScan``.
+
+    ``spark.createDataFrame(<python list>)`` plans a ``Scan ExistingRDD``
+    over pickled rows, which runs a Python task per default-parallelism
+    slice even for an empty list.  A ``pyarrow.Table`` with the declared
+    schema is turned into a local relation in the JVM instead, so source
+    split tables and empty frames cost no Python stage."""
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)

@@ -60,7 +60,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from pdf_extraction_spark.sources.warc import _open_binary
+from pdf_extraction_spark.session import local_frame
+from pdf_extraction_spark.sources.warc import SPLIT_SCHEMA, _open_binary
 
 BLOCK = 512
 _REGULAR = (b"0", b"\x00", b"7")
@@ -441,8 +442,8 @@ def read_docs_tar(
             ends = offs[1:] + [int(r["length"])]
             rows.extend((r["path"], a, b) for a, b in zip(offs, ends))
         if not rows:
-            return spark.createDataFrame([], TAR_DOC_SCHEMA)
-        df = spark.createDataFrame(rows, "path string, start long, end long")
+            return local_frame(spark, [], TAR_DOC_SCHEMA)
+        df = local_frame(spark, rows, SPLIT_SCHEMA)
         df = df.repartition(min(len(rows), spark.sparkContext.defaultParallelism))
         return df.mapInPandas(_tar_split_batches, schema=TAR_DOC_SCHEMA)
     task_rows: list[tuple[str, int, int]] = []
@@ -455,8 +456,8 @@ def read_docs_tar(
         else:
             task_rows.append((p, 0, -1))
     if not task_rows:
-        return spark.createDataFrame([], TAR_DOC_SCHEMA)
-    sdf = spark.createDataFrame(task_rows, "path string, start long, end long")
+        return local_frame(spark, [], TAR_DOC_SCHEMA)
+    sdf = local_frame(spark, task_rows, SPLIT_SCHEMA)
     sdf = sdf.repartition(len(task_rows))
     return sdf.mapInPandas(_tar_split_batches, schema=TAR_DOC_SCHEMA)
 

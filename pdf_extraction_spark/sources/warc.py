@@ -39,8 +39,9 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from pdf_extraction_spark.session import local_frame
 from pdf_extraction_spark.sources.pages import PAGES_SCHEMA
 
 # pages schema + provenance: rows from the byte-range split path are built
@@ -49,6 +50,16 @@ from pdf_extraction_spark.sources.pages import PAGES_SCHEMA
 # lineage prefers `source_file` when present)
 WARC_PAGES_SCHEMA = StructType(
     list(PAGES_SCHEMA.fields) + [StructField("source_file", StringType())]
+)
+
+# one row per read task of the file-splitting sources: a whole file is
+# (path, 0, -1), a byte-range split (path, start, end)
+SPLIT_SCHEMA = StructType(
+    [
+        StructField("path", StringType()),
+        StructField("start", LongType()),
+        StructField("end", LongType()),
+    ]
 )
 
 
@@ -497,10 +508,8 @@ def read_pages_warc(
             task_rows.append((p, 0, -1))
 
     if not task_rows:
-        return spark.createDataFrame([], WARC_PAGES_SCHEMA)
-    sdf = spark.createDataFrame(
-        task_rows, "path string, start long, end long"
-    ).repartition(len(task_rows))
+        return local_frame(spark, [], WARC_PAGES_SCHEMA)
+    sdf = local_frame(spark, task_rows, SPLIT_SCHEMA).repartition(len(task_rows))
     return sdf.mapInPandas(_warc_split_batches, schema=WARC_PAGES_SCHEMA)
 
 

@@ -39,6 +39,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from pdf_extraction_spark.session import local_frame
 from pdf_extraction_spark.sources.tarsource import (
     _BlockReader,
     _iter_tar_records,
@@ -52,6 +53,8 @@ WDS_SAMPLE_SCHEMA = StructType(
         StructField("parts", MapType(StringType(), BinaryType())),
     ]
 )
+
+_PATH_SCHEMA = StructType([StructField("path", StringType())])
 
 
 def split_wds_key(name: str) -> tuple[str, str]:
@@ -230,9 +233,7 @@ def read_webdataset(
     )
     paths = [(r["path"],) for r in meta]
     if not paths:
-        return spark.createDataFrame([], WDS_SAMPLE_SCHEMA)
+        return local_frame(spark, [], WDS_SAMPLE_SCHEMA)
     n = parallelism or spark.sparkContext.defaultParallelism
-    sdf = spark.createDataFrame(paths, "path string").repartition(
-        min(len(paths), n)
-    )
+    sdf = local_frame(spark, paths, _PATH_SCHEMA).repartition(min(len(paths), n))
     return sdf.mapInPandas(_wds_batches, schema=WDS_SAMPLE_SCHEMA)

@@ -34,12 +34,14 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
     BinaryType,
+    IntegerType,
     LongType,
     StringType,
     StructField,
     StructType,
 )
 
+from pdf_extraction_spark.session import local_frame
 from pdf_extraction_spark.sources.warc import _open_binary
 
 _EOCD_SIG = b"PK\x05\x06"
@@ -54,6 +56,20 @@ ZIP_DOC_SCHEMA = StructType(
         StructField("name", StringType()),
         StructField("size", LongType()),
         StructField("content", BinaryType()),
+    ]
+)
+
+# one row per member: where its local header sits and what the central
+# directory says about it
+_ENTRY_SCHEMA = StructType(
+    [
+        StructField("archive", StringType()),
+        StructField("name", StringType()),
+        StructField("local_off", LongType()),
+        StructField("comp_size", LongType()),
+        StructField("uncomp_size", LongType()),
+        StructField("method", IntegerType()),
+        StructField("crc", LongType()),
     ]
 )
 
@@ -246,13 +262,9 @@ def read_docs_zip(
             r["path"], int(r["length"])
         ):
             rows.append((r["path"], name, off, csize, usize, method, crc))
-    entry_schema = (
-        "archive string, name string, local_off long, comp_size long,"
-        " uncomp_size long, method int, crc long"
-    )
     if not rows:
-        return spark.createDataFrame([], ZIP_DOC_SCHEMA)
-    df = spark.createDataFrame(rows, entry_schema)
+        return local_frame(spark, [], ZIP_DOC_SCHEMA)
+    df = local_frame(spark, rows, _ENTRY_SCHEMA)
     n = parallelism or spark.sparkContext.defaultParallelism
     df = df.repartition(min(len(rows), n))
     return df.mapInPandas(_read_batches, schema=ZIP_DOC_SCHEMA)

@@ -143,7 +143,9 @@ def test_mapinpandas_only_in_balance():
     operators/ builds its own mapInPandas node or under-split guard, and
     no module anywhere in the package asks a DataFrame's RDD for its
     partition count — on an adaptive plan that runs the whole upstream
-    (operators/balance.py reads the count from the plan instead)."""
+    (operators/balance.py reads the count from the plan instead) — and
+    none but session.py (``local_frame``) calls ``createDataFrame(``: a
+    Python list there plans a Python stage where a local scan costs none."""
     offenders = [
         p.name
         for p in sorted(OPERATORS.glob("*.py"))
@@ -154,5 +156,10 @@ def test_mapinpandas_only_in_balance():
         str(p.relative_to(PACKAGE))
         for p in sorted(PACKAGE.rglob("*.py"))
         if ".rdd.getNumPartitions(" in p.read_text()
+    ]
+    offenders += [
+        str(p.relative_to(PACKAGE))
+        for p in sorted(PACKAGE.rglob("*.py"))
+        if p.name != "session.py" and "createDataFrame(" in p.read_text()
     ]
     assert offenders == []
