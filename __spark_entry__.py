@@ -2349,8 +2349,11 @@ def q_csv_export_bytes(spark, sf_dir):
     quoting) and hashes it in DuckDB."""
     import hashlib
 
+    from pyspark.sql.types import DataType
+
     from pdf_extraction_spark.operators.extract import extract_documents
     from pdf_extraction_spark.plans.csv_export import records_to_csv_bytes
+    from pdf_extraction_spark.session import local_frame
 
     d = _load(spark, sf_dir, "documents").filter(F.col("doc_id") < 20)
     body = F.regexp_replace(
@@ -2378,7 +2381,8 @@ def q_csv_export_bytes(spark, sf_dir):
         pairs = [(p["field"], p["value"]) for p in r["fields"]]
         csv = records_to_csv_bytes([pairs])
         out.append((int(r["url"]), hashlib.md5(csv).hexdigest(), len(csv)))
-    return spark.createDataFrame(out, "doc_id long, csv_md5 string, n_bytes long")
+    schema = DataType.fromDDL("doc_id long, csv_md5 string, n_bytes long")
+    return local_frame(spark, out, schema)
 
 
 _ORACLE_CSV_BYTES = r"""

@@ -4,9 +4,10 @@ These functions are the byte-identity anchor of the engine: each one
 reimplements, exactly, one dataflow operator of the reference
 (`ajmal624/Pdf_extraction`, studied at /root/reference).  Fidelity notes
 cite the reference as file:line.  The Spark layer (operators/extract.py)
-only *vectorizes dispatch* around these kernels via Arrow-batched
-``mapInPandas``; the per-document semantics live here and are unit-tested
-against a straight-line oracle (tests/oracle.py).
+only *vectorizes dispatch* around these kernels, as row functions behind
+the one Arrow batch loop in ``operators/balance.py``; the per-document
+semantics live here and are unit-tested against a straight-line oracle
+(tests/oracle.py).
 
 Key Unicode traps (why this is Python, not Spark SQL expressions):
 
@@ -187,7 +188,7 @@ def label_spans(extracted_text: str, fields):
 # ---------------------------------------------------------------------------
 
 def extract_document(url, html_bytes, text, max_doc_chars=None):
-    """Per-document dispatch — the unit of work inside ``mapInPandas``.
+    """Per-document dispatch — the per-row work of ``extract_documents``.
 
     * PDF rows (``html_bytes`` starts with ``%PDF-``): per-page text is
       recovered from the raw PDF bytes by the from-scratch parser

@@ -1,14 +1,24 @@
-"""The one operator shape for per-document Arrow kernels.
+"""The one Python batch loop of the package, and the operator shape
+built on it.
 
 Every codec/extraction operator in this engine is an embarrassingly
 parallel per-document kernel: one input row through one pure Python
-function, no shuffle.  :func:`map_documents` is that shape, written
-once: an operator selects its input columns, hands over a per-row
-function and the output schema, and gets back the ``mapInPandas`` node.
-The batch loop — Arrow batch in, per-column lists, one pandas frame out
-per batch — lives here and nowhere else; per-document error containment
-stays in each row function (a decoder's ``is_valid=0`` row, the mixed
-corpus dispatcher's ``error`` column).
+function, no shuffle.  The file sources are the same shape one level
+down: one split-table row (a file, a byte range, an archive member)
+through one reader function that returns that row's documents.
+:func:`map_rows` is that shape, written once: a caller selects its input
+columns, hands over a per-row function and the output schema, and gets
+back the ``mapInPandas`` node.  The batch loop — Arrow batch in,
+per-column lists, one pandas frame out per batch that produced rows —
+lives here and nowhere else; per-document error containment stays in
+each row function (a decoder's ``is_valid=0`` row, the mixed corpus
+dispatcher's ``error`` column).
+
+:func:`map_documents` is ``map_rows`` behind the under-split guard, for
+operators over input whose partitioning they do not control.  The
+sources call ``map_rows`` directly: each sets its own task count when it
+repartitions its split table, and the guard must not add a second
+exchange on top of it.
 
 Under-split guard: ``mapInPandas`` can never run wider than its input
 partitioning, and a small parquet file with a single row group (or any
@@ -104,7 +114,7 @@ def rebalance_if_undersplit(df: DataFrame) -> DataFrame:
     return df
 
 
-def map_documents(
+def map_rows(
     df: DataFrame,
     fn: Callable,
     schema: StructType | str,
@@ -112,7 +122,8 @@ def map_documents(
     passthrough=(),
 ) -> DataFrame:
     """Run ``fn`` once per row of ``df`` and collect its output rows
-    under ``schema`` (a StructType or DDL string).
+    under ``schema`` (a StructType or DDL string), in ``df``'s own
+    partitioning.
 
     ``fn`` is called with the row's values of every ``df`` column not
     named in ``passthrough``, in ``df``'s column order.  It returns one
@@ -121,7 +132,10 @@ def map_documents(
     the schema's fields minus the ``passthrough`` ones, in schema order;
     each ``passthrough`` column is copied unchanged from the input row
     into the field of the same name, wherever the schema places it.
-    Output rows keep input order within each Arrow batch."""
+    Output rows keep input order within each Arrow batch.  A batch that
+    produces no rows yields no frame: pandas would type its empty
+    columns as it pleases, and Arrow cannot cast every such column to
+    the declared type (a ``timestamp`` field fails)."""
     names = (DataType.fromDDL(schema) if isinstance(schema, str) else schema).fieldNames()
     kept = list(passthrough)
     inputs = [c for c in df.columns if c not in kept] + kept
@@ -141,6 +155,19 @@ def map_documents(
                 for row in out if out.__class__ is list else (out,):
                     for add, v in zip(adds, row + kept_values):
                         add(v)
-            yield pd.DataFrame(dict(zip(names, cols)), columns=names)
+            if cols[0]:
+                yield pd.DataFrame(dict(zip(names, cols)), columns=names)
 
-    return rebalance_if_undersplit(df).mapInPandas(batches, schema=schema)
+    return df.mapInPandas(batches, schema=schema)
+
+
+def map_documents(
+    df: DataFrame,
+    fn: Callable,
+    schema: StructType | str,
+    *,
+    passthrough=(),
+) -> DataFrame:
+    """:func:`map_rows` over ``df`` after the under-split guard: the
+    per-document operator shape."""
+    return map_rows(rebalance_if_undersplit(df), fn, schema, passthrough=passthrough)

@@ -46,11 +46,9 @@ central-directory listing) that is exact by construction.
 
 from __future__ import annotations
 
-import gzip
 import io
 from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
     BinaryType,
@@ -60,8 +58,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from pdf_extraction_spark.operators.balance import map_rows
 from pdf_extraction_spark.session import local_frame
-from pdf_extraction_spark.sources.warc import SPLIT_SCHEMA, _open_binary
+from pdf_extraction_spark.sources.warc import SPLIT_SCHEMA, _open_binary, _read_whole
 
 BLOCK = 512
 _REGULAR = (b"0", b"\x00", b"7")
@@ -372,46 +371,32 @@ def list_tar_entries(path: str, file_length: int) -> list[tuple[str, int, int]]:
     return out
 
 
-def _tar_split_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Row-driven reader: (path, start, end); end == -1 reads the whole
-    file (gzip-sniffed)."""
-    for pdf in batches:
-        out = {"archive": [], "name": [], "size": [], "content": []}
-        for path, start, end in zip(pdf["path"], pdf["start"], pdf["end"]):
-            path, start, end = str(path), int(start), int(end)
-            if end < 0:
-                with _open_binary(path) as f:
-                    raw = f.read()
-                if raw[:2] == b"\x1f\x8b":
-                    raw = gzip.GzipFile(fileobj=io.BytesIO(raw)).read()
-                rd = _BlockReader(io.BytesIO(raw))
-                rd._buf, rd._buf_at = raw, 0  # whole file already in memory
-                it = _iter_tar_records(
-                    rd, 0, len(raw), len(raw),
-                    aligned_at_zero=True, allow_global=True,
-                )
-                for name, content in it:
-                    out["archive"].append(path)
-                    out["name"].append(name)
-                    out["size"].append(len(content))
-                    out["content"].append(content)
-            else:
-                with _open_binary(path) as f:
-                    f.seek(0, 2)
-                    file_length = f.tell()
-                    rd = _BlockReader(f)
-                    try:
-                        for name, content in _iter_tar_records(
-                            rd, start, end, file_length,
-                            aligned_at_zero=(start == 0),
-                        ):
-                            out["archive"].append(path)
-                            out["name"].append(name)
-                            out["size"].append(len(content))
-                            out["content"].append(content)
-                    except ValueError as e:
-                        raise ValueError(f"{path}: {e}") from e
-        yield pd.DataFrame(out)
+def iter_tar_bytes(raw: bytes) -> Iterator[tuple[str, bytes]]:
+    """Yield (name, content) for every regular-file member of the whole
+    tar archive ``raw`` held in memory (global PAX defaults apply)."""
+    rd = _BlockReader(io.BytesIO(raw))
+    rd._buf, rd._buf_at = raw, 0  # whole file already in memory
+    return _iter_tar_records(
+        rd, 0, len(raw), len(raw), aligned_at_zero=True, allow_global=True
+    )
+
+
+def _tar_split_members(path: str, start: int, end: int) -> list[tuple]:
+    """The (archive, name, size, content) rows of one split-table row
+    (path, start, end); end == -1 reads the whole file (gzip-sniffed).
+    A corrupt archive raises ValueError naming ``path`` on either path."""
+    try:
+        if end < 0:
+            records = iter_tar_bytes(_read_whole(path))
+            return [(path, name, len(content), content) for name, content in records]
+        with _open_binary(path) as f:
+            f.seek(0, 2)
+            records = _iter_tar_records(
+                _BlockReader(f), start, end, f.tell(), aligned_at_zero=(start == 0)
+            )
+            return [(path, name, len(content), content) for name, content in records]
+    except ValueError as e:
+        raise ValueError(f"{path}: {e}") from e
 
 
 def read_docs_tar(
@@ -445,7 +430,7 @@ def read_docs_tar(
             return local_frame(spark, [], TAR_DOC_SCHEMA)
         df = local_frame(spark, rows, SPLIT_SCHEMA)
         df = df.repartition(min(len(rows), spark.sparkContext.defaultParallelism))
-        return df.mapInPandas(_tar_split_batches, schema=TAR_DOC_SCHEMA)
+        return map_rows(df, _tar_split_members, TAR_DOC_SCHEMA)
     task_rows: list[tuple[str, int, int]] = []
     for r in meta:
         p, ln = r["path"], int(r["length"])
@@ -459,7 +444,7 @@ def read_docs_tar(
         return local_frame(spark, [], TAR_DOC_SCHEMA)
     sdf = local_frame(spark, task_rows, SPLIT_SCHEMA)
     sdf = sdf.repartition(len(task_rows))
-    return sdf.mapInPandas(_tar_split_batches, schema=TAR_DOC_SCHEMA)
+    return map_rows(sdf, _tar_split_members, TAR_DOC_SCHEMA)
 
 
 def write_tar_members(out, members: Iterator[tuple[str, bytes]]) -> int:

@@ -23,9 +23,9 @@ magic alone can appear inside an archived payload), and parses every
 record STARTING inside its range, reading past the range end for the
 tail record only.  That bounds task size by split_bytes regardless of
 archive size — the pathological one-giant-file case no longer serializes
-onto one core.  The parse runs in Arrow-batched mapInPandas; emitted
-rows carry only the pages columns, so the fat archive bytes never
-outlive the task.
+onto one core.  Each split-table row is parsed by one row function
+behind ``operators/balance.py:map_rows``; emitted rows carry only the
+pages columns, so the fat archive bytes never outlive the task.
 """
 
 from __future__ import annotations
@@ -34,13 +34,11 @@ import datetime as dt
 import gzip
 import io
 import re
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from pdf_extraction_spark.operators.balance import map_rows
 from pdf_extraction_spark.session import local_frame
 from pdf_extraction_spark.sources.pages import PAGES_SCHEMA
 
@@ -108,20 +106,20 @@ def _parse_warc_ts(v: str):
         return None
 
 
-def _append_record(out: dict, headers: dict, payload: bytes, source_file: str) -> None:
-    """Emit one pages row for a WARC response record (shared by the
-    whole-file and byte-range kernels)."""
-    if headers.get("warc-type") != "response":
-        return
+def _page_row(headers: dict, payload: bytes, source_file: str) -> tuple | None:
+    """The pages row of a WARC response record, None for any other
+    record (shared by the whole-file and byte-range readers)."""
     url = headers.get("warc-target-uri")
-    if not url:
-        return
-    out["url"].append(url)
-    out["warc_ts"].append(_parse_warc_ts(headers.get("warc-date", "")))
-    out["html"].append(_http_body(payload))
-    out["text"].append(None)
-    out["lang"].append(None)
-    out["source_file"].append(source_file)
+    if headers.get("warc-type") != "response" or not url:
+        return None
+    return (
+        url,
+        _parse_warc_ts(headers.get("warc-date", "")),
+        _http_body(payload),
+        None,
+        None,
+        source_file,
+    )
 
 
 # --- byte-range splitting of uncompressed .warc files -----------------------
@@ -145,6 +143,20 @@ def _open_binary(path: str):
         filesystem, p = pafs.FileSystem.from_uri(path)
         return filesystem.open_input_file(p)
     return open(path, "rb")
+
+
+def _gunzip(raw: bytes) -> bytes:
+    """``raw`` inflated (every member of a multi-member stream) when it
+    starts with the gzip magic, else ``raw`` itself."""
+    if raw[:2] == b"\x1f\x8b":
+        return gzip.GzipFile(fileobj=io.BytesIO(raw)).read()
+    return raw
+
+
+def _read_whole(path: str) -> bytes:
+    """The whole file at ``path``, gunzipped when it is gzip."""
+    with _open_binary(path) as f:
+        return _gunzip(f.read())
 
 
 def _parse_header_block(block: bytes):
@@ -439,38 +451,27 @@ def _iter_warc_gz_records_range(f, start: int, end: int, read_chunk: int = 1 << 
         off = nxt
 
 
-def _warc_split_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Row-driven WARC reader: each input row is (path, start, end).
+def _warc_split_pages(path: str, start: int, end: int) -> list[tuple]:
+    """The pages of one split-table row (path, start, end).
 
-    end >= 0  -> parse records starting in [start, end) of an uncompressed
-                 archive (byte-range split).
-    end == -1 -> read the whole file (gzip-sniffed), one file per row.
+    end >= 0  -> records starting in [start, end) of the archive
+                 (byte-range split; uncompressed or member-per-record gz).
+    end == -1 -> every record of the whole file (gzip-sniffed).
 
     Paths are binaryFile-listing URIs opened via _open_binary (which
     unquotes percent-encoding) — never fed back through a Hadoop glob, so
     filenames containing glob metacharacters (* [ { %) are safe."""
-    for pdf in batches:
-        out = {"url": [], "warc_ts": [], "html": [], "text": [],
-               "lang": [], "source_file": []}
-        for path, start, end in zip(pdf["path"], pdf["start"], pdf["end"]):
-            path, start, end = str(path), int(start), int(end)
-            if end < 0:
-                with _open_binary(path) as f:
-                    raw = f.read()
-                if path.endswith(".gz") or raw[:2] == b"\x1f\x8b":
-                    raw = gzip.GzipFile(fileobj=io.BytesIO(raw)).read()
-                for headers, payload in _iter_warc_records(raw):
-                    _append_record(out, headers, payload, path)
-            else:
-                with _open_binary(path) as f:
-                    if f.read(len(_GZ_MAGIC)) == _GZ_MAGIC:
-                        it = _iter_warc_gz_records_range(f, start, end)
-                    else:
-                        it = _iter_warc_records_range(f, start, end)
-                    for headers, payload in it:
-                        _append_record(out, headers, payload, path)
-        if out["url"]:  # an all-empty frame would lose the ts dtype
-            yield pd.DataFrame(out)
+
+    def pages(records) -> list[tuple]:
+        rows = (_page_row(headers, payload, path) for headers, payload in records)
+        return [row for row in rows if row is not None]
+
+    if end < 0:
+        return pages(_iter_warc_records(_read_whole(path)))
+    with _open_binary(path) as f:
+        if f.read(len(_GZ_MAGIC)) == _GZ_MAGIC:
+            return pages(_iter_warc_gz_records_range(f, start, end))
+        return pages(_iter_warc_records_range(f, start, end))
 
 
 def read_pages_warc(
@@ -510,7 +511,7 @@ def read_pages_warc(
     if not task_rows:
         return local_frame(spark, [], WARC_PAGES_SCHEMA)
     sdf = local_frame(spark, task_rows, SPLIT_SCHEMA).repartition(len(task_rows))
-    return sdf.mapInPandas(_warc_split_batches, schema=WARC_PAGES_SCHEMA)
+    return map_rows(sdf, _warc_split_pages, WARC_PAGES_SCHEMA)
 
 
 def write_pages_warc(rows, path: str, *, compress: bool = True) -> None:

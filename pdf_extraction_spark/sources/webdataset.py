@@ -25,8 +25,6 @@ layer (F18), not the source.
 
 from __future__ import annotations
 
-import gzip
-import io
 from typing import Iterator
 
 import pandas as pd
@@ -39,12 +37,10 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from pdf_extraction_spark.operators.balance import map_rows
 from pdf_extraction_spark.session import local_frame
-from pdf_extraction_spark.sources.tarsource import (
-    _BlockReader,
-    _iter_tar_records,
-)
-from pdf_extraction_spark.sources.warc import _open_binary
+from pdf_extraction_spark.sources.tarsource import iter_tar_bytes
+from pdf_extraction_spark.sources.warc import _gunzip, _read_whole
 
 WDS_SAMPLE_SCHEMA = StructType(
     [
@@ -98,26 +94,11 @@ def iter_wds_samples(
         yield cur_key, cur
 
 
-def _wds_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = {"archive": [], "key": [], "parts": []}
-        for path in pdf["path"]:
-            path = str(path)
-            with _open_binary(path) as f:
-                raw = f.read()
-            if raw[:2] == b"\x1f\x8b":
-                raw = gzip.GzipFile(fileobj=io.BytesIO(raw)).read()
-            rd = _BlockReader(io.BytesIO(raw))
-            rd._buf, rd._buf_at = raw, 0
-            records = _iter_tar_records(
-                rd, 0, len(raw), len(raw),
-                aligned_at_zero=True, allow_global=True,
-            )
-            for key, parts in iter_wds_samples(records, path):
-                out["archive"].append(path)
-                out["key"].append(key)
-                out["parts"].append(parts)
-        yield pd.DataFrame(out)
+def _shard_samples(path: str, raw: bytes) -> list[tuple]:
+    """The (archive, key, parts) sample rows of the shard ``path`` whose
+    (inflated) tar bytes are ``raw``."""
+    records = iter_tar_bytes(raw)
+    return [(path, key, parts) for key, parts in iter_wds_samples(records, path)]
 
 
 def read_webdataset_stream(
@@ -137,28 +118,9 @@ def read_webdataset_stream(
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     files = reader.load(path).select("path", "content")
-
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"archive": [], "key": [], "parts": []}
-            for path_, raw in zip(pdf["path"], pdf["content"]):
-                raw = bytes(raw)
-                if raw[:2] == b"\x1f\x8b":
-                    raw = gzip.GzipFile(fileobj=io.BytesIO(raw)).read()
-                rd = _BlockReader(io.BytesIO(raw))
-                rd._buf, rd._buf_at = raw, 0
-                records = _iter_tar_records(
-                    rd, 0, len(raw), len(raw),
-                    aligned_at_zero=True, allow_global=True,
-                )
-                for key, parts in iter_wds_samples(records, str(path_)):
-                    out["archive"].append(str(path_))
-                    out["key"].append(key)
-                    out["parts"].append(parts)
-            if out["key"]:
-                yield pd.DataFrame(out)
-
-    return files.mapInPandas(_batches, schema=WDS_SAMPLE_SCHEMA)
+    return map_rows(
+        files, lambda shard, raw: _shard_samples(shard, _gunzip(raw)), WDS_SAMPLE_SCHEMA
+    )
 
 
 def write_webdataset(
@@ -236,4 +198,6 @@ def read_webdataset(
         return local_frame(spark, [], WDS_SAMPLE_SCHEMA)
     n = parallelism or spark.sparkContext.defaultParallelism
     sdf = local_frame(spark, paths, _PATH_SCHEMA).repartition(min(len(paths), n))
-    return sdf.mapInPandas(_wds_batches, schema=WDS_SAMPLE_SCHEMA)
+    return map_rows(
+        sdf, lambda shard: _shard_samples(shard, _read_whole(shard)), WDS_SAMPLE_SCHEMA
+    )

@@ -28,9 +28,7 @@ from __future__ import annotations
 
 import struct
 import zlib
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
     BinaryType,
@@ -41,6 +39,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from pdf_extraction_spark.operators.balance import map_rows
 from pdf_extraction_spark.session import local_frame
 from pdf_extraction_spark.sources.warc import _open_binary
 
@@ -220,30 +219,24 @@ def read_zip_member(path: str, local_off: int, comp_size: int, method: int) -> b
     return zlib.decompressobj(-15).decompress(raw) + b""
 
 
-def _read_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = {"archive": [], "name": [], "size": [], "content": []}
-        for archive, name, off, csize, usize, method, crc in zip(
-            pdf["archive"], pdf["name"], pdf["local_off"],
-            pdf["comp_size"], pdf["uncomp_size"], pdf["method"], pdf["crc"],
-        ):
-            data = read_zip_member(str(archive), int(off), int(csize), int(method))
-            if len(data) != int(usize):
-                raise ValueError(
-                    f"zip source: member {name!r} inflated to {len(data)} bytes,"
-                    f" central directory says {usize}"
-                )
-            if zlib.crc32(data) != int(crc):
-                raise ValueError(
-                    f"zip source: crc mismatch for member {name!r}:"
-                    f" got {zlib.crc32(data):#010x},"
-                    f" central directory says {int(crc):#010x}"
-                )
-            out["archive"].append(str(archive))
-            out["name"].append(str(name))
-            out["size"].append(len(data))
-            out["content"].append(data)
-        yield pd.DataFrame(out)
+def _read_member(
+    archive: str, name: str, off: int, csize: int, usize: int, method: int, crc: int
+) -> tuple:
+    """The (archive, name, size, content) row of one central-directory
+    entry, its inflated length and CRC32 checked against the entry."""
+    data = read_zip_member(archive, off, csize, method)
+    if len(data) != usize:
+        raise ValueError(
+            f"zip source: member {name!r} inflated to {len(data)} bytes,"
+            f" central directory says {usize}"
+        )
+    if zlib.crc32(data) != crc:
+        raise ValueError(
+            f"zip source: crc mismatch for member {name!r}:"
+            f" got {zlib.crc32(data):#010x},"
+            f" central directory says {crc:#010x}"
+        )
+    return archive, name, len(data), data
 
 
 def read_docs_zip(
@@ -267,7 +260,7 @@ def read_docs_zip(
     df = local_frame(spark, rows, _ENTRY_SCHEMA)
     n = parallelism or spark.sparkContext.defaultParallelism
     df = df.repartition(min(len(rows), n))
-    return df.mapInPandas(_read_batches, schema=ZIP_DOC_SCHEMA)
+    return map_rows(df, _read_member, ZIP_DOC_SCHEMA)
 
 
 def read_pages_zip(spark: SparkSession, path: str) -> DataFrame:

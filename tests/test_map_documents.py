@@ -4,8 +4,8 @@ structure guard that keeps the batch loop in that one place."""
 from __future__ import annotations
 
 import datetime
+import inspect
 import pathlib
-import re
 
 from pyspark.sql import functions as F
 
@@ -15,7 +15,6 @@ from pdf_extraction_spark.operators.docx_text import build_docx
 from pdf_extraction_spark.pdf_parse import build_pdf
 
 PACKAGE = pathlib.Path(__file__).resolve().parent.parent / "pdf_extraction_spark"
-OPERATORS = PACKAGE / "operators"
 
 
 def test_passthrough_columns_keep_position_and_values(spark):
@@ -61,6 +60,21 @@ def test_empty_partition_yields_empty_frame_with_declared_schema(spark):
     pdf = map_documents(empty, lambda text: (len(text), text), schema, passthrough=("doc_id",)).toPandas()
     assert len(pdf) == 0
     assert list(pdf.columns) == ["doc_id", "n_chars", "text"]
+
+
+def test_batch_without_output_rows_under_timestamp_schema(spark):
+    """A batch whose rows all return ``[]`` yields no frame: an empty
+    pandas frame cannot be cast to a ``timestamp`` field, and that
+    failed the whole task."""
+    schema = "url string, warc_ts timestamp, html binary"
+    ts = datetime.datetime(2026, 3, 1, 12, 0, 0)
+    df = spark.range(0, 8, 1, 2).select(F.col("id").alias("n"))
+    assert map_documents(df, lambda n: [], schema).collect() == []
+    some = map_documents(df, lambda n: [(f"u{n}", ts, b"x")] if n == 3 else [], schema)
+    rows = some.collect()
+    assert [(r["url"], r["warc_ts"] is not None, bytes(r["html"])) for r in rows] == [
+        ("u3", True, b"x")
+    ]
 
 
 def test_one_to_many_rows_keep_input_order(spark):
@@ -139,27 +153,42 @@ def test_undersplit_guard_sums_union_children(spark):
 
 
 def test_mapinpandas_only_in_balance():
-    """Every operator goes through map_documents: no other module in
-    operators/ builds its own mapInPandas node or under-split guard, and
-    no module anywhere in the package asks a DataFrame's RDD for its
-    partition count — on an adaptive plan that runs the whole upstream
-    (operators/balance.py reads the count from the plan instead) — and
-    none but session.py (``local_frame``) calls ``createDataFrame(``: a
-    Python list there plans a Python stage where a local scan costs none."""
+    """One Python batch loop in the package: ``mapInPandas(`` appears in
+    operators/balance.py and, as the one named exception, in the
+    ``write_webdataset`` sink (a per-partition writer holding a shard
+    counter, not a per-row map); every operator and source reader runs
+    through ``map_rows``.  No module but balance.py builds the
+    under-split guard; no module anywhere in the package asks a
+    DataFrame's RDD for its partition count — on an adaptive plan that
+    runs the whole upstream (operators/balance.py reads the count from
+    the plan instead) — and none but session.py (``local_frame``), in
+    the package or in the entry points beside it, calls
+    ``createDataFrame(``: a Python list there plans a Python stage where
+    a local scan costs none."""
+    from pdf_extraction_spark.sources.webdataset import write_webdataset
+
+    allowed = {"operators/balance.py": 1, "sources/webdataset.py": 1}
+    package = sorted(PACKAGE.rglob("*.py"))
+    calls = {str(p.relative_to(PACKAGE)): p.read_text().count("mapInPandas(") for p in package}
     offenders = [
-        p.name
-        for p in sorted(OPERATORS.glob("*.py"))
-        if p.name != "balance.py"
-        and re.search(r"mapInPandas\(|rebalance_if_undersplit\(", p.read_text())
+        f"{name}: {n} mapInPandas(" for name, n in calls.items() if n != allowed.get(name, 0)
     ]
+    assert "mapInPandas(" in inspect.getsource(write_webdataset)
     offenders += [
         str(p.relative_to(PACKAGE))
-        for p in sorted(PACKAGE.rglob("*.py"))
-        if ".rdd.getNumPartitions(" in p.read_text()
+        for p in package
+        if p.name != "balance.py" and "rebalance_if_undersplit(" in p.read_text()
     ]
     offenders += [
-        str(p.relative_to(PACKAGE))
-        for p in sorted(PACKAGE.rglob("*.py"))
+        str(p.relative_to(PACKAGE)) for p in package if ".rdd.getNumPartitions(" in p.read_text()
+    ]
+    repo = PACKAGE.parent
+    entry_points = [repo / "__spark_entry__.py", repo / "bench.py"] + sorted(
+        [*repo.glob("jobs/*.py"), *repo.glob("scripts/*.py")]
+    )
+    offenders += [
+        str(p.relative_to(repo))
+        for p in package + entry_points
         if p.name != "session.py" and "createDataFrame(" in p.read_text()
     ]
     assert offenders == []

@@ -123,9 +123,7 @@ def test_meta_header_past_back_probe_never_emits_twice(spark, tmp_path):
     cannot see the 'x' header behind it.  The byte-range read must
     raise (naming the archive and offset) rather than emit the record
     from both splits; whole-file and exact-index reads emit it once."""
-    import pandas as pd
-
-    from pdf_extraction_spark.sources.tarsource import _BACK_BLOCKS, _tar_split_batches
+    from pdf_extraction_spark.sources.tarsource import _BACK_BLOCKS, _tar_split_members
 
     p = str(tmp_path / "long_pax.tar")
     with tarfile.open(p, "w", format=tarfile.PAX_FORMAT) as t:
@@ -141,14 +139,30 @@ def test_meta_header_past_back_probe_never_emits_twice(spark, tmp_path):
     rec_start = dict((n, off) for n, off, _ in list_tar_entries(p, ln))["long_meta.txt"]
     split_bytes = rec_start + 8 * BLOCK  # inside the 'x' payload
     ranges = [(p, s, min(s + split_bytes, ln)) for s in range(0, ln, split_bytes)]
-    batches = iter([pd.DataFrame(ranges, columns=["path", "start", "end"])])
     with pytest.raises(ValueError, match=rf"{p}: .* at offset {rec_start} "):
-        list(_tar_split_batches(batches))
+        for path, start, end in ranges:
+            _tar_split_members(path, start, end)
 
     expect = ["after.txt", "first.txt", "long_meta.txt"]
     assert sorted(n for n, _ in _read_range_all(p, ln, split_bytes=ln)) == expect
     exact = read_docs_tar(spark, p, exact_index=True).collect()
     assert sorted(r["name"] for r in exact) == expect
+
+
+def test_truncated_tar_read_whole_names_the_archive(spark, tmp_path):
+    """A tar cut inside a header fails the same way read whole-file as
+    read as a byte range: the error names the archive and the offset."""
+    p = str(tmp_path / "cut_short.tar")
+    _make_tar(p, [(f"m{i}.txt", b"m" * 600) for i in range(3)])
+    third = list_tar_entries(p, os.path.getsize(p))[2][1]
+    with open(p, "r+b") as f:
+        f.truncate(third + 200)
+    with pytest.raises(Exception) as whole:
+        read_docs_tar(spark, p).collect()
+    assert f"cut_short.tar: tar source: corrupt header at offset {third}" in str(whole.value)
+    with pytest.raises(Exception) as ranged:
+        read_docs_tar(spark, p, split_bytes=third + 100).collect()
+    assert f"cut_short.tar: tar source: corrupt header at offset {third}" in str(ranged.value)
 
 
 def test_decoy_header_in_member_content(tmp_path):

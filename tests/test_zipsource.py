@@ -257,11 +257,10 @@ def test_zip64_spark_read_matches_zipfile(spark, tmp_path):
 def test_crc_mismatch_raises(tmp_path):
     """Round-5 ADVICE: a corrupted STORED member passes the length
     cross-check; the CRC32 check against the central directory must
-    catch it (pure-Python drive of the executor batch reader)."""
-    import pandas as pd
+    catch it (pure-Python drive of the executor row reader)."""
     import pytest as _pytest
 
-    from pdf_extraction_spark.sources.zipsource import _read_batches
+    from pdf_extraction_spark.sources.zipsource import _read_member
 
     p = str(tmp_path / "c.zip")
     ln = _make_zip(p, [("s.txt", b"stored member payload", zipfile.ZIP_STORED)])
@@ -276,14 +275,11 @@ def test_crc_mismatch_raises(tmp_path):
     blob[data_at + 3] ^= 0xFF
     open(p, "wb").write(bytes(blob))
 
-    entry = pd.DataFrame(
-        {"archive": [p], "name": [name], "local_off": [off], "comp_size": [csize],
-         "uncomp_size": [usize], "method": [method], "crc": [crc]}
-    )
+    entry = (p, name, off, csize, usize, method, crc)
     with _pytest.raises(ValueError, match="crc mismatch"):
-        list(_read_batches(iter([entry])))
+        _read_member(*entry)
     # same drive with intact bytes succeeds (control)
     blob[data_at + 3] ^= 0xFF
     open(p, "wb").write(bytes(blob))
-    (df,) = list(_read_batches(iter([entry])))
-    assert bytes(df["content"][0]) == b"stored member payload"
+    row = _read_member(*entry)
+    assert bytes(row[3]) == b"stored member payload"
