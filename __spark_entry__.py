@@ -2033,7 +2033,7 @@ ORDER BY n_chars DESC, doc_id LIMIT 20
 
 def q_extract_html_main(spark, sf_dir):
     """North-star HTML boilerplate strip, value-checked against an ANALYTIC
-    oracle: Spark runs the real scanner kernel (mapInPandas) over HTML
+    oracle: Spark runs the real scanner kernel (mapInArrow) over HTML
     constructed deterministically from `documents`; DuckDB derives the
     expected extracted text directly from the same source columns (it never
     parses HTML).  Construction guarantees each block's fate: the nav block

@@ -55,7 +55,7 @@ def main(argv=None) -> int:
     )
     # sample = scrubbed text + JSON metadata sidecar; the JSON is built
     # JVM-side (to_json over a struct) so the whole plan stays
-    # expression-only until the shard writer's mapInPandas
+    # expression-only until the shard writer's mapInArrow
     samples = curated.select(
         F.format_string("docs/%012d", F.col("doc_id")).alias("key"),
         F.map_from_arrays(

@@ -11,7 +11,7 @@ prepended to the ciphertext and PKCS#5 padding.  The no-pad CBC and
 single-block ECB helpers are what ISO 32000-2's V5 key machinery uses
 (Algorithm 2.B's hash loop, the /UE///OE key unwrap, the /Perms check).
 
-Scale note: this runs inside Arrow-batched mapInPandas kernels on
+Scale note: this runs inside Arrow-batched mapInArrow kernels on
 (small) per-document streams; pure-Python AES is the honest in-env
 cost of reading V4/V5 PDFs, exactly like the from-scratch JPEG decoder.
 """

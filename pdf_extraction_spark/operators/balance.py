@@ -8,11 +8,11 @@ down: one split-table row (a file, a byte range, an archive member)
 through one reader function that returns that row's documents.
 :func:`map_rows` is that shape, written once: a caller selects its input
 columns, hands over a per-row function and the output schema, and gets
-back the ``mapInPandas`` node.  The batch loop — Arrow batch in,
-per-column lists, one pandas frame out per batch that produced rows —
-lives here and nowhere else; per-document error containment stays in
-each row function (a decoder's ``is_valid=0`` row, the mixed corpus
-dispatcher's ``error`` column).
+back the ``mapInArrow`` node.  The batch loop — Arrow batch in, plain
+Python values per column, one Arrow batch of the declared types out
+(``session.arrow_batch``) — lives here and nowhere else; per-document
+error containment stays in each row function (a decoder's
+``is_valid=0`` row, the mixed corpus dispatcher's ``error`` column).
 
 :func:`map_documents` is ``map_rows`` behind the under-split guard, for
 operators over input whose partitioning they do not control.  The
@@ -20,7 +20,7 @@ sources call ``map_rows`` directly: each sets its own task count when it
 repartitions its split table, and the guard must not add a second
 exchange on top of it.
 
-Under-split guard: ``mapInPandas`` can never run wider than its input
+Under-split guard: ``mapInArrow`` can never run wider than its input
 partitioning, and a small parquet file with a single row group (or any
 unsplittable input: one gzip member, one tiny file) yields ONE split,
 serializing the whole kernel onto one core while the rest of the
@@ -59,9 +59,11 @@ from __future__ import annotations
 
 from typing import Callable, Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql.types import DataType, StructType
+
+from pdf_extraction_spark.session import arrow_batch
 
 
 def _planned_partitions(df: DataFrame) -> int:
@@ -126,17 +128,18 @@ def map_rows(
     partitioning.
 
     ``fn`` is called with the row's values of every ``df`` column not
-    named in ``passthrough``, in ``df``'s column order.  It returns one
+    named in ``passthrough``, in ``df``'s column order, as plain Python
+    values: ``int`` (``None`` for null, never ``float``/``nan``),
+    ``bytes``, ``str``, ``datetime``, lists for arrays and
+    ``(key, value)`` pair lists for maps.  It returns one
     output row as a tuple, or a list of row tuples (one input row to
     many; an empty list drops the row).  A row tuple holds the values of
     the schema's fields minus the ``passthrough`` ones, in schema order;
     each ``passthrough`` column is copied unchanged from the input row
     into the field of the same name, wherever the schema places it.
-    Output rows keep input order within each Arrow batch.  A batch that
-    produces no rows yields no frame: pandas would type its empty
-    columns as it pleases, and Arrow cannot cast every such column to
-    the declared type (a ``timestamp`` field fails)."""
-    names = (DataType.fromDDL(schema) if isinstance(schema, str) else schema).fieldNames()
+    Output rows keep input order within each Arrow batch."""
+    struct = DataType.fromDDL(schema) if isinstance(schema, str) else schema
+    names = struct.fieldNames()
     kept = list(passthrough)
     inputs = [c for c in df.columns if c not in kept] + kept
     n_args = len(inputs) - len(kept)
@@ -145,20 +148,19 @@ def map_rows(
         names.index(c) for c in kept
     ]
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
+    def batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in it:
             cols = [[] for _ in names]
             adds = [cols[i].append for i in order]
-            for values in zip(*[pdf[c] for c in inputs]):
+            for values in zip(*[batch.column(c).to_pylist() for c in inputs]):
                 out = fn(*values[:n_args])
                 kept_values = values[n_args:]
                 for row in out if out.__class__ is list else (out,):
                     for add, v in zip(adds, row + kept_values):
                         add(v)
-            if cols[0]:
-                yield pd.DataFrame(dict(zip(names, cols)), columns=names)
+            yield arrow_batch(cols, struct)
 
-    return df.mapInPandas(batches, schema=schema)
+    return df.mapInArrow(batches, struct)
 
 
 def map_documents(

@@ -6,7 +6,7 @@ UDF — pages/lines of a document never cross a partition boundary, because
 the F10/F12 semantics are order-sensitive *within* a document and the
 per-document function is pure, so partitioning can never change content.
 The Spark plan around this node is fully declarative (scan → prune →
-repartition → ArrowEvalPython → sink) and Catalyst prunes the fat `html`
+repartition → MapInArrow → sink) and Catalyst prunes the fat `html`
 binary column out of the parquet scan whenever a caller selects only
 text-layer columns.
 """
@@ -50,26 +50,6 @@ EXTRACT_SCHEMA = StructType(
     ]
 )
 
-def _pairs(items):
-    if items is None:
-        return None
-    return [{"field": f, "value": v} for f, v in items]
-
-
-def _extract_row(url, html, text, max_doc_chars=None):
-    url, kind, etext, fields, page_fields, spans, err = extract_document(
-        url, html, text, max_doc_chars
-    )
-    return (
-        url,
-        kind,
-        etext,
-        _pairs(fields),
-        None if page_fields is None else [_pairs(p) for p in page_fields],
-        None if spans is None else [{"label": l, "start": s, "end": e} for l, s, e in spans],
-        err,
-    )
-
 
 def extract_documents(pages: DataFrame, max_doc_chars: int | None = None) -> DataFrame:
     """pages(url, html, text, ...) -> extraction records (EXTRACT_SCHEMA).
@@ -79,7 +59,7 @@ def extract_documents(pages: DataFrame, max_doc_chars: int | None = None) -> Dat
     ``max_doc_chars``: per-document input-size cap; oversize documents land
     on the ``error`` column (F18) instead of stalling a worker.
     """
-    fn = functools.partial(_extract_row, max_doc_chars=max_doc_chars)
+    fn = functools.partial(extract_document, max_doc_chars=max_doc_chars)
     return map_documents(pages.select("url", "html", "text"), fn, EXTRACT_SCHEMA)
 
 

@@ -49,7 +49,7 @@ the analytic invariant the driver oracle and the byte-identity pytest
 check.
 
 Scale shape: both functions are plain bytes->py functions invoked inside
-Arrow-batched ``mapInPandas`` kernels (one document per row, never
+Arrow-batched ``mapInArrow`` kernels (one document per row, never
 row-at-a-time Spark UDFs); nothing here touches Spark.
 """
 

@@ -8,7 +8,8 @@ a single Arrow batch could exceed Python-worker memory at 100 TB-scale
 row widths (SURVEY §4.3).
 
 :func:`local_frame` is the one way the package turns driver-side rows
-into a DataFrame.
+into a DataFrame, and :func:`arrow_batch` the one way it turns Python
+values into Arrow (driver-side rows and every Python task's output).
 """
 
 from __future__ import annotations
@@ -53,6 +54,16 @@ def get_spark(
     return spark
 
 
+def arrow_batch(columns: list, schema: StructType) -> pa.RecordBatch:
+    """``columns`` (plain Python values, one sequence per field) as an
+    Arrow batch of ``schema``'s declared types: nothing is inferred."""
+    arrow_schema = to_arrow_schema(schema)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(col, type=f.type) for col, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+
+
 def local_frame(spark: SparkSession, rows: list[tuple], schema: StructType) -> DataFrame:
     """A DataFrame over driver-side ``rows`` (tuples in ``schema`` order)
     that plans as a JVM ``LocalTableScan``.
@@ -62,10 +73,6 @@ def local_frame(spark: SparkSession, rows: list[tuple], schema: StructType) -> D
     slice even for an empty list.  A ``pyarrow.Table`` with the declared
     schema is turned into a local relation in the JVM instead, so source
     split tables and empty frames cost no Python stage."""
-    arrow_schema = to_arrow_schema(schema)
-    columns = list(zip(*rows)) or [()] * len(arrow_schema)
-    table = pa.Table.from_arrays(
-        [pa.array(col, type=f.type) for col, f in zip(columns, arrow_schema)],
-        schema=arrow_schema,
-    )
+    columns = list(zip(*rows)) or [()] * len(schema.fields)
+    table = pa.Table.from_batches([arrow_batch(columns, schema)])
     return spark.createDataFrame(table, schema)

@@ -157,7 +157,7 @@ def _is_zero_block(block: bytes) -> bool:
 
 class _BlockReader:
     """Chunked 512-block reader over a seekable file: one buffered read
-    ahead instead of a syscall per block."""
+    per chunk, ahead when reading forward and behind when probing back."""
 
     def __init__(self, f, chunk: int = 1 << 22):
         self._f = f
@@ -167,9 +167,10 @@ class _BlockReader:
 
     def block(self, off: int) -> bytes:
         if not (self._buf_at <= off and off + BLOCK <= self._buf_at + len(self._buf)):
-            self._f.seek(off)
+            at = off if off >= self._buf_at else max(0, off + BLOCK - self._chunk)
+            self._f.seek(at)
             self._buf = self._f.read(max(self._chunk, BLOCK))
-            self._buf_at = off
+            self._buf_at = at
         rel = off - self._buf_at
         return self._buf[rel : rel + BLOCK]
 
@@ -184,18 +185,23 @@ class _BlockReader:
 def _chain_verifies(rd: _BlockReader, off: int, file_length: int, depth: int = 2) -> bool:
     """A candidate header at ``off`` verifies if following its size
     chain for ``depth`` steps keeps landing on parseable headers, the
-    end-of-archive zero block, or past EOF."""
+    end-of-archive zero block, or the end of the file (past EOF, or the
+    short block a truncated file ends in)."""
     for _ in range(depth):
         blk = rd.block(off)
         hdr = _parse_header(blk)
         if hdr is None:
             return False
         off += BLOCK + _data_blocks(hdr["size"]) * BLOCK
-        if off >= file_length:
+        if off + BLOCK > file_length:
             return True
         if _is_zero_block(rd.block(off)):
             return True
     return True
+
+
+def _is_header(rd: _BlockReader, off: int, file_length: int) -> bool:
+    return not _is_zero_block(rd.block(off)) and _chain_verifies(rd, off, file_length)
 
 
 # Backward-probe bound for locating the true logical-record start from
@@ -246,23 +252,25 @@ def _iter_tar_records(
     definition; splits starting elsewhere scan + chain-verify, then snap
     back to the record's true logical start (its meta chain) so that a
     record straddling ``start`` parses completely but is emitted only by
-    the task that owns its first block."""
+    the task that owns its first block.  A scan that reaches a truncated
+    file's short last block walks onto it from the nearest header below,
+    so a header cut short there raises in the task owning its offset."""
     globals_pax: dict[str, str] = {}
     # --- align ---------------------------------------------------------
     off = start if start % BLOCK == 0 else start + (BLOCK - start % BLOCK)
     if not aligned_at_zero:
-        while off < end:
-            blk = rd.block(off)
-            if (
-                not _is_zero_block(blk)
-                and _parse_header(blk) is not None
-                and _chain_verifies(rd, off, file_length)
-            ):
-                break
+        while off < end and off + BLOCK <= file_length and not _is_header(rd, off, file_length):
             off += BLOCK
-        else:
+        if off >= end:
             return
-        off = _logical_start(rd, off)
+        if off + BLOCK <= file_length:
+            off = _logical_start(rd, off)
+        else:  # records below this split are walked, not emitted
+            off -= BLOCK
+            while off >= 0 and not _is_header(rd, off, file_length):
+                off -= BLOCK
+            if off < 0:
+                return
     # --- iterate logical records --------------------------------------
     while off < file_length:
         blk = rd.block(off)
@@ -305,6 +313,8 @@ def _iter_tar_records(
             off = next_off
             hdr = _parse_header(rd.block(off))
             if hdr is None:
+                if logical_start < start:
+                    return  # the earlier task owning this record raises
                 raise ValueError(
                     f"tar source: meta header at {logical_start} not followed"
                     f" by a file header (offset {off})"

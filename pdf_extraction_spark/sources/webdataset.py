@@ -27,7 +27,7 @@ from __future__ import annotations
 
 from typing import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     BinaryType,
@@ -38,7 +38,7 @@ from pyspark.sql.types import (
 )
 
 from pdf_extraction_spark.operators.balance import map_rows
-from pdf_extraction_spark.session import local_frame
+from pdf_extraction_spark.session import arrow_batch, local_frame
 from pdf_extraction_spark.sources.tarsource import iter_tar_bytes
 from pdf_extraction_spark.sources.warc import _gunzip, _read_whole
 
@@ -143,46 +143,39 @@ def write_webdataset(
     from pdf_extraction_spark.sources.tarsource import write_tar_members
 
     os.makedirs(out_dir, exist_ok=True)
+    manifest_schema = StructType.fromDDL("shard string, members long, samples long")
 
-    def _write(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def _write(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         pid = TaskContext.get().partitionId()
-        seq = 0
-        buf: list[tuple[str, dict]] = []
+        rows: list[tuple[str, int, int]] = []  # (shard, members, samples)
+        buf: list[tuple[str, list]] = []
 
         def _flush():
-            nonlocal seq
-            if not buf:
-                return None
-            shard = os.path.join(out_dir, f"shard-{pid:05d}-{seq:03d}.tar")
-            seq += 1
+            shard = os.path.join(out_dir, f"shard-{pid:05d}-{len(rows):03d}.tar")
             with open(shard, "wb") as f:
                 n = write_tar_members(
                     f,
                     (
                         (f"{key}.{ext}" if ext else key, bytes(content))
                         for key, parts in buf
-                        for ext, content in sorted(parts.items())
+                        for ext, content in sorted(parts)
                     ),
                 )
-            row = {"shard": shard, "members": n, "samples": len(buf)}
+            rows.append((shard, n, len(buf)))
             buf.clear()
-            return row
 
-        rows = []
-        for pdf in batches:
-            for key, parts in zip(pdf["key"], pdf["parts"]):
+        for batch in batches:
+            for key, parts in zip(*[batch.column(c).to_pylist() for c in ("key", "parts")]):
                 buf.append((str(key), parts))
                 if len(buf) >= samples_per_shard:
-                    rows.append(_flush())
-        last = _flush()
-        if last:
-            rows.append(last)
+                    _flush()
+        if buf:
+            _flush()
         if rows:
-            yield pd.DataFrame(rows)
+            yield arrow_batch(list(zip(*rows)), manifest_schema)
 
-    manifest_schema = "shard string, members long, samples long"
-    return [r.asDict() for r in
-            df.select("key", "parts").mapInPandas(_write, manifest_schema).collect()]
+    manifest = df.select("key", "parts").mapInArrow(_write, manifest_schema)
+    return [r.asDict() for r in manifest.collect()]
 
 
 def read_webdataset(

@@ -5,13 +5,13 @@ one-shot per document and the north_rule asks for snapshot-based resume),
 but a crawl is naturally a stream of page files, so the engine also
 exposes the same extraction operator as a checkpointed stream:
 
-    readStream(parquet dir) → extract_documents (mapInPandas) → writeStream
+    readStream(parquet dir) → extract_documents (mapInArrow) → writeStream
 
 Properties that matter at scale:
 
 * **Stateless, zero-shuffle.** Extraction is a pure per-row map, so the
   streaming plan has no state store and no exchange — each micro-batch is
-  scan → ArrowEvalPython → sink, trivially parallel across executors.
+  scan → MapInArrow → sink, trivially parallel across executors.
 * **Exactly-once.** The file-source offset log + parquet sink commit log
   live in the checkpoint directory; a killed job resumes at the last
   committed micro-batch, and files that were already processed are never

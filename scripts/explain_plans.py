@@ -5,7 +5,7 @@ this artifact makes them reviewable):
   * ReadSchema pruned to the referenced columns (no fat `html` binary in
     text-only scans);
   * PushedFilters reaching the parquet scan;
-  * the Python stage as a single Arrow-batched MapInPandas node (never
+  * the Python stage as a single Arrow-batched MapInArrow node (never
     row-at-a-time BatchEvalPython);
   * exchanges only where a shuffle is semantically required, with partial
     aggregation below them.
@@ -24,9 +24,9 @@ sys.path.insert(0, REPO)
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
 PLANS = [
-    ("extraction (bucketed map-only)", "pipeline shape: scan -> MapInPandas -> sink; no exchange"),
+    ("extraction (bucketed map-only)", "pipeline shape: scan -> MapInArrow -> sink; no exchange"),
     ("extraction (salted shuffle)", "unbucketed-input shape: one explicit exchange on xxhash64(url)+size-salt"),
-    ("extract_kv_kernel", "F7-F10 through the per-document kernel: one Arrow-batched MapInPandas pass, no hash shuffle"),
+    ("extract_kv_kernel", "F7-F10 through the per-document kernel: one Arrow-batched MapInArrow pass, no hash shuffle"),
     ("dedup_exact", "single hash shuffle with map-side partial agg"),
     ("dedup_minhash_lsh", "single groupBy(band_key) + in-JVM pair expansion + candidate-only hash-set verify"),
     ("similarity_lsh_bucketed", "computed LSH quantizer bucket; broadcast bucket-join prunes candidates"),
@@ -36,7 +36,7 @@ PLANS = [
     ("chunk_documents", "let-bound tokenize + explode: scan-local, zero exchange"),
     ("sample_stratified", "md5-rate predicate: scan-local filter, zero exchange"),
     ("multimodal_jpeg_decode", "codec family shape: scan -> Arrow-batched synth -> Arrow-batched decode -> sink, zero exchange (embarrassingly parallel at 100 TB)"),
-    ("extract_pdf_encrypted", "RC4-decrypt + parse inside ONE MapInPandas pass: per-document work, zero exchange"),
+    ("extract_pdf_encrypted", "RC4-decrypt + parse inside ONE MapInArrow pass: per-document work, zero exchange"),
 ]
 
 

@@ -336,7 +336,7 @@ def test_spark_plan_is_shuffle_free_when_well_split(spark):
     plan = (
         extract_any_text(df)._jdf.queryExecution().executedPlan().toString()
     )
-    assert "MapInPandas" in plan
+    assert "MapInArrow" in plan
     # rebalance_if_undersplit is a no-op over >= parallelism inputs only
     # when the input is a scan; over an already-repartitioned in-memory
     # frame the guard still must not add a SECOND exchange

@@ -10,7 +10,11 @@ import pathlib
 from pyspark.sql import functions as F
 
 from pdf_extraction_spark.operators.any_text import extract_any_text
-from pdf_extraction_spark.operators.balance import map_documents, rebalance_if_undersplit
+from pdf_extraction_spark.operators.balance import (
+    map_documents,
+    map_rows,
+    rebalance_if_undersplit,
+)
 from pdf_extraction_spark.operators.docx_text import build_docx
 from pdf_extraction_spark.pdf_parse import build_pdf
 
@@ -63,9 +67,9 @@ def test_empty_partition_yields_empty_frame_with_declared_schema(spark):
 
 
 def test_batch_without_output_rows_under_timestamp_schema(spark):
-    """A batch whose rows all return ``[]`` yields no frame: an empty
-    pandas frame cannot be cast to a ``timestamp`` field, and that
-    failed the whole task."""
+    """A batch whose rows all return ``[]`` still yields output of the
+    declared types: an empty pandas frame could not be cast to a
+    ``timestamp`` field, and that failed the whole task."""
     schema = "url string, warc_ts timestamp, html binary"
     ts = datetime.datetime(2026, 3, 1, 12, 0, 0)
     df = spark.range(0, 8, 1, 2).select(F.col("id").alias("n"))
@@ -74,6 +78,22 @@ def test_batch_without_output_rows_under_timestamp_schema(spark):
     rows = some.collect()
     assert [(r["url"], r["warc_ts"] is not None, bytes(r["html"])) for r in rows] == [
         ("u3", True, b"x")
+    ]
+
+
+def test_row_function_receives_plain_python_values(spark):
+    """Row functions see plain Python values: in one batch, a ``long``
+    column holding a null arrives as ``int`` 1 and ``None`` (never
+    ``float`` 1.0 and ``nan``), a string column as ``str`` and ``None``."""
+    df = spark.createDataFrame([(1, "a"), (None, None)], "n long, s string").coalesce(1)
+    out = map_rows(
+        df,
+        lambda n, s: (type(n).__name__, repr(n), type(s).__name__, s),
+        "n_type string, n string, s_type string, s string",
+    )
+    assert sorted(tuple(r) for r in out.collect()) == [
+        ("NoneType", "None", "NoneType", None),
+        ("int", "1", "str", "a"),
     ]
 
 
@@ -153,12 +173,15 @@ def test_undersplit_guard_sums_union_children(spark):
 
 
 def test_mapinpandas_only_in_balance():
-    """One Python batch loop in the package: ``mapInPandas(`` appears in
+    """One Python batch loop in the package, Arrow in and Arrow out: no
+    module calls ``mapInPandas(``; ``mapInArrow(`` appears in
     operators/balance.py and, as the one named exception, in the
     ``write_webdataset`` sink (a per-partition writer holding a shard
     counter, not a per-row map); every operator and source reader runs
-    through ``map_rows``.  No module but balance.py builds the
-    under-split guard; no module anywhere in the package asks a
+    through ``map_rows``.  pandas is imported only where its semantics
+    are the point: the F15 ``to_csv`` export and the streaming
+    ``applyInPandasWithState`` state.  No module but balance.py builds
+    the under-split guard; no module anywhere in the package asks a
     DataFrame's RDD for its partition count — on an adaptive plan that
     runs the whole upstream (operators/balance.py reads the count from
     the plan instead) — and none but session.py (``local_frame``), in
@@ -167,13 +190,22 @@ def test_mapinpandas_only_in_balance():
     a local scan costs none."""
     from pdf_extraction_spark.sources.webdataset import write_webdataset
 
-    allowed = {"operators/balance.py": 1, "sources/webdataset.py": 1}
     package = sorted(PACKAGE.rglob("*.py"))
-    calls = {str(p.relative_to(PACKAGE)): p.read_text().count("mapInPandas(") for p in package}
-    offenders = [
-        f"{name}: {n} mapInPandas(" for name, n in calls.items() if n != allowed.get(name, 0)
+    texts = {str(p.relative_to(PACKAGE)): p.read_text() for p in package}
+    offenders = [f"{name}: mapInPandas(" for name, t in texts.items() if "mapInPandas(" in t]
+    allowed = {"operators/balance.py": 1, "sources/webdataset.py": 1}
+    offenders += [
+        f"{name}: mapInArrow("
+        for name, t in texts.items()
+        if t.count("mapInArrow(") != allowed.get(name, 0)
     ]
-    assert "mapInPandas(" in inspect.getsource(write_webdataset)
+    assert "mapInArrow(" in inspect.getsource(write_webdataset)
+    pandas_users = {"plans/csv_export.py", "streaming/ingest.py"}
+    offenders += [
+        f"{name}: import pandas"
+        for name, t in texts.items()
+        if name not in pandas_users and "import pandas" in t
+    ]
     offenders += [
         str(p.relative_to(PACKAGE))
         for p in package

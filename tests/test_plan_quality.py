@@ -6,7 +6,7 @@ actually appear in the executed plan, not just in docstrings.
 * predicate pushdown: a ``lang``/``warc_ts`` filter must reach the scan as
   PushedFilters;
 * the extraction pipeline must keep its Python stage Arrow-batched
-  (ArrowEvalPython / mapInPandas node, never BatchEvalPython row-UDF).
+  (MapInArrow node, never BatchEvalPython row-UDF).
 """
 
 from __future__ import annotations
@@ -48,7 +48,7 @@ def test_extraction_stage_is_arrow_batched(spark, pages_unit):
 
     q = extract_documents(spark.read.parquet(pages_unit))
     plan = _formatted_plan(q)
-    assert "MapInPandas" in plan or "ArrowEvalPython" in plan, plan
+    assert "MapInArrow" in plan, plan
     assert "BatchEvalPython" not in plan, plan
 
 
@@ -66,7 +66,7 @@ def test_skewed_entry_plan_is_salted_and_arrow_batched(spark):
     # the salted repartition key hashes (url, length-derived salt) — two
     # arguments inside xxhash64, visible in the partitioning expression
     assert any("xxhash64(url" in l and "%" in l for l in exch), exch
-    assert "MapInPandas" in plan or "ArrowEvalPython" in plan, plan
+    assert "MapInArrow" in plan, plan
     assert "BatchEvalPython" not in plan, plan
 
 
@@ -122,7 +122,7 @@ def test_codec_entries_are_single_pass_no_shuffle(spark):
         "extract_pdf_scanned",
     ):
         plan = _formatted_plan(qs[name](spark, "/root/testdata/sf0.001"))
-        assert "MapInPandas" in plan or "ArrowEvalPython" in plan, (name, plan)
+        assert "MapInArrow" in plan, (name, plan)
         assert "BatchEvalPython" not in plan, (name, plan)
         assert "hashpartitioning" not in plan, (name, plan)
         tree = plan.split("\n\n")[0].splitlines()
@@ -136,7 +136,7 @@ def test_codec_entries_are_single_pass_no_shuffle(spark):
         kernel = [
             i
             for i, l in enumerate(tree)
-            if "MapInPandas" in l or "ArrowEvalPython" in l
+            if "MapInArrow" in l
         ]
         assert exch[0] > kernel[0], (name, plan)
 
@@ -156,4 +156,4 @@ def test_undersplit_guard_noops_on_wide_input(spark):
     )
     plan = _formatted_plan(decode_bmp(blobs, "media_id", "blob"))
     assert "Exchange" not in plan, plan
-    assert "MapInPandas" in plan, plan
+    assert "MapInArrow" in plan, plan

@@ -10,6 +10,7 @@ from __future__ import annotations
 import gzip
 import io
 import os
+import re
 import tarfile
 
 import pytest
@@ -163,6 +164,39 @@ def test_truncated_tar_read_whole_names_the_archive(spark, tmp_path):
     with pytest.raises(Exception) as ranged:
         read_docs_tar(spark, p, split_bytes=third + 100).collect()
     assert f"cut_short.tar: tar source: corrupt header at offset {third}" in str(ranged.value)
+
+
+def test_truncated_tar_range_reads_match_whole_read_at_every_cut(tmp_path):
+    """A tar cut anywhere reads the same through 1,024-byte ranges as
+    whole-file: the same members, or the whole-file error raised by the
+    one range that owns the offset it names.  A real header whose chain
+    ends in the file's short last block must still align, and the range
+    holding that block must see that a header was cut short there."""
+    from pdf_extraction_spark.sources.tarsource import _tar_split_members
+
+    src = str(tmp_path / "full.tar")
+    _make_tar(src, [(f"m{i}.txt", bytes([65 + i]) * 600) for i in range(3)], tarfile.USTAR_FORMAT)
+    with open(src, "rb") as f:
+        raw = f.read()
+    p = str(tmp_path / "cut.tar")
+    for cut in range(97, len(raw), 97):
+        with open(p, "wb") as f:
+            f.write(raw[:cut])
+        try:
+            whole, error = [r[1] for r in _tar_split_members(p, 0, -1)], None
+        except ValueError as e:
+            whole, error = None, str(e)
+        names, errors = [], []
+        for start in range(0, cut, 1024):
+            try:
+                names += [r[1] for r in _tar_split_members(p, start, min(start + 1024, cut))]
+            except ValueError as e:
+                errors.append((start, str(e)))
+        if error is None:
+            assert (names, errors) == (whole, []), cut
+        else:
+            owner = int(re.search(r"offset (\d+)", error).group(1)) // 1024 * 1024
+            assert errors == [(owner, error)], (cut, names)
 
 
 def test_decoy_header_in_member_content(tmp_path):

@@ -90,7 +90,7 @@ def test_spark_read_webdataset_two_shards(spark, tmp_path):
     }
     # shard = task: the read fans across partitions without a shuffle
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan.split("MapInPandas")[0]
+    assert "Exchange" not in plan.split("MapInArrow")[0]
 
 
 def test_write_tar_members_roundtrip_and_tarfile_compat(tmp_path):
