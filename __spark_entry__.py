@@ -1119,10 +1119,14 @@ def q_multimodal_png_decode(spark, sf_dir):
     inverse, a missed IDAT, top-down/bottom-up confusion) breaks the
     match.  Reference analogue: the PIL image side of
     pdfextraction.py:72-73."""
-    from pdf_extraction_spark.operators.multimodal import decode_png, synth_png
+    from pdf_extraction_spark.operators.multimodal import (
+        decode_png,
+        synth_blobs,
+        synth_png_bytes,
+    )
 
     d = _load(spark, sf_dir, "documents").select("doc_id")
-    blobs = synth_png(d, "doc_id")
+    blobs = synth_blobs(d, "doc_id", synth_png_bytes)
     return decode_png(blobs, "media_id", "blob")
 
 
@@ -1173,11 +1177,12 @@ def q_multimodal_png_interlaced(spark, sf_dir):
     value hash."""
     from pdf_extraction_spark.operators.multimodal import (
         decode_png,
-        synth_png_interlaced,
+        synth_blobs,
+        synth_png_interlaced_bytes,
     )
 
     d = _load(spark, sf_dir, "documents").select("doc_id")
-    blobs = synth_png_interlaced(d, "doc_id")
+    blobs = synth_blobs(d, "doc_id", synth_png_interlaced_bytes)
     return decode_png(blobs, "media_id", "blob")
 
 
@@ -1194,10 +1199,14 @@ def q_multimodal_gif_decode(spark, sf_dir):
     from the generator's md5-index + affine-palette formulas — it never
     parses GIF, so any LZW desync breaks the value hash.  Reference
     analogue: the PIL image side of pdfextraction.py:72-73."""
-    from pdf_extraction_spark.operators.multimodal import decode_gif, synth_gif
+    from pdf_extraction_spark.operators.multimodal import (
+        decode_gif,
+        synth_blobs,
+        synth_gif_bytes,
+    )
 
     d = _load(spark, sf_dir, "documents").select("doc_id")
-    blobs = synth_gif(d, "doc_id")
+    blobs = synth_blobs(d, "doc_id", synth_gif_bytes)
     return decode_gif(blobs, "media_id", "blob")
 
 
@@ -1246,11 +1255,12 @@ def q_multimodal_gif_animated(spark, sf_dir):
     the GCE walk, or the compositing order breaks the value hash."""
     from pdf_extraction_spark.operators.multimodal import (
         decode_gif_animated,
-        synth_gif_animated,
+        synth_blobs,
+        synth_gif_animated_bytes,
     )
 
     d = _load(spark, sf_dir, "documents").select("doc_id")
-    blobs = synth_gif_animated(d, "doc_id")
+    blobs = synth_blobs(d, "doc_id", synth_gif_animated_bytes)
     return decode_gif_animated(blobs, "media_id", "blob")
 
 
@@ -1311,10 +1321,11 @@ def q_multimodal_jpeg_decode(spark, sf_dir):
     handling, subsampling or the IDCT breaks the value hash.  The full
     AC path (runs, ZRL, EOB) is pinned exactly in pytest via a
     coefficient-domain replay (tests/test_jpeg.py)."""
-    from pdf_extraction_spark.operators.jpeg import decode_jpeg, synth_jpeg
+    from pdf_extraction_spark.operators.jpeg import decode_jpeg, synth_jpeg_bytes
+    from pdf_extraction_spark.operators.multimodal import synth_blobs
 
     d = _load(spark, sf_dir, "documents").select("doc_id")
-    blobs = synth_jpeg(d, "doc_id")
+    blobs = synth_blobs(d, "doc_id", synth_jpeg_bytes)
     return decode_jpeg(blobs, "media_id", "blob")
 
 
@@ -1385,11 +1396,12 @@ def q_multimodal_jpeg_progressive(spark, sf_dir):
     this one)."""
     from pdf_extraction_spark.operators.jpeg import (
         decode_jpeg,
-        synth_jpeg_progressive,
+        synth_jpeg_progressive_bytes,
     )
+    from pdf_extraction_spark.operators.multimodal import synth_blobs
 
     d = _load(spark, sf_dir, "documents").select("doc_id")
-    blobs = synth_jpeg_progressive(d, "doc_id")
+    blobs = synth_blobs(d, "doc_id", synth_jpeg_progressive_bytes)
     return decode_jpeg(blobs, "media_id", "blob")
 
 
@@ -1403,10 +1415,11 @@ def q_multimodal_jpeg_meta(spark, sf_dir):
     in BOTH TIFF byte orders, so the probe must classify SOF0 vs SOF2
     and walk II/MM IFDs — the oracle pins `progressive = doc_id % 2`
     and `orientation = doc_id % 8 + 1` analytically."""
-    from pdf_extraction_spark.operators.jpeg import probe_jpeg, synth_jpeg_mixed
+    from pdf_extraction_spark.operators.jpeg import probe_jpeg, synth_jpeg_mixed_bytes
+    from pdf_extraction_spark.operators.multimodal import synth_blobs
 
     d = _load(spark, sf_dir, "documents").select("doc_id")
-    blobs = synth_jpeg_mixed(d, "doc_id")
+    blobs = synth_blobs(d, "doc_id", synth_jpeg_mixed_bytes)
     return probe_jpeg(blobs, "media_id", "blob")
 
 
@@ -1420,6 +1433,161 @@ SELECT doc_id AS media_id,
        CAST(1 AS INT) AS is_valid
 FROM documents
 """
+
+
+# ---------------------------------------------------------------------------
+# Build-then-parse round trips: each document's text goes through a
+# builder and back through the production parser, and the oracle states
+# the analytic identity.  The row functions are closures over package
+# functions only: workers cannot import this file (the driver may load
+# it under another module name), so a module-level function of it must
+# never be shipped to them, nor called by a shipped one.
+# ---------------------------------------------------------------------------
+
+def _round_trip(d: DataFrame, row, schema: str) -> DataFrame:
+    """``row(doc_id, text)`` -> one output row under ``schema``, over
+    the frame's (doc_id long, text string) columns."""
+    from pdf_extraction_spark.operators.balance import map_documents
+
+    src = d.select(
+        F.col("doc_id").cast("long").alias("doc_id"),
+        F.col("text").cast("string").alias("text"),
+    )
+    return map_documents(src, row, schema)
+
+
+def _split_row(build, extract):
+    """The office round trip: each text split in half -> ``build`` (two
+    paragraphs/chapters/slides) -> real container bytes -> ``extract``
+    -> (doc_id, n_parts, part1_chars, n_chars, extracted_text)."""
+
+    def row(doc_id, text):
+        t = text or ""
+        half = len(t) // 2
+        parts = extract(build([t[:half], t[half:]])) or []
+        n1 = len(parts[0]) if parts else 0
+        return doc_id, len(parts), n1, sum(map(len, parts)), "".join(parts)
+
+    return row
+
+
+def _text_schema(n_parts: str, part1: str) -> str:
+    """The text round trips' output row: two part counts, then the
+    recovered text and its length."""
+    return f"doc_id long, {n_parts} int, {part1} int, n_chars int, extracted_text string"
+
+
+def _xlsx_row():
+    """text -> real .xlsx bytes -> stdlib-zip + XML extraction -> text."""
+    from pdf_extraction_spark.operators.xlsx_text import build_xlsx, extract_xlsx_rows
+
+    def row(doc_id, text):
+        t = text or ""
+        q = (len(t) + 3) // 4
+        # 2x2 grid of text quarters + one numeric cell (the length),
+        # so all three cell encodings are on the round trip
+        grid = [[t[:q], t[q : 2 * q]], [t[2 * q : 3 * q], t[3 * q :]], [str(len(t))]]
+        rows = extract_xlsx_rows(build_xlsx(grid)) or []
+        flat = [c for r in rows for c in r]
+        return doc_id, len(rows), len(flat), sum(map(len, flat)), "".join(flat)
+
+    return row
+
+
+# content-stream filter per doc_id % 9 (default: FlateDecode) — drives
+# every non-image PDF filter decoder in the per-round driver run
+_PDF_FILTER_BY_MOD = {0: False, 3: "lzw", 6: "a85", 2: "rl", 5: "ahx"}
+
+# font-encoding mode per doc_id % 5: legacy UTF-8-fallback font,
+# WinAnsi + /Differences, MacRoman + /Differences, /ToUnicode CMap, and
+# Type0/Identity-H CID — every declared-encoding decoder the parser
+# owns runs under the driver's identity oracle
+_PDF_FONT_BY_MOD = {0: None, 1: "winansi", 2: "macroman", 3: "tounicode", 4: "cid"}
+
+
+def _pdf_row(layout):
+    """Each text split into two pages -> ``build_pdf(**layout(doc_id))``
+    -> ``extract_pdf_pages`` -> (doc_id, n_pages, page1_chars, n_chars,
+    extracted_text).  Every 7th id points startxref at byte 0 (the %PDF
+    header), so the xref load fails and the parser must fall back to
+    scanning for ``N G obj`` (a real-crawl wrinkle)."""
+    import re
+
+    from pdf_extraction_spark.pdf_parse import build_pdf, extract_pdf_pages
+
+    def row(doc_id, text):
+        t = text or ""
+        half = len(t) // 2
+        blob = build_pdf([t[:half], t[half:]], **layout(doc_id))
+        if doc_id % 7 == 3:
+            blob = re.sub(rb"startxref\s+\d+", b"startxref\n0", blob)
+        pages = extract_pdf_pages(blob)
+        return doc_id, len(pages), len(pages[0]), sum(map(len, pages)), "".join(pages)
+
+    return row
+
+
+def _ocr_row():
+    """The full reference-shaped chain for one document over a real
+    scanned-style PDF: the rendered page's JPEG is embedded as an
+    /XObject /Image /Filter /DCTDecode on a page with no text layer,
+    and recovery goes through the parser's image-XObject listing,
+    exactly where the reference points poppler (pdfextraction.py:16
+    rasterizes the page; here the page IS the image)."""
+    from pdf_extraction_spark.operators.jpeg import encode_baseline_jpeg
+    from pdf_extraction_spark.operators.ocr import image_text, render_page, sanitize_text
+    from pdf_extraction_spark.pdf_parse import build_pdf, extract_pdf_images
+
+    def row(doc_id, text):
+        jpeg = encode_baseline_jpeg(render_page(sanitize_text(text or "")))
+        imgs = extract_pdf_images(build_pdf([""], images=[jpeg]))
+        rec = (image_text(imgs[0][0]) if imgs and imgs[0] else None) or ""
+        return doc_id, len(rec), rec
+
+    return row
+
+
+def _scanned_row():
+    """A scanned-style PDF per document, read back as the image-XObject
+    listing's metadata (count/dims/filter) AND the OCR'd text.  Even ids
+    embed the page as JPEG (/DCTDecode), odd ids as a CCITT Group 4
+    bilevel scan (/CCITTFaxDecode, the compression real document
+    scanners emit); layout and encryption vary analytically so the
+    listing is exercised through xref streams, ObjStm packing, and both
+    crypt-filter families."""
+    from pdf_extraction_spark.operators.ccitt import g4_encode
+    from pdf_extraction_spark.operators.jpeg import encode_baseline_jpeg
+    from pdf_extraction_spark.operators.ocr import image_text, render_page, sanitize_text
+    from pdf_extraction_spark.pdf_parse import build_pdf, extract_pdf_images
+
+    def row(doc_id, text):
+        raster = render_page(sanitize_text(text or ""))
+        if doc_id % 2 == 0:
+            payload = encode_baseline_jpeg(raster)
+        else:
+            h, w = raster.shape
+            rows = [bytes(1 if v < 128 else 0 for v in raster[j]) for j in range(h)]
+            # alternate the embedding route: XObject stream vs inline
+            # BI..ID..EI (both list as /CCITTFaxDecode, so the oracle's
+            # filter-by-parity pin is embedding-invariant by construction)
+            kind = "g4" if doc_id % 4 == 1 else "inline-g4"
+            payload = (kind, w, h, g4_encode(rows, w))
+        pdf = build_pdf(
+            [""],
+            images=[payload],
+            xref_stream=doc_id % 2 == 1,
+            use_objstm=doc_id % 4 == 1,
+            encrypt={0: None, 1: "rc4-128", 2: "aes-128"}[doc_id % 3],
+        )
+        imgs = extract_pdf_images(pdf)
+        if not imgs or not imgs[0]:
+            return doc_id, 0, 0, 0, "", ""
+        im = imgs[0][0]
+        n_images = sum(len(pg) for pg in imgs)
+        rec = image_text(im) or ""
+        return doc_id, n_images, im["width"], im["height"], im["filter"], rec
+
+    return row
 
 
 def q_ocr_raster_roundtrip(spark, sf_dir):
@@ -1442,10 +1610,11 @@ def q_ocr_raster_roundtrip(spark, sf_dir):
     raster OCR, not general OCR, which stays impossible without
     poppler/tesseract.  Deliberately NOT in the bench headline
     (~17 ms/doc; the chain is the point, not the throughput)."""
-    from pdf_extraction_spark.operators.ocr import ocr_roundtrip
-
-    d = _load(spark, sf_dir, "documents").select("doc_id", "text")
-    return ocr_roundtrip(d, "doc_id", "text")
+    return _round_trip(
+        _load(spark, sf_dir, "documents"),
+        _ocr_row(),
+        "doc_id long, n_chars int, recovered_text string",
+    )
 
 
 _ORACLE_OCR_ROUNDTRIP = """
@@ -1478,10 +1647,12 @@ def q_extract_pdf_scanned(spark, sf_dir):
     projection — any defect in the embed, the listing, the
     decrypt-without-decode path, either codec, or the OCR breaks the
     value hash."""
-    from pdf_extraction_spark.operators.ocr import scanned_pdf_extract
-
-    d = _load(spark, sf_dir, "documents").select("doc_id", "text")
-    return scanned_pdf_extract(d, "doc_id", "text")
+    return _round_trip(
+        _load(spark, sf_dir, "documents"),
+        _scanned_row(),
+        "doc_id long, n_images int, img_width int, img_height int, "
+        "img_filter string, recovered_text string",
+    )
 
 
 _ORACLE_PDF_SCANNED = """
@@ -1510,10 +1681,26 @@ def q_extract_pdf_text(spark, sf_dir):
     PDF — it asserts the analytic identity extracted_text == text, so
     ANY builder, encoder-table, CMap, or parser defect breaks the
     value hash."""
-    from pdf_extraction_spark.operators.pdf_text import extract_pdf_roundtrip
 
-    d = _load(spark, sf_dir, "documents").select("doc_id", "text")
-    return extract_pdf_roundtrip(d, "doc_id", "text")
+    def layout(doc_id):
+        return dict(
+            compress=_PDF_FILTER_BY_MOD.get(doc_id % 9, True),
+            font=_PDF_FONT_BY_MOD[doc_id % 5],
+            indirect_length=doc_id % 5 == 0,
+            # PDF-1.5 layouts (odd ids): cross-reference stream, with
+            # objects packed into an /ObjStm every 4th id and the PNG Up
+            # predictor on the xref rows every 8th — the layouts modern
+            # writers actually emit
+            xref_stream=doc_id % 2 == 1,
+            use_objstm=doc_id % 4 == 1,
+            predictor=doc_id % 8 == 1,
+        )
+
+    return _round_trip(
+        _load(spark, sf_dir, "documents"),
+        _pdf_row(layout),
+        _text_schema("n_pages", "page1_chars"),
+    )
 
 
 _ORACLE_PDF_TEXT = """
@@ -1535,10 +1722,11 @@ def q_multimodal_mp4_meta(spark, sf_dir):
     instead of a decode.  Synthesized shells vary timescale, duration,
     track count and dims analytically; every 3rd id's first tkhd uses
     the large-size form so both walker paths run under the oracle."""
-    from pdf_extraction_spark.operators.mp4 import probe_mp4_df, synth_mp4
+    from pdf_extraction_spark.operators.mp4 import probe_mp4_df, synth_mp4_bytes
+    from pdf_extraction_spark.operators.multimodal import synth_blobs
 
     d = _load(spark, sf_dir, "documents").select("doc_id")
-    blobs = synth_mp4(d, "doc_id")
+    blobs = synth_blobs(d, "doc_id", synth_mp4_bytes)
     return probe_mp4_df(blobs, "media_id", "blob")
 
 
@@ -1576,10 +1764,11 @@ def q_multimodal_mp3_meta(spark, sf_dir):
     analytically; the padding bit alternates per frame so the walk must
     honour per-frame lengths, and the DuckDB twin replays the
     formulas."""
-    from pdf_extraction_spark.operators.mp3 import probe_mp3_df, synth_mp3
+    from pdf_extraction_spark.operators.mp3 import probe_mp3_df, synth_mp3_bytes
+    from pdf_extraction_spark.operators.multimodal import synth_blobs
 
     d = _load(spark, sf_dir, "documents").select("doc_id")
-    blobs = synth_mp3(d, "doc_id")
+    blobs = synth_blobs(d, "doc_id", synth_mp3_bytes)
     return probe_mp3_df(blobs, "media_id", "blob")
 
 
@@ -1611,10 +1800,11 @@ def q_multimodal_ico_decode(spark, sf_dir):
     DuckDB twin recomputes the DIB stats from the md5 RGBA row formula
     and the PNG dims analytically — a directory, offset, BGRA-order,
     bottom-up, or PNG-dispatch defect breaks the value hash."""
-    from pdf_extraction_spark.operators.ico import decode_ico, synth_ico
+    from pdf_extraction_spark.operators.ico import decode_ico, synth_ico_bytes
+    from pdf_extraction_spark.operators.multimodal import synth_blobs
 
     d = _load(spark, sf_dir, "documents").select("doc_id")
-    blobs = synth_ico(d, "doc_id")
+    blobs = synth_blobs(d, "doc_id", synth_ico_bytes)
     return decode_ico(blobs, "media_id", "blob")
 
 
@@ -1661,10 +1851,13 @@ def q_extract_docx_text(spark, sf_dir):
     returns -> '?', a 1:1 char map so lengths are analytic), making
     extracted == sanitize(text) the identity any packaging or parsing
     defect breaks."""
-    from pdf_extraction_spark.operators.docx_text import extract_docx_roundtrip
+    from pdf_extraction_spark.operators.docx_text import build_docx, extract_docx_paragraphs
 
-    d = _load(spark, sf_dir, "documents").select("doc_id", "text")
-    return extract_docx_roundtrip(d, "doc_id", "text")
+    return _round_trip(
+        _load(spark, sf_dir, "documents"),
+        _split_row(build_docx, extract_docx_paragraphs),
+        _text_schema("n_paragraphs", "para1_chars"),
+    )
 
 
 _ORACLE_DOCX_TEXT = r"""
@@ -1687,10 +1880,13 @@ def q_extract_pptx_text(spark, sf_dir):
     name-sorting extractor reads the deck backwards and breaks the
     hash).  Runs split mid-slide, <a:br/> carries newlines; the oracle
     replays the XML-1.0 projection — extracted == sanitize(text)."""
-    from pdf_extraction_spark.operators.pptx_text import extract_pptx_roundtrip
+    from pdf_extraction_spark.operators.pptx_text import build_pptx, extract_pptx_slides
 
-    d = _load(spark, sf_dir, "documents").select("doc_id", "text")
-    return extract_pptx_roundtrip(d, "doc_id", "text")
+    return _round_trip(
+        _load(spark, sf_dir, "documents"),
+        _split_row(build_pptx, extract_pptx_slides),
+        _text_schema("n_slides", "slide1_chars"),
+    )
 
 
 _ORACLE_PPTX_TEXT = r"""
@@ -1714,10 +1910,13 @@ def q_extract_odt_text(spark, sf_dir):
     Shares the docx oracle: the XML projection and the paragraph shape
     are identical, so any ODF-specific defect breaks the same
     identity."""
-    from pdf_extraction_spark.operators.odt_text import extract_odt_roundtrip
+    from pdf_extraction_spark.operators.odt_text import build_odt, extract_odt_paragraphs
 
-    d = _load(spark, sf_dir, "documents").select("doc_id", "text")
-    return extract_odt_roundtrip(d, "doc_id", "text")
+    return _round_trip(
+        _load(spark, sf_dir, "documents"),
+        _split_row(build_odt, extract_odt_paragraphs),
+        _text_schema("n_paragraphs", "para1_chars"),
+    )
 
 
 def q_extract_xlsx_text(spark, sf_dir):
@@ -1733,10 +1932,9 @@ def q_extract_xlsx_text(spark, sf_dir):
     length cell's digits, so any defect in the package, the rels
     resolution, the shared-string table, or any cell decoding breaks
     the value hash."""
-    from pdf_extraction_spark.operators.xlsx_text import extract_xlsx_roundtrip
-
-    d = _load(spark, sf_dir, "documents").select("doc_id", "text")
-    return extract_xlsx_roundtrip(d, "doc_id", "text")
+    return _round_trip(
+        _load(spark, sf_dir, "documents"), _xlsx_row(), _text_schema("n_rows", "n_cells")
+    )
 
 
 _ORACLE_XLSX_TEXT = r"""
@@ -1765,10 +1963,13 @@ def q_extract_rtf_text(spark, sf_dir):
     via the declared codepage.  Unlike the XML containers, RTF carries
     EVERY character (hex/unicode escapes), so the oracle is the exact
     identity — no sanitize projection at all."""
-    from pdf_extraction_spark.operators.rtf_text import extract_rtf_roundtrip
+    from pdf_extraction_spark.operators.rtf_text import build_rtf, extract_rtf_paragraphs
 
-    d = _load(spark, sf_dir, "documents").select("doc_id", "text")
-    return extract_rtf_roundtrip(d, "doc_id", "text")
+    return _round_trip(
+        _load(spark, sf_dir, "documents"),
+        _split_row(build_rtf, extract_rtf_paragraphs),
+        _text_schema("n_paragraphs", "para1_chars"),
+    )
 
 
 _ORACLE_RTF_TEXT = r"""
@@ -1790,10 +1991,13 @@ def q_extract_epub_text(spark, sf_dir):
     same XML-1.0 projection as the docx entry, so the oracle states the
     identical analytic sanitize-identity — any container, OPF, href
     resolution, spine-order, or XHTML-walk defect breaks it."""
-    from pdf_extraction_spark.operators.epub_text import extract_epub_roundtrip
+    from pdf_extraction_spark.operators.epub_text import build_epub, extract_epub_chapters
 
-    d = _load(spark, sf_dir, "documents").select("doc_id", "text")
-    return extract_epub_roundtrip(d, "doc_id", "text")
+    return _round_trip(
+        _load(spark, sf_dir, "documents"),
+        _split_row(build_epub, extract_epub_chapters),
+        _text_schema("n_chapters", "chap1_chars"),
+    )
 
 
 _ORACLE_EPUB_TEXT = r"""
@@ -1817,10 +2021,11 @@ def q_multimodal_tiff_decode(spark, sf_dir):
     PDF LZWDecode filter, which the spec defines identically.  The
     DuckDB twin replays the md5 row formula analytically; any IFD,
     strip, PackBits, LZW, or predictor defect breaks the value hash."""
-    from pdf_extraction_spark.operators.tiff import decode_tiff, synth_tiff
+    from pdf_extraction_spark.operators.multimodal import synth_blobs
+    from pdf_extraction_spark.operators.tiff import decode_tiff, synth_tiff_bytes
 
     d = _load(spark, sf_dir, "documents").select("doc_id")
-    blobs = synth_tiff(d, "doc_id")
+    blobs = synth_blobs(d, "doc_id", synth_tiff_bytes)
     return decode_tiff(blobs, "media_id", "blob")
 
 
@@ -1876,10 +2081,11 @@ def q_multimodal_tiff_g4(spark, sf_dir):
     (compression-invariant by construction): any mode-coding,
     run-table, EOL-framing, strip, or IFD defect breaks the value
     hash."""
-    from pdf_extraction_spark.operators.tiff import decode_tiff, synth_tiff_g4
+    from pdf_extraction_spark.operators.multimodal import synth_blobs
+    from pdf_extraction_spark.operators.tiff import decode_tiff, synth_tiff_g4_bytes
 
     d = _load(spark, sf_dir, "documents").select("doc_id")
-    blobs = synth_tiff_g4(d, "doc_id")
+    blobs = synth_blobs(d, "doc_id", synth_tiff_g4_bytes)
     return decode_tiff(blobs, "media_id", "blob")
 
 
@@ -1932,12 +2138,34 @@ def q_extract_pdf_encrypted(spark, sf_dir):
     recovery runs THROUGH decryption.  The oracle is the same analytic
     identity as extract_pdf_text — any key-derivation or decryption
     defect breaks the value hash on every row."""
-    from pdf_extraction_spark.operators.pdf_text import (
-        extract_pdf_encrypted_roundtrip,
-    )
 
-    d = _load(spark, sf_dir, "documents").select("doc_id", "text")
-    return extract_pdf_encrypted_roundtrip(d, "doc_id", "text")
+    def layout(doc_id):
+        return dict(
+            # all five handler flavors — RC4 R2, RC4 R3, V4/R4 AES-128
+            # crypt filters, V5/R6 AES-256 (ISO 32000-2 Algorithm 2.B
+            # hash + /UE key unwrap + /Perms check) and the deprecated
+            # Acrobat-9 V5/R5; layouts alternate so decryption composes
+            # with xref streams, ObjStm packing (the whole packed payload
+            # is one encrypted stream), and — every 7th id — the
+            # damaged-xref scan recovery
+            encrypt={
+                0: "rc4-40",
+                1: "rc4-128",
+                2: "aes-128",
+                3: "aes-256",
+                4: "aes-256-r5",
+            }[doc_id % 5],
+            xref_stream=doc_id % 3 == 0,
+            # % 6 keeps ObjStm inside xref_stream ids AND cycles it
+            # across all five ciphers (6 mod 5 walks 1,2,3,4,0)
+            use_objstm=doc_id % 6 == 0,
+        )
+
+    return _round_trip(
+        _load(spark, sf_dir, "documents"),
+        _pdf_row(layout),
+        _text_schema("n_pages", "page1_chars"),
+    )
 
 
 # ---------------------------------------------------------------------------

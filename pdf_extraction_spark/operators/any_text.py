@@ -158,42 +158,13 @@ def _ocr_pdf_pages(raw: bytes) -> list[str | None]:
     128x64 page grid — the full render->compress->embed->decode->
     recognize dataflow over documents this engine produced; general OCR
     of arbitrary scans remains env-blocked (no tesseract).  Off-grid or
-    undecodable images are skipped."""
-    import numpy as np
-
-    from pdf_extraction_spark.operators.ccitt import decode_ccitt_pdf_image
-    from pdf_extraction_spark.operators.jpeg import parse_jpeg
-    from pdf_extraction_spark.operators.ocr import ocr_page
+    undecodable images are skipped (``image_text`` gives None)."""
+    from pdf_extraction_spark.operators.ocr import image_text
     from pdf_extraction_spark.pdf_parse import extract_pdf_images
 
     out: list[str | None] = []
     for page in extract_pdf_images(raw):
-        texts = []
-        for im in page:
-            gray = None
-            if im["filter"] == "DCTDecode":
-                decoded = parse_jpeg(im["data"])
-                if decoded is not None:
-                    gray = decoded[3][:, :, 0]
-            elif im["filter"] == "CCITTFaxDecode":
-                try:
-                    rows = decode_ccitt_pdf_image(im["data"], im["decode_parms"])
-                except ValueError:
-                    rows = None
-                if rows:
-                    # the codec returns semantic ink=1 regardless of
-                    # /BlackIs1 (which only maps OUTPUT bit values)
-                    gray = np.where(
-                        np.frombuffer(b"".join(rows), np.uint8).reshape(
-                            len(rows), -1
-                        ),
-                        0,
-                        255,
-                    ).astype(np.uint8)
-            if gray is not None and gray.shape == (64, 128):  # the template grid
-                t = ocr_page(gray)
-                if t:
-                    texts.append(t)
+        texts = [t for t in map(image_text, page) if t]
         out.append("\n".join(texts) if texts else None)
     return out
 
@@ -350,9 +321,6 @@ def _refine_json(text: str) -> tuple[str, str | None] | None:
             if isinstance(o.get(f), str):
                 return "json", o[f]
     return "json", None
-
-
-ANY_TEXT_SCHEMA = "doc_id long, doc_type string, text string, error string"
 
 
 def _any_text_row(doc_id, raw):

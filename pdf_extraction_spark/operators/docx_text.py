@@ -16,10 +16,12 @@ as in-paragraph breaks.  This module provides both directions:
   and inverts the mapping: runs join, ``<w:br/>`` -> ``\\n``,
   ``<w:tab/>`` -> ``\\t``, one string per paragraph.
 
-XML 1.0 cannot carry most C0 control characters even escaped, so the
-Spark wrapper projects them to ``'?'`` (keeping ``\\n``/``\\t``) and
-the DuckDB oracle replays exactly that projection — the identity
-``extracted == sanitize(text)`` then pins the whole chain.
+XML 1.0 cannot carry most C0 control characters even escaped, so
+:func:`build_docx` projects them to ``'?'`` (keeping ``\\n``/``\\t``,
+:func:`sanitize_for_xml`).  The registry's ``extract_docx_text`` entry
+(``__spark_entry__.py``) runs each document's text through the builder
+and back, and its DuckDB oracle replays exactly that projection — the
+identity ``extracted == sanitize(text)`` then pins the whole chain.
 
 Reference analogue: the reference extracts per-page text from uploaded
 documents (pdfextraction.py:33-35); DOCX is the same job for the other
@@ -32,10 +34,6 @@ import io
 import re
 import zipfile
 import xml.etree.ElementTree as ET
-
-from pyspark.sql import DataFrame, functions as F
-
-from pdf_extraction_spark.operators.balance import map_documents
 
 _W_NS = "http://schemas.openxmlformats.org/wordprocessingml/2006/main"
 
@@ -168,35 +166,3 @@ def extract_docx_paragraphs(raw: bytes) -> list[str] | None:
         if _local(el.tag) == "p":
             out.append(walk_runs(el))
     return out
-
-
-DOCX_SCHEMA = (
-    "doc_id long, n_paragraphs int, para1_chars int, n_chars int, "
-    "extracted_text string"
-)
-
-
-def split_roundtrip(
-    df: DataFrame, id_col: str, text_col: str, build, extract, schema: str
-) -> DataFrame:
-    """The office-format round trip: each text split in half ->
-    ``build`` (two paragraphs/chapters/slides) -> real container bytes
-    -> ``extract`` -> (doc_id, n_parts, part1_chars, n_chars,
-    extracted_text) under ``schema``."""
-
-    def row(text):
-        t = text if isinstance(text, str) else ""
-        half = len(t) // 2
-        parts = extract(build([t[:half], t[half:]])) or []
-        return len(parts), len(parts[0]) if parts else 0, sum(map(len, parts)), "".join(parts)
-
-    src = df.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        F.col(text_col).cast("string").alias("text"),
-    )
-    return map_documents(src, row, schema, passthrough=("doc_id",))
-
-
-def extract_docx_roundtrip(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """text -> real .docx bytes -> stdlib-zip + XML extraction -> text."""
-    return split_roundtrip(df, id_col, text_col, build_docx, extract_docx_paragraphs, DOCX_SCHEMA)

@@ -25,9 +25,7 @@ import re
 import zipfile
 import xml.etree.ElementTree as ET
 
-from pyspark.sql import DataFrame
-
-from pdf_extraction_spark.operators.docx_text import _esc, sanitize_for_xml, split_roundtrip
+from pdf_extraction_spark.operators.docx_text import _esc, sanitize_for_xml
 
 _CONTAINER = (
     '<?xml version="1.0"?>'
@@ -170,14 +168,3 @@ def extract_epub_chapters(raw: bytes) -> list[str] | None:
                 return None
             out.append(text)
         return out
-
-
-EPUB_SCHEMA = (
-    "doc_id long, n_chapters int, chap1_chars int, n_chars int, "
-    "extracted_text string"
-)
-
-
-def extract_epub_roundtrip(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """text -> real .epub bytes -> container/OPF/spine resolution -> text."""
-    return split_roundtrip(df, id_col, text_col, build_epub, extract_epub_chapters, EPUB_SCHEMA)

@@ -27,7 +27,6 @@ from pdf_extraction_spark.operators.multimodal import (
     invalid_row,
     map_blobs,
     parse_png,
-    synth_blobs,
     synth_png_bytes,
 )
 
@@ -153,11 +152,6 @@ ICO_DECODE_SCHEMA = StructType(
         StructField("is_valid", IntegerType()),
     ]
 )
-
-
-def synth_ico(df: DataFrame, id_col: str) -> DataFrame:
-    """(media_id, blob) with a real two-entry favicon per id."""
-    return synth_blobs(df, id_col, synth_ico_bytes)
 
 
 def _ico_row(blob):

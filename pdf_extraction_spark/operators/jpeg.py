@@ -48,7 +48,7 @@ import numpy as np
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
-from pdf_extraction_spark.operators.multimodal import invalid_row, map_blobs, synth_blobs
+from pdf_extraction_spark.operators.multimodal import invalid_row, map_blobs
 
 # ---------------------------------------------------------------------------
 # DCT: 8x8 orthonormal DCT-II matrix.  M[u, x] = 0.5 * c(u) * cos((2x+1)u pi/16)
@@ -1390,17 +1390,6 @@ JPEG_DECODE_SCHEMA = StructType(
 )
 
 
-def synth_jpeg(df: DataFrame, id_col: str) -> DataFrame:
-    """(media_id, blob) with a real baseline JPEG per id (same shape as
-    synth_png/synth_gif)."""
-    return synth_blobs(df, id_col, synth_jpeg_bytes)
-
-
-def synth_jpeg_progressive(df: DataFrame, id_col: str) -> DataFrame:
-    """(media_id, blob) with a real progressive (SOF2) JPEG per id."""
-    return synth_blobs(df, id_col, synth_jpeg_progressive_bytes)
-
-
 def synth_jpeg_mixed_bytes(media_id: int) -> bytes:
     """Baseline JPEG for even ids, progressive for odd, each carrying
     an APP1 Exif segment with orientation = id % 8 + 1 (little-endian
@@ -1415,12 +1404,6 @@ def synth_jpeg_mixed_bytes(media_id: int) -> bytes:
     )
 
     return encode_progressive_jpeg(img, extra_segments=exif)
-
-
-def synth_jpeg_mixed(df: DataFrame, id_col: str) -> DataFrame:
-    """(media_id, blob): baseline JPEG for even ids, progressive for odd
-    — so a downstream probe/decode must classify the frame type itself."""
-    return synth_blobs(df, id_col, synth_jpeg_mixed_bytes)
 
 
 def _jpeg_decode_row(blob):

@@ -20,7 +20,7 @@ import hashlib
 from pyspark.sql import DataFrame
 from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
-from pdf_extraction_spark.operators.multimodal import invalid_row, map_blobs, synth_blobs
+from pdf_extraction_spark.operators.multimodal import invalid_row, map_blobs
 
 # MPEG-1 Layer III tables (index 0 = free format, 15 = invalid)
 _BITRATE_KBPS = [0, 32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320, 0]
@@ -148,10 +148,6 @@ MP3_META_SCHEMA = StructType(
         StructField("is_valid", IntegerType()),
     ]
 )
-
-
-def synth_mp3(df: DataFrame, id_col: str) -> DataFrame:
-    return synth_blobs(df, id_col, synth_mp3_bytes)
 
 
 def _mp3_row(blob):

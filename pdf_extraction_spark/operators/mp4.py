@@ -22,7 +22,7 @@ import struct
 from pyspark.sql import DataFrame
 from pyspark.sql.types import IntegerType, LongType, StringType, StructField, StructType
 
-from pdf_extraction_spark.operators.multimodal import invalid_row, map_blobs, synth_blobs
+from pdf_extraction_spark.operators.multimodal import invalid_row, map_blobs
 
 
 def _box(btype: bytes, payload: bytes, large: bool = False) -> bytes:
@@ -149,11 +149,6 @@ MP4_META_SCHEMA = StructType(
         StructField("is_valid", IntegerType()),
     ]
 )
-
-
-def synth_mp4(df: DataFrame, id_col: str) -> DataFrame:
-    """(media_id, blob) with a real ISO-BMFF shell per id."""
-    return synth_blobs(df, id_col, synth_mp4_bytes)
 
 
 def _mp4_row(blob):

@@ -431,11 +431,6 @@ def synth_png_interlaced_bytes(media_id: int) -> bytes:
     )
 
 
-def synth_png_interlaced(df: DataFrame, id_col: str) -> DataFrame:
-    """(media_id, blob) with a real Adam7-interlaced PNG per id."""
-    return synth_blobs(df, id_col, synth_png_interlaced_bytes)
-
-
 # Adam7 pass geometry: (x0, y0, dx, dy) per pass (PNG spec 8.2)
 _ADAM7 = [
     (0, 0, 8, 8),
@@ -578,13 +573,6 @@ PNG_DECODE_SCHEMA = StructType(
         StructField("is_valid", IntegerType()),
     ]
 )
-
-
-def synth_png(df: DataFrame, id_col: str) -> DataFrame:
-    """(media_id, blob) with a real PNG per id.  Unlike synth_bmp this
-    cannot be pure JVM expressions (zlib compression), so it runs in the
-    decoders' per-document Python shape."""
-    return synth_blobs(df, id_col, synth_png_bytes)
 
 
 def _png_row(blob):
@@ -1027,11 +1015,6 @@ GIF_DECODE_SCHEMA = StructType(
 )
 
 
-def synth_gif(df: DataFrame, id_col: str) -> DataFrame:
-    """(media_id, blob) with a real GIF89a per id."""
-    return synth_blobs(df, id_col, synth_gif_bytes)
-
-
 def _gif_row(blob):
     parsed = parse_gif(bytes(blob))
     if parsed is None:
@@ -1064,11 +1047,6 @@ GIF_ANIM_SCHEMA = StructType(
         StructField("is_valid", IntegerType()),
     ]
 )
-
-
-def synth_gif_animated(df: DataFrame, id_col: str) -> DataFrame:
-    """(media_id, blob) with a real animated GIF89a per id."""
-    return synth_blobs(df, id_col, synth_gif_animated_bytes)
 
 
 def _gif_anim_row(blob):

@@ -5,17 +5,22 @@ The reference pipeline (/root/reference/pdfextraction.py:16,72-73)
 is: PDF bytes -> poppler raster (convert_from_bytes) -> PIL image ->
 pytesseract OCR -> text.  None of those binaries exist in this
 container, which rounds 1-4 documented as the one genuinely blocked
-capability.  This module re-creates the SHAPE of that path with
-from-scratch components over a constrained subset:
+capability.  This module holds the from-scratch pieces that re-create
+the SHAPE of that path over a constrained subset — the bitmap font
+(:func:`render_page`), the template OCR (:func:`ocr_page`) and the
+decode-and-recognize step for a listed PDF image (:func:`image_text`,
+which ``any_text``'s scanned-page fallback calls).  The registry
+(``__spark_entry__.py``, the OCR and scanned-PDF rows) assembles the
+full chain:
 
     text -> rasterize with a deterministic 8x8 bitmap font
          -> encode_baseline_jpeg (real JFIF bytes, grayscale)
          -> build_pdf(images=[jpeg]) (a real scanned-style PDF: the
             page is an /XObject /Image /Filter /DCTDecode, no text
-            layer — round-5 verdict ask #5)
+            layer)
          -> extract_pdf_images (from-scratch parser, bit-exact JPEG)
-         -> parse_jpeg (real decode)
-         -> template-matching OCR (exact, with Hamming fallback)
+         -> image_text: parse_jpeg (real decode), then template-matching
+            OCR (exact, with Hamming fallback)
          -> recovered text
 
 Honest scoping, stated plainly: the font is procedural (md5-derived
@@ -33,13 +38,9 @@ from __future__ import annotations
 import hashlib
 
 import numpy as np
-from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import IntegerType, LongType, StringType, StructField, StructType
 
-from pdf_extraction_spark.operators.balance import map_documents
-from pdf_extraction_spark.operators.ccitt import decode_ccitt_pdf_image, g4_encode
-from pdf_extraction_spark.operators.jpeg import encode_baseline_jpeg, parse_jpeg
-from pdf_extraction_spark.pdf_parse import build_pdf, extract_pdf_images
+from pdf_extraction_spark.operators.ccitt import decode_ccitt_pdf_image
+from pdf_extraction_spark.operators.jpeg import parse_jpeg
 
 # Printable ASCII; everything else sanitizes to '?' (mirrored by the
 # DuckDB oracle's regexp_replace('[^ -~]', '?', 'g')).
@@ -105,126 +106,29 @@ def ocr_page(img: np.ndarray) -> str:
     return "".join(out)
 
 
-def ocr_roundtrip_one(text: str) -> str:
-    """The full reference-shaped chain for one document, now over a real
-    scanned-style PDF (round-5 verdict ask #5): the rendered page's JPEG
-    is embedded INSIDE the PDF as an /XObject /Image /Filter /DCTDecode
-    — the layout an actual scanned document has (no text layer on the
-    scanned page) — and recovery goes through the parser's image-XObject
-    listing, exactly where the reference points poppler
-    (pdfextraction.py:16 rasterizes the page; here the page IS the
-    image)."""
-    page = sanitize_text(text or "")
-    raster = render_page(page)
-    jpeg = encode_baseline_jpeg(raster)
-    pdf = build_pdf([""], images=[jpeg])  # scanned page: image, no text
-    imgs = extract_pdf_images(pdf)
-    if not imgs or not imgs[0]:
-        return ""
-    decoded = parse_jpeg(imgs[0][0]["data"])
-    if decoded is None:
-        return ""
-    return ocr_page(decoded[3][:, :, 0])
-
-
-OCR_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("n_chars", IntegerType()),
-        StructField("recovered_text", StringType()),
-    ]
-)
-
-
-def _ocr_row(text):
-    rec = ocr_roundtrip_one(text if isinstance(text, str) else "")
-    return len(rec), rec
-
-
-def ocr_roundtrip(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """text -> raster -> JPEG -> scanned-style PDF -> image listing ->
-    decode -> OCR, per document."""
-    src = df.select(
-        F.col(id_col).cast("long").alias("doc_id"), F.col(text_col).alias("text")
-    )
-    return map_documents(src, _ocr_row, OCR_SCHEMA, passthrough=("doc_id",))
-
-
-SCANNED_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("n_images", IntegerType()),
-        StructField("img_width", IntegerType()),
-        StructField("img_height", IntegerType()),
-        StructField("img_filter", StringType()),
-        StructField("recovered_text", StringType()),
-    ]
-)
-
-
-def _scanned_one(doc_id: int, text: str) -> tuple[int, int, int, str, str]:
-    """Build a scanned-style PDF for one document and recover both the
-    image-XObject metadata and the OCR'd text.  Even ids embed the page
-    as JPEG (/DCTDecode), odd ids as a CCITT Group 4 bilevel scan
-    (/CCITTFaxDecode, the compression real document scanners emit);
-    layout and encryption vary analytically so the listing is exercised
-    through xref streams, ObjStm packing, and both crypt-filter
-    families."""
-    page = sanitize_text(text or "")
-    raster = render_page(page)
-    if doc_id % 2 == 0:
-        payload = encode_baseline_jpeg(raster)
-    else:
-        h, w = raster.shape
-        rows = [bytes(1 if v < 128 else 0 for v in raster[j]) for j in range(h)]
-        # alternate the embedding route: XObject stream vs inline
-        # BI..ID..EI (both list as /CCITTFaxDecode, so the oracle's
-        # filter-by-parity pin is embedding-invariant by construction)
-        kind = "g4" if doc_id % 4 == 1 else "inline-g4"
-        payload = (kind, w, h, g4_encode(rows, w))
-    pdf = build_pdf(
-        [""],
-        images=[payload],
-        xref_stream=doc_id % 2 == 1,
-        use_objstm=doc_id % 4 == 1,
-        encrypt={0: None, 1: "rc4-128", 2: "aes-128"}[doc_id % 3],
-    )
-    imgs = extract_pdf_images(pdf)
-    if not imgs or not imgs[0]:
-        return 0, 0, 0, "", ""
-    im = imgs[0][0]
-    if im["filter"] == "CCITTFaxDecode":
-        bits = decode_ccitt_pdf_image(im["data"], im["decode_parms"])
-        # BlackIs1 true: 1 = ink; rebuild the grayscale page (ink 0)
-        img = np.where(
-            np.frombuffer(b"".join(bits), np.uint8).reshape(im["height"], im["width"]),
-            0,
-            255,
-        ).astype(np.uint8)
-        rec = ocr_page(img)
-    else:
+def image_text(im: dict) -> str | None:
+    """OCR one listed PDF image (an ``extract_pdf_images`` entry): decode
+    it to the grayscale page — DCTDecode via the in-repo JPEG codec,
+    CCITTFaxDecode across the full /K range via the T.4/T.6 codecs — and
+    run the template OCR.  None for any other filter, an undecodable
+    image (a CCITT ``ValueError`` included) or one off the 64x128
+    template grid."""
+    gray = None
+    if im["filter"] == "DCTDecode":
         decoded = parse_jpeg(im["data"])
-        rec = "" if decoded is None else ocr_page(decoded[3][:, :, 0])
-    return (
-        sum(len(pg) for pg in imgs),
-        im["width"],
-        im["height"],
-        im["filter"],
-        rec,
-    )
-
-
-def _scanned_row(doc_id, text):
-    return doc_id, *_scanned_one(doc_id, text if isinstance(text, str) else "")
-
-
-def scanned_pdf_extract(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Scanned-document ingestion as a first-class query: per document,
-    the image-XObject listing's metadata (count/dims/filter) AND the
-    OCR-recovered text, all value-checked by an analytic oracle (the
-    constants are fixed by construction; the text is the sanitize
-    identity)."""
-    src = df.select(
-        F.col(id_col).cast("long").alias("doc_id"), F.col(text_col).alias("text")
-    )
-    return map_documents(src, _scanned_row, SCANNED_SCHEMA)
+        if decoded is not None:
+            gray = decoded[3][:, :, 0]
+    elif im["filter"] == "CCITTFaxDecode":
+        try:
+            rows = decode_ccitt_pdf_image(im["data"], im["decode_parms"])
+        except ValueError:
+            rows = None
+        if rows:
+            # the codec returns semantic ink=1 regardless of /BlackIs1
+            # (which only maps OUTPUT bit values); ink renders as 0
+            gray = np.where(
+                np.frombuffer(b"".join(rows), np.uint8).reshape(len(rows), -1), 0, 255
+            ).astype(np.uint8)
+    if gray is None or gray.shape != (ROWS * GLYPH, COLS * GLYPH):
+        return None
+    return ocr_page(gray)

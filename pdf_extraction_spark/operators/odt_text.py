@@ -15,8 +15,9 @@ OOXML.  Both directions, from scratch on stdlib ``zipfile`` +
 * :func:`extract_odt_paragraphs` verifies the mimetype, walks
   ``content.xml``'s paragraphs, and inverts that encoding exactly.
 
-Same XML-1.0 projection as docx (``sanitize_for_xml``), so the Spark
-round trip's oracle replays it analytically.
+Same XML-1.0 projection as docx (``sanitize_for_xml``), so the
+round trip in the registry (``__spark_entry__.py``) has an oracle
+that replays it analytically.
 
 Reference analogue: pdfextraction.py:33-35 — per-document text
 extraction, here for the OpenDocument family.
@@ -29,9 +30,7 @@ import re
 import zipfile
 import xml.etree.ElementTree as ET
 
-from pyspark.sql import DataFrame
-
-from pdf_extraction_spark.operators.docx_text import sanitize_for_xml, split_roundtrip
+from pdf_extraction_spark.operators.docx_text import sanitize_for_xml
 
 ODT_MIME = "application/vnd.oasis.opendocument.text"
 _OFFICE = "urn:oasis:names:tc:opendocument:xmlns:office:1.0"
@@ -158,14 +157,3 @@ def extract_odt_paragraphs(raw: bytes) -> list[str] | None:
     if body is None:
         return None
     return [_para_text(p) for p in body.iter() if _local(p.tag) == "p"]
-
-
-ODT_SCHEMA = (
-    "doc_id long, n_paragraphs int, para1_chars int, n_chars int, "
-    "extracted_text string"
-)
-
-
-def extract_odt_roundtrip(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """text -> real .odt bytes -> ODF whitespace-element inversion -> text."""
-    return split_roundtrip(df, id_col, text_col, build_odt, extract_odt_paragraphs, ODT_SCHEMA)

@@ -15,8 +15,9 @@ documents a crawl carries.  Both directions, from scratch on stdlib
   walks each slide's paragraphs: runs joined, ``<a:br/>`` -> newline,
   one string per slide with paragraphs newline-joined.
 
-Same XML-1.0 projection as docx (``sanitize_for_xml``), so the Spark
-round trip's oracle replays it analytically.
+Same XML-1.0 projection as docx (``sanitize_for_xml``), so the
+round trip in the registry (``__spark_entry__.py``) has an oracle
+that replays it analytically.
 
 Reference analogue: the reference extracts per-page text from uploaded
 documents (pdfextraction.py:33-35); slides are pages of a deck.
@@ -29,9 +30,7 @@ import posixpath
 import zipfile
 import xml.etree.ElementTree as ET
 
-from pyspark.sql import DataFrame
-
-from pdf_extraction_spark.operators.docx_text import sanitize_for_xml, split_roundtrip
+from pdf_extraction_spark.operators.docx_text import sanitize_for_xml
 
 _DML = "http://schemas.openxmlformats.org/drawingml/2006/main"
 _PML = "http://schemas.openxmlformats.org/presentationml/2006/main"
@@ -194,16 +193,3 @@ def extract_pptx_slides(raw: bytes) -> list[str] | None:
     except (zipfile.BadZipFile, KeyError, OSError, ET.ParseError):
         return None
     return out
-
-
-PPTX_SCHEMA = (
-    "doc_id long, n_slides int, slide1_chars int, n_chars int, "
-    "extracted_text string"
-)
-
-
-def extract_pptx_roundtrip(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """text -> real .pptx -> rels-ordered slide extraction -> text.  Each
-    slide is the sanitize of its source segment with ONE '\\n' inserted
-    at the segment midpoint (two <a:p> paras)."""
-    return split_roundtrip(df, id_col, text_col, build_pptx, extract_pptx_slides, PPTX_SCHEMA)

@@ -31,9 +31,6 @@ nothing is read from the reference implementation.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-
-from pdf_extraction_spark.operators.docx_text import split_roundtrip
 
 # destinations whose content is NOT document text (RTF 1.9.1 §"Document
 # Area" / "Header"): group is skipped entirely when one of these is the
@@ -317,16 +314,3 @@ def extract_rtf_paragraphs(raw: bytes) -> list[str] | None:
         cur.append("\ufffd")
     paras.append("".join(cur))
     return paras
-
-
-RTF_SCHEMA = (
-    "doc_id long, n_paragraphs int, para1_chars int, n_chars int, "
-    "extracted_text string"
-)
-
-
-def extract_rtf_roundtrip(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """text -> real RTF bytes -> tokenizer extraction -> text.  The
-    identity is EXACT (no sanitize projection): RTF carries every
-    character via \\'hh / \\uN escapes."""
-    return split_roundtrip(df, id_col, text_col, build_rtf, extract_rtf_paragraphs, RTF_SCHEMA)

@@ -34,12 +34,7 @@ from pdf_extraction_spark.operators.ccitt import (
     mh_decode,
     mh_encode,
 )
-from pdf_extraction_spark.operators.multimodal import (
-    channel_sums,
-    invalid_row,
-    map_blobs,
-    synth_blobs,
-)
+from pdf_extraction_spark.operators.multimodal import channel_sums, invalid_row, map_blobs
 from pdf_extraction_spark.pdf_parse import _pdf_lzw_decode, _pdf_lzw_encode
 
 # the IFD tags baseline RGB needs
@@ -440,11 +435,6 @@ def synth_tiff_g4_bytes(media_id: int) -> bytes:
     return _assemble_tiff(bo, entries, strips)
 
 
-def synth_tiff_g4(df: DataFrame, id_col: str) -> DataFrame:
-    """(media_id, blob) with a real G4-compressed bilevel TIFF per id."""
-    return synth_blobs(df, id_col, synth_tiff_g4_bytes)
-
-
 TIFF_DECODE_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),
@@ -459,11 +449,6 @@ TIFF_DECODE_SCHEMA = StructType(
         StructField("is_valid", IntegerType()),
     ]
 )
-
-
-def synth_tiff(df: DataFrame, id_col: str) -> DataFrame:
-    """(media_id, blob) with a real baseline RGB TIFF per id."""
-    return synth_blobs(df, id_col, synth_tiff_bytes)
 
 
 def _tiff_row(blob):

@@ -17,7 +17,7 @@ a shared-string table).  Both directions, from scratch on stdlib
   strings (numeric cells as their literal ``<v>`` text).
 
 The same XML-1.0 projection as docx applies (C0 controls / ``\\r`` ->
-``'?'``), so the Spark round trip's oracle replays
+``'?'``), so the registry round trip's oracle replays
 ``sanitize_for_xml`` and the identity pins the whole chain.
 
 Reference analogue: the reference extracts per-document text
@@ -31,9 +31,6 @@ import posixpath
 import zipfile
 import xml.etree.ElementTree as ET
 
-from pyspark.sql import DataFrame, functions as F
-
-from pdf_extraction_spark.operators.balance import map_documents
 from pdf_extraction_spark.operators.docx_text import sanitize_for_xml
 
 _SSML = "http://schemas.openxmlformats.org/spreadsheetml/2006/main"
@@ -225,28 +222,3 @@ def extract_xlsx_rows(raw: bytes) -> list[list[str]] | None:
                 cells.append(v.text or "")
         out.append(cells)
     return out
-
-
-XLSX_SCHEMA = (
-    "doc_id long, n_rows int, n_cells int, n_chars int, extracted_text string"
-)
-
-
-def _xlsx_roundtrip_row(text):
-    t = text if isinstance(text, str) else ""
-    q = (len(t) + 3) // 4
-    # 2x2 grid of text quarters + one numeric cell (the length),
-    # so all three cell encodings are on the round trip
-    grid = [[t[:q], t[q : 2 * q]], [t[2 * q : 3 * q], t[3 * q :]], [str(len(t))]]
-    rows = extract_xlsx_rows(build_xlsx(grid)) or []
-    flat = [c for row in rows for c in row]
-    return len(rows), len(flat), sum(map(len, flat)), "".join(flat)
-
-
-def extract_xlsx_roundtrip(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """text -> real .xlsx bytes -> stdlib-zip + XML extraction -> text."""
-    src = df.select(
-        F.col(id_col).cast("long").alias("doc_id"),
-        F.col(text_col).cast("string").alias("text"),
-    )
-    return map_documents(src, _xlsx_roundtrip_row, XLSX_SCHEMA, passthrough=("doc_id",))

@@ -2305,11 +2305,6 @@ def _cmap_decoder(lengths: tuple[int, ...], mapping: dict[bytes, str]):
 # content-stream interpreter: text operators -> per-page text
 # ---------------------------------------------------------------------------
 
-_TEXT_OPS = frozenset(
-    ["BT", "ET", "Td", "TD", "T*", "Tm", "Tj", "'", '"', "TJ", "Tf"]
-)
-
-
 # ---- inline images (BI .. ID .. EI, PDF 32000-1 §8.9.7) --------------------
 # inline image dicts use abbreviated keys/values; both forms are legal
 

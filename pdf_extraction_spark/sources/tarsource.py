@@ -63,7 +63,6 @@ from pdf_extraction_spark.session import local_frame
 from pdf_extraction_spark.sources.warc import SPLIT_SCHEMA, _open_binary, _read_whole
 
 BLOCK = 512
-_REGULAR = (b"0", b"\x00", b"7")
 _META = (b"x", b"L", b"K")
 _SKIP = (b"1", b"2", b"3", b"4", b"5", b"6")
 

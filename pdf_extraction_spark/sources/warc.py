@@ -381,7 +381,10 @@ def _iter_warc_gz_records_range(f, start: int, end: int, read_chunk: int = 1 << 
     magic.  A verbatim decoy member embedded inside a stored-block outer
     payload fails (c) unless it is the exact suffix of its enclosing
     member — the same residual ambiguity (and the same odds) as the
-    uncompressed path, resolvable only with an offset index."""
+    uncompressed path, resolvable only with an offset index.  Raises
+    ValueError, naming the member offset, when a member the walk reaches
+    does not verify: one that does not inflate, or the first member at or
+    past ``end`` failing (a)-(c)."""
     f.seek(0, 2)
     file_size = f.tell()
     if start >= file_size:
@@ -440,14 +443,20 @@ def _iter_warc_gz_records_range(f, start: int, end: int, read_chunk: int = 1 << 
             else:
                 search = p + 1
     # ---- sequential member walk from the aligned boundary ----
+    # A member on the chain that does not inflate is corruption, not a
+    # decoy: the whole-file read fails on it, so the split fails too.  The
+    # member reached at or past ``end`` must verify as well, because the
+    # next split's alignment scan skips a member it cannot verify.
     off = aligned
-    while off < end and off < file_size:
-        res = _inflate_member_at(f, off, read_chunk)
+    while off < file_size:
+        past_end = off >= end
+        res = _member_chained(off) if past_end else _inflate_member_at(f, off, read_chunk)
         if res is None:
-            return  # truncated/corrupt tail member: stop, don't guess
+            raise ValueError(f"corrupt or truncated gzip member at offset {off}")
+        if past_end:
+            return
         content, nxt = res
-        for headers, payload in _iter_warc_records(content):
-            yield headers, payload
+        yield from _iter_warc_records(content)
         off = nxt
 
 
@@ -469,8 +478,12 @@ def _warc_split_pages(path: str, start: int, end: int) -> list[tuple]:
     if end < 0:
         return pages(_iter_warc_records(_read_whole(path)))
     with _open_binary(path) as f:
-        if f.read(len(_GZ_MAGIC)) == _GZ_MAGIC:
-            return pages(_iter_warc_gz_records_range(f, start, end))
+        # the gzip sniff _gunzip applies to the whole-file read
+        if f.read(2) == _GZ_MAGIC[:2]:
+            try:
+                return pages(_iter_warc_gz_records_range(f, start, end))
+            except ValueError as e:
+                raise ValueError(f"{path}: {e}") from e
         return pages(_iter_warc_records_range(f, start, end))
 
 

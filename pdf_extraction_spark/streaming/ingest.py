@@ -149,9 +149,6 @@ def stream_dedup(
 
 # per-user session state: [last_ts_epoch, session_start_epoch, n_events]
 _SESSION_STATE_SCHEMA = "last_ts long, start_ts long, n long"
-_SESSION_OUT_SCHEMA = (
-    "user_id long, session_start timestamp, session_end timestamp, n_events long"
-)
 
 
 def stream_sessionize(

@@ -414,11 +414,12 @@ def test_pdf_g3_xobject_roundtrip_and_ocr():
 
 
 def test_scanned_one_g4_parity():
-    from pdf_extraction_spark.operators.ocr import _scanned_one, sanitize_text
+    from __spark_entry__ import _scanned_row
+    from pdf_extraction_spark.operators.ocr import sanitize_text
 
     text = "Receipt 42\nTotal: 19.99"
     for doc_id in (2, 3):  # even -> JPEG, odd -> G4
-        n, w, h, filt, rec = _scanned_one(doc_id, text)
+        _, n, w, h, filt, rec = _scanned_row()(doc_id, text)
         assert (n, w, h) == (1, 128, 64)
         assert filt == ("DCTDecode" if doc_id % 2 == 0 else "CCITTFaxDecode")
         assert rec == sanitize_text(text)[:128]

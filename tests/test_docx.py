@@ -9,10 +9,10 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from __spark_entry__ import _round_trip, _split_row, _text_schema
 from pdf_extraction_spark.operators.docx_text import (
     build_docx,
     extract_docx_paragraphs,
-    extract_docx_roundtrip,
     sanitize_for_xml,
 )
 
@@ -97,10 +97,9 @@ def test_rejections():
 def test_spark_roundtrip(spark):
     rows = [(1, "plain text body"), (2, "with\nbreaks\tand\ttabs"), (3, None)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        r["doc_id"]: r
-        for r in extract_docx_roundtrip(df, "doc_id", "text").collect()
-    }
+    row = _split_row(build_docx, extract_docx_paragraphs)
+    out = _round_trip(df, row, _text_schema("n_paragraphs", "para1_chars"))
+    got = {r["doc_id"]: r for r in out.collect()}
     assert got[1]["extracted_text"] == "plain text body"
     assert got[1]["n_paragraphs"] == 2
     assert got[2]["extracted_text"] == "with\nbreaks\tand\ttabs"

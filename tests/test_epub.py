@@ -9,12 +9,9 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from __spark_entry__ import _round_trip, _split_row, _text_schema
 from pdf_extraction_spark.operators.docx_text import sanitize_for_xml
-from pdf_extraction_spark.operators.epub_text import (
-    build_epub,
-    extract_epub_chapters,
-    extract_epub_roundtrip,
-)
+from pdf_extraction_spark.operators.epub_text import build_epub, extract_epub_chapters
 
 
 @pytest.mark.parametrize(
@@ -99,9 +96,9 @@ def test_rejections():
 def test_spark_roundtrip(spark):
     rows = [(1, "book body text"), (2, None)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        r["doc_id"]: r for r in extract_epub_roundtrip(df, "doc_id", "text").collect()
-    }
+    row = _split_row(build_epub, extract_epub_chapters)
+    out = _round_trip(df, row, _text_schema("n_chapters", "chap1_chars"))
+    got = {r["doc_id"]: r for r in out.collect()}
     assert got[1]["extracted_text"] == "book body text"
     assert got[1]["n_chapters"] == 2
     assert got[2]["extracted_text"] == "" and got[2]["n_chars"] == 0

@@ -11,9 +11,9 @@ from pdf_extraction_spark.operators.ico import (
     _ico_row_bytes,
     decode_ico,
     parse_ico,
-    synth_ico,
     synth_ico_bytes,
 )
+from pdf_extraction_spark.operators.multimodal import synth_blobs
 
 
 def test_roundtrip_both_entry_kinds():
@@ -60,9 +60,10 @@ def test_spark_decode(spark):
     from pyspark.sql import functions as F
 
     ids = spark.range(0, 15).select(F.col("id").alias("doc_id"))
+    blobs = synth_blobs(ids, "doc_id", synth_ico_bytes)
     rows = {
         r["media_id"]: r
-        for r in decode_ico(synth_ico(ids, "doc_id"), "media_id", "blob").collect()
+        for r in decode_ico(blobs, "media_id", "blob").collect()
     }
     assert len(rows) == 15
     for mid in (0, 7, 13):

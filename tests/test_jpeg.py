@@ -41,10 +41,10 @@ from pdf_extraction_spark.operators.jpeg import (
     idct2,
     parse_jpeg,
     rgb_to_ycbcr,
-    synth_jpeg,
     synth_jpeg_bytes,
     ycbcr_to_rgb,
 )
+from pdf_extraction_spark.operators.multimodal import synth_blobs
 
 # Standard luminance quant table (T.81 Annex K, quality 50) — used for
 # the lossy-realism tests; exactness there comes from the replay, not
@@ -404,9 +404,10 @@ def test_encoder_rejects_out_of_range_inputs():
 
 def test_spark_synth_and_decode(spark):
     ids = spark.range(0, 30).select(F.col("id").alias("doc_id"))
+    blobs = synth_blobs(ids, "doc_id", synth_jpeg_bytes)
     rows = {
         r["media_id"]: r
-        for r in decode_jpeg(synth_jpeg(ids, "doc_id"), "media_id", "blob").collect()
+        for r in decode_jpeg(blobs, "media_id", "blob").collect()
     }
     assert len(rows) == 30
     for mid in (0, 7, 23):

@@ -322,13 +322,15 @@ def test_jpeg_dimensions_header_only_probe():
 
 def test_spark_probe_and_mixed_synth(spark):
     from pyspark.sql import functions as F
-    from pdf_extraction_spark.operators.jpeg import probe_jpeg, synth_jpeg_mixed
+    from pdf_extraction_spark.operators.jpeg import probe_jpeg, synth_jpeg_mixed_bytes
     from pdf_extraction_spark.operators.jpeg import _jpeg_dims
+    from pdf_extraction_spark.operators.multimodal import synth_blobs
 
     ids = spark.range(0, 20).select(F.col("id").alias("doc_id"))
+    blobs = synth_blobs(ids, "doc_id", synth_jpeg_mixed_bytes)
     rows = {
         r["media_id"]: r
-        for r in probe_jpeg(synth_jpeg_mixed(ids, "doc_id"), "media_id", "blob").collect()
+        for r in probe_jpeg(blobs, "media_id", "blob").collect()
     }
     assert len(rows) == 20
     for mid in range(20):

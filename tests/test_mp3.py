@@ -7,9 +7,9 @@ from pdf_extraction_spark.operators.mp3 import (
     _SAMPLE_RATE,
     probe_mp3,
     probe_mp3_df,
-    synth_mp3,
     synth_mp3_bytes,
 )
+from pdf_extraction_spark.operators.multimodal import synth_blobs
 
 
 def test_probe_matches_synth_params():
@@ -65,9 +65,10 @@ def test_spark_probe(spark):
     from pyspark.sql import functions as F
 
     ids = spark.range(0, 12).select(F.col("id").alias("doc_id"))
+    blobs = synth_blobs(ids, "doc_id", synth_mp3_bytes)
     rows = {
         r["media_id"]: r
-        for r in probe_mp3_df(synth_mp3(ids, "doc_id"), "media_id", "blob").collect()
+        for r in probe_mp3_df(blobs, "media_id", "blob").collect()
     }
     assert len(rows) == 12
     for mid in (0, 4, 11):

@@ -7,9 +7,9 @@ import struct
 from pdf_extraction_spark.operators.mp4 import (
     probe_mp4,
     probe_mp4_df,
-    synth_mp4,
     synth_mp4_bytes,
 )
+from pdf_extraction_spark.operators.multimodal import synth_blobs
 
 
 def test_probe_matches_synth_params():
@@ -77,9 +77,10 @@ def test_spark_probe(spark):
     from pyspark.sql import functions as F
 
     ids = spark.range(0, 10).select(F.col("id").alias("doc_id"))
+    blobs = synth_blobs(ids, "doc_id", synth_mp4_bytes)
     rows = {
         r["media_id"]: r
-        for r in probe_mp4_df(synth_mp4(ids, "doc_id"), "media_id", "blob").collect()
+        for r in probe_mp4_df(blobs, "media_id", "blob").collect()
     }
     assert len(rows) == 10
     for mid in (0, 3, 7):

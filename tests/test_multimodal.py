@@ -328,13 +328,15 @@ def test_png_decode_spark_matches_python(spark):
     from pdf_extraction_spark.operators.multimodal import (
         _png_row_bytes,
         decode_png,
-        synth_png,
+        synth_blobs,
+        synth_png_bytes,
     )
 
     ids = spark.range(0, 12).withColumnRenamed("id", "doc_id")
+    blobs = synth_blobs(ids, "doc_id", synth_png_bytes)
     out = {
         r["media_id"]: r
-        for r in decode_png(synth_png(ids, "doc_id"), "media_id", "blob").collect()
+        for r in decode_png(blobs, "media_id", "blob").collect()
     }
     assert len(out) == 12
     for mid in range(12):
@@ -490,13 +492,15 @@ def test_gif_decode_spark_matches_python(spark):
         _gif_indices,
         _gif_palette,
         decode_gif,
-        synth_gif,
+        synth_blobs,
+        synth_gif_bytes,
     )
 
     ids = spark.range(0, 40).withColumnRenamed("id", "doc_id")
+    blobs = synth_blobs(ids, "doc_id", synth_gif_bytes)
     got = {
         r["media_id"]: r.asDict()
-        for r in decode_gif(synth_gif(ids, "doc_id"), "media_id", "blob").collect()
+        for r in decode_gif(blobs, "media_id", "blob").collect()
     }
     assert len(got) == 40
     for mid in range(40):

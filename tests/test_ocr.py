@@ -7,16 +7,20 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
+from __spark_entry__ import _ocr_row, _round_trip
 from pdf_extraction_spark.operators.ocr import (
     CHARSET,
     PAGE_CAP,
     _GLYPHS,
     ocr_page,
-    ocr_roundtrip,
-    ocr_roundtrip_one,
     render_page,
     sanitize_text,
 )
+
+
+def ocr_roundtrip_one(text: str) -> str:
+    """The registry's OCR round trip for one document: its recovered text."""
+    return _ocr_row()(0, text)[2]
 
 
 def test_glyphs_are_distinct_and_inky():
@@ -82,7 +86,8 @@ def test_spark_ocr_roundtrip(spark):
         (4, "y" * 300),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r["doc_id"]: r for r in ocr_roundtrip(df, "doc_id", "text").collect()}
+    out = _round_trip(df, _ocr_row(), "doc_id long, n_chars int, recovered_text string")
+    got = {r["doc_id"]: r for r in out.collect()}
     assert got[1]["recovered_text"] == "plain ascii text"
     assert got[2]["recovered_text"] == "café ? unicode".replace("é", "?")
     assert got[3]["recovered_text"] == "" and got[3]["n_chars"] == 0

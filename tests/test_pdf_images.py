@@ -7,8 +7,9 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
+from __spark_entry__ import _ocr_row
 from pdf_extraction_spark.operators.jpeg import encode_baseline_jpeg, parse_jpeg
-from pdf_extraction_spark.operators.ocr import ocr_roundtrip_one, render_page
+from pdf_extraction_spark.operators.ocr import render_page
 from pdf_extraction_spark.pdf_parse import (
     _jpeg_sof_dims,
     build_pdf,
@@ -78,6 +79,9 @@ def test_ocr_roundtrip_goes_through_scanned_pdf():
     """The OCR chain now starts from a real scanned-style PDF: an
     image-only page (no text layer) whose recovered text still matches
     the sanitize identity."""
+    def ocr_roundtrip_one(text):
+        return _ocr_row()(0, text)[2]
+
     assert ocr_roundtrip_one("Scan Me 123!") == "Scan Me 123!"
     assert ocr_roundtrip_one("unicode → becomes ?") == "unicode ? becomes ?"
     assert ocr_roundtrip_one("") == ""

@@ -567,3 +567,79 @@ def test_warc_gz_split_rejects_embedded_decoy_member(spark, tmp_path):
         bytes(r["html"]) for r in split_rows if r["url"].endswith("/25")
     )
     assert decoy in carrier  # payload byte-identical, decoy intact inside
+
+
+def test_warc_gz_range_reads_fail_like_the_whole_file():
+    """A corrupt or truncated member-per-record .warc.gz: every byte-range
+    layout gives the whole-file outcome, which is the same records or a
+    ValueError naming the path and the member offset, and never a record
+    set that is silently short.  The cases flip a byte in each member
+    (magic, method, deflate body, CRC, ISIZE) and cut the archive at
+    every 7th byte."""
+    import datetime as dt
+    import os
+    import re
+    import tempfile
+    import zlib
+
+    from pdf_extraction_spark.sources.warc import _warc_split_pages, write_pages_warc
+
+    rows = [
+        (
+            f"http://gzc.example/{i}",
+            dt.datetime(2026, 6, 1, 0, 0, i),
+            (f"<p>member {i} " + "c" * (11 * i % 90) + "</p>").encode(),
+        )
+        for i in range(6)
+    ]
+    with tempfile.TemporaryDirectory() as d:
+        path = os.path.join(d, "corrupt.warc.gz")
+        write_pages_warc(rows, path, compress=True)
+        raw = open(path, "rb").read()
+        offsets, pos = [], 0
+        while pos < len(raw):  # member starts, from the members themselves
+            offsets.append(pos)
+            member = zlib.decompressobj(31)
+            member.decompress(raw[pos:])
+            pos = len(raw) - len(member.unused_data)
+        assert len(offsets) == 6
+        cases = []
+        for a, b in zip(offsets, offsets[1:] + [len(raw)]):
+            for pos in (a, a + 2, (a + b) // 2, b - 8, b - 1):
+                bad = bytearray(raw)
+                bad[pos] ^= 0xFF
+                cases.append((f"flip@{pos}", bytes(bad)))
+        cases += [(f"cut@{n}", raw[:n]) for n in range(1, len(raw), 7)]
+
+        def whole_file(data):
+            with open(path, "wb") as f:
+                f.write(data)
+            try:
+                return sorted(r[0] for r in _warc_split_pages(path, 0, -1)), False
+            except (OSError, EOFError, zlib.error):
+                return None, True
+
+        def ranges(split):
+            urls, errors = [], []
+            for s in range(0, os.path.getsize(path), split):
+                end = min(s + split, os.path.getsize(path))
+                try:
+                    urls += [r[0] for r in _warc_split_pages(path, s, end)]
+                except ValueError as e:
+                    errors.append(str(e))
+            return sorted(urls), errors
+
+        n_failing = 0
+        for name, data in cases:
+            whole, failed = whole_file(data)
+            n_failing += failed
+            for split in (64, 150, 333, len(data)):
+                urls, errors = ranges(split)
+                if not failed:
+                    assert (urls, errors) == (whole, []), (name, split)
+                    continue
+                assert errors, (name, split, urls)
+                for e in errors:
+                    assert e.startswith(f"{path}: "), e
+                    assert re.search(r"gzip member at offset \d+$", e), e
+        assert n_failing > len(cases) // 2  # most cases are corrupt

@@ -11,9 +11,9 @@ from pdf_extraction_spark.operators.tiff import (
     packbits_decode,
     packbits_encode,
     parse_tiff,
-    synth_tiff,
     synth_tiff_bytes,
 )
+from pdf_extraction_spark.operators.multimodal import synth_blobs
 
 
 def test_packbits_canonical_vector():
@@ -75,9 +75,10 @@ def test_spark_decode(spark):
     from pyspark.sql import functions as F
 
     ids = spark.range(0, 24).select(F.col("id").alias("doc_id"))
+    blobs = synth_blobs(ids, "doc_id", synth_tiff_bytes)
     rows = {
         r["media_id"]: r
-        for r in decode_tiff(synth_tiff(ids, "doc_id"), "media_id", "blob").collect()
+        for r in decode_tiff(blobs, "media_id", "blob").collect()
     }
     assert len(rows) == 24
     for mid in (0, 1, 2, 5, 11):
