@@ -1479,7 +1479,7 @@ def _text_schema(n_parts: str, part1: str) -> str:
 
 def _xlsx_row():
     """text -> real .xlsx bytes -> stdlib-zip + XML extraction -> text."""
-    from pdf_extraction_spark.operators.xlsx_text import build_xlsx, extract_xlsx_rows
+    from pdf_extraction_spark.operators.xlsx_text import build_xlsx, extract_xlsx_sheets
 
     def row(doc_id, text):
         t = text or ""
@@ -1487,7 +1487,7 @@ def _xlsx_row():
         # 2x2 grid of text quarters + one numeric cell (the length),
         # so all three cell encodings are on the round trip
         grid = [[t[:q], t[q : 2 * q]], [t[2 * q : 3 * q], t[3 * q :]], [str(len(t))]]
-        rows = extract_xlsx_rows(build_xlsx(grid)) or []
+        rows = [r for sheet in extract_xlsx_sheets(build_xlsx(grid)) or [] for r in sheet]
         flat = [c for r in rows for c in r]
         return doc_id, len(rows), len(flat), sum(map(len, flat)), "".join(flat)
 

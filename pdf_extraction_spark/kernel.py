@@ -7,7 +7,9 @@ cite the reference as file:line.  The Spark layer (operators/extract.py)
 only *vectorizes dispatch* around these kernels, as row functions behind
 the one Arrow batch loop in ``operators/balance.py``; the per-document
 semantics live here and are unit-tested against a straight-line oracle
-(tests/oracle.py).
+(tests/oracle.py).  What a blob of document bytes IS is decided in one
+place, ``operators/any_text.extract_any_pages`` (a pyspark-free module);
+``extract_document`` only picks the join of the pages it returns.
 
 Key Unicode traps (why this is Python, not Spark SQL expressions):
 
@@ -20,6 +22,8 @@ Key Unicode traps (why this is Python, not Spark SQL expressions):
 """
 
 from __future__ import annotations
+
+from pdf_extraction_spark.operators.any_text import extract_any_pages
 
 PAGE_SEP = "\x0c"  # form-feed: page separator used in the fixtures' text layer
 
@@ -190,17 +194,21 @@ def label_spans(extracted_text: str, fields):
 def extract_document(url, html_bytes, text, max_doc_chars=None):
     """Per-document dispatch — the per-row work of ``extract_documents``.
 
-    * PDF rows (``html_bytes`` starts with ``%PDF-``): per-page text is
-      recovered from the raw PDF bytes by the from-scratch parser
-      (pdf_parse.extract_pdf_pages — the engine's pdfplumber
-      ``page.extract_text()`` analogue, pdfextraction.py:33-35), then the
-      same F4-fold + Direct + OCR paths run over the recovered pages.
-      The ``text`` column is IGNORED for these rows — when the fixture
-      carries a golden text layer there, byte-equality of the outputs is
-      a real cross-check of the parser.
-    * HTML rows (``html_bytes`` is not None): boilerplate-strip to get the
-      text layer (html_extract.extract_main_text), then run the Direct
-      field extraction on it.
+    * Byte rows (``html_bytes`` is not None) go through the engine's one
+      dispatcher for document bytes, ``operators.any_text.
+      extract_any_pages`` (compressed unwrap, BOM transcode, magic-byte
+      sniff, PDF pages with the per-page OCR fallback, office/e-book
+      containers, HTML boilerplate strip, JSON refinement); ``doc_kind``
+      is its ``doc_type``.  The ``text`` column is IGNORED for these rows
+      — when the fixture carries a golden text layer there, byte-equality
+      of the outputs is a real cross-check of the parser.  The join is
+      this caller's: PDF types (``pdf``, ``pdf_scanned`` and their
+      ``.gz``/``.bz2``/``.xz`` wrappers) F4-fold their pages and run the
+      OCR-style state machine over them, the pdfplumber dataflow of
+      pdfextraction.py:33-35; every other type is one block of text (the
+      ``"\\n"`` join of its pages) with ``page_fields`` NULL.  A type
+      with no text (images, media, unreadable packages, binary) gets
+      NULL text, fields, page fields and spans, and no error.
     * Text rows (PDF-style): ``text`` holds per-page text joined by
       ``\\x0c``; F4-fold the pages, run Direct extraction, and run the
       OCR-style state machine over the same pages.
@@ -215,33 +223,26 @@ def extract_document(url, html_bytes, text, max_doc_chars=None):
     record carries ``error`` instead of failing the task.
     Returns (url, doc_kind, extracted_text, fields, page_fields, spans, error).
     """
-    from pdf_extraction_spark.html_extract import extract_main_text
-
     try:
         n_in = len(html_bytes) if html_bytes is not None else len(text or "")
         if max_doc_chars is not None and n_in > max_doc_chars:
             raise ValueError(
                 f"document exceeds max_doc_chars={max_doc_chars} ({n_in})"
             )
-        if html_bytes is not None and bytes(html_bytes[:5]) == b"%PDF-":
-            from pdf_extraction_spark.pdf_parse import extract_pdf_pages
-
-            doc_kind = "pdf"
-            pages = extract_pdf_pages(bytes(html_bytes))
-            extracted_text = concat_pages_direct(pages)
-            fields = extract_fields_direct(extracted_text)
-            page_fields = extract_fields_ocr(pages)
-        elif html_bytes is not None:
-            doc_kind = "html"
-            extracted_text = extract_main_text(bytes(html_bytes))
-            fields = extract_fields_direct(extracted_text)
-            page_fields = None
+        if html_bytes is None:
+            doc_kind, pages, paged = "text", (text or "").split(PAGE_SEP), True
         else:
-            doc_kind = "text"
-            pages = (text or "").split(PAGE_SEP)
+            doc_kind, pages = extract_any_pages(bytes(html_bytes))
+            if pages is None:
+                return (url, doc_kind, None, None, None, None, None)
+            paged = doc_kind.split(".")[0] in ("pdf", "pdf_scanned")
+        if paged:
             extracted_text = concat_pages_direct(pages)
-            fields = extract_fields_direct(extracted_text)
             page_fields = extract_fields_ocr(pages)
+        else:
+            extracted_text = "\n".join(pages)
+            page_fields = None
+        fields = extract_fields_direct(extracted_text)
         spans = label_spans(extracted_text, fields)
         return (url, doc_kind, extracted_text, fields, page_fields, spans, None)
     except Exception as e:  # F18: one bad doc must not kill the job

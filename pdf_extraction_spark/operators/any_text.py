@@ -1,6 +1,10 @@
 """Universal document-text dispatch: sniff the content type from magic
 bytes and route each blob to the matching in-repo extractor, one
-document per row.
+document per row.  This module is the engine's ONE dispatcher for
+document bytes: ``extract_any_pages`` decides what a blob is for every
+caller that holds bytes (this module's ``extract_any_text`` and the
+kernel's ``extract_document``, under ``extract_documents``,
+``run_extraction`` and streaming), and importing it loads no pyspark.
 
 A real crawl/archive corpus is mixed — a tar of court records holds
 PDFs next to DOCX next to HTML next to plain text — and the operator a
@@ -9,24 +13,32 @@ PDFs next to DOCX next to HTML next to plain text — and the operator a
 the reference's single-format assumption (`pdfextraction.py` takes only
 PDFs) to the mixed corpus the rest of this engine's sources produce.
 
-Dispatch table (first match wins):
+Before the sniff, a gzip/bzip2/xz member is unwrapped (type suffixed
+".gz"/".bz2"/".xz") and a Unicode BOM is transcoded to UTF-8.  Dispatch
+table (first match wins):
 
   %PDF-            -> pdf_parse.extract_pdf_pages (text layer, fonts,
-                      encryption — the full round-5 parser); when the
-                      text layer is EMPTY and the pages carry image
-                      XObjects, the scanned-PDF OCR fallback runs
-                      (doc_type "pdf_scanned": decode DCTDecode/
-                      CCITTFaxDecode images, template OCR — the
-                      reference's no-text-layer dataflow, honest scope
-                      in _ocr_scanned_pdf)
-  PK\\x03\\x04     -> DOCX vs EPUB disambiguated by package content
-                      (word/document.xml vs META-INF/container.xml);
+                      encryption — the full round-5 parser); pages with
+                      an EMPTY text layer whose images OCR to text take
+                      the OCR text (doc_type "pdf_scanned": decode
+                      DCTDecode/CCITTFaxDecode images, template OCR — the
+                      reference's per-page no-text-layer fallback, honest
+                      scope in _ocr_pdf_pages)
+  PK\\x03\\x04     -> docx / xlsx / pptx / epub / odt by package content;
                       other zips -> type "zip", no text
   <, \\s*<         -> html_extract.extract_main_text
-  PNG/GIF/JPEG/BMP/TIFF/ICO/RIFF magic -> typed, no text (decode is a
-                      separate, deliberate step — see multimodal ops)
-  valid UTF-8      -> plain text as-is
+  PNG/GIF/JPEG/BMP/TIFF/ICO/RIFF/MP3/MP4 magic -> typed, no text (decode
+                      is a separate, deliberate step — see multimodal ops)
+  {\\rtf           -> rtf paragraphs
+  valid UTF-8      -> plain text as-is, refined to "json"/"jsonl"
   anything else    -> type "binary", no text
+
+``extract_any_pages`` returns ``(doc_type, pages)``; ``pages`` is None
+when the type carries no text.  Each caller picks the join: PDF pages
+(``pdf``, ``pdf_scanned`` and their compressed wrappers) are the
+per-page texts; for every other type the text is the ``"\\n"`` join of
+``pages``.  ``extract_any`` joins every type with ``"\\n"``; the kernel
+F4-folds PDF pages and runs the OCR-style page fold over them.
 
 Per-document containment (F18): an extractor raising on one blob yields
 (doc_type="error", text=NULL, error=<message>) for that row only.
@@ -34,15 +46,18 @@ Per-document containment (F18): an extractor raising on one blob yields
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import TYPE_CHECKING
 
-from pdf_extraction_spark.operators.balance import map_documents
+from pdf_extraction_spark.html_extract import extract_main_text
 from pdf_extraction_spark.operators.docx_text import extract_docx_paragraphs
 from pdf_extraction_spark.operators.epub_text import extract_epub_chapters
 from pdf_extraction_spark.operators.odt_text import extract_odt_paragraphs
 from pdf_extraction_spark.operators.pptx_text import extract_pptx_slides
 from pdf_extraction_spark.operators.rtf_text import extract_rtf_paragraphs
-from pdf_extraction_spark.operators.xlsx_text import extract_xlsx_rows
+from pdf_extraction_spark.operators.xlsx_text import extract_xlsx_sheets
+
+if TYPE_CHECKING:
+    from pyspark.sql import DataFrame
 
 _IMAGE_MAGIC = [
     (b"\x89PNG\r\n\x1a\n", "png"),
@@ -206,32 +221,41 @@ def _unwrap_compressed(raw: bytes) -> tuple[str, bytes] | None:
     return suffix, inner
 
 
-# Office and e-book containers: doc_type -> (extractor, join of the
-# parts it returns).  An extractor returns None for a package it cannot
-# read; xlsx rows are lists of cells, tab-joined within a row.
+def _xlsx_parts(raw: bytes) -> list[str] | None:
+    """A workbook as one block: rows tab-joined within a row, rows
+    newline-joined within a sheet, sheets joined with ``\\x0c`` in
+    workbook order."""
+    sheets = extract_xlsx_sheets(raw)
+    if sheets is None:
+        return None
+    return ["\x0c".join("\n".join(map("\t".join, rows)) for rows in sheets)]
+
+
+# Office and e-book containers: doc_type -> extractor of the text parts
+# (None for a package it cannot read).
 _OFFICE_EXTRACTORS = {
-    "docx": (extract_docx_paragraphs, "\n".join),
-    "xlsx": (extract_xlsx_rows, lambda rows: "\n".join("\t".join(r) for r in rows)),
-    "pptx": (extract_pptx_slides, "\n".join),
-    "odt": (extract_odt_paragraphs, "\n".join),
-    "epub": (extract_epub_chapters, "\n".join),
-    "rtf": (extract_rtf_paragraphs, "\n".join),
+    "docx": extract_docx_paragraphs,
+    "xlsx": _xlsx_parts,
+    "pptx": extract_pptx_slides,
+    "odt": extract_odt_paragraphs,
+    "epub": extract_epub_chapters,
+    "rtf": extract_rtf_paragraphs,
 }
 
 
-def extract_any(raw: bytes, _depth: int = 0) -> tuple[str, str | None]:
-    """(doc_type, extracted_text_or_None) for one blob.  Compressed
-    members (crawl dumps ship .txt.gz/.html.gz/.json.gz everywhere;
-    Wikipedia dumps ship .bz2; log archives ship .xz) decompress
-    transparently and re-dispatch, bounded by depth and size guards;
-    the reported type is "<inner>.<suffix>" so provenance stays
-    visible."""
+def extract_any_pages(raw: bytes, _depth: int = 0) -> tuple[str, list[str] | None]:
+    """(doc_type, pages_or_None) for one blob — the one dispatcher for
+    document bytes (module docstring).  Compressed members (crawl dumps
+    ship .txt.gz/.html.gz/.json.gz everywhere; Wikipedia dumps ship
+    .bz2; log archives ship .xz) decompress transparently and
+    re-dispatch, bounded by depth and size guards; the reported type is
+    "<inner>.<suffix>" so provenance stays visible."""
     if _depth < _MAX_GZ_DEPTH:
         unwrapped = _unwrap_compressed(raw)
         if unwrapped is not None:
             suffix, inner = unwrapped
-            t, text = extract_any(inner, _depth + 1)
-            return f"{t}.{suffix}", text
+            t, pages = extract_any_pages(inner, _depth + 1)
+            return f"{t}.{suffix}", pages
         # compression magic with bad framing falls through to the sniffer,
         # which types such bytes "binary" (invalid UTF-8 / NUL heuristic)
     bom_text = decode_bom_text(raw)
@@ -246,45 +270,41 @@ def extract_any(raw: bytes, _depth: int = 0) -> tuple[str, str | None]:
 
         pages = extract_pdf_pages(raw)
         if all(p.strip() for p in pages):  # full text layer: no OCR pass
-            return t, "\n".join(pages)
+            return t, pages
         # mixed or image-only document: OCR exactly the textless pages
         # (the reference's per-page fallback, pdfextraction.py:72-73)
-        ocr_pages = _ocr_pdf_pages(raw)
-        used_ocr = False
-        merged = []
-        for i, p in enumerate(pages):
-            if not p.strip() and i < len(ocr_pages) and ocr_pages[i]:
-                merged.append(ocr_pages[i])
-                used_ocr = True
-            else:
-                merged.append(p)
-        return ("pdf_scanned" if used_ocr else t), "\n".join(merged)
+        ocr = _ocr_pdf_pages(raw)
+        ocr += [None] * (len(pages) - len(ocr))
+        swap = [not p.strip() and bool(o) for p, o in zip(pages, ocr)]
+        if not any(swap):
+            return t, pages
+        return "pdf_scanned", [o if s else p for p, o, s in zip(pages, ocr, swap)]
     if t in _OFFICE_EXTRACTORS:
-        extract, join = _OFFICE_EXTRACTORS[t]
-        parts = extract(raw)
-        return t, None if parts is None else join(parts)
+        return t, _OFFICE_EXTRACTORS[t](raw)
     if t == "html":
-        from pdf_extraction_spark.html_extract import extract_main_text
-
-        return t, extract_main_text(raw)
+        return t, [extract_main_text(raw)]
     if t == "text":
         text = raw.decode("utf-8")
-        refined = _refine_json(text)
-        if refined is not None:
-            return refined
-        return t, text
+        return _refine_json(text) or (t, [text])
     return t, None
+
+
+def extract_any(raw: bytes) -> tuple[str, str | None]:
+    """(doc_type, extracted_text_or_None) for one blob: the dispatcher's
+    pages joined with ``"\\n"``."""
+    t, pages = extract_any_pages(raw)
+    return t, None if pages is None else "\n".join(pages)
 
 
 _JSON_TEXT_FIELDS = ("text", "content", "body")  # the crawl-corpus convention
 
 
-def _refine_json(text: str) -> tuple[str, str | None] | None:
+def _refine_json(text: str) -> tuple[str, list[str] | None] | None:
     """Refine a UTF-8 blob that is actually JSON/JSONL — the member
     type crawl corpora carry most after HTML.  A blob where EVERY
-    non-empty line parses as a JSON object is "jsonl" (its text = the
-    conventional text field of each line, joined); a single JSON
-    object/array is "json".  Anything that does not fully parse stays
+    non-empty line parses as a JSON object is "jsonl" (its pages = the
+    conventional text field of each line); a single JSON object/array
+    is "json".  Anything that does not fully parse stays
     plain text (returns None)."""
     stripped = text.lstrip()
     if not stripped or stripped[0] not in "{[":
@@ -311,7 +331,7 @@ def _refine_json(text: str) -> tuple[str, str | None] | None:
                     if isinstance(o.get(f), str):
                         parts.append(o[f])
                         break
-            return "jsonl", "\n".join(parts) if parts else None
+            return "jsonl", parts or None
     try:
         o = json.loads(text)
     except ValueError:
@@ -319,7 +339,7 @@ def _refine_json(text: str) -> tuple[str, str | None] | None:
     if isinstance(o, dict):
         for f in _JSON_TEXT_FIELDS:
             if isinstance(o.get(f), str):
-                return "json", o[f]
+                return "json", [o[f]]
     return "json", None
 
 
@@ -347,6 +367,8 @@ def extract_any_text(
     so provenance needs no join-back — a join against the input would
     re-scan the corpus and shuffle both sides; at 100 TB that doubles
     the job."""
+    from pdf_extraction_spark.operators.balance import map_documents
+
     extra = list(passthrough or [])
     schema = "doc_id long, " + "".join(f"{c} string, " for c in extra) + (
         "doc_type string, text string, error string"

@@ -11,10 +11,11 @@ a shared-string table).  Both directions, from scratch on stdlib
   three value encodings real writers emit: shared strings (``t="s"``,
   the value is an INDEX), inline strings (``t="inlineStr"``), and
   numeric cells (no ``t``, the value is literal).
-* :func:`extract_xlsx_rows` opens the package, resolves the workbook's
-  first sheet through its rels (not by guessing the path), loads the
-  shared-string table, and returns the grid: one list per row, cells as
-  strings (numeric cells as their literal ``<v>`` text).
+* :func:`extract_xlsx_sheets` opens the package, resolves every sheet
+  of the workbook, in ``workbook.xml`` order, through its rels (not by
+  guessing the path), loads the shared-string table, and returns one
+  grid per sheet: one list per row, cells as strings (numeric cells as
+  their literal ``<v>`` text).
 
 The same XML-1.0 projection as docx applies (C0 controls / ``\\r`` ->
 ``'?'``), so the registry round trip's oracle replays
@@ -160,44 +161,8 @@ def _text_of(el) -> str:
     return "".join(parts)
 
 
-def extract_xlsx_rows(raw: bytes) -> list[list[str]] | None:
-    """The first worksheet's grid, or None when the bytes are not a
-    readable workbook.  Sheet resolution goes through the workbook's
-    relationship part (the spec's route), not a hardcoded path."""
-    try:
-        with zipfile.ZipFile(io.BytesIO(raw)) as z:
-            names = set(z.namelist())
-            if "xl/workbook.xml" not in names:
-                return None
-            wb = ET.fromstring(z.read("xl/workbook.xml"))
-            rels_name = "xl/_rels/workbook.xml.rels"
-            targets: dict[str, str] = {}
-            if rels_name in names:
-                for rel in ET.fromstring(z.read(rels_name)):
-                    targets[rel.get("Id", "")] = rel.get("Target", "")
-            first_sheet = None
-            for el in wb.iter():
-                if _local(el.tag) == "sheet":
-                    rid = next(
-                        (v for k, v in el.attrib.items() if _local(k) == "id"),
-                        None,
-                    )
-                    if rid and rid in targets:
-                        first_sheet = posixpath.normpath(
-                            posixpath.join("xl", targets[rid])
-                        )
-                    break
-            if first_sheet is None or first_sheet not in names:
-                return None
-            shared: list[str] = []
-            if "xl/sharedStrings.xml" in names:
-                sst = ET.fromstring(z.read("xl/sharedStrings.xml"))
-                shared = [
-                    _text_of(si) for si in sst if _local(si.tag) == "si"
-                ]
-            sheet = ET.fromstring(z.read(first_sheet))
-    except (zipfile.BadZipFile, KeyError, OSError, ET.ParseError):
-        return None
+def _sheet_rows(sheet, shared: list[str]) -> list[list[str]]:
+    """One worksheet's grid: one list per row, cells as strings."""
     out: list[list[str]] = []
     for row in sheet.iter():
         if _local(row.tag) != "row":
@@ -222,3 +187,45 @@ def extract_xlsx_rows(raw: bytes) -> list[list[str]] | None:
                 cells.append(v.text or "")
         out.append(cells)
     return out
+
+
+def extract_xlsx_sheets(raw: bytes) -> list[list[list[str]]] | None:
+    """Every worksheet's grid in ``workbook.xml`` order, or None when the
+    bytes are not a readable workbook or no sheet resolves.  Sheet
+    resolution goes through the workbook's relationship part (the spec's
+    route), not a hardcoded path; a sheet whose part is missing is
+    skipped."""
+    try:
+        with zipfile.ZipFile(io.BytesIO(raw)) as z:
+            names = set(z.namelist())
+            if "xl/workbook.xml" not in names:
+                return None
+            wb = ET.fromstring(z.read("xl/workbook.xml"))
+            rels_name = "xl/_rels/workbook.xml.rels"
+            targets: dict[str, str] = {}
+            if rels_name in names:
+                for rel in ET.fromstring(z.read(rels_name)):
+                    targets[rel.get("Id", "")] = rel.get("Target", "")
+            parts = []
+            for el in wb.iter():
+                if _local(el.tag) == "sheet":
+                    rid = next(
+                        (v for k, v in el.attrib.items() if _local(k) == "id"),
+                        None,
+                    )
+                    if rid in targets:
+                        part = posixpath.normpath(posixpath.join("xl", targets[rid]))
+                        if part in names:
+                            parts.append(part)
+            if not parts:
+                return None
+            shared: list[str] = []
+            if "xl/sharedStrings.xml" in names:
+                sst = ET.fromstring(z.read("xl/sharedStrings.xml"))
+                shared = [
+                    _text_of(si) for si in sst if _local(si.tag) == "si"
+                ]
+            sheets = [ET.fromstring(z.read(p)) for p in parts]
+    except (zipfile.BadZipFile, KeyError, OSError, ET.ParseError):
+        return None
+    return [_sheet_rows(sheet, shared) for sheet in sheets]

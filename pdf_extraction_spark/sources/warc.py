@@ -335,9 +335,10 @@ def _iter_warc_records_range(f, start: int, end: int, read_chunk: int = 1 << 22)
 # but stronger, because gzip members are self-delimiting (CRC32 + ISIZE
 # trailer): a candidate is a boundary iff one whole member inflates from
 # it, its content starts with the WARC magic, AND the member ends exactly
-# at EOF or at another gzip magic (chain check).
+# at EOF or at another gzip magic, NUL padding skipped (chain check).
 
 _GZ_MAGIC = b"\x1f\x8b\x08"
+_FIRST_READ = 256  # a CC member is a few KiB; a small first read wastes little
 
 
 def _inflate_member_at(f, offset: int, read_chunk: int):
@@ -345,27 +346,35 @@ def _inflate_member_at(f, offset: int, read_chunk: int):
 
     Returns (content, next_offset) or None if no valid member starts
     there (bad header, corrupt deflate stream, CRC/length mismatch, or
-    truncation).  Reads lazily in ``read_chunk`` increments; memory is
-    bounded by one member's content + one chunk.  Leaves the file
-    position unspecified — callers seek."""
+    truncation).  ``next_offset`` is past any NUL padding after the
+    member, which the whole-file ``gzip`` read skips too.  Reads in
+    chunks that double from ``_FIRST_READ`` up to ``read_chunk`` and
+    stops at the member's end, so a walk reads about each member's own
+    bytes; memory is bounded by one member's content + one chunk.
+    Leaves the file position unspecified — callers seek."""
     import zlib
 
     d = zlib.decompressobj(31)  # 31 = gzip wrapper
     f.seek(offset)
     out = bytearray()
-    consumed = 0
-    while True:
-        chunk = f.read(read_chunk)
+    pos, n = offset, min(_FIRST_READ, read_chunk)
+    while not d.eof:
+        chunk = f.read(n)
         if not chunk:
             return None  # EOF mid-member: truncated
         try:
             out += d.decompress(chunk)
         except zlib.error:
             return None
-        if d.eof:
-            consumed += len(chunk) - len(d.unused_data)
-            return bytes(out), offset + consumed
-        consumed += len(chunk)
+        pos += len(chunk)
+        n = min(2 * n, read_chunk)
+    tail = d.unused_data
+    while not tail.lstrip(b"\0"):  # NUL padding up to here: read on
+        tail = f.read(n)
+        if not tail:
+            return bytes(out), pos
+        pos += len(tail)
+    return bytes(out), pos - len(tail.lstrip(b"\0"))
 
 
 def _iter_warc_gz_records_range(f, start: int, end: int, read_chunk: int = 1 << 22):
@@ -377,8 +386,8 @@ def _iter_warc_gz_records_range(f, start: int, end: int, read_chunk: int = 1 << 
     is read past ``end``.  Alignment scans [start, end) for the gzip
     magic and accepts a candidate only if (a) one complete member
     inflates from it, (b) the inflated content begins with ``WARC/``,
-    and (c) the member is chained — followed by EOF or another gzip
-    magic.  A verbatim decoy member embedded inside a stored-block outer
+    and (c) the member is chained — followed, past any NUL padding, by
+    EOF or another gzip magic.  A verbatim decoy member embedded inside a stored-block outer
     payload fails (c) unless it is the exact suffix of its enclosing
     member — the same residual ambiguity (and the same odds) as the
     uncompressed path, resolvable only with an offset index.  Raises

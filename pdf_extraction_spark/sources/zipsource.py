@@ -273,7 +273,9 @@ def read_pages_zip(spark: SparkSession, path: str) -> DataFrame:
             "url"
         ),
         F.col("content").alias("html"),
-        F.decode(F.col("content"), "UTF-8").alias("text"),
+        # replacement on invalid bytes: ANSI-mode decode() raises on a
+        # binary member and would fail the whole job
+        F.make_valid_utf8(F.col("content").cast("string")).alias("text"),
         # lineage provenance: like the WARC source, rows come off a
         # non-file plan where input_file_name() is empty, so the archive
         # path rides along explicitly

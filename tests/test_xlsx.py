@@ -1,6 +1,7 @@
 """XLSX build/extract: grid round trips, the three cell encodings
 (shared / inline / numeric), shared-string deduplication, rels-based
-sheet resolution, and containment on malformed bytes."""
+sheet resolution, every sheet in workbook order, and containment on
+malformed bytes."""
 
 from __future__ import annotations
 
@@ -12,13 +13,13 @@ from hypothesis import strategies as st
 from pdf_extraction_spark.operators.docx_text import sanitize_for_xml
 from pdf_extraction_spark.operators.xlsx_text import (
     build_xlsx,
-    extract_xlsx_rows,
+    extract_xlsx_sheets,
 )
 
 
 def test_grid_roundtrip():
     grid = [["alpha", "beta", "gamma"], ["", "déjà ✓", "42"], ["tail"]]
-    assert extract_xlsx_rows(build_xlsx(grid)) == grid
+    assert extract_xlsx_sheets(build_xlsx(grid)) == [grid]
 
 
 def test_all_three_cell_encodings_present():
@@ -36,7 +37,7 @@ def test_shared_strings_deduplicated():
     with zipfile.ZipFile(__import__("io").BytesIO(raw)) as z:
         sst = z.read("xl/sharedStrings.xml").decode()
     assert sst.count("dup") == 1
-    assert extract_xlsx_rows(raw) == [["dup", "x"], ["dup", "y"], ["dup", "z"]]
+    assert extract_xlsx_sheets(raw) == [[["dup", "x"], ["dup", "y"], ["dup", "z"]]]
 
 
 def test_sheet_resolved_through_rels_not_path():
@@ -57,7 +58,7 @@ def test_sheet_resolved_through_rels_not_path():
                     b"worksheets/sheet1.xml", b"worksheets/tab_one.xml"
                 )
             z.writestr(name, data)
-    assert extract_xlsx_rows(buf.getvalue()) == [["a", "b"]]
+    assert extract_xlsx_sheets(buf.getvalue()) == [[["a", "b"]]]
 
 
 def test_rich_text_runs_joined():
@@ -80,16 +81,16 @@ def test_rich_text_runs_joined():
                 name,
                 rich if name == "xl/sharedStrings.xml" else src.read(name),
             )
-    assert extract_xlsx_rows(buf.getvalue()) == [["bold tail"]]
+    assert extract_xlsx_sheets(buf.getvalue()) == [[["bold tail"]]]
 
 
 def test_malformed_returns_none():
-    assert extract_xlsx_rows(b"not a zip") is None
-    assert extract_xlsx_rows(b"PK\x03\x04 truncated") is None
+    assert extract_xlsx_sheets(b"not a zip") is None
+    assert extract_xlsx_sheets(b"PK\x03\x04 truncated") is None
     # a zip without a workbook (e.g. a docx) is not an xlsx
     from pdf_extraction_spark.operators.docx_text import build_docx
 
-    assert extract_xlsx_rows(build_docx(["p"])) is None
+    assert extract_xlsx_sheets(build_docx(["p"])) is None
     # bad shared-string index is contained, not raised
     base = build_xlsx([["a"]])
     import io
@@ -102,7 +103,7 @@ def test_malformed_returns_none():
             if name == "xl/worksheets/sheet1.xml":
                 data = data.replace(b"<v>0</v>", b"<v>99</v>")
             z.writestr(name, data)
-    assert extract_xlsx_rows(buf.getvalue()) == [[""]]
+    assert extract_xlsx_sheets(buf.getvalue()) == [[[""]]]
 
 
 @settings(max_examples=150, deadline=None)
@@ -115,4 +116,45 @@ def test_malformed_returns_none():
 )
 def test_roundtrip_fuzz(grid):
     want = [[sanitize_for_xml(c) for c in row] for row in grid]
-    assert extract_xlsx_rows(build_xlsx(grid)) == want
+    assert extract_xlsx_sheets(build_xlsx(grid)) == [want]
+
+
+def test_every_sheet_in_workbook_order():
+    """A second worksheet, listed FIRST in workbook.xml: both grids come
+    back in workbook order, and the dispatcher joins the sheets with a
+    form feed."""
+    import io
+
+    from pdf_extraction_spark.operators.any_text import extract_any
+
+    base = build_xlsx([["a", "b"], ["1"]])
+    src = zipfile.ZipFile(io.BytesIO(base))
+    sheet2 = (
+        '<?xml version="1.0" encoding="UTF-8"?>'
+        '<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main">'
+        '<sheetData><row r="1"><c r="A1" t="inlineStr"><is><t>summary</t></is></c>'
+        '<c r="B1"><v>7</v></c></row></sheetData></worksheet>'
+    )
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w") as z:
+        for name in src.namelist():
+            data = src.read(name)
+            if name == "xl/workbook.xml":
+                data = data.replace(
+                    b"<sheets>",
+                    b'<sheets><sheet name="Summary" sheetId="2" r:id="rId9"/>',
+                )
+            elif name == "xl/_rels/workbook.xml.rels":
+                data = data.replace(
+                    b"</Relationships>",
+                    b'<Relationship Id="rId9" Type="http://schemas.openxmlformats.org/'
+                    b'officeDocument/2006/relationships/worksheet" '
+                    b'Target="worksheets/sheet2.xml"/></Relationships>',
+                )
+            z.writestr(name, data)
+        z.writestr("xl/worksheets/sheet2.xml", sheet2)
+    raw = buf.getvalue()
+    assert extract_xlsx_sheets(raw) == [[["summary", "7"]], [["a", "b"], ["1"]]]
+    assert extract_any(raw) == ("xlsx", "summary\t7\x0ca\tb\n1")
+    # a single-sheet workbook reads exactly as before: no form feed
+    assert extract_any(base) == ("xlsx", "a\tb\n1")
