@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 REPLICATION = int(os.environ.get("BENCH_REPLICATION", "20"))
 
-# headline queries (subset of __spark_entry__.all_queries() chosen to cover
+# headline queries (subset of __spark_entry__.queries() chosen to cover
 # every operator family while keeping the run a few minutes)
 HEADLINE = [
     "extract_kv_kernel",
@@ -62,11 +62,7 @@ HEADLINE = [
     # probe is microseconds; its MIXED synth encodes half the blobs
     # progressively), ocr_raster_roundtrip (~17 ms/doc full chain),
     # extract_pdf_encrypted (pure-Python RC4 over every stream).  All
-    # four stay value-checked by scripts/check_oracle.py --all.
-    "pricing_summary",
-    "events_asof_join",
-    "events_interval_join",
-    "events_hourly",
+    # four stay value-checked by scripts/check_oracle.py.
 ]
 
 
@@ -189,9 +185,7 @@ def main():
     )
 
     # --- headline query timings --------------------------------------------
-    # all_queries(): the headline set includes parked entries outside
-    # queries() (multimodal_tiff_g4, the office family)
-    qs = entrymod.all_queries()
+    qs = entrymod.queries()
     timings = {
         "extraction_pipeline_bulk": round(extract_sec, 3),
         "extraction_pipeline_shuffled": round(extract_shuffled_sec, 3),

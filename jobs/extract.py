@@ -49,7 +49,11 @@ def main(argv=None) -> int:
     from pdf_extraction_spark.session import get_spark
 
     spark = get_spark(app="extract-job", cpus=args.cpus)
-    from pdf_extraction_spark.plans.pipeline import run_extraction
+    from pdf_extraction_spark.plans.pipeline import (
+        _manifest_path,
+        committed_groups,
+        run_extraction,
+    )
 
     t0 = time.monotonic()
     summary = run_extraction(
@@ -64,9 +68,11 @@ def main(argv=None) -> int:
         groups_per_pass=args.groups_per_pass,
     )
     summary["total_wall_sec"] = round(time.monotonic() - t0, 3)
+    # group manifests only: a pass whose lineage coarsened also leaves a
+    # lineage-pass-*.json there, which has no n_rows
     n = sum(
-        json.load(open(os.path.join(args.output, "_manifests", f)))["n_rows"]
-        for f in os.listdir(os.path.join(args.output, "_manifests"))
+        json.load(open(_manifest_path(args.output, g)))["n_rows"]
+        for g in committed_groups(args.output)
     )
     summary["total_rows"] = n
     summary["docs_per_sec"] = round(n / summary["total_wall_sec"], 1)

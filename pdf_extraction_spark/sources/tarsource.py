@@ -505,16 +505,15 @@ def write_tar_members(out, members: Iterator[tuple[str, bytes]]) -> int:
 
 def read_pages_tar(spark: SparkSession, path: str, **kw) -> DataFrame:
     """Adapt tar members to the pages contract (url/html/text):
-    url is ``tar://<archive>!<member>``, html carries the raw bytes, text
-    the UTF-8 decode (replacement on invalid bytes)."""
+    url is ``tar://<archive>!<member>``, html carries the raw bytes and
+    text is NULL, as for WARC pages: the kernel reads ``html`` whenever it
+    is set, so a decoded copy would only double each member's bytes."""
     docs = read_docs_tar(spark, path, **kw)
     return docs.select(
         F.concat(F.lit("tar://"), F.col("archive"), F.lit("!"), F.col("name")).alias(
             "url"
         ),
         F.col("content").alias("html"),
-        # replacement on invalid bytes: ANSI-mode decode() raises on a
-        # binary member and would fail the whole job
-        F.make_valid_utf8(F.col("content").cast("string")).alias("text"),
+        F.lit(None).cast("string").alias("text"),
         F.col("archive").alias("source_file"),
     )

@@ -265,17 +265,16 @@ def read_docs_zip(
 
 def read_pages_zip(spark: SparkSession, path: str) -> DataFrame:
     """Adapt ZIP members to the pages contract (url/html/text): url is
-    ``zip://<archive>!<member>``, html carries the raw bytes, text the
-    UTF-8 decode (replacement on invalid bytes)."""
+    ``zip://<archive>!<member>``, html carries the raw bytes and text is
+    NULL, as for WARC pages: the kernel reads ``html`` whenever it is set,
+    so a decoded copy would only double each member's bytes."""
     docs = read_docs_zip(spark, path)
     return docs.select(
         F.concat(F.lit("zip://"), F.col("archive"), F.lit("!"), F.col("name")).alias(
             "url"
         ),
         F.col("content").alias("html"),
-        # replacement on invalid bytes: ANSI-mode decode() raises on a
-        # binary member and would fail the whole job
-        F.make_valid_utf8(F.col("content").cast("string")).alias("text"),
+        F.lit(None).cast("string").alias("text"),
         # lineage provenance: like the WARC source, rows come off a
         # non-file plan where input_file_name() is empty, so the archive
         # path rides along explicitly

@@ -4,9 +4,7 @@ column names, and order-insensitive values.
 
 Usage: python scripts/check_oracle.py [--all] [sf_dir] [query ...]
 
---all checks the FULL registry (all_queries/all_oracles, 57 entries)
-instead of the 50-entry queries() surface, so the 7 entries outside
-queries() stay value-checked too.
+``--all`` is accepted and ignored: queries() is the whole registry.
 """
 
 from __future__ import annotations
@@ -21,7 +19,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 
-TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
+TABLES = "documents embeddings".split()
 
 
 def _norm_cell(v):
@@ -62,7 +60,6 @@ def _normalize(rows, cols):
 
 def main():
     argv = [a for a in sys.argv[1:] if a != "--all"]
-    full = "--all" in sys.argv[1:]
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     only = set(argv[1:])
 
@@ -76,8 +73,8 @@ def main():
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
 
-    qs = entrymod.all_queries() if full else entrymod.queries()
-    oracles = entrymod.all_oracles() if full else entrymod.oracle_sql()
+    qs = entrymod.queries()
+    oracles = entrymod.oracle_sql()
     failures = []
     for name, fn in qs.items():
         if only and name not in only:

@@ -31,8 +31,6 @@ PLANS = [
     ("dedup_minhash_lsh", "single groupBy(band_key) + in-JVM pair expansion + candidate-only hash-set verify"),
     ("similarity_lsh_bucketed", "computed LSH quantizer bucket; broadcast bucket-join prunes candidates"),
     ("extraction_skewed", "size-outlier corpus: exchange keys on xxhash64(url, size-salt); Arrow-batched kernel with oversize-guard containment"),
-    ("events_asof_join", "as-of via union+window: ONE exchange on the key, NO join node"),
-    ("events_interval_join", "range predicate as equi-join on (key, time bucket): hash join, no NestedLoop"),
     ("chunk_documents", "let-bound tokenize + explode: scan-local, zero exchange"),
     ("sample_stratified", "md5-rate predicate: scan-local filter, zero exchange"),
     ("multimodal_jpeg_decode", "codec family shape: scan -> Arrow-batched synth -> Arrow-batched decode -> sink, zero exchange (embarrassingly parallel at 100 TB)"),
@@ -58,7 +56,7 @@ def main() -> int:
     from pdf_extraction_spark.session import get_spark
 
     spark = get_spark(app="explain-plans", cpus=8, shuffle_partitions=8)
-    qs = entry.all_queries()
+    qs = entry.queries()
 
     pages = entry._load(spark, SF_DIR, "documents").select(
         F.concat(F.lit("doc://"), F.col("doc_id").cast("string")).alias("url"),
@@ -75,8 +73,6 @@ def main() -> int:
         "dedup_minhash_lsh": qs["dedup_minhash_lsh"](spark, SF_DIR),
         "similarity_lsh_bucketed": qs["similarity_lsh_bucketed"](spark, SF_DIR),
         "extraction_skewed": qs["extraction_skewed"](spark, SF_DIR),
-        "events_asof_join": qs["events_asof_join"](spark, SF_DIR),
-        "events_interval_join": qs["events_interval_join"](spark, SF_DIR),
         "chunk_documents": qs["chunk_documents"](spark, SF_DIR),
         "sample_stratified": qs["sample_stratified"](spark, SF_DIR),
         "multimodal_jpeg_decode": qs["multimodal_jpeg_decode"](spark, SF_DIR),

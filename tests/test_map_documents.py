@@ -179,9 +179,8 @@ def test_mapinpandas_only_in_balance():
     ``write_webdataset`` sink (a per-partition writer holding a shard
     counter, not a per-row map); every operator and source reader runs
     through ``map_rows``.  pandas is imported only where its semantics
-    are the point: the F15 ``to_csv`` export and the streaming
-    ``applyInPandasWithState`` state.  No module but balance.py builds
-    the under-split guard; no module anywhere in the package asks a
+    are the point: the F15 ``to_csv`` export.  No module but balance.py
+    builds the under-split guard; no module anywhere in the package asks a
     DataFrame's RDD for its partition count — on an adaptive plan that
     runs the whole upstream (operators/balance.py reads the count from
     the plan instead) — and none but session.py (``local_frame``), in
@@ -200,7 +199,7 @@ def test_mapinpandas_only_in_balance():
         if t.count("mapInArrow(") != allowed.get(name, 0)
     ]
     assert "mapInArrow(" in inspect.getsource(write_webdataset)
-    pandas_users = {"plans/csv_export.py", "streaming/ingest.py"}
+    pandas_users = {"plans/csv_export.py"}
     offenders += [
         f"{name}: import pandas"
         for name, t in texts.items()

@@ -100,7 +100,7 @@ def test_codec_entries_are_single_pass_no_shuffle(spark):
     the plan is Exchange-free (asserted separately below)."""
     import __spark_entry__ as entrymod
 
-    qs = entrymod.all_queries()
+    qs = entrymod.queries()
     for name in (
         "extract_pdf_text",
         "multimodal_png_decode",

@@ -1,23 +1,38 @@
-"""The query registry's shape: every entry of ``all_queries()`` outside
-``queries()`` is there for a reason named in ``__spark_entry__``."""
+"""The query registry's shape: ``queries()`` is the one registry, it fits
+the driver's 50-entry snapshot, every entry has a DuckDB oracle, and every
+entry reads a document table."""
 
 from __future__ import annotations
 
+import re
+from pathlib import Path
+
 import __spark_entry__ as entrymod
 
-# round-5 newcomers parked at the 50-entry cap of queries()
-PARKED = {
+# entries that once sat outside the driver-facing registry
+FORMERLY_OUTSIDE = {
     "extract_pdf_scanned",
     "multimodal_tiff_g4",
     "extract_xlsx_text",
     "extract_pptx_text",
     "extract_odt_text",
     "extract_rtf_text",
+    "multimodal_jpeg_progressive",
 }
 
 
-def test_only_parked_entries_sit_outside_queries():
-    outside = set(entrymod.all_queries()) - set(entrymod.queries())
-    assert outside == PARKED | {"multimodal_jpeg_progressive"}
-    assert len(entrymod.queries()) == 50
-    assert set(entrymod.all_oracles()) == set(entrymod.all_queries())
+def test_queries_is_the_one_registry():
+    qs = entrymod.queries()
+    assert set(entrymod.oracle_sql()) == set(qs)
+    assert len(qs) <= 50
+    assert FORMERLY_OUTSIDE <= set(qs)
+    assert not hasattr(entrymod, "all_queries")
+    assert not hasattr(entrymod, "all_oracles")
+
+
+def test_registry_reads_only_document_tables():
+    src = Path(entrymod.__file__).read_text()
+    calls = re.findall(r"(?<!def )_load\(([^)]*)\)", src)
+    tables = [re.fullmatch(r'spark, sf_dir, "(\w+)"', c) for c in calls]
+    assert calls and all(tables), calls
+    assert {m.group(1) for m in tables} == {"documents", "embeddings"}

@@ -96,7 +96,7 @@ def aliased_registry():
 
 
 def test_registry_row_functions_run_on_workers(spark, aliased_registry):
-    qs = aliased_registry.all_queries()
+    qs = aliased_registry.queries()
     for name in ROUND_TRIP_ENTRIES + SYNTH_ENTRIES:
         rows = qs[name](spark, aliased_registry.DEFAULT_SF_DIR).limit(4).collect()
         assert len(rows) == 4, name

@@ -1,6 +1,7 @@
 """The file-splitting sources plan their split table as a JVM
 LocalTableScan: no Python task runs before the source's own read, and
-each source keeps its partition count."""
+each source keeps its partition count.  The archive page adapters carry
+each member's bytes once."""
 
 from __future__ import annotations
 
@@ -11,10 +12,14 @@ import zipfile
 
 import pytest
 
-from pdf_extraction_spark.sources.tarsource import read_docs_tar, write_tar_members
+from pdf_extraction_spark.sources.tarsource import (
+    read_docs_tar,
+    read_pages_tar,
+    write_tar_members,
+)
 from pdf_extraction_spark.sources.warc import read_pages_warc, write_pages_warc
 from pdf_extraction_spark.sources.webdataset import read_webdataset
-from pdf_extraction_spark.sources.zipsource import read_docs_zip
+from pdf_extraction_spark.sources.zipsource import read_docs_zip, read_pages_zip
 
 
 def _assert_local_scan(df, partitions=None):
@@ -100,3 +105,25 @@ def test_empty_listing_is_a_local_scan(spark, tmp_path, read):
     empty = read(spark, str(tmp_path))
     _assert_local_scan(empty)
     assert empty.collect() == []
+
+
+@pytest.mark.parametrize("fmt", ["zip", "tar"])
+def test_archive_pages_carry_member_bytes_once(spark, tmp_path, fmt):
+    """``html`` holds each member's bytes and ``text`` is a NULL string:
+    the kernel reads ``html`` whenever it is set, so no UTF-8 copy of the
+    member is built or shipped to the Python stage."""
+    members = [(f"m{i}.html", b"<p>member body</p>" * 8) for i in range(4)]
+    path = str(tmp_path / f"a.{fmt}")
+    if fmt == "zip":
+        with zipfile.ZipFile(path, "w") as z:
+            for name, body in members:
+                z.writestr(name, body)
+        pages = read_pages_zip(spark, path)
+    else:
+        _write_tar(path, members)
+        pages = read_pages_tar(spark, path)
+    plan = pages._jdf.queryExecution().optimizedPlan().toString()
+    assert "makevalid" not in plan.lower().replace("_", ""), plan
+    rows = pages.collect()
+    assert sorted(bytes(r["html"]) for r in rows) == [b for _, b in members]
+    assert {r["text"] for r in rows} == {None}
