@@ -99,32 +99,52 @@ def decode_bom_text(raw: bytes) -> str | None:
     return None
 
 
+# zip package layouts, first match wins: a member that marks the type
+_ZIP_LAYOUTS = (
+    ("word/document.xml", "docx"),
+    ("xl/workbook.xml", "xlsx"),
+    ("ppt/presentation.xml", "pptx"),
+    ("META-INF/container.xml", "epub"),
+)
+
+
+def _sniff_zip(raw: bytes):
+    """(type, archive) for a ``PK\\x03\\x04`` blob: the type by package
+    layout, and the OPEN archive when the type is an office or e-book
+    package (the caller extracts from it and closes it), so one blob's
+    central directory is parsed once.  Unreadable zips are type "zip"."""
+    import io
+    import zipfile
+
+    try:
+        z = zipfile.ZipFile(io.BytesIO(raw))
+    except Exception:
+        return "zip", None
+    try:
+        names = set(z.namelist())
+        mime = z.read("mimetype") if "mimetype" in names else b""
+    except Exception:
+        z.close()
+        return "zip", None
+    t = next((t for member, t in _ZIP_LAYOUTS if member in names), None)
+    if t is None and mime == b"application/vnd.oasis.opendocument.text":
+        t = "odt"
+    if t is None:
+        z.close()
+        return "zip", None
+    return t, z
+
+
 def sniff_doc_type(raw: bytes) -> str:
     """Content type from leading bytes; zip containers are refined to
-    docx/epub by their package layout."""
+    docx/xlsx/pptx/epub/odt by their package layout."""
     if raw[:5] == b"%PDF-":
         return "pdf"
     if raw[:4] == b"PK\x03\x04":
-        import io
-        import zipfile
-
-        try:
-            with zipfile.ZipFile(io.BytesIO(raw)) as z:
-                names = set(z.namelist())
-                mime = z.read("mimetype") if "mimetype" in names else b""
-        except Exception:
-            return "zip"
-        if "word/document.xml" in names:
-            return "docx"
-        if "xl/workbook.xml" in names:
-            return "xlsx"
-        if "ppt/presentation.xml" in names:
-            return "pptx"
-        if "META-INF/container.xml" in names:
-            return "epub"
-        if mime == b"application/vnd.oasis.opendocument.text":
-            return "odt"
-        return "zip"
+        t, z = _sniff_zip(raw)
+        if z is not None:
+            z.close()
+        return t
     for magic, t in _IMAGE_MAGIC:
         if raw[: len(magic)] == magic:
             return t
@@ -221,7 +241,7 @@ def _unwrap_compressed(raw: bytes) -> tuple[str, bytes] | None:
     return suffix, inner
 
 
-def _xlsx_parts(raw: bytes) -> list[str] | None:
+def _xlsx_parts(raw) -> list[str] | None:
     """A workbook as one block: rows tab-joined within a row, rows
     newline-joined within a sheet, sheets joined with ``\\x0c`` in
     workbook order."""
@@ -232,7 +252,8 @@ def _xlsx_parts(raw: bytes) -> list[str] | None:
 
 
 # Office and e-book containers: doc_type -> extractor of the text parts
-# (None for a package it cannot read).
+# (None for a package it cannot read).  The zip packages' extractors are
+# handed the archive the sniff opened; rtf gets the bytes.
 _OFFICE_EXTRACTORS = {
     "docx": extract_docx_paragraphs,
     "xlsx": _xlsx_parts,
@@ -264,6 +285,12 @@ def extract_any_pages(raw: bytes, _depth: int = 0) -> tuple[str, list[str] | Non
         # the UTF-8 form, so markup routing and JSON refinement see the
         # same bytes they would from an ASCII-compatible file
         raw = bom_text.encode("utf-8")
+    if raw[:4] == b"PK\x03\x04":
+        t, z = _sniff_zip(raw)
+        if z is None:
+            return t, None
+        with z:  # the extractor reads the archive the sniff opened
+            return t, _OFFICE_EXTRACTORS[t](z)
     t = sniff_doc_type(raw)
     if t == "pdf":
         from pdf_extraction_spark.pdf_parse import extract_pdf_pages

@@ -30,6 +30,7 @@ ubiquitous format.
 
 from __future__ import annotations
 
+import contextlib
 import io
 import re
 import zipfile
@@ -128,12 +129,21 @@ def _local(tag: str) -> str:
     return tag.rsplit("}", 1)[-1]
 
 
-def extract_docx_paragraphs(raw: bytes) -> list[str] | None:
+def open_package(src: bytes | zipfile.ZipFile):
+    """Context manager over the zip package ``src``: bytes are opened
+    here and closed on exit; an archive the caller already opened (the
+    dispatcher's sniff) is used as it is and left open."""
+    if isinstance(src, zipfile.ZipFile):
+        return contextlib.nullcontext(src)
+    return zipfile.ZipFile(io.BytesIO(src))
+
+
+def extract_docx_paragraphs(raw: bytes | zipfile.ZipFile) -> list[str] | None:
     """Open the package, parse word/document.xml, and return one string
     per <w:p> (runs joined, <w:br/> -> newline, <w:tab/> -> tab), or
     None if the bytes are not a readable .docx."""
     try:
-        with zipfile.ZipFile(io.BytesIO(raw)) as z:
+        with open_package(raw) as z:
             xml_bytes = z.read("word/document.xml")
     except (zipfile.BadZipFile, KeyError, OSError):
         return None

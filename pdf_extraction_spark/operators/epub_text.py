@@ -25,7 +25,7 @@ import re
 import zipfile
 import xml.etree.ElementTree as ET
 
-from pdf_extraction_spark.operators.docx_text import _esc, sanitize_for_xml
+from pdf_extraction_spark.operators.docx_text import _esc, open_package, sanitize_for_xml
 
 _CONTAINER = (
     '<?xml version="1.0"?>'
@@ -122,14 +122,14 @@ def _xhtml_text(xml_bytes: bytes) -> str | None:
     return "".join(parts)
 
 
-def extract_epub_chapters(raw: bytes) -> list[str] | None:
+def extract_epub_chapters(raw: bytes | zipfile.ZipFile) -> list[str] | None:
     """Follow container.xml -> OPF -> spine -> XHTML; returns one text
     string per spine document, or None if the package is malformed."""
     try:
-        z = zipfile.ZipFile(io.BytesIO(raw))
+        package = open_package(raw)
     except (zipfile.BadZipFile, OSError):
         return None
-    with z:
+    with package as z:
         try:
             container = ET.fromstring(z.read("META-INF/container.xml"))
         except (KeyError, ET.ParseError):

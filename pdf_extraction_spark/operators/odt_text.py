@@ -30,7 +30,7 @@ import re
 import zipfile
 import xml.etree.ElementTree as ET
 
-from pdf_extraction_spark.operators.docx_text import sanitize_for_xml
+from pdf_extraction_spark.operators.docx_text import open_package, sanitize_for_xml
 
 ODT_MIME = "application/vnd.oasis.opendocument.text"
 _OFFICE = "urn:oasis:names:tc:opendocument:xmlns:office:1.0"
@@ -132,11 +132,11 @@ def _para_text(p) -> str:
     return "".join(parts)
 
 
-def extract_odt_paragraphs(raw: bytes) -> list[str] | None:
+def extract_odt_paragraphs(raw: bytes | zipfile.ZipFile) -> list[str] | None:
     """One string per text:p, or None when the bytes are not a readable
     OpenDocument Text package."""
     try:
-        with zipfile.ZipFile(io.BytesIO(raw)) as z:
+        with open_package(raw) as z:
             names = set(z.namelist())
             if "mimetype" in names and z.read("mimetype") != ODT_MIME.encode(
                 "ascii"

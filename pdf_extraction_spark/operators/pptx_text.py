@@ -30,7 +30,7 @@ import posixpath
 import zipfile
 import xml.etree.ElementTree as ET
 
-from pdf_extraction_spark.operators.docx_text import sanitize_for_xml
+from pdf_extraction_spark.operators.docx_text import open_package, sanitize_for_xml
 
 _DML = "http://schemas.openxmlformats.org/drawingml/2006/main"
 _PML = "http://schemas.openxmlformats.org/presentationml/2006/main"
@@ -159,11 +159,11 @@ def _slide_text(xml_bytes: bytes) -> str | None:
     return "\n".join(paras)
 
 
-def extract_pptx_slides(raw: bytes) -> list[str] | None:
+def extract_pptx_slides(raw: bytes | zipfile.ZipFile) -> list[str] | None:
     """One string per slide in DECK order (sldIdLst through the rels
     part), or None when the bytes are not a readable presentation."""
     try:
-        with zipfile.ZipFile(io.BytesIO(raw)) as z:
+        with open_package(raw) as z:
             names = set(z.namelist())
             if "ppt/presentation.xml" not in names:
                 return None

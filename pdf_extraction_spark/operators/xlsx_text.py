@@ -32,7 +32,7 @@ import posixpath
 import zipfile
 import xml.etree.ElementTree as ET
 
-from pdf_extraction_spark.operators.docx_text import sanitize_for_xml
+from pdf_extraction_spark.operators.docx_text import open_package, sanitize_for_xml
 
 _SSML = "http://schemas.openxmlformats.org/spreadsheetml/2006/main"
 _PKG_REL = "http://schemas.openxmlformats.org/package/2006/relationships"
@@ -189,14 +189,14 @@ def _sheet_rows(sheet, shared: list[str]) -> list[list[str]]:
     return out
 
 
-def extract_xlsx_sheets(raw: bytes) -> list[list[list[str]]] | None:
+def extract_xlsx_sheets(raw: bytes | zipfile.ZipFile) -> list[list[list[str]]] | None:
     """Every worksheet's grid in ``workbook.xml`` order, or None when the
     bytes are not a readable workbook or no sheet resolves.  Sheet
     resolution goes through the workbook's relationship part (the spec's
     route), not a hardcoded path; a sheet whose part is missing is
     skipped."""
     try:
-        with zipfile.ZipFile(io.BytesIO(raw)) as z:
+        with open_package(raw) as z:
             names = set(z.namelist())
             if "xl/workbook.xml" not in names:
                 return None

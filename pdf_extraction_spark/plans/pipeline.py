@@ -17,12 +17,18 @@ Scale notes (100 TB / 10^12 docs):
     frequent commit barriers on very long jobs.
   * checksums use bit_xor(xxhash64(...)) — order-independent, overflow-free
     (Spark 4 runs ANSI mode; sum() of hashes would overflow).
-  * per-input-file lineage comes from input_file_name() BEFORE the shuffle,
-    grouped JVM-side — no Python in the metrics path.
+  * per-(group, input file) lineage is counted by the write job itself:
+    each row's file (input_file_name(), or the archive reader's
+    source_file) becomes a key index before the shuffle, and observed
+    metrics after the shuffle count and checksum each key — no Python in
+    the metrics path and no second decode of the input.  A pass with more
+    (group, file) keys than _IN_PASS_LINEAGE_KEYS runs one pre-pass
+    aggregate for its lineage instead.
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import time
@@ -59,15 +65,27 @@ def committed_groups(out_path: str) -> set[int]:
     return out
 
 
-def _row_hash():
-    """Per-row xxhash64 over the semantic columns (checksum ingredient)."""
-    return F.xxhash64(
-        "url",
-        F.coalesce("extracted_text", F.lit("\x00null")),
-        F.coalesce(F.to_json("fields"), F.lit("\x00null")),
-        F.coalesce(F.to_json("page_fields"), F.lit("\x00null")),
-        F.coalesce("error", F.lit("\x00null")),
-    )
+# Per-row xxhash64 over the semantic columns: the ONE checksum ingredient
+# of output_checksum, result_checksum and compact_group.  A null column
+# hashes as "\0null", never as a skipped argument.
+_ROW_HASH_SQL = (
+    "xxhash64(url, coalesce(extracted_text, '\\u0000null'),"
+    " coalesce(to_json(fields), '\\u0000null'),"
+    " coalesce(to_json(page_fields), '\\u0000null'),"
+    " coalesce(error, '\\u0000null'))"
+)
+
+# Above this many (group, input file) keys in one pass, lineage comes from
+# a pre-pass aggregate over the input instead of the write job's observed
+# metrics.  Each key costs two conditional aggregates per written row and
+# grows the pass's planning and code generation.  Measured at local[4]
+# over 512 WARC pages in 32 archives, the in-pass pass was faster up to
+# 128 keys (1.81 s vs 1.93 s) and slower from 256 (2.39 s vs 2.10 s).  At
+# 1,024 keys the observation alone cost ~2.5 s per query and ~190 us per
+# row: every result task generates the update code of every aggregate.
+_IN_PASS_LINEAGE_KEYS = 128
+
+_LINEAGE_KEY = "__lineage_key"  # private: never a user column's name
 
 
 def _lineage_record(r) -> dict:
@@ -83,8 +101,39 @@ def _checksum_exprs():
     """(count, order-independent xxhash64-xor) over the semantic columns."""
     return [
         F.count(F.lit(1)).alias("n"),
-        F.bit_xor(_row_hash()).alias("checksum"),
+        F.expr(f"bit_xor({_ROW_HASH_SQL})").alias("checksum"),
     ]
+
+
+def _keyed(agg: str, key_sql: str, keys, value_sql: str):
+    """ONE array-valued aggregate, built from SQL text in one py4j call:
+    element j is ``agg(value_sql)`` over the rows whose ``key_sql`` equals
+    ``keys[j]`` (count gives 0 and bit_xor null for a key with no rows)."""
+    return F.expr(
+        "array("
+        + ", ".join(
+            f"{agg}(CASE WHEN {key_sql} = {k} THEN {value_sql} END)" for k in keys
+        )
+        + ")"
+    )
+
+
+def _sql_string(s: str) -> str:
+    """``s`` as a Spark SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+@contextlib.contextmanager
+def _job_description(spark, text: str):
+    """Run the block's Spark jobs under ``text`` (the UI's and the status
+    store's job description), then restore the caller's, raise or not."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(text)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
 
 
 def result_checksum(result: DataFrame):
@@ -145,6 +194,102 @@ def _commit_staged_groups(
     return committed_count
 
 
+def _read_input(
+    spark: SparkSession, pages_path: str, input_format: str
+) -> tuple[DataFrame, list[str]]:
+    """The pages of ``pages_path`` and the files they are read from, each
+    spelled as the rows' lineage column spells it: the archive reader's
+    own listing (the rows' ``source_file``) for warc, zip and tar, and
+    the scan's ``inputFiles()`` (the rows' ``input_file_name()``)
+    otherwise.  Neither list costs a Spark job beyond the read's own."""
+    if input_format == "warc":
+        from pdf_extraction_spark.sources.warc import read_pages_warc_listed
+
+        return read_pages_warc_listed(spark, pages_path)
+    if input_format == "zip":
+        from pdf_extraction_spark.sources.zipsource import read_pages_zip_listed
+
+        return read_pages_zip_listed(spark, pages_path)
+    if input_format == "tar":
+        from pdf_extraction_spark.sources.tarsource import read_pages_tar_listed
+
+        return read_pages_tar_listed(spark, pages_path)
+    from pdf_extraction_spark.sources.pages import read_pages, read_pages_jsonl
+
+    if input_format == "jsonl":
+        pages = read_pages_jsonl(spark, pages_path)
+    else:
+        # read_pages enforces the documented fail-fast schema contract on
+        # the primary path too (catalog table or parquet)
+        pages = read_pages(spark, pages_path)
+    return pages, pages.inputFiles()
+
+
+def _per_file_totals(detail) -> dict[str, dict]:
+    """Per-file lineage records folded from (group, record) pairs."""
+    per_file: dict[str, dict] = {}
+    for _, rec in detail:
+        tot = per_file.setdefault(
+            rec["input_file"], dict(rec, n_rows=0, input_checksum=0)
+        )
+        tot["n_rows"] += rec["n_rows"]
+        tot["input_checksum"] ^= rec["input_checksum"]
+    return per_file
+
+
+def _lineage_aggregate(batch_pages, group_col, file_col, limit: int):
+    """(detail, per_file) lineage from ONE column-pruned per-(group, file)
+    aggregate over ``url``, run before the write; a second, per-file
+    aggregate runs only when the first overflows ``limit`` rows."""
+    totals = [
+        F.count("*").alias("n_rows"),
+        F.bit_xor(F.xxhash64("url")).alias("chk"),
+    ]
+    # collected one row past the limit: a full collect says the
+    # detailed cross product fits, and its distinct files give the
+    # file count; an overflowing one means coarse lineage for sure
+    detail = [
+        (int(r["grp"]), _lineage_record(r))
+        for r in batch_pages.groupBy(
+            group_col.alias("grp"), file_col.alias("input_file")
+        )
+        .agg(*totals)
+        .limit(limit + 1)
+        .collect()
+    ]
+    if len(detail) <= limit:
+        return detail, _per_file_totals(detail)
+    # the cross product overflows: per-file totals JVM-side
+    by_file = batch_pages.groupBy(file_col.alias("input_file")).agg(*totals)
+    return detail, {r["input_file"]: _lineage_record(r) for r in by_file.collect()}
+
+
+def _in_pass_lineage(metrics, batch, input_files, n_rows: dict, i: int):
+    """(group, record) for every (group, file) key with rows, read from
+    the write job's observed lineage arrays.  Raises unless each group's
+    per-file counts sum to the rows the group wrote: a row whose file the
+    file list misses is counted under no key."""
+    n_files = len(input_files)
+    detail = []
+    for b, g in enumerate(batch):
+        counted = 0
+        for f, name in enumerate(input_files):
+            n = int(metrics["n"][b * n_files + f])
+            if n:
+                chk = int(metrics["chk"][b * n_files + f])
+                detail.append(
+                    (g, {"input_file": name, "n_rows": n, "input_checksum": chk})
+                )
+                counted += n
+        if counted != n_rows[g]:
+            raise RuntimeError(
+                f"pass {i}: group {g} wrote {n_rows[g]} rows, but its lineage"
+                f" over the pass's {n_files} input files counts {counted};"
+                " nothing of the pass is committed"
+            )
+    return detail
+
+
 def run_extraction(
     spark: SparkSession,
     pages_path: str,
@@ -162,23 +307,28 @@ def run_extraction(
     """Run the pipeline; returns a summary dict (also persisted per group).
 
     All uncommitted groups are processed in ONE pass by default: the input
-    is scanned once, plus ONE column-pruned per-(group, file) lineage
-    aggregate over `url` (a second, per-file aggregate runs only when the
-    first overflows ``lineage_detail_limit`` rows), extracted, and
-    written ``partitionBy(group)`` into a staging directory; groups are
-    then COMMITTED in order by an atomic per-group rename +
-    manifest write, preserving the per-group resume granularity without
-    the per-group input re-scan the previous formulation paid on plain
-    parquet (on an Iceberg bucket spec the group predicate was pruned, but
-    the sandbox fallback scanned the corpus once per group).
+    is scanned and decoded once, extracted, and written
+    ``partitionBy(group)`` into a staging directory by one write job,
+    whose observed metrics also count and checksum each (group, input
+    file) pair for the lineage; groups are then COMMITTED in order by an
+    atomic per-group rename + manifest write, preserving the per-group
+    resume granularity without the per-group input re-scan the previous
+    formulation paid on plain parquet (on an Iceberg bucket spec the group
+    predicate was pruned, but the sandbox fallback scanned the corpus once
+    per group).  A pass with more than ``_IN_PASS_LINEAGE_KEYS`` (group,
+    file) pairs instead runs ONE column-pruned per-(group, file) lineage
+    aggregate over ``url`` before the write (plus a per-file aggregate
+    when that one overflows ``lineage_detail_limit`` rows).  The input
+    files come from the read's own listing; a row whose file that list
+    misses fails the pass before anything of it is committed.
 
     ``groups_per_pass`` bounds how many groups share one pass: a kill
     mid-pass loses the whole pass's work (nothing of it is committed), so
     a 10-hour crawl job may prefer e.g. 4 passes of G/4 groups — one extra
     scan per pass buys 4 intermediate commit barriers.  Default: all
     uncommitted groups in a single pass.  It also bounds the observe
-    node's width (two conditional aggregates per group in the pass), so
-    prefer it at G in the thousands.
+    nodes' width (two conditional aggregates per group, and per (group,
+    file) pair, in the pass), so prefer it at G in the thousands.
 
     ``lineage_detail_limit`` caps the per-(group, file) lineage rows
     collected to the driver per pass; above it (parquet fallback where
@@ -197,32 +347,16 @@ def run_extraction(
     ``fail_after_group`` is a test hook: raise after committing that many
     groups, simulating a killed job for the resume test.
     ``input_format``: "parquet" (Iceberg/parquet table), "jsonl"
-    (crawl-dump interchange; html carried as base64), or "warc"
-    (Common Crawl's native archive format, .warc/.warc.gz).
+    (crawl-dump interchange; html carried as base64), "warc"
+    (Common Crawl's native archive format, .warc/.warc.gz), "zip" or
+    "tar" (one page per archive member).
     """
     from pyspark.sql import Observation
 
-    from pdf_extraction_spark.sources.pages import read_pages, read_pages_jsonl
-    from pdf_extraction_spark.sources.warc import read_pages_warc
-
     if num_partitions is None:
         num_partitions = spark.sparkContext.defaultParallelism
-    if input_format == "warc":
-        pages = read_pages_warc(spark, pages_path)
-    elif input_format == "zip":
-        from pdf_extraction_spark.sources.zipsource import read_pages_zip
-
-        pages = read_pages_zip(spark, pages_path)
-    elif input_format == "tar":
-        from pdf_extraction_spark.sources.tarsource import read_pages_tar
-
-        pages = read_pages_tar(spark, pages_path)
-    elif input_format == "jsonl":
-        pages = read_pages_jsonl(spark, pages_path)
-    else:
-        # read_pages enforces the documented fail-fast schema contract on
-        # the primary path too (catalog table or parquet)
-        pages = read_pages(spark, pages_path)
+    pages, input_files = _read_input(spark, pages_path, input_format)
+    input_files = sorted(input_files)
     done = committed_groups(out_path) if resume else set()
     todo = [g for g in range(groups) if g not in done]
     summary = {"groups": groups, "skipped": sorted(done), "committed": []}
@@ -230,79 +364,53 @@ def run_extraction(
     group_col = F.pmod(F.xxhash64("url"), F.lit(groups))
     if not groups_per_pass:
         groups_per_pass = max(1, len(todo))
+    # provenance column: file-source scans expose input_file_name();
+    # the archive sources synthesize rows off a non-file plan (byte-range
+    # splits) where input_file_name() is '', so they carry the archive
+    # path as their source_file column.  Gated on the INPUT FORMAT, not
+    # on column sniffing — a user parquet table legitimately carrying its
+    # own source_file column must not hijack lineage
+    file_sql = (
+        "source_file"
+        if input_format in ("warc", "zip", "tar")
+        else "input_file_name()"
+    )
+    n_files = len(input_files)
 
     for i in range(0, len(todo), groups_per_pass):
         batch = todo[i : i + groups_per_pass]
         t0 = time.monotonic()
         batch_pages = pages.filter(group_col.isin([int(g) for g in batch]))
 
-        # per-(group, input file) lineage, computed JVM-side pre-shuffle —
-        # one aggregate job over the column-pruned `url` scan for the
-        # whole batch.  On the parquet fallback every file can feed every
-        # group, so the detailed aggregate has up to |files| x |batch|
-        # rows; past `lineage_detail_limit` that would swamp the driver
+        # per-(group, input file) lineage.  While the pass has at most
+        # _IN_PASS_LINEAGE_KEYS (group, file) keys it is counted by the
+        # write job itself (below), so the input is decoded once.  Past
+        # the cap, ONE column-pruned aggregate over `url` runs before the
+        # write.  Either way, on plain parquet every file can feed every
+        # group, so the detailed lineage has up to |files| x |batch|
+        # records; past `lineage_detail_limit` that would swamp the driver
         # (and the manifests), so lineage coarsens to per-FILE totals
         # written once per pass, with manifests carrying a reference.
         # On Iceberg each group reads only its own bucket's files and the
         # detailed path stays |files|-sized.
-        lineage: dict[int, list] = {g: [] for g in batch}
-        lineage_ref = None
-        # provenance column: file-source scans expose input_file_name();
-        # the WARC source synthesizes rows off a non-file plan (byte-range
-        # splits) where input_file_name() is '', so it carries the archive
-        # path as its source_file column.  Gated on the INPUT FORMAT, not
-        # on column sniffing — a user parquet table legitimately carrying
-        # its own source_file column must not hijack lineage
-        file_expr = (
-            F.col("source_file")
-            if input_format in ("warc", "zip", "tar")
-            else F.input_file_name()
-        )
-        totals = [
-            F.count("*").alias("n_rows"),
-            F.bit_xor(F.xxhash64("url")).alias("chk"),
-        ]
-        # collected one row past the limit: a full collect says the
-        # detailed cross product fits, and its distinct files give the
-        # file count; an overflowing one means coarse lineage for sure
-        detail = [
-            (int(r["grp"]), _lineage_record(r))
-            for r in batch_pages.groupBy(
-                group_col.alias("grp"), file_expr.alias("input_file")
+        in_pass = 0 < n_files * len(batch) <= _IN_PASS_LINEAGE_KEYS
+        if in_pass:
+            # the key is taken BEFORE the shuffle, where the row's file is
+            # known, and rides it as one long; a file the list misses
+            # gives a NULL key (the per-group sum check then fails the pass)
+            file_index = F.expr(
+                "nullif(array_position(array("
+                + ", ".join(map(_sql_string, input_files))
+                + f"), {file_sql}), 0) - 1"
             )
-            .agg(*totals)
-            .limit(lineage_detail_limit + 1)
-            .collect()
-        ]
-        per_file: dict[str, dict] = {}
-        if len(detail) <= lineage_detail_limit:
-            for _, rec in detail:
-                tot = per_file.setdefault(
-                    rec["input_file"], dict(rec, n_rows=0, input_checksum=0)
+            batch_pages = batch_pages.withColumn(
+                _LINEAGE_KEY, group_col * n_files + file_index
+            )
+        else:
+            with _job_description(spark, f"run_extraction pass {i}: lineage"):
+                detail, per_file = _lineage_aggregate(
+                    batch_pages, group_col, F.expr(file_sql), lineage_detail_limit
                 )
-                tot["n_rows"] += rec["n_rows"]
-                tot["input_checksum"] ^= rec["input_checksum"]
-        else:
-            # the cross product overflows: per-file totals JVM-side
-            by_file = batch_pages.groupBy(file_expr.alias("input_file"))
-            for r in by_file.agg(*totals).collect():
-                per_file[r["input_file"]] = _lineage_record(r)
-        n_files = len(per_file)
-        if n_files * len(batch) <= lineage_detail_limit:
-            for g, rec in detail:
-                lineage[g].append(rec)
-        else:
-            lineage_ref = f"lineage-pass-{i}.json"
-            _write_manifest_atomic(
-                os.path.join(out_path, MANIFEST_DIR, lineage_ref),
-                {
-                    "groups": [int(g) for g in batch],
-                    "n_files": n_files,
-                    "lineage": sorted(
-                        per_file.values(), key=lambda r: r["input_file"]
-                    ),
-                },
-            )
 
         # ONE shuffle keyed on (group, salted url-hash): colocates each
         # group's rows so the partitionBy write emits ~salt-many files per
@@ -327,34 +435,66 @@ def run_extraction(
         spread = batch_pages.repartition(
             num_partitions, group_col, F.pmod(key, F.lit(salt))
         )
+        if in_pass:
+            # AFTER the shuffle, in the stage that extracts and writes: a
+            # re-run shuffle-map task re-applies its accumulator updates
+            # (and an xor applied twice cancels out), while a result
+            # stage's are applied once per partition
+            keys = [g * n_files + f for g in batch for f in range(n_files)]
+            lineage_obs = Observation(f"pass-{i}-lineage")
+            spread = spread.observe(
+                lineage_obs,
+                _keyed("count", _LINEAGE_KEY, keys, "1").alias("n"),
+                _keyed("bit_xor", _LINEAGE_KEY, keys, "xxhash64(url)").alias("chk"),
+            )
         result = extract_documents(spread).withColumn("group", group_col)
 
         # checksums on the WRITE path via observed metrics — at 100 TB,
         # re-reading the committed output just to checksum it doubles
         # output I/O per commit group; per-group totals come from
         # conditional aggregates on the group column (aggs skip nulls)
-        per_group_metrics = []
-        for g in batch:
-            is_g = F.col("group") == g
-            per_group_metrics.append(
-                F.count(F.when(is_g, F.lit(1))).alias(f"n_{g}")
-            )
-            per_group_metrics.append(
-                F.bit_xor(F.when(is_g, _row_hash())).alias(f"chk_{g}")
-            )
         obs = Observation(f"pass-{i}-checksums")
-        result = result.observe(obs, *per_group_metrics)
+        result = result.observe(
+            obs,
+            _keyed("count", "`group`", batch, "1").alias("n"),
+            _keyed("bit_xor", "`group`", batch, _ROW_HASH_SQL).alias("chk"),
+        )
 
         staging = os.path.join(out_path, "_staging")
-        result.write.mode("overwrite").partitionBy("group").parquet(staging)
+        with _job_description(spark, f"run_extraction pass {i}: write"):
+            result.write.mode("overwrite").partitionBy("group").parquet(staging)
         metrics = obs.get  # blocks only until the finished write's metrics land
+        n_rows = dict(zip(batch, metrics["n"]))
+        checksum = dict(zip(batch, metrics["chk"]))
+        if in_pass:
+            detail = _in_pass_lineage(
+                lineage_obs.get, batch, input_files, n_rows, i
+            )
+            per_file = _per_file_totals(detail)
+        lineage: dict[int, list] = {g: [] for g in batch}
+        lineage_ref = None
+        if len(per_file) * len(batch) <= lineage_detail_limit:
+            for g, rec in detail:
+                lineage[g].append(rec)
+        else:
+            lineage_ref = f"lineage-pass-{i}.json"
+            _write_manifest_atomic(
+                os.path.join(out_path, MANIFEST_DIR, lineage_ref),
+                {
+                    "groups": [int(g) for g in batch],
+                    "n_files": len(per_file),
+                    "lineage": sorted(
+                        per_file.values(), key=lambda r: r["input_file"]
+                    ),
+                },
+            )
         pass_wall = round(time.monotonic() - t0, 3)
 
         def manifest_for(g):
             manifest = {
                 "group": g,
-                "n_rows": int(metrics[f"n_{g}"]),
-                "output_checksum": int(metrics[f"chk_{g}"] or 0),
+                "n_rows": int(n_rows[g]),
+                "output_checksum": int(checksum[g] or 0),
                 "lineage": sorted(
                     lineage[g], key=lambda r: r["input_file"]
                 ),
@@ -372,17 +512,21 @@ def run_extraction(
                 manifest["lineage_ref"] = lineage_ref  # coarse per-file totals
             return manifest
 
-        committed_count = _commit_staged_groups(
-            spark,
-            staging,
-            out_path,
-            batch,
-            empty_schema=result.drop("group").schema,
-            manifest_for=manifest_for,
-            summary=summary,
-            committed_count=committed_count,
-            fail_after_group=fail_after_group,
-        )
+        # the commit step's one Spark job is the empty-group template
+        with _job_description(
+            spark, f"run_extraction pass {i}: empty-group template"
+        ):
+            committed_count = _commit_staged_groups(
+                spark,
+                staging,
+                out_path,
+                batch,
+                empty_schema=result.drop("group").schema,
+                manifest_for=manifest_for,
+                summary=summary,
+                committed_count=committed_count,
+                fail_after_group=fail_after_group,
+            )
     return summary
 
 

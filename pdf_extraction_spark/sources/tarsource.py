@@ -423,9 +423,23 @@ def read_docs_tar(
     walks headers on the driver (seek-per-member) and fans members out
     individually, exact even for embedded-tar decoys.  ``.tar.gz`` and
     files at or under split_bytes read whole-file."""
+    return _read_docs_tar_listed(
+        spark, path, split_bytes=split_bytes, exact_index=exact_index
+    )[0]
+
+
+def _read_docs_tar_listed(
+    spark: SparkSession,
+    path: str,
+    *,
+    split_bytes: int | None = 256 << 20,
+    exact_index: bool = False,
+) -> tuple[DataFrame, list[str]]:
+    """``read_docs_tar`` plus the archive paths its listing found."""
     meta = (
         spark.read.format("binaryFile").load(path).select("path", "length").collect()
     )
+    archives = [r["path"] for r in meta]
     if exact_index:
         rows = []
         for r in meta:
@@ -436,10 +450,10 @@ def read_docs_tar(
             ends = offs[1:] + [int(r["length"])]
             rows.extend((r["path"], a, b) for a, b in zip(offs, ends))
         if not rows:
-            return local_frame(spark, [], TAR_DOC_SCHEMA)
+            return local_frame(spark, [], TAR_DOC_SCHEMA), archives
         df = local_frame(spark, rows, SPLIT_SCHEMA)
         df = df.repartition(min(len(rows), spark.sparkContext.defaultParallelism))
-        return map_rows(df, _tar_split_members, TAR_DOC_SCHEMA)
+        return map_rows(df, _tar_split_members, TAR_DOC_SCHEMA), archives
     task_rows: list[tuple[str, int, int]] = []
     for r in meta:
         p, ln = r["path"], int(r["length"])
@@ -450,10 +464,10 @@ def read_docs_tar(
         else:
             task_rows.append((p, 0, -1))
     if not task_rows:
-        return local_frame(spark, [], TAR_DOC_SCHEMA)
+        return local_frame(spark, [], TAR_DOC_SCHEMA), archives
     sdf = local_frame(spark, task_rows, SPLIT_SCHEMA)
     sdf = sdf.repartition(len(task_rows))
-    return map_rows(sdf, _tar_split_members, TAR_DOC_SCHEMA)
+    return map_rows(sdf, _tar_split_members, TAR_DOC_SCHEMA), archives
 
 
 def write_tar_members(out, members: Iterator[tuple[str, bytes]]) -> int:
@@ -508,7 +522,15 @@ def read_pages_tar(spark: SparkSession, path: str, **kw) -> DataFrame:
     url is ``tar://<archive>!<member>``, html carries the raw bytes and
     text is NULL, as for WARC pages: the kernel reads ``html`` whenever it
     is set, so a decoded copy would only double each member's bytes."""
-    docs = read_docs_tar(spark, path, **kw)
+    return read_pages_tar_listed(spark, path, **kw)[0]
+
+
+def read_pages_tar_listed(
+    spark: SparkSession, path: str, **kw
+) -> tuple[DataFrame, list[str]]:
+    """``read_pages_tar`` plus the archive paths its listing found,
+    spelled as the pages' ``source_file`` column spells them."""
+    docs, archives = _read_docs_tar_listed(spark, path, **kw)
     return docs.select(
         F.concat(F.lit("tar://"), F.col("archive"), F.lit("!"), F.col("name")).alias(
             "url"
@@ -516,4 +538,4 @@ def read_pages_tar(spark: SparkSession, path: str, **kw) -> DataFrame:
         F.col("content").alias("html"),
         F.lit(None).cast("string").alias("text"),
         F.col("archive").alias("source_file"),
-    )
+    ), archives

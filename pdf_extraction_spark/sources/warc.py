@@ -507,6 +507,14 @@ def read_pages_warc(
     to one task.  The listing reads binaryFile METADATA only (path +
     length — the content column is pruned out of the listing scan).
     """
+    return read_pages_warc_listed(spark, path, split_bytes=split_bytes)[0]
+
+
+def read_pages_warc_listed(
+    spark: SparkSession, path: str, *, split_bytes: int = 256 << 20
+) -> tuple[DataFrame, list[str]]:
+    """``read_pages_warc`` plus the archive paths its listing found,
+    spelled as the pages' ``source_file`` column spells them."""
     meta = (
         spark.read.format("binaryFile").load(path).select("path", "length").collect()
     )
@@ -530,10 +538,11 @@ def read_pages_warc(
         else:
             task_rows.append((p, 0, -1))
 
+    archives = [r["path"] for r in meta]
     if not task_rows:
-        return local_frame(spark, [], WARC_PAGES_SCHEMA)
+        return local_frame(spark, [], WARC_PAGES_SCHEMA), archives
     sdf = local_frame(spark, task_rows, SPLIT_SCHEMA).repartition(len(task_rows))
-    return map_rows(sdf, _warc_split_pages, WARC_PAGES_SCHEMA)
+    return map_rows(sdf, _warc_split_pages, WARC_PAGES_SCHEMA), archives
 
 
 def write_pages_warc(rows, path: str, *, compress: bool = True) -> None:

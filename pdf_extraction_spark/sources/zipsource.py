@@ -246,9 +246,17 @@ def read_docs_zip(
     matching ``path``.  The driver reads only EOCD + central directory
     per archive; member bytes are read and inflated on executors, one
     seek per member."""
+    return _read_docs_zip_listed(spark, path, parallelism)[0]
+
+
+def _read_docs_zip_listed(
+    spark: SparkSession, path: str, parallelism: int | None = None
+) -> tuple[DataFrame, list[str]]:
+    """``read_docs_zip`` plus the archive paths its listing found."""
     meta = (
         spark.read.format("binaryFile").load(path).select("path", "length").collect()
     )
+    archives = [r["path"] for r in meta]
     rows = []
     for r in meta:
         for name, off, csize, usize, method, crc in list_zip_entries(
@@ -256,11 +264,11 @@ def read_docs_zip(
         ):
             rows.append((r["path"], name, off, csize, usize, method, crc))
     if not rows:
-        return local_frame(spark, [], ZIP_DOC_SCHEMA)
+        return local_frame(spark, [], ZIP_DOC_SCHEMA), archives
     df = local_frame(spark, rows, _ENTRY_SCHEMA)
     n = parallelism or spark.sparkContext.defaultParallelism
     df = df.repartition(min(len(rows), n))
-    return map_rows(df, _read_member, ZIP_DOC_SCHEMA)
+    return map_rows(df, _read_member, ZIP_DOC_SCHEMA), archives
 
 
 def read_pages_zip(spark: SparkSession, path: str) -> DataFrame:
@@ -268,7 +276,15 @@ def read_pages_zip(spark: SparkSession, path: str) -> DataFrame:
     ``zip://<archive>!<member>``, html carries the raw bytes and text is
     NULL, as for WARC pages: the kernel reads ``html`` whenever it is set,
     so a decoded copy would only double each member's bytes."""
-    docs = read_docs_zip(spark, path)
+    return read_pages_zip_listed(spark, path)[0]
+
+
+def read_pages_zip_listed(
+    spark: SparkSession, path: str
+) -> tuple[DataFrame, list[str]]:
+    """``read_pages_zip`` plus the archive paths its listing found,
+    spelled as the pages' ``source_file`` column spells them."""
+    docs, archives = _read_docs_zip_listed(spark, path)
     return docs.select(
         F.concat(F.lit("zip://"), F.col("archive"), F.lit("!"), F.col("name")).alias(
             "url"
@@ -279,4 +295,4 @@ def read_pages_zip(spark: SparkSession, path: str) -> DataFrame:
         # non-file plan where input_file_name() is empty, so the archive
         # path rides along explicitly
         F.col("archive").alias("source_file"),
-    )
+    ), archives

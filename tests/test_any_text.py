@@ -341,3 +341,32 @@ def test_spark_plan_is_shuffle_free_when_well_split(spark):
     # when the input is a scan; over an already-repartitioned in-memory
     # frame the guard still must not add a SECOND exchange
     assert plan.count("Exchange") <= 1
+
+
+@pytest.mark.parametrize(
+    "build, doc_type",
+    [
+        (lambda: build_docx(["para"]), "docx"),
+        (lambda: build_xlsx([["cell", "42"]]), "xlsx"),
+        (lambda: build_pptx(["slide"]), "pptx"),
+        (lambda: build_odt(["para"]), "odt"),
+        (lambda: build_epub(["chap"]), "epub"),
+    ],
+)
+def test_office_blob_opens_its_zip_once(monkeypatch, build, doc_type):
+    """The sniff hands the archive it opened to the extractor: one
+    ``zipfile.ZipFile`` per blob, with the same type and text."""
+    import zipfile
+
+    raw = build()
+    want = extract_any(raw)
+    opened = []
+
+    class Counting(zipfile.ZipFile):
+        def __init__(self, *args, **kwargs):
+            opened.append(args[0])
+            super().__init__(*args, **kwargs)
+
+    monkeypatch.setattr(zipfile, "ZipFile", Counting)
+    assert extract_any(raw) == want and want[0] == doc_type and want[1]
+    assert len(opened) == 1
