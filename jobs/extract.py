@@ -3,7 +3,7 @@
 Cluster usage:
     spark-submit --py-files pdf_extraction_spark.zip jobs/extract.py \
         --input s3://.../pages --output s3://.../extractions \
-        --groups 64 --partitions 4096 --salt 16 [--resume]
+        --groups 64 --partitions 4096 [--resume]
 
 Sandbox usage (local[N] is picked via SPARK_GRAFT_CPUS or --cpus):
     python jobs/extract.py --input fixtures/pages_unit.parquet --output /tmp/out
@@ -25,8 +25,9 @@ def main(argv=None) -> int:
     p.add_argument("--input", required=True, help="pages table path (parquet)")
     p.add_argument("--output", required=True, help="output directory")
     p.add_argument("--groups", type=int, default=4, help="commit groups (snapshots)")
-    p.add_argument("--partitions", type=int, default=None, help="shuffle partitions")
-    p.add_argument("--salt", type=int, default=8, help="size-salt buckets for skew")
+    p.add_argument("--partitions", type=int, default=None,
+                   help="write tasks per pass (each group gets "
+                        "max(1, partitions // groups in the pass) of them)")
     p.add_argument("--resume", action="store_true", help="skip committed groups")
     p.add_argument("--groups-per-pass", type=int, default=None,
                    help="groups extracted per input pass (default: all "
@@ -61,7 +62,6 @@ def main(argv=None) -> int:
         args.input,
         args.output,
         num_partitions=args.partitions,
-        salt_buckets=args.salt,
         input_format=args.format,
         groups=args.groups,
         resume=args.resume,

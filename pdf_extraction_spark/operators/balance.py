@@ -16,8 +16,8 @@ error containment stays in each row function (a decoder's
 
 :func:`map_documents` is ``map_rows`` behind the under-split guard, for
 operators over input whose partitioning they do not control.  The
-sources call ``map_rows`` directly: each sets its own task count when it
-repartitions its split table, and the guard must not add a second
+sources call ``map_rows`` directly: each sets its own task count in its
+split table (``session.split_table``), and the guard must not add an
 exchange on top of it.
 
 Under-split guard: ``mapInArrow`` can never run wider than its input

@@ -6,9 +6,12 @@ UDF — pages/lines of a document never cross a partition boundary, because
 the F10/F12 semantics are order-sensitive *within* a document and the
 per-document function is pure, so partitioning can never change content.
 The Spark plan around this node is fully declarative (scan → prune →
-repartition → MapInArrow → sink) and Catalyst prunes the fat `html`
-binary column out of the parquet scan whenever a caller selects only
-text-layer columns.
+MapInArrow → sink) and Catalyst prunes the fat `html` binary column out
+of the parquet scan whenever a caller selects only text-layer columns.
+Over an archive source's split table, :func:`extract_splits` makes the
+reader and the kernel one MapInArrow, so a page crosses into Python once;
+a commit pass (plans/pipeline.py) shuffles only the kernel's outputs,
+to colocate each group for its write.
 """
 
 from __future__ import annotations
@@ -26,7 +29,7 @@ from pyspark.sql.types import (
 )
 
 from pdf_extraction_spark.kernel import extract_document, extract_fields_direct
-from pdf_extraction_spark.operators.balance import map_documents
+from pdf_extraction_spark.operators.balance import map_documents, map_rows
 
 FIELD_PAIR = StructType(
     [StructField("field", StringType()), StructField("value", StringType())]
@@ -51,16 +54,47 @@ EXTRACT_SCHEMA = StructType(
 )
 
 
-def extract_documents(pages: DataFrame, max_doc_chars: int | None = None) -> DataFrame:
-    """pages(url, html, text, ...) -> extraction records (EXTRACT_SCHEMA).
+# EXTRACT_SCHEMA + the archive each document was read from
+SPLIT_EXTRACT_SCHEMA = StructType(
+    list(EXTRACT_SCHEMA.fields) + [StructField("source_file", StringType())]
+)
 
-    Selects only the three columns the kernel needs, so Catalyst prunes
+
+def extract_documents(
+    pages: DataFrame, max_doc_chars: int | None = None, *, passthrough=()
+) -> DataFrame:
+    """pages(url, html, text, ...) -> extraction records (EXTRACT_SCHEMA,
+    then each ``passthrough`` column copied unchanged from its page).
+
+    Selects only the columns the kernel needs, so Catalyst prunes
     everything else (incl. `warc_ts`/`lang`) out of the source scan.
     ``max_doc_chars``: per-document input-size cap; oversize documents land
     on the ``error`` column (F18) instead of stalling a worker.
     """
     fn = functools.partial(extract_document, max_doc_chars=max_doc_chars)
-    return map_documents(pages.select("url", "html", "text"), fn, EXTRACT_SCHEMA)
+    src = pages.select("url", "html", "text", *passthrough)
+    schema = StructType(
+        list(EXTRACT_SCHEMA.fields) + [src.schema[c] for c in passthrough]
+    )
+    return map_documents(src, fn, schema, passthrough=passthrough)
+
+
+def _read_and_extract(read_docs, keep, *split) -> list[tuple]:
+    out = []
+    for url, html, text, source_file in read_docs(*split):
+        if keep is None or keep(url):
+            out.append(extract_document(url, html, text) + (source_file,))
+    return out
+
+
+def extract_splits(splits: DataFrame, read_docs, keep=None) -> DataFrame:
+    """A source's split table -> extraction records (SPLIT_EXTRACT_SCHEMA)
+    in ONE Python stage: ``read_docs(*split_row)`` returns the split's
+    (url, html, text, source_file) documents, and each one ``keep(url)``
+    accepts (default: all) goes straight through the kernel, so no page
+    is shipped back to the JVM between reading and extracting."""
+    fn = functools.partial(_read_and_extract, read_docs, keep)
+    return map_rows(splits, fn, SPLIT_EXTRACT_SCHEMA)
 
 
 KV_LONG_SCHEMA = StructType(

@@ -116,8 +116,10 @@ def run_curation(
 
     Like ``plans.pipeline.run_extraction``, all uncommitted groups run in
     ONE input pass by default: one curation job writes
-    ``partitionBy(group)`` into a staging directory (per-group metrics
-    from conditional observe aggregates), then groups are committed in
+    ``partitionBy(group)`` into a staging directory (per-group output
+    metrics from conditional observe aggregates in the write's result
+    stage, per-group input counts from one aggregate over the input
+    slice), then groups are committed in
     order by atomic rename + manifest — one corpus scan for any G, the
     same per-group resume granularity.  ``groups_per_pass`` bounds how
     many groups share a pass (extra scans buy commit barriers on very
@@ -143,14 +145,15 @@ def run_curation(
         t0 = time.monotonic()
         slice_df = docs.filter(group_key.isin([int(g) for g in batch]))
 
-        obs_in = Observation(f"curate-pass-{i}-in")
-        slice_df = slice_df.observe(
-            obs_in,
-            *[
-                F.count(F.when(group_key == g, F.lit(1))).alias(f"n_in_{g}")
-                for g in batch
-            ],
-        )
+        # n_input per group from a real aggregate over the slice: an
+        # observation below curated_docs' joins would run in shuffle-map
+        # and broadcast stages, where a re-run task applies its count again
+        n_input = {
+            int(r["g"]): int(r["n"])
+            for r in slice_df.groupBy(group_key.alias("g"))
+            .agg(F.count(F.lit(1)).alias("n"))
+            .collect()
+        }
         curated = curated_docs(
             slice_df, min_tokens=min_tokens, min_score=min_score
         ).withColumn("group", F.pmod(F.xxhash64("fingerprint"), F.lit(groups)))
@@ -171,11 +174,11 @@ def run_curation(
 
         staging = os.path.join(out_path, "_staging")
         curated.write.mode("overwrite").partitionBy("group").parquet(staging)
-        m_in, m_out = obs_in.get, obs_out.get
+        m_out = obs_out.get
         pass_wall = round(time.monotonic() - t0, 3)
 
         def manifest_for(g):
-            n_in, n_out = int(m_in[f"n_in_{g}"]), int(m_out[f"n_out_{g}"])
+            n_in, n_out = n_input.get(g, 0), int(m_out[f"n_out_{g}"])
             return {
                 "group": g,
                 "n_input": n_in,

@@ -17,27 +17,44 @@ Scale notes (100 TB / 10^12 docs):
     frequent commit barriers on very long jobs.
   * checksums use bit_xor(xxhash64(...)) — order-independent, overflow-free
     (Spark 4 runs ANSI mode; sum() of hashes would overflow).
+  * a pass is one Python stage, one exchange and the write.  The Python
+    stage reads and extracts (an archive's reader and the kernel share
+    one row function; a table's scan feeds the kernel directly), so
+    each page crosses into Python once, and the stage is as balanced
+    as its splits (an archive over an even share of the input's bytes
+    is read as byte ranges).  The exchange then moves only the kernel's
+    outputs, into exact per-group slots, so each write task holds whole
+    groups.
   * per-(group, input file) lineage is counted by the write job itself:
-    each row's file (input_file_name(), or the archive reader's
-    source_file) becomes a key index before the shuffle, and observed
-    metrics after the shuffle count and checksum each key — no Python in
-    the metrics path and no second decode of the input.  A pass with more
-    (group, file) keys than _IN_PASS_LINEAGE_KEYS runs one pre-pass
-    aggregate for its lineage instead.
+    each row's file (input_file_name() at the scan, or the archive
+    reader's source_file) becomes a key index, and one observation
+    after the exchange counts and checksums each key and each group —
+    no Python in the metrics path and no second decode of the input.
+    A pass with more (group, file) keys than _IN_PASS_LINEAGE_KEYS runs
+    one pre-pass aggregate over the reader's output for its lineage
+    instead.
 """
 
 from __future__ import annotations
 
 import contextlib
+import functools
 import json
 import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import BinaryType, StringType, StructField, StructType
 
-from pdf_extraction_spark.operators.extract import extract_documents
+from pdf_extraction_spark.operators.balance import map_rows
+from pdf_extraction_spark.operators.extract import (
+    EXTRACT_SCHEMA,
+    extract_documents,
+    extract_splits,
+)
 from pdf_extraction_spark.session import local_frame
+from pdf_extraction_spark.xxhash64 import commit_group
 
 MANIFEST_DIR = "_manifests"
 
@@ -194,26 +211,44 @@ def _commit_staged_groups(
     return committed_count
 
 
-def _read_input(
-    spark: SparkSession, pages_path: str, input_format: str
-) -> tuple[DataFrame, list[str]]:
-    """The pages of ``pages_path`` and the files they are read from, each
-    spelled as the rows' lineage column spells it: the archive reader's
-    own listing (the rows' ``source_file``) for warc, zip and tar, and
-    the scan's ``inputFiles()`` (the rows' ``input_file_name()``)
-    otherwise.  Neither list costs a Spark job beyond the read's own."""
+_ARCHIVE_FORMATS = ("warc", "zip", "tar")
+
+# what an archive source's reader gives the pipeline per document
+_DOCS_SCHEMA = StructType(
+    [
+        StructField("url", StringType()),
+        StructField("html", BinaryType()),
+        StructField("text", StringType()),
+        StructField("source_file", StringType()),
+    ]
+)
+
+
+def _read_input(spark: SparkSession, pages_path: str, input_format: str):
+    """The input of ``pages_path`` and the files it is read from, each
+    spelled as the rows' lineage column spells them.
+
+    For warc, zip and tar the input is ``(splits, read_docs)``: the
+    source's split table and its reader, which turns one split row into
+    (url, html, text, source_file) documents; the files are the reader's
+    own listing.  Otherwise it is the pages, and the files the scan's
+    ``inputFiles()`` (the rows' ``input_file_name()``).  Neither list
+    costs a Spark job beyond the read's own."""
     if input_format == "warc":
-        from pdf_extraction_spark.sources.warc import read_pages_warc_listed
+        from pdf_extraction_spark.sources.warc import warc_split_docs, warc_splits
 
-        return read_pages_warc_listed(spark, pages_path)
+        splits, files = warc_splits(spark, pages_path)
+        return (splits, warc_split_docs), files
     if input_format == "zip":
-        from pdf_extraction_spark.sources.zipsource import read_pages_zip_listed
+        from pdf_extraction_spark.sources.zipsource import zip_split_docs, zip_splits
 
-        return read_pages_zip_listed(spark, pages_path)
+        splits, files = zip_splits(spark, pages_path)
+        return (splits, zip_split_docs), files
     if input_format == "tar":
-        from pdf_extraction_spark.sources.tarsource import read_pages_tar_listed
+        from pdf_extraction_spark.sources.tarsource import tar_split_docs, tar_splits
 
-        return read_pages_tar_listed(spark, pages_path)
+        splits, files = tar_splits(spark, pages_path)
+        return (splits, tar_split_docs), files
     from pdf_extraction_spark.sources.pages import read_pages, read_pages_jsonl
 
     if input_format == "jsonl":
@@ -223,6 +258,11 @@ def _read_input(
         # the primary path too (catalog table or parquet)
         pages = read_pages(spark, pages_path)
     return pages, pages.inputFiles()
+
+
+def _in_batch(groups: int, batch: frozenset, url) -> bool:
+    """Whether ``url``'s commit group is one of ``batch``'s."""
+    return commit_group(url, groups) in batch
 
 
 def _per_file_totals(detail) -> dict[str, dict]:
@@ -266,7 +306,8 @@ def _lineage_aggregate(batch_pages, group_col, file_col, limit: int):
 
 def _in_pass_lineage(metrics, batch, input_files, n_rows: dict, i: int):
     """(group, record) for every (group, file) key with rows, read from
-    the write job's observed lineage arrays.  Raises unless each group's
+    the write job's observed lineage arrays (``lineage_n``,
+    ``lineage_chk``).  Raises unless each group's
     per-file counts sum to the rows the group wrote: a row whose file the
     file list misses is counted under no key."""
     n_files = len(input_files)
@@ -274,9 +315,9 @@ def _in_pass_lineage(metrics, batch, input_files, n_rows: dict, i: int):
     for b, g in enumerate(batch):
         counted = 0
         for f, name in enumerate(input_files):
-            n = int(metrics["n"][b * n_files + f])
+            n = int(metrics["lineage_n"][b * n_files + f])
             if n:
-                chk = int(metrics["chk"][b * n_files + f])
+                chk = int(metrics["lineage_chk"][b * n_files + f])
                 detail.append(
                     (g, {"input_file": name, "n_rows": n, "input_checksum": chk})
                 )
@@ -296,7 +337,6 @@ def run_extraction(
     out_path: str,
     *,
     num_partitions: int | None = None,
-    salt_buckets: int = 8,
     groups: int = 4,
     resume: bool = False,
     fail_after_group: int | None = None,
@@ -306,29 +346,47 @@ def run_extraction(
 ) -> dict:
     """Run the pipeline; returns a summary dict (also persisted per group).
 
-    All uncommitted groups are processed in ONE pass by default: the input
-    is scanned and decoded once, extracted, and written
-    ``partitionBy(group)`` into a staging directory by one write job,
-    whose observed metrics also count and checksum each (group, input
-    file) pair for the lineage; groups are then COMMITTED in order by an
-    atomic per-group rename + manifest write, preserving the per-group
-    resume granularity without the per-group input re-scan the previous
-    formulation paid on plain parquet (on an Iceberg bucket spec the group
-    predicate was pruned, but the sandbox fallback scanned the corpus once
-    per group).  A pass with more than ``_IN_PASS_LINEAGE_KEYS`` (group,
-    file) pairs instead runs ONE column-pruned per-(group, file) lineage
-    aggregate over ``url`` before the write (plus a per-file aggregate
-    when that one overflows ``lineage_detail_limit`` rows).  The input
-    files come from the read's own listing; a row whose file that list
-    misses fails the pass before anything of it is committed.
+    All uncommitted groups are processed in ONE pass by default, and a
+    pass is one Python stage, one exchange and the write:
+
+    * the Python stage reads and extracts.  For warc, zip and tar it is
+      one ``map_rows`` over the source's split table whose row function
+      reads the split and runs the kernel on each page
+      (``operators.extract.extract_splits``); for parquet and jsonl the
+      kernel runs over the scan (``extract_documents``), each page's
+      lineage key riding through it as a passthrough column.  A pass
+      that leaves groups out (``resume``, ``groups_per_pass``) has the
+      archive stage skip their pages before the kernel, by a Python port
+      of the group hash; Spark's group filter after the kernel stays the
+      authority on what is written.
+    * the exchange, ``repartitionById`` on an exact slot
+      ``index_in_batch(group) * s + pmod(hash(url), s)`` with
+      ``s = max(1, num_partitions // len(batch))``, moves only the
+      kernel's outputs, so each write task holds whole slots of one
+      group and the ``partitionBy(group)`` write into a staging
+      directory emits ``s`` files per group.
+    * one observation after the exchange, in the result stage (a re-run
+      shuffle-map task would apply its accumulator updates again, and an
+      xor applied twice cancels out), counts and checksums each group's
+      rows and, at most ``_IN_PASS_LINEAGE_KEYS`` (group, input file)
+      keys per pass, each key's lineage.  A wider pass runs ONE
+      column-pruned per-(group, file) aggregate over the reader's output
+      (never the kernel's) before the write (plus a per-file aggregate
+      when that one overflows ``lineage_detail_limit`` rows).  The input
+      files come from the read's own listing; a row whose file that
+      list misses fails the pass before anything of it is committed.
+
+    Groups are then COMMITTED in order by an atomic per-group rename +
+    manifest write, so the input is scanned once per pass for any number
+    of groups while resume keeps per-group granularity.
 
     ``groups_per_pass`` bounds how many groups share one pass: a kill
     mid-pass loses the whole pass's work (nothing of it is committed), so
     a 10-hour crawl job may prefer e.g. 4 passes of G/4 groups — one extra
     scan per pass buys 4 intermediate commit barriers.  Default: all
-    uncommitted groups in a single pass.  It also bounds the observe
-    nodes' width (two conditional aggregates per group, and per (group,
-    file) pair, in the pass), so prefer it at G in the thousands.
+    uncommitted groups in a single pass.  It also bounds the observation's
+    width (two conditional aggregates per group, and per (group, file)
+    pair, in the pass), so prefer it at G in the thousands.
 
     ``lineage_detail_limit`` caps the per-(group, file) lineage rows
     collected to the driver per pass; above it (parquet fallback where
@@ -355,7 +413,7 @@ def run_extraction(
 
     if num_partitions is None:
         num_partitions = spark.sparkContext.defaultParallelism
-    pages, input_files = _read_input(spark, pages_path, input_format)
+    source, input_files = _read_input(spark, pages_path, input_format)
     input_files = sorted(input_files)
     done = committed_groups(out_path) if resume else set()
     todo = [g for g in range(groups) if g not in done]
@@ -364,30 +422,27 @@ def run_extraction(
     group_col = F.pmod(F.xxhash64("url"), F.lit(groups))
     if not groups_per_pass:
         groups_per_pass = max(1, len(todo))
+    archive = input_format in _ARCHIVE_FORMATS
     # provenance column: file-source scans expose input_file_name();
     # the archive sources synthesize rows off a non-file plan (byte-range
-    # splits) where input_file_name() is '', so they carry the archive
-    # path as their source_file column.  Gated on the INPUT FORMAT, not
-    # on column sniffing — a user parquet table legitimately carrying its
+    # splits) where input_file_name() is '', so their reader emits the
+    # archive path as source_file.  Gated on the INPUT FORMAT, not on
+    # column sniffing — a user parquet table legitimately carrying its
     # own source_file column must not hijack lineage
-    file_sql = (
-        "source_file"
-        if input_format in ("warc", "zip", "tar")
-        else "input_file_name()"
-    )
+    file_sql = "source_file" if archive else "input_file_name()"
     n_files = len(input_files)
 
     for i in range(0, len(todo), groups_per_pass):
         batch = todo[i : i + groups_per_pass]
         t0 = time.monotonic()
-        batch_pages = pages.filter(group_col.isin([int(g) for g in batch]))
+        in_batch = group_col.isin([int(g) for g in batch])
 
         # per-(group, input file) lineage.  While the pass has at most
         # _IN_PASS_LINEAGE_KEYS (group, file) keys it is counted by the
-        # write job itself (below), so the input is decoded once.  Past
-        # the cap, ONE column-pruned aggregate over `url` runs before the
-        # write.  Either way, on plain parquet every file can feed every
-        # group, so the detailed lineage has up to |files| x |batch|
+        # write job's observation (below), so the input is decoded once.
+        # Past the cap, ONE column-pruned aggregate over `url` runs before
+        # the write.  Either way, on plain parquet every file can feed
+        # every group, so the detailed lineage has up to |files| x |batch|
         # records; past `lineage_detail_limit` that would swamp the driver
         # (and the manifests), so lineage coarsens to per-FILE totals
         # written once per pass, with manifests carrying a reference.
@@ -395,81 +450,89 @@ def run_extraction(
         # detailed path stays |files|-sized.
         in_pass = 0 < n_files * len(batch) <= _IN_PASS_LINEAGE_KEYS
         if in_pass:
-            # the key is taken BEFORE the shuffle, where the row's file is
-            # known, and rides it as one long; a file the list misses
-            # gives a NULL key (the per-group sum check then fails the pass)
-            file_index = F.expr(
+            # (group, file) -> key index; a file the list misses gives a
+            # NULL key (the per-group sum check then fails the pass)
+            lineage_key = group_col * n_files + F.expr(
                 "nullif(array_position(array("
                 + ", ".join(map(_sql_string, input_files))
                 + f"), {file_sql}), 0) - 1"
             )
-            batch_pages = batch_pages.withColumn(
-                _LINEAGE_KEY, group_col * n_files + file_index
+        if archive:
+            splits, read_docs = source
+            if not in_pass:
+                read = map_rows(splits, read_docs, _DOCS_SCHEMA).filter(in_batch)
+                with _job_description(spark, f"run_extraction pass {i}: lineage"):
+                    detail, per_file = _lineage_aggregate(
+                        read, group_col, F.col(file_sql), lineage_detail_limit
+                    )
+            # a pass that leaves groups out spends no kernel on their pages
+            keep = (
+                None
+                if len(batch) == groups
+                else functools.partial(_in_batch, groups, frozenset(batch))
             )
+            result = extract_splits(splits, read_docs, keep).filter(in_batch)
+            if in_pass:
+                result = result.withColumn(_LINEAGE_KEY, lineage_key)
+            result = result.drop("source_file")
         else:
-            with _job_description(spark, f"run_extraction pass {i}: lineage"):
-                detail, per_file = _lineage_aggregate(
-                    batch_pages, group_col, F.expr(file_sql), lineage_detail_limit
-                )
-
-        # ONE shuffle keyed on (group, salted url-hash): colocates each
-        # group's rows so the partitionBy write emits ~salt-many files per
-        # group instead of |batch| files from every task, while the salt
-        # keeps ~4x num_partitions key-buckets for balance and spreads
-        # size-skewed documents like salted_repartition does.  The salt
-        # never drops below salt_buckets: with many groups per pass the
-        # balance term goes to 1, which would pin every group's giants to
-        # one partition — the exact straggler the salt exists to prevent
-        salt = max(
-            salt_buckets if salt_buckets > 1 else 1,
-            (num_partitions * 4) // max(1, len(batch)),
-        )
-        key = F.xxhash64("url")
-        if salt_buckets > 1:
-            size_col = F.coalesce(
-                F.length("text").cast("long"),
-                F.length("html").cast("long"),
-                F.lit(0),
+            batch_pages = source.filter(in_batch)
+            if in_pass:
+                # the key is taken at the scan, where input_file_name()
+                # is known, and rides through the kernel
+                batch_pages = batch_pages.withColumn(_LINEAGE_KEY, lineage_key)
+            else:
+                with _job_description(spark, f"run_extraction pass {i}: lineage"):
+                    detail, per_file = _lineage_aggregate(
+                        batch_pages, group_col, F.expr(file_sql), lineage_detail_limit
+                    )
+            result = extract_documents(
+                batch_pages, passthrough=(_LINEAGE_KEY,) if in_pass else ()
             )
-            key = F.xxhash64("url", (size_col % salt_buckets).cast("string"))
-        spread = batch_pages.repartition(
-            num_partitions, group_col, F.pmod(key, F.lit(salt))
-        )
-        if in_pass:
-            # AFTER the shuffle, in the stage that extracts and writes: a
-            # re-run shuffle-map task re-applies its accumulator updates
-            # (and an xor applied twice cancels out), while a result
-            # stage's are applied once per partition
-            keys = [g * n_files + f for g in batch for f in range(n_files)]
-            lineage_obs = Observation(f"pass-{i}-lineage")
-            spread = spread.observe(
-                lineage_obs,
-                _keyed("count", _LINEAGE_KEY, keys, "1").alias("n"),
-                _keyed("bit_xor", _LINEAGE_KEY, keys, "xxhash64(url)").alias("chk"),
-            )
-        result = extract_documents(spread).withColumn("group", group_col)
 
-        # checksums on the WRITE path via observed metrics — at 100 TB,
-        # re-reading the committed output just to checksum it doubles
-        # output I/O per commit group; per-group totals come from
-        # conditional aggregates on the group column (aggs skip nulls)
-        obs = Observation(f"pass-{i}-checksums")
-        result = result.observe(
-            obs,
+        # ONE exchange, after the kernel: slot s * (index of the row's
+        # group in the batch) + pmod(url-hash, s) colocates each group's
+        # rows in s whole partitions, so the partitionBy write emits s
+        # files per group instead of |batch| files from every task.  The
+        # spread hash is murmur3 `hash`, not the group's xxhash64: within
+        # one group xxhash64 mod G is fixed, so xxhash64 mod s would fill
+        # only s / gcd(G, s) of the group's slots
+        spread_by = max(1, num_partitions // len(batch))
+        slot = F.expr(
+            f"(array_position(array({', '.join(str(int(g)) for g in batch)}),"
+            f" `group`) - 1) * {spread_by} + pmod(hash(url), {spread_by})"
+        ).cast("int")
+        result = result.withColumn("group", group_col)
+        spread = result.repartitionById(len(batch) * spread_by, slot)
+
+        # checksums (and lineage) on the WRITE path via ONE observation
+        # after the exchange — at 100 TB, re-reading the committed output
+        # just to checksum it doubles output I/O per commit group;
+        # per-group totals come from conditional aggregates on the group
+        # column (aggs skip nulls)
+        metrics = [
             _keyed("count", "`group`", batch, "1").alias("n"),
             _keyed("bit_xor", "`group`", batch, _ROW_HASH_SQL).alias("chk"),
-        )
+        ]
+        if in_pass:
+            keys = [g * n_files + f for g in batch for f in range(n_files)]
+            metrics += [
+                _keyed("count", _LINEAGE_KEY, keys, "1").alias("lineage_n"),
+                _keyed("bit_xor", _LINEAGE_KEY, keys, "xxhash64(url)").alias(
+                    "lineage_chk"
+                ),
+            ]
+        obs = Observation(f"pass-{i}")
+        spread = spread.observe(obs, *metrics).drop(_LINEAGE_KEY)
 
         staging = os.path.join(out_path, "_staging")
         with _job_description(spark, f"run_extraction pass {i}: write"):
-            result.write.mode("overwrite").partitionBy("group").parquet(staging)
-        metrics = obs.get  # blocks only until the finished write's metrics land
-        n_rows = dict(zip(batch, metrics["n"]))
-        checksum = dict(zip(batch, metrics["chk"]))
+            spread.write.mode("overwrite").partitionBy("group").parquet(staging)
+        observed = obs.get  # blocks only until the finished write's metrics land
+        n_rows = dict(zip(batch, observed["n"]))
+        checksum = dict(zip(batch, observed["chk"]))
         if in_pass:
-            detail = _in_pass_lineage(
-                lineage_obs.get, batch, input_files, n_rows, i
-            )
+            detail = _in_pass_lineage(observed, batch, input_files, n_rows, i)
             per_file = _per_file_totals(detail)
         lineage: dict[int, list] = {g: [] for g in batch}
         lineage_ref = None
@@ -506,7 +569,6 @@ def run_extraction(
                 "pass_wall_sec": pass_wall,
                 "pass_group_count": len(batch),
                 "num_partitions": num_partitions,
-                "salt_buckets": salt_buckets,
             }
             if lineage_ref is not None:
                 manifest["lineage_ref"] = lineage_ref  # coarse per-file totals
@@ -521,7 +583,7 @@ def run_extraction(
                 staging,
                 out_path,
                 batch,
-                empty_schema=result.drop("group").schema,
+                empty_schema=EXTRACT_SCHEMA,
                 manifest_for=manifest_for,
                 summary=summary,
                 committed_count=committed_count,

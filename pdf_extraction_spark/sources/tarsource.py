@@ -59,8 +59,13 @@ from pyspark.sql.types import (
 )
 
 from pdf_extraction_spark.operators.balance import map_rows
-from pdf_extraction_spark.session import local_frame
-from pdf_extraction_spark.sources.warc import SPLIT_SCHEMA, _open_binary, _read_whole
+from pdf_extraction_spark.session import local_frame, split_table
+from pdf_extraction_spark.sources.warc import (
+    SPLIT_SCHEMA,
+    _open_binary,
+    _read_whole,
+    spread_split_bytes,
+)
 
 BLOCK = 512
 _META = (b"x", b"L", b"K")
@@ -408,6 +413,43 @@ def _tar_split_members(path: str, start: int, end: int) -> list[tuple]:
         raise ValueError(f"{path}: {e}") from e
 
 
+def _tar_task_rows(
+    spark: SparkSession,
+    path: str,
+    split_bytes: int | None,
+    exact_index: bool,
+) -> tuple[list[tuple[str, int, int]], int, list[str]]:
+    """The split-table rows of ``path``'s tars, the task count they run
+    in, and the archive paths the listing found."""
+    meta = (
+        spark.read.format("binaryFile").load(path).select("path", "length").collect()
+    )
+    archives = [r["path"] for r in meta]
+    if split_bytes is not None:
+        split_bytes = spread_split_bytes(
+            spark, [int(r["length"]) for r in meta], split_bytes
+        )
+    rows: list[tuple[str, int, int]] = []
+    if exact_index:
+        for r in meta:
+            offs = [off for _, off, _ in list_tar_entries(r["path"], int(r["length"]))]
+            # one range per member, tiled at logical record starts:
+            # [off, next member's off) holds exactly the record at off,
+            # and no meta chain crosses a range end
+            ends = offs[1:] + [int(r["length"])]
+            rows.extend((r["path"], a, b) for a, b in zip(offs, ends))
+        return rows, min(len(rows), spark.sparkContext.defaultParallelism), archives
+    for r in meta:
+        p, ln = r["path"], int(r["length"])
+        gz = p.endswith(".gz") or p.endswith(".tgz")
+        if split_bytes is not None and not gz and ln > split_bytes:
+            for s in range(0, ln, split_bytes):
+                rows.append((p, s, min(s + split_bytes, ln)))
+        else:
+            rows.append((p, 0, -1))
+    return rows, len(rows), archives
+
+
 def read_docs_tar(
     spark: SparkSession,
     path: str,
@@ -422,52 +464,32 @@ def read_docs_tar(
     alignment — the driver reads metadata only.  ``exact_index=True``
     walks headers on the driver (seek-per-member) and fans members out
     individually, exact even for embedded-tar decoys.  ``.tar.gz`` and
-    files at or under split_bytes read whole-file."""
-    return _read_docs_tar_listed(
-        spark, path, split_bytes=split_bytes, exact_index=exact_index
-    )[0]
+    files at or under split_bytes (lowered to an even share of the
+    input's bytes, as for WARC) read whole-file."""
+    rows, tasks, _ = _tar_task_rows(spark, path, split_bytes, exact_index)
+    if not rows:
+        return local_frame(spark, [], TAR_DOC_SCHEMA)
+    sizes = [b - a for _, a, b in rows] if exact_index else None
+    splits = split_table(spark, rows, SPLIT_SCHEMA, tasks, weights=sizes)
+    return map_rows(splits, _tar_split_members, TAR_DOC_SCHEMA)
 
 
-def _read_docs_tar_listed(
-    spark: SparkSession,
-    path: str,
-    *,
-    split_bytes: int | None = 256 << 20,
-    exact_index: bool = False,
-) -> tuple[DataFrame, list[str]]:
-    """``read_docs_tar`` plus the archive paths its listing found."""
-    meta = (
-        spark.read.format("binaryFile").load(path).select("path", "length").collect()
-    )
-    archives = [r["path"] for r in meta]
-    if exact_index:
-        rows = []
-        for r in meta:
-            offs = [off for _, off, _ in list_tar_entries(r["path"], int(r["length"]))]
-            # one range per member, tiled at logical record starts:
-            # [off, next member's off) holds exactly the record at off,
-            # and no meta chain crosses a range end
-            ends = offs[1:] + [int(r["length"])]
-            rows.extend((r["path"], a, b) for a, b in zip(offs, ends))
-        if not rows:
-            return local_frame(spark, [], TAR_DOC_SCHEMA), archives
-        df = local_frame(spark, rows, SPLIT_SCHEMA)
-        df = df.repartition(min(len(rows), spark.sparkContext.defaultParallelism))
-        return map_rows(df, _tar_split_members, TAR_DOC_SCHEMA), archives
-    task_rows: list[tuple[str, int, int]] = []
-    for r in meta:
-        p, ln = r["path"], int(r["length"])
-        gz = p.endswith(".gz") or p.endswith(".tgz")
-        if split_bytes is not None and not gz and ln > split_bytes:
-            for s in range(0, ln, split_bytes):
-                task_rows.append((p, s, min(s + split_bytes, ln)))
-        else:
-            task_rows.append((p, 0, -1))
-    if not task_rows:
-        return local_frame(spark, [], TAR_DOC_SCHEMA), archives
-    sdf = local_frame(spark, task_rows, SPLIT_SCHEMA)
-    sdf = sdf.repartition(len(task_rows))
-    return map_rows(sdf, _tar_split_members, TAR_DOC_SCHEMA), archives
+def tar_splits(spark: SparkSession, path: str) -> tuple[DataFrame, list[str]]:
+    """``read_docs_tar``'s split table (one split per partition) and the
+    archive paths its listing found, spelled as the pages'
+    ``source_file`` column spells them."""
+    rows, tasks, archives = _tar_task_rows(spark, path, 256 << 20, False)
+    return split_table(spark, rows, SPLIT_SCHEMA, tasks), archives
+
+
+def tar_split_docs(path: str, start: int, end: int) -> list[tuple]:
+    """(url, html, text, source_file) of every member of one split-table
+    row, as ``read_pages_tar`` spells them: the reader half of a stage
+    that reads and extracts in one Python call per split."""
+    return [
+        (f"tar://{archive}!{name}", content, None, archive)
+        for archive, name, _, content in _tar_split_members(path, start, end)
+    ]
 
 
 def write_tar_members(out, members: Iterator[tuple[str, bytes]]) -> int:
@@ -522,20 +544,11 @@ def read_pages_tar(spark: SparkSession, path: str, **kw) -> DataFrame:
     url is ``tar://<archive>!<member>``, html carries the raw bytes and
     text is NULL, as for WARC pages: the kernel reads ``html`` whenever it
     is set, so a decoded copy would only double each member's bytes."""
-    return read_pages_tar_listed(spark, path, **kw)[0]
-
-
-def read_pages_tar_listed(
-    spark: SparkSession, path: str, **kw
-) -> tuple[DataFrame, list[str]]:
-    """``read_pages_tar`` plus the archive paths its listing found,
-    spelled as the pages' ``source_file`` column spells them."""
-    docs, archives = _read_docs_tar_listed(spark, path, **kw)
-    return docs.select(
+    return read_docs_tar(spark, path, **kw).select(
         F.concat(F.lit("tar://"), F.col("archive"), F.lit("!"), F.col("name")).alias(
             "url"
         ),
         F.col("content").alias("html"),
         F.lit(None).cast("string").alias("text"),
         F.col("archive").alias("source_file"),
-    ), archives
+    )

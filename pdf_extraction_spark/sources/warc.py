@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from pdf_extraction_spark.operators.balance import map_rows
-from pdf_extraction_spark.session import local_frame
+from pdf_extraction_spark.session import local_frame, split_table
 from pdf_extraction_spark.sources.pages import PAGES_SCHEMA
 
 # pages schema + provenance: rows from the byte-range split path are built
@@ -496,32 +496,35 @@ def _warc_split_pages(path: str, start: int, end: int) -> list[tuple]:
         return pages(_iter_warc_records_range(f, start, end))
 
 
-def read_pages_warc(
-    spark: SparkSession, path: str, *, split_bytes: int = 256 << 20
-) -> DataFrame:
-    """Pages from WARC/WARC.GZ files (glob or directory).
-
-    Uncompressed ``.warc`` files larger than ``split_bytes`` are read as
-    byte-range splits (record-boundary aligned), so one giant archive
-    parallelizes across the fleet; .gz files and small files map one file
-    to one task.  The listing reads binaryFile METADATA only (path +
-    length — the content column is pruned out of the listing scan).
-    """
-    return read_pages_warc_listed(spark, path, split_bytes=split_bytes)[0]
+_MIN_SPREAD_BYTES = 64 << 10
 
 
-def read_pages_warc_listed(
-    spark: SparkSession, path: str, *, split_bytes: int = 256 << 20
-) -> tuple[DataFrame, list[str]]:
-    """``read_pages_warc`` plus the archive paths its listing found,
-    spelled as the pages' ``source_file`` column spells them."""
+def spread_split_bytes(spark: SparkSession, lengths: list[int], split_bytes: int) -> int:
+    """``split_bytes``, lowered to the archives' total bytes over the
+    cluster's default parallelism (never below 64 KiB): an archive that
+    holds most of the input, e.g. one full of giant pages, still runs in
+    about that many tasks, while archives at or under an even share of
+    the input stay whole."""
+    share = -(-sum(lengths) // spark.sparkContext.defaultParallelism)
+    return min(split_bytes, max(_MIN_SPREAD_BYTES, share))
+
+
+def _warc_task_rows(
+    spark: SparkSession, path: str, split_bytes: int
+) -> tuple[list[tuple[str, int, int]], list[str]]:
+    """The split-table rows of ``path``'s archives and the archive paths
+    the listing found.  The listing reads binaryFile METADATA only (path
+    + length — the content column is pruned out of the listing scan)."""
     meta = (
         spark.read.format("binaryFile").load(path).select("path", "length").collect()
     )
-    # one row per task: whole files are (path, 0, -1); big uncompressed
-    # archives fan out into (path, start, end) byte ranges.  All reads go
-    # through _open_binary on the listed URI — the listed paths are never
-    # fed back through a second Hadoop glob, so filenames containing glob
+    split_bytes = spread_split_bytes(
+        spark, [int(r["length"]) for r in meta], split_bytes
+    )
+    # one row per task: whole files are (path, 0, -1); big archives fan
+    # out into (path, start, end) byte ranges.  All reads go through
+    # _open_binary on the listed URI — the listed paths are never fed
+    # back through a second Hadoop glob, so filenames containing glob
     # metacharacters or literal % resolve correctly.
     task_rows: list[tuple[str, int, int]] = []
     for r in meta:
@@ -537,12 +540,42 @@ def read_pages_warc_listed(
                 task_rows.append((p, s, min(s + split_bytes, ln)))
         else:
             task_rows.append((p, 0, -1))
+    return task_rows, [r["path"] for r in meta]
 
-    archives = [r["path"] for r in meta]
+
+def read_pages_warc(
+    spark: SparkSession, path: str, *, split_bytes: int = 256 << 20
+) -> DataFrame:
+    """Pages from WARC/WARC.GZ files (glob or directory).
+
+    Archives larger than ``split_bytes`` (or than an even share of the
+    input's bytes, see :func:`spread_split_bytes`) are read as byte-range
+    splits (record- or gzip-member-aligned), so one giant archive
+    parallelizes across the fleet; smaller files map one file to one
+    task.
+    """
+    task_rows, _ = _warc_task_rows(spark, path, split_bytes)
     if not task_rows:
-        return local_frame(spark, [], WARC_PAGES_SCHEMA), archives
-    sdf = local_frame(spark, task_rows, SPLIT_SCHEMA).repartition(len(task_rows))
-    return map_rows(sdf, _warc_split_pages, WARC_PAGES_SCHEMA), archives
+        return local_frame(spark, [], WARC_PAGES_SCHEMA)
+    splits = split_table(spark, task_rows, SPLIT_SCHEMA)
+    return map_rows(splits, _warc_split_pages, WARC_PAGES_SCHEMA)
+
+
+def warc_splits(
+    spark: SparkSession, path: str, *, split_bytes: int = 256 << 20
+) -> tuple[DataFrame, list[str]]:
+    """``read_pages_warc``'s split table (one split per partition) and
+    the archive paths its listing found, spelled as the pages'
+    ``source_file`` column spells them."""
+    task_rows, archives = _warc_task_rows(spark, path, split_bytes)
+    return split_table(spark, task_rows, SPLIT_SCHEMA), archives
+
+
+def warc_split_docs(path: str, start: int, end: int) -> list[tuple]:
+    """(url, html, text, source_file) of every page of one split-table
+    row: the reader half of a stage that reads and extracts in one
+    Python call per split."""
+    return [(r[0], r[2], r[3], r[5]) for r in _warc_split_pages(path, start, end)]
 
 
 def write_pages_warc(rows, path: str, *, compress: bool = True) -> None:

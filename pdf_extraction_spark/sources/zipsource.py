@@ -40,7 +40,7 @@ from pyspark.sql.types import (
 )
 
 from pdf_extraction_spark.operators.balance import map_rows
-from pdf_extraction_spark.session import local_frame
+from pdf_extraction_spark.session import local_frame, split_table
 from pdf_extraction_spark.sources.warc import _open_binary
 
 _EOCD_SIG = b"PK\x05\x06"
@@ -239,6 +239,31 @@ def _read_member(
     return archive, name, len(data), data
 
 
+def _zip_entry_rows(spark: SparkSession, path: str) -> tuple[list[tuple], list[str]]:
+    """One ``_ENTRY_SCHEMA`` row per member of every archive matching
+    ``path``, and the archive paths the listing found."""
+    meta = (
+        spark.read.format("binaryFile").load(path).select("path", "length").collect()
+    )
+    rows = []
+    for r in meta:
+        for name, off, csize, usize, method, crc in list_zip_entries(
+            r["path"], int(r["length"])
+        ):
+            rows.append((r["path"], name, off, csize, usize, method, crc))
+    return rows, [r["path"] for r in meta]
+
+
+def _entry_table(spark: SparkSession, rows: list[tuple], parallelism: int | None):
+    """The member table: one run of members per task, the runs sharing
+    the members' uncompressed bytes about evenly, so a run of giant
+    members in one archive still spreads over the tasks."""
+    n = parallelism or spark.sparkContext.defaultParallelism
+    return split_table(
+        spark, rows, _ENTRY_SCHEMA, min(len(rows), n), weights=[r[4] for r in rows]
+    )
+
+
 def read_docs_zip(
     spark: SparkSession, path: str, parallelism: int | None = None
 ) -> DataFrame:
@@ -246,29 +271,27 @@ def read_docs_zip(
     matching ``path``.  The driver reads only EOCD + central directory
     per archive; member bytes are read and inflated on executors, one
     seek per member."""
-    return _read_docs_zip_listed(spark, path, parallelism)[0]
-
-
-def _read_docs_zip_listed(
-    spark: SparkSession, path: str, parallelism: int | None = None
-) -> tuple[DataFrame, list[str]]:
-    """``read_docs_zip`` plus the archive paths its listing found."""
-    meta = (
-        spark.read.format("binaryFile").load(path).select("path", "length").collect()
-    )
-    archives = [r["path"] for r in meta]
-    rows = []
-    for r in meta:
-        for name, off, csize, usize, method, crc in list_zip_entries(
-            r["path"], int(r["length"])
-        ):
-            rows.append((r["path"], name, off, csize, usize, method, crc))
+    rows, _ = _zip_entry_rows(spark, path)
     if not rows:
-        return local_frame(spark, [], ZIP_DOC_SCHEMA), archives
-    df = local_frame(spark, rows, _ENTRY_SCHEMA)
-    n = parallelism or spark.sparkContext.defaultParallelism
-    df = df.repartition(min(len(rows), n))
-    return map_rows(df, _read_member, ZIP_DOC_SCHEMA), archives
+        return local_frame(spark, [], ZIP_DOC_SCHEMA)
+    return map_rows(_entry_table(spark, rows, parallelism), _read_member, ZIP_DOC_SCHEMA)
+
+
+def zip_splits(spark: SparkSession, path: str) -> tuple[DataFrame, list[str]]:
+    """``read_docs_zip``'s member table and the archive paths its listing
+    found, spelled as the pages' ``source_file`` column spells them."""
+    rows, archives = _zip_entry_rows(spark, path)
+    return _entry_table(spark, rows, None), archives
+
+
+def zip_split_docs(
+    archive: str, name: str, off: int, csize: int, usize: int, method: int, crc: int
+) -> list[tuple]:
+    """(url, html, text, source_file) of one member-table row, as
+    ``read_pages_zip`` spells them: the reader half of a stage that reads
+    and extracts in one Python call per member."""
+    _, _, _, data = _read_member(archive, name, off, csize, usize, method, crc)
+    return [(f"zip://{archive}!{name}", data, None, archive)]
 
 
 def read_pages_zip(spark: SparkSession, path: str) -> DataFrame:
@@ -276,16 +299,7 @@ def read_pages_zip(spark: SparkSession, path: str) -> DataFrame:
     ``zip://<archive>!<member>``, html carries the raw bytes and text is
     NULL, as for WARC pages: the kernel reads ``html`` whenever it is set,
     so a decoded copy would only double each member's bytes."""
-    return read_pages_zip_listed(spark, path)[0]
-
-
-def read_pages_zip_listed(
-    spark: SparkSession, path: str
-) -> tuple[DataFrame, list[str]]:
-    """``read_pages_zip`` plus the archive paths its listing found,
-    spelled as the pages' ``source_file`` column spells them."""
-    docs, archives = _read_docs_zip_listed(spark, path)
-    return docs.select(
+    return read_docs_zip(spark, path).select(
         F.concat(F.lit("zip://"), F.col("archive"), F.lit("!"), F.col("name")).alias(
             "url"
         ),
@@ -295,4 +309,4 @@ def read_pages_zip_listed(
         # non-file plan where input_file_name() is empty, so the archive
         # path rides along explicitly
         F.col("archive").alias("source_file"),
-    ), archives
+    )

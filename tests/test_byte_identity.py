@@ -25,7 +25,7 @@ def test_pipeline_matches_golden(spark, pages_unit, golden, tmp_path):
     from pdf_extraction_spark.plans.pipeline import read_extractions, run_extraction
 
     out = str(tmp_path / "out")
-    summary = run_extraction(spark, pages_unit, out, groups=4, salt_buckets=8)
+    summary = run_extraction(spark, pages_unit, out, groups=4)
     assert sorted(summary["committed"]) == [0, 1, 2, 3]
 
     result = read_extractions(spark, out)

@@ -256,3 +256,55 @@ def test_compact_curated_group(spark, curate_input, tmp_path):
     assert after == before
     m = json.load(open(os.path.join(out, "_manifests", "group-0.json")))
     assert m["compacted_files"] == 1 and m["n_rows"] == len(after)
+
+
+def _initial_plan_tree(description: str) -> list[tuple[int, str]]:
+    """(depth, node name) of each line of the pre-AQE plan tree in a SQL
+    execution's plan description (the whole tree when it is not adaptive)."""
+    text = description.split("\n\n")[0]
+    if "== Initial Plan ==" in text:
+        text = text[text.index("== Initial Plan ==") :].split("\n", 1)[1]
+    nodes = []
+    for line in text.splitlines():
+        name = line.lstrip(" :+-|")
+        if name and not name.startswith("=="):
+            nodes.append((len(line) - len(name), name.split(" (")[0]))
+    return nodes
+
+
+def test_curation_counts_input_outside_shuffle_map_stages(
+    spark, curate_input, tmp_path
+):
+    """No observation of a curation pass sits below an exchange or a join
+    in the pre-AQE plan (a re-run map task would apply its metrics again),
+    and ``n_input`` still counts every input row of its group."""
+    from pdf_extraction_spark.plans.curate import run_curation
+
+    store = spark._jsparkSession.sharedState().statusStore()
+    seen = store.executionsList().size()
+    out = str(tmp_path / "out")
+    run_curation(spark, curate_input, out, groups=3)
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = store.executionsList()
+    observed = 0
+    for i in range(seen, execs.size()):
+        tree = _initial_plan_tree(execs.apply(i).physicalPlanDescription())
+        for k, (depth, name) in enumerate(tree):
+            if name != "CollectMetrics":
+                continue
+            observed += 1
+            ancestors, level = [], depth
+            for d, n in reversed(tree[:k]):
+                if d < level:
+                    ancestors.append(n)
+                    level = d
+            assert not any("Exchange" in n or "Join" in n for n in ancestors), tree
+    assert observed == 1  # the output metrics, in the write's result stage
+
+    import json
+
+    n_input = sum(
+        json.load(open(os.path.join(out, "_manifests", f"group-{g}.json")))["n_input"]
+        for g in range(3)
+    )
+    assert n_input == spark.read.parquet(curate_input).count()

@@ -73,9 +73,11 @@ def _jobs_under_tag(spark, action) -> list[int]:
     return sorted(sc._jsc.sc().statusTracker().getJobIdsForTag(tag))
 
 
-def test_warc_pass_runs_four_jobs(spark, tmp_path):
-    """The archive listing plus the write job's three: lineage comes from
-    the write job's observed metrics, not from a decode of its own."""
+def test_warc_pass_runs_three_jobs(spark, tmp_path):
+    """The archive listing plus the write job's two (the shuffle map
+    stage that reads and extracts, and the write): the split table needs
+    no shuffle of its own, and lineage comes from the write job's
+    observed metrics, not from a decode of its own."""
     src = _warc_dir(tmp_path)
     out = str(tmp_path / "out")
     summary = {}
@@ -88,7 +90,7 @@ def test_warc_pass_runs_four_jobs(spark, tmp_path):
     manifests = _pass_files(out)
     assert summary["committed"] == [0, 1]
     assert all(manifests[f"group-{g}.json"]["n_rows"] > 0 for g in (0, 1))
-    assert len(jobs) == 4, jobs
+    assert len(jobs) == 3, jobs
 
 
 @pytest.mark.parametrize("detail_limit", [200_000, 1], ids=["detailed", "coarse"])
@@ -208,3 +210,118 @@ def test_row_hash_is_the_committed_checksum_definition(spark):
         column_hash.alias("a"), F.expr(pipeline._ROW_HASH_SQL).alias("b")
     ).collect()
     assert all(r["a"] == r["b"] for r in got)
+
+
+def _python_rows_per_write(spark, run) -> list[int]:
+    """The rows each pass's Python node emitted while ``run()`` ran, read
+    from the SQL status store: one entry per ``run_extraction`` write."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    seen = store.executionsList().size()
+    run()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = store.executionsList()
+    rows = []
+    for i in range(seen, execs.size()):
+        e = execs.apply(i)
+        if not (e.description() or "").endswith(": write"):
+            continue
+        values = store.executionMetrics(e.executionId())
+        nodes = store.planGraph(e.executionId()).allNodes()
+        for j in range(nodes.size()):
+            node = nodes.apply(j)
+            if node.name() != "MapInArrow":
+                continue
+            metrics = node.metrics()
+            for k in range(metrics.size()):
+                m = metrics.apply(k)
+                if m.name() == "number of output rows":
+                    rows.append(int(values.get(m.accumulatorId()).get()))
+    return rows
+
+
+@pytest.mark.parametrize("fmt", ["warc", "tar"])
+def test_partial_passes_extract_each_page_once(spark, tmp_path, fmt):
+    """The archive stage reads every page of every pass, but runs the
+    kernel only on the pages of the pass's own groups: a
+    ``groups_per_pass=1`` run and a resumed run emit one kernel row per
+    page of the groups they write, and commit what a single pass does."""
+    src = {"warc": _warc_dir, "tar": _tar_dir}[fmt](tmp_path)
+    kw = dict(input_format=fmt, groups=4)
+    single = str(tmp_path / "single")
+    run_extraction(spark, src, single, **kw)
+    want = _pass_files(single)
+    n_pages = sum(want[f"group-{g}.json"]["n_rows"] for g in range(4))
+
+    per_group = str(tmp_path / "per_group")
+    emitted = _python_rows_per_write(
+        spark, lambda: run_extraction(spark, src, per_group, groups_per_pass=1, **kw)
+    )
+    assert emitted == [want[f"group-{g}.json"]["n_rows"] for g in range(4)]
+    assert _pass_files(per_group) == {
+        n: dict(m, pass_group_count=1) for n, m in want.items()
+    }
+
+    resumed = str(tmp_path / "resumed")
+    with pytest.raises(RuntimeError, match="simulated kill"):
+        run_extraction(
+            spark, src, resumed, groups_per_pass=2, fail_after_group=2, **kw
+        )
+    emitted = _python_rows_per_write(
+        spark, lambda: run_extraction(spark, src, resumed, resume=True, **kw)
+    )
+    assert emitted == [sum(want[f"group-{g}.json"]["n_rows"] for g in (2, 3))]
+    assert sum(emitted) < n_pages
+    got = _pass_files(resumed)
+    for g in range(4):
+        assert got[f"group-{g}.json"] == dict(
+            want[f"group-{g}.json"], pass_group_count=2
+        )
+
+
+def test_pre_pass_lineage_aggregates_the_reader_not_the_kernel(
+    spark, tmp_path, monkeypatch
+):
+    """Above the key cap, the lineage aggregate reads the archive
+    reader's pages (url, html, text, source_file); the kernel's output
+    never feeds it, so the lineage job runs no extraction."""
+    src = _warc_dir(tmp_path)
+    seen = []
+    aggregate = pipeline._lineage_aggregate
+
+    def spy(batch_pages, *args):
+        seen.append(batch_pages.columns)
+        return aggregate(batch_pages, *args)
+
+    monkeypatch.setattr(pipeline, "_IN_PASS_LINEAGE_KEYS", 0)
+    monkeypatch.setattr(pipeline, "_lineage_aggregate", spy)
+    run_extraction(spark, src, str(tmp_path / "out"), input_format="warc", groups=2)
+    assert seen == [["url", "html", "text", "source_file"]]
+
+
+def test_pass_plan_is_one_python_stage_then_one_exchange(spark, tmp_path):
+    """The write job's plan holds one Python node and one exchange above
+    it, and each group is written by max(1, num_partitions // groups)
+    tasks, one file each."""
+    src = _warc_dir(tmp_path)
+    store = spark._jsparkSession.sharedState().statusStore()
+    seen = store.executionsList().size()
+    out = str(tmp_path / "out")
+    run_extraction(spark, src, out, input_format="warc", groups=2, num_partitions=5)
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = store.executionsList()
+    plans = [
+        execs.apply(i).physicalPlanDescription()
+        for i in range(seen, execs.size())
+        if (execs.apply(i).description() or "").endswith(": write")
+    ]
+    assert len(plans) == 1
+    plan = plans[0]
+    tree = plan[plan.index("== Final Plan ==") : plan.index("== Initial Plan ==")]
+    tree = tree.splitlines()
+    python = [i for i, line in enumerate(tree) if "MapInArrow" in line]
+    exchange = [i for i, line in enumerate(tree) if "Exchange" in line]
+    assert len(python) == 1 and len(exchange) == 1, plan
+    assert exchange[0] < python[0], plan  # the tree prints parents first
+    for g in (0, 1):
+        files = glob.glob(os.path.join(out, f"group={g}", "*.parquet"))
+        assert len(files) == 2, files
