@@ -27,6 +27,7 @@ from pyspark.sql.types import (
 )
 
 from pdf_extraction_spark.operators.balance import map_documents
+from pdf_extraction_spark.pdf_parse import _paeth, _png_unfilter
 
 BLOB_SCHEMA = "media_id long, blob binary"
 
@@ -311,16 +312,6 @@ def _png_row_bytes(media_id: int, j: int, n: int) -> bytes:
     return md5_row_bytes(media_id, "p", j, n)
 
 
-def _paeth(a: int, b: int, c: int) -> int:
-    p = a + b - c
-    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-    if pa <= pb and pa <= pc:
-        return a
-    if pb <= pc:
-        return b
-    return c
-
-
 def _png_filter_row(row: bytes, prev: bytes, ft: int, bpp: int) -> bytes:
     """Apply one PNG scanline filter; returns filter byte + filtered
     bytes (the exact inverse of _png_unfilter's per-row step)."""
@@ -443,40 +434,6 @@ _ADAM7 = [
 ]
 
 
-def _png_unfilter(data: bytes, off: int, h: int, stride: int, bpp: int):
-    """Invert the five scanline filters over ``h`` rows of
-    filter-byte-prefixed data starting at ``off``; returns the list of
-    raw rows, or None on a bad filter type.  The previous-row state
-    resets here — interlaced images filter each Adam7 pass as an
-    independent sub-image."""
-    rows: list[bytes] = []
-    prev = bytes(stride)
-    for j in range(h):
-        base = off + j * (stride + 1)
-        ft = data[base]
-        if ft > 4:
-            return None
-        line = bytearray(data[base + 1 : base + 1 + stride])
-        if ft == 1:
-            for i in range(bpp, stride):
-                line[i] = (line[i] + line[i - bpp]) & 0xFF
-        elif ft == 2:
-            for i in range(stride):
-                line[i] = (line[i] + prev[i]) & 0xFF
-        elif ft == 3:
-            for i in range(stride):
-                a = line[i - bpp] if i >= bpp else 0
-                line[i] = (line[i] + (a + prev[i]) // 2) & 0xFF
-        elif ft == 4:
-            for i in range(stride):
-                a = line[i - bpp] if i >= bpp else 0
-                c = prev[i - bpp] if i >= bpp else 0
-                line[i] = (line[i] + _paeth(a, prev[i], c)) & 0xFF
-        prev = bytes(line)
-        rows.append(prev)
-    return rows
-
-
 def parse_png(raw: bytes):
     """Parse an 8-bit colour-type-2/6 PNG; returns (w, h, channels, rows)
     with rows[j] = scanline j's raw (unfiltered) bytes, or None if the
@@ -526,10 +483,10 @@ def parse_png(raw: bytes):
     if not interlace:
         if len(data) != h * (stride + 1):
             return None
-        rows = _png_unfilter(data, 0, h, stride, bpp)
-        if rows is None:
+        try:
+            return w, h, ch, _png_unfilter(data, 0, h, stride, bpp)
+        except ValueError:  # an unknown filter type
             return None
-        return w, h, ch, rows
     # Adam7: unfilter each pass, scatter into the full-size grid
     grid = [bytearray(stride) for _ in range(h)]
     off = 0
@@ -542,8 +499,9 @@ def parse_png(raw: bytes):
         need = ph * (pstride + 1)
         if off + need > len(data):
             return None
-        prows = _png_unfilter(data, off, ph, pstride, bpp)
-        if prows is None:
+        try:
+            prows = _png_unfilter(data, off, ph, pstride, bpp)
+        except ValueError:
             return None
         off += need
         for pj, prow in enumerate(prows):

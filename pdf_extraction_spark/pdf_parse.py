@@ -1192,49 +1192,63 @@ class _Lexer:
 _OBJ_RE = re.compile(rb"(\d+)\s+(\d+)\s+obj\b")
 
 
+def _paeth(a: int, b: int, c: int) -> int:
+    """The PNG Paeth predictor of the left ``a``, upper ``b`` and
+    upper-left ``c`` bytes."""
+    p = a + b - c
+    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
+    if pa <= pb and pa <= pc:
+        return a
+    if pb <= pc:
+        return b
+    return c
+
+
+def _png_unfilter(data: bytes, off: int, h: int, stride: int, bpp: int) -> list[bytes]:
+    """The ``h`` raw rows of PNG-filtered data starting at ``off``: every
+    row is a filter byte (0 None / 1 Sub / 2 Up / 3 Average / 4 Paeth)
+    followed by ``stride`` bytes filtered against the row above (zeros
+    above the first), ``bpp`` bytes per pixel to the left.  Shared by
+    the PDF ``/Predictor`` >= 10 decoder and the PNG image decoder.
+    Raises ValueError on a truncated row or an unknown filter."""
+    rows: list[bytes] = []
+    prev = bytes(stride)
+    for j in range(h):
+        base = off + j * (stride + 1)
+        ft = data[base]
+        line = bytearray(data[base + 1 : base + 1 + stride])
+        if len(line) < stride:
+            raise ValueError("pdf parse: truncated predictor row")
+        if ft == 1:  # Sub
+            for i in range(bpp, stride):
+                line[i] = (line[i] + line[i - bpp]) & 0xFF
+        elif ft == 2:  # Up
+            for i in range(stride):
+                line[i] = (line[i] + prev[i]) & 0xFF
+        elif ft == 3:  # Average
+            for i in range(stride):
+                a = line[i - bpp] if i >= bpp else 0
+                line[i] = (line[i] + (a + prev[i]) // 2) & 0xFF
+        elif ft == 4:  # Paeth
+            for i in range(stride):
+                a = line[i - bpp] if i >= bpp else 0
+                c = prev[i - bpp] if i >= bpp else 0
+                line[i] = (line[i] + _paeth(a, prev[i], c)) & 0xFF
+        elif ft != 0:
+            raise ValueError(f"pdf parse: unknown PNG filter {ft}")
+        prev = bytes(line)
+        rows.append(prev)
+    return rows
+
+
 def _png_unpredict(data: bytes, columns: int, colors: int, bpc: int) -> bytes:
-    """Undo PNG row predictors (``/Predictor`` >= 10): every row is a
-    filter byte (0 None / 1 Sub / 2 Up / 3 Average / 4 Paeth) followed
-    by ``columns * colors * bpc/8`` bytes, filtered against the row
-    above.  Xref streams use Colors=1 BitsPerComponent=8, but the
-    general form costs nothing."""
+    """Undo PNG row predictors (``/Predictor`` >= 10) over rows of
+    ``columns * colors * bpc/8`` bytes.  Xref streams use Colors=1
+    BitsPerComponent=8, but the general form costs nothing."""
     bpp = max(1, (colors * bpc + 7) // 8)
     rowlen = (columns * colors * bpc + 7) // 8
-    out = bytearray()
-    prev = bytes(rowlen)
-    pos = 0
-    while pos < len(data):
-        ftype = data[pos]
-        row = bytearray(data[pos + 1 : pos + 1 + rowlen])
-        if len(row) < rowlen:
-            raise ValueError("pdf parse: truncated predictor row")
-        pos += 1 + rowlen
-        if ftype == 0:
-            pass
-        elif ftype == 1:  # Sub
-            for i in range(bpp, rowlen):
-                row[i] = (row[i] + row[i - bpp]) & 0xFF
-        elif ftype == 2:  # Up
-            for i in range(rowlen):
-                row[i] = (row[i] + prev[i]) & 0xFF
-        elif ftype == 3:  # Average
-            for i in range(rowlen):
-                left = row[i - bpp] if i >= bpp else 0
-                row[i] = (row[i] + (left + prev[i]) // 2) & 0xFF
-        elif ftype == 4:  # Paeth
-            for i in range(rowlen):
-                a = row[i - bpp] if i >= bpp else 0
-                b = prev[i]
-                c = prev[i - bpp] if i >= bpp else 0
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = a if pa <= pb and pa <= pc else (b if pb <= pc else c)
-                row[i] = (row[i] + pred) & 0xFF
-        else:
-            raise ValueError(f"pdf parse: unknown PNG filter {ftype}")
-        out += row
-        prev = bytes(row)
-    return bytes(out)
+    h = -(-len(data) // (rowlen + 1))
+    return b"".join(_png_unfilter(data, 0, h, rowlen, bpp))
 
 
 def _ascii_hex_decode(raw: bytes) -> bytes:

@@ -17,6 +17,12 @@ Scale notes (100 TB / 10^12 docs):
     frequent commit barriers on very long jobs.
   * checksums use bit_xor(xxhash64(...)) — order-independent, overflow-free
     (Spark 4 runs ANSI mode; sum() of hashes would overflow).
+  * every input format reaches a pass through one contract
+    (``_read_input``): its documents as (url, html, text, source_file),
+    and the kernel's records of a batch's documents plus their
+    source_file.  An archive (warc, zip, tar) is its split table read
+    by its split reader; a table (parquet, jsonl) is its scan, with
+    input_file_name() as source_file.
   * a pass is one Python stage, one exchange and the write.  The Python
     stage reads and extracts (an archive's reader and the kernel share
     one row function; a table's scan feeds the kernel directly), so
@@ -26,13 +32,12 @@ Scale notes (100 TB / 10^12 docs):
     outputs, into exact per-group slots, so each write task holds whole
     groups.
   * per-(group, input file) lineage is counted by the write job itself:
-    each row's file (input_file_name() at the scan, or the archive
-    reader's source_file) becomes a key index, and one observation
+    each row's source_file becomes a key index, and one observation
     after the exchange counts and checksums each key and each group —
     no Python in the metrics path and no second decode of the input.
     A pass with more (group, file) keys than _IN_PASS_LINEAGE_KEYS runs
-    one pre-pass aggregate over the reader's output for its lineage
-    instead.
+    one pre-pass aggregate over the documents (never the kernel's
+    output) for its lineage instead.
 """
 
 from __future__ import annotations
@@ -45,15 +50,17 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import BinaryType, StringType, StructField, StructType
 
-from pdf_extraction_spark.operators.balance import map_rows
 from pdf_extraction_spark.operators.extract import (
     EXTRACT_SCHEMA,
     extract_documents,
     extract_splits,
 )
 from pdf_extraction_spark.session import local_frame
+from pdf_extraction_spark.sources.pages import DOCS_SCHEMA, read_pages, read_pages_jsonl
+from pdf_extraction_spark.sources.tarsource import tar_split_docs, tar_splits
+from pdf_extraction_spark.sources.warc import read_splits, warc_split_docs, warc_splits
+from pdf_extraction_spark.sources.zipsource import zip_split_docs, zip_splits
 from pdf_extraction_spark.xxhash64 import commit_group
 
 MANIFEST_DIR = "_manifests"
@@ -211,53 +218,52 @@ def _commit_staged_groups(
     return committed_count
 
 
-_ARCHIVE_FORMATS = ("warc", "zip", "tar")
-
-# what an archive source's reader gives the pipeline per document
-_DOCS_SCHEMA = StructType(
-    [
-        StructField("url", StringType()),
-        StructField("html", BinaryType()),
-        StructField("text", StringType()),
-        StructField("source_file", StringType()),
-    ]
-)
+# how run_extraction reads an archive: format -> (split lister, split reader)
+_ARCHIVES = {
+    "warc": (warc_splits, warc_split_docs),
+    "zip": (zip_splits, zip_split_docs),
+    "tar": (tar_splits, tar_split_docs),
+}
 
 
 def _read_input(spark: SparkSession, pages_path: str, input_format: str):
-    """The input of ``pages_path`` and the files it is read from, each
-    spelled as the rows' lineage column spells them.
+    """``(docs, extract, files)`` for ``pages_path``: the one source
+    contract of a commit pass.
 
-    For warc, zip and tar the input is ``(splits, read_docs)``: the
-    source's split table and its reader, which turns one split row into
-    (url, html, text, source_file) documents; the files are the reader's
-    own listing.  Otherwise it is the pages, and the files the scan's
-    ``inputFiles()`` (the rows' ``input_file_name()``).  Neither list
-    costs a Spark job beyond the read's own."""
-    if input_format == "warc":
-        from pdf_extraction_spark.sources.warc import warc_split_docs, warc_splits
+    ``docs`` is the input under ``DOCS_SCHEMA``, each document's
+    ``source_file`` spelled as ``files`` spells it, and
+    ``extract(in_batch, keep)`` is the kernel's records of the documents
+    ``in_batch`` (a Column) selects, plus their ``source_file``.  An
+    archive is its lister's split table read by its split reader; the
+    reader and the kernel share one row function, which runs the kernel
+    only on the urls ``keep`` accepts (None: all), and ``files`` is the
+    lister's own listing.  A table's ``source_file`` is
+    ``input_file_name()``, projected at the scan (never a column of the
+    table's own) and passed through the kernel, and ``files`` is the
+    scan's ``inputFiles()``.  Neither list costs a Spark job beyond the
+    read's own."""
+    if input_format in _ARCHIVES:
+        lister, read_docs = _ARCHIVES[input_format]
+        splits, files = lister(spark, pages_path)
 
-        splits, files = warc_splits(spark, pages_path)
-        return (splits, warc_split_docs), files
-    if input_format == "zip":
-        from pdf_extraction_spark.sources.zipsource import zip_split_docs, zip_splits
+        def extract(in_batch, keep):
+            return extract_splits(splits, read_docs, keep).filter(in_batch)
 
-        splits, files = zip_splits(spark, pages_path)
-        return (splits, zip_split_docs), files
-    if input_format == "tar":
-        from pdf_extraction_spark.sources.tarsource import tar_split_docs, tar_splits
-
-        splits, files = tar_splits(spark, pages_path)
-        return (splits, tar_split_docs), files
-    from pdf_extraction_spark.sources.pages import read_pages, read_pages_jsonl
-
+        return read_splits((splits, files), read_docs, DOCS_SCHEMA), extract, files
     if input_format == "jsonl":
         pages = read_pages_jsonl(spark, pages_path)
     else:
         # read_pages enforces the documented fail-fast schema contract on
         # the primary path too (catalog table or parquet)
         pages = read_pages(spark, pages_path)
-    return pages, pages.inputFiles()
+    docs = pages.select(
+        "url", "html", "text", F.input_file_name().alias("source_file")
+    )
+
+    def extract(in_batch, keep):
+        return extract_documents(docs.filter(in_batch), passthrough=("source_file",))
+
+    return docs, extract, pages.inputFiles()
 
 
 def _in_batch(groups: int, batch: frozenset, url) -> bool:
@@ -354,7 +360,7 @@ def run_extraction(
       reads the split and runs the kernel on each page
       (``operators.extract.extract_splits``); for parquet and jsonl the
       kernel runs over the scan (``extract_documents``), each page's
-      lineage key riding through it as a passthrough column.  A pass
+      ``source_file`` riding through it as a passthrough column.  A pass
       that leaves groups out (``resume``, ``groups_per_pass``) has the
       archive stage skip their pages before the kernel, by a Python port
       of the group hash; Spark's group filter after the kernel stays the
@@ -370,9 +376,9 @@ def run_extraction(
       xor applied twice cancels out), counts and checksums each group's
       rows and, at most ``_IN_PASS_LINEAGE_KEYS`` (group, input file)
       keys per pass, each key's lineage.  A wider pass runs ONE
-      column-pruned per-(group, file) aggregate over the reader's output
-      (never the kernel's) before the write (plus a per-file aggregate
-      when that one overflows ``lineage_detail_limit`` rows).  The input
+      column-pruned per-(group, file) aggregate over the documents
+      (never the kernel's output) before the write (plus a per-file
+      aggregate when that one overflows ``lineage_detail_limit`` rows).  The input
       files come from the read's own listing; a row whose file that
       list misses fails the pass before anything of it is committed.
 
@@ -413,7 +419,7 @@ def run_extraction(
 
     if num_partitions is None:
         num_partitions = spark.sparkContext.defaultParallelism
-    source, input_files = _read_input(spark, pages_path, input_format)
+    docs, extract, input_files = _read_input(spark, pages_path, input_format)
     input_files = sorted(input_files)
     done = committed_groups(out_path) if resume else set()
     todo = [g for g in range(groups) if g not in done]
@@ -422,14 +428,6 @@ def run_extraction(
     group_col = F.pmod(F.xxhash64("url"), F.lit(groups))
     if not groups_per_pass:
         groups_per_pass = max(1, len(todo))
-    archive = input_format in _ARCHIVE_FORMATS
-    # provenance column: file-source scans expose input_file_name();
-    # the archive sources synthesize rows off a non-file plan (byte-range
-    # splits) where input_file_name() is '', so their reader emits the
-    # archive path as source_file.  Gated on the INPUT FORMAT, not on
-    # column sniffing — a user parquet table legitimately carrying its
-    # own source_file column must not hijack lineage
-    file_sql = "source_file" if archive else "input_file_name()"
     n_files = len(input_files)
 
     for i in range(0, len(todo), groups_per_pass):
@@ -455,40 +453,26 @@ def run_extraction(
             lineage_key = group_col * n_files + F.expr(
                 "nullif(array_position(array("
                 + ", ".join(map(_sql_string, input_files))
-                + f"), {file_sql}), 0) - 1"
+                + "), source_file), 0) - 1"
             )
-        if archive:
-            splits, read_docs = source
-            if not in_pass:
-                read = map_rows(splits, read_docs, _DOCS_SCHEMA).filter(in_batch)
-                with _job_description(spark, f"run_extraction pass {i}: lineage"):
-                    detail, per_file = _lineage_aggregate(
-                        read, group_col, F.col(file_sql), lineage_detail_limit
-                    )
-            # a pass that leaves groups out spends no kernel on their pages
-            keep = (
-                None
-                if len(batch) == groups
-                else functools.partial(_in_batch, groups, frozenset(batch))
-            )
-            result = extract_splits(splits, read_docs, keep).filter(in_batch)
-            if in_pass:
-                result = result.withColumn(_LINEAGE_KEY, lineage_key)
-            result = result.drop("source_file")
         else:
-            batch_pages = source.filter(in_batch)
-            if in_pass:
-                # the key is taken at the scan, where input_file_name()
-                # is known, and rides through the kernel
-                batch_pages = batch_pages.withColumn(_LINEAGE_KEY, lineage_key)
-            else:
-                with _job_description(spark, f"run_extraction pass {i}: lineage"):
-                    detail, per_file = _lineage_aggregate(
-                        batch_pages, group_col, F.expr(file_sql), lineage_detail_limit
-                    )
-            result = extract_documents(
-                batch_pages, passthrough=(_LINEAGE_KEY,) if in_pass else ()
-            )
+            with _job_description(spark, f"run_extraction pass {i}: lineage"):
+                detail, per_file = _lineage_aggregate(
+                    docs.filter(in_batch),
+                    group_col,
+                    F.col("source_file"),
+                    lineage_detail_limit,
+                )
+        # a pass that leaves groups out spends no kernel on their pages
+        keep = (
+            None
+            if len(batch) == groups
+            else functools.partial(_in_batch, groups, frozenset(batch))
+        )
+        result = extract(in_batch, keep)
+        if in_pass:
+            result = result.withColumn(_LINEAGE_KEY, lineage_key)
+        result = result.drop("source_file")
 
         # ONE exchange, after the kernel: slot s * (index of the row's
         # group in the batch) + pmod(url-hash, s) colocates each group's

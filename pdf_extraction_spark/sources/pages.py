@@ -35,6 +35,17 @@ PAGES_SCHEMA = StructType(
     ]
 )
 
+# what every input format gives the extraction pipeline per document: the
+# kernel's columns and the file the document was read from
+DOCS_SCHEMA = StructType(
+    [
+        StructField("url", StringType()),
+        StructField("html", BinaryType()),
+        StructField("text", StringType()),
+        StructField("source_file", StringType()),
+    ]
+)
+
 # columns the extraction kernel itself requires; the rest are optional
 # metadata that sources may or may not carry
 REQUIRED_COLS = {"url": StringType(), "html": BinaryType(), "text": StringType()}

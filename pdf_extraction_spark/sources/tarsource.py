@@ -49,7 +49,7 @@ from __future__ import annotations
 import io
 from typing import Iterator
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     BinaryType,
     LongType,
@@ -58,12 +58,14 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from pdf_extraction_spark.operators.balance import map_rows
-from pdf_extraction_spark.session import local_frame, split_table
+from pdf_extraction_spark.session import split_table
 from pdf_extraction_spark.sources.warc import (
     SPLIT_SCHEMA,
     _open_binary,
     _read_whole,
+    byte_ranges,
+    list_archives,
+    read_splits,
     spread_split_bytes,
 )
 
@@ -312,7 +314,9 @@ def _iter_tar_records(
                     f"tar source: meta header at offset {off} spans"
                     f" {next_off - off} bytes across the split boundary at"
                     f" {end}, past the {_BACK_BLOCKS * BLOCK}-byte backward"
-                    " probe; read this archive with exact_index=True"
+                    " probe; read this archive with"
+                    " read_docs_tar(..., exact_index=True) or"
+                    " tar_splits(..., exact_index=True)"
                 )
             off = next_off
             hdr = _parse_header(rd.block(off))
@@ -413,79 +417,69 @@ def _tar_split_members(path: str, start: int, end: int) -> list[tuple]:
         raise ValueError(f"{path}: {e}") from e
 
 
-def _tar_task_rows(
-    spark: SparkSession,
-    path: str,
-    split_bytes: int | None,
-    exact_index: bool,
-) -> tuple[list[tuple[str, int, int]], int, list[str]]:
-    """The split-table rows of ``path``'s tars, the task count they run
-    in, and the archive paths the listing found."""
-    meta = (
-        spark.read.format("binaryFile").load(path).select("path", "length").collect()
-    )
-    archives = [r["path"] for r in meta]
-    if split_bytes is not None:
-        split_bytes = spread_split_bytes(
-            spark, [int(r["length"]) for r in meta], split_bytes
-        )
-    rows: list[tuple[str, int, int]] = []
-    if exact_index:
-        for r in meta:
-            offs = [off for _, off, _ in list_tar_entries(r["path"], int(r["length"]))]
-            # one range per member, tiled at logical record starts:
-            # [off, next member's off) holds exactly the record at off,
-            # and no meta chain crosses a range end
-            ends = offs[1:] + [int(r["length"])]
-            rows.extend((r["path"], a, b) for a, b in zip(offs, ends))
-        return rows, min(len(rows), spark.sparkContext.defaultParallelism), archives
-    for r in meta:
-        p, ln = r["path"], int(r["length"])
-        gz = p.endswith(".gz") or p.endswith(".tgz")
-        if split_bytes is not None and not gz and ln > split_bytes:
-            for s in range(0, ln, split_bytes):
-                rows.append((p, s, min(s + split_bytes, ln)))
-        else:
-            rows.append((p, 0, -1))
-    return rows, len(rows), archives
-
-
-def read_docs_tar(
+def tar_splits(
     spark: SparkSession,
     path: str,
     *,
     split_bytes: int | None = 256 << 20,
     exact_index: bool = False,
-) -> DataFrame:
+) -> tuple[DataFrame, list[str]]:
+    """The split table of ``path``'s tars and the archive paths the
+    listing found, spelled as the readers' ``source_file`` column spells
+    them.
+
+    Default: one split per partition.  A tar larger than ``split_bytes``
+    (lowered to an even share of the input's bytes, as for WARC) is cut
+    into byte ranges whose tasks align on chain-verified headers, so the
+    driver reads metadata only; ``.tar.gz`` and smaller files read
+    whole-file, and ``split_bytes=None`` never splits.
+    ``exact_index=True`` walks every header on the driver
+    (seek-per-member, :func:`list_tar_entries`) and fans the members out
+    individually, one range per member tiled at logical record starts,
+    in at most default-parallelism tasks that share the members' bytes
+    about evenly: exact even for embedded-tar decoys."""
+    archives = list_archives(spark, path)
+    tasks = None
+    weights = None
+    if exact_index:
+        rows = []
+        for p, ln in archives:
+            offs = [off for _, off, _ in list_tar_entries(p, ln)]
+            # [off, next member's off) holds exactly the record at off,
+            # and no meta chain crosses a range end
+            rows += [(p, a, b) for a, b in zip(offs, offs[1:] + [ln])]
+        tasks = min(len(rows), spark.sparkContext.defaultParallelism)
+        weights = [b - a for _, a, b in rows]
+    else:
+        if split_bytes is not None:
+            split_bytes = spread_split_bytes(
+                spark, [ln for _, ln in archives], split_bytes
+            )
+        rows = [
+            r
+            for p, ln in archives
+            for r in byte_ranges(
+                p, ln, None if p.endswith((".gz", ".tgz")) else split_bytes
+            )
+        ]
+    splits = split_table(spark, rows, SPLIT_SCHEMA, tasks, weights=weights)
+    return splits, [p for p, _ in archives]
+
+
+def read_docs_tar(spark: SparkSession, path: str, **kw) -> DataFrame:
     """(archive, name, size, content) for every regular-file member of
-    every tar matching ``path``.
-
-    Default: byte-range splits with executor-side chain-verified
-    alignment — the driver reads metadata only.  ``exact_index=True``
-    walks headers on the driver (seek-per-member) and fans members out
-    individually, exact even for embedded-tar decoys.  ``.tar.gz`` and
-    files at or under split_bytes (lowered to an even share of the
-    input's bytes, as for WARC) read whole-file."""
-    rows, tasks, _ = _tar_task_rows(spark, path, split_bytes, exact_index)
-    if not rows:
-        return local_frame(spark, [], TAR_DOC_SCHEMA)
-    sizes = [b - a for _, a, b in rows] if exact_index else None
-    splits = split_table(spark, rows, SPLIT_SCHEMA, tasks, weights=sizes)
-    return map_rows(splits, _tar_split_members, TAR_DOC_SCHEMA)
-
-
-def tar_splits(spark: SparkSession, path: str) -> tuple[DataFrame, list[str]]:
-    """``read_docs_tar``'s split table (one split per partition) and the
-    archive paths its listing found, spelled as the pages'
-    ``source_file`` column spells them."""
-    rows, tasks, archives = _tar_task_rows(spark, path, 256 << 20, False)
-    return split_table(spark, rows, SPLIT_SCHEMA, tasks), archives
+    every tar matching ``path``, one task per split of
+    :func:`tar_splits` (``kw``: its ``split_bytes`` and
+    ``exact_index``)."""
+    return read_splits(tar_splits(spark, path, **kw), _tar_split_members, TAR_DOC_SCHEMA)
 
 
 def tar_split_docs(path: str, start: int, end: int) -> list[tuple]:
     """(url, html, text, source_file) of every member of one split-table
-    row, as ``read_pages_tar`` spells them: the reader half of a stage
-    that reads and extracts in one Python call per split."""
+    row, the url spelled ``tar://<archive>!<member>``: the reader half of
+    a stage that reads and extracts in one Python call per split.
+    ``html`` holds the member's bytes and ``text`` is NULL: the kernel
+    reads ``html`` whenever it is set."""
     return [
         (f"tar://{archive}!{name}", content, None, archive)
         for archive, name, _, content in _tar_split_members(path, start, end)
@@ -537,18 +531,3 @@ def write_tar_members(out, members: Iterator[tuple[str, bytes]]) -> int:
         count += 1
     out.write(b"\x00" * (BLOCK * 2))  # end-of-archive
     return count
-
-
-def read_pages_tar(spark: SparkSession, path: str, **kw) -> DataFrame:
-    """Adapt tar members to the pages contract (url/html/text):
-    url is ``tar://<archive>!<member>``, html carries the raw bytes and
-    text is NULL, as for WARC pages: the kernel reads ``html`` whenever it
-    is set, so a decoded copy would only double each member's bytes."""
-    return read_docs_tar(spark, path, **kw).select(
-        F.concat(F.lit("tar://"), F.col("archive"), F.lit("!"), F.col("name")).alias(
-            "url"
-        ),
-        F.col("content").alias("html"),
-        F.lit(None).cast("string").alias("text"),
-        F.col("archive").alias("source_file"),
-    )

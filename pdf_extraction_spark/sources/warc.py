@@ -509,66 +509,64 @@ def spread_split_bytes(spark: SparkSession, lengths: list[int], split_bytes: int
     return min(split_bytes, max(_MIN_SPREAD_BYTES, share))
 
 
-def _warc_task_rows(
-    spark: SparkSession, path: str, split_bytes: int
-) -> tuple[list[tuple[str, int, int]], list[str]]:
-    """The split-table rows of ``path``'s archives and the archive paths
-    the listing found.  The listing reads binaryFile METADATA only (path
-    + length — the content column is pruned out of the listing scan)."""
-    meta = (
-        spark.read.format("binaryFile").load(path).select("path", "length").collect()
-    )
-    split_bytes = spread_split_bytes(
-        spark, [int(r["length"]) for r in meta], split_bytes
-    )
-    # one row per task: whole files are (path, 0, -1); big archives fan
-    # out into (path, start, end) byte ranges.  All reads go through
-    # _open_binary on the listed URI — the listed paths are never fed
-    # back through a second Hadoop glob, so filenames containing glob
-    # metacharacters or literal % resolve correctly.
-    task_rows: list[tuple[str, int, int]] = []
-    for r in meta:
-        p, ln = r["path"], int(r["length"])
-        if ln > split_bytes:
-            # both layouts split: uncompressed .warc on verified record
-            # boundaries, .warc.gz on verified gzip-member boundaries
-            # (CC-style member-per-record archives; a single-member .gz
-            # degrades gracefully — the split containing offset 0 reads
-            # the whole member, the others find no boundary and emit
-            # nothing, so results match the whole-file read)
-            for s in range(0, ln, split_bytes):
-                task_rows.append((p, s, min(s + split_bytes, ln)))
-        else:
-            task_rows.append((p, 0, -1))
-    return task_rows, [r["path"] for r in meta]
+def byte_ranges(path: str, length: int, split_bytes: int | None) -> list[tuple]:
+    """The split-table rows of one archive: the whole file as
+    (path, 0, -1), or its (path, start, end) ranges of ``split_bytes``
+    each when it is longer than that."""
+    if split_bytes is None or length <= split_bytes:
+        return [(path, 0, -1)]
+    return [(path, s, min(s + split_bytes, length)) for s in range(0, length, split_bytes)]
 
 
-def read_pages_warc(
-    spark: SparkSession, path: str, *, split_bytes: int = 256 << 20
-) -> DataFrame:
-    """Pages from WARC/WARC.GZ files (glob or directory).
+def list_archives(spark: SparkSession, path: str) -> list[tuple[str, int]]:
+    """(path, length) of every file matching ``path`` (glob or
+    directory): the one listing of the archive sources.  It reads
+    binaryFile METADATA only (the content column is pruned out of the
+    listing scan); the listed URIs are opened with :func:`_open_binary`
+    and never fed back through a second Hadoop glob, so filenames
+    containing glob metacharacters or literal % resolve correctly."""
+    meta = spark.read.format("binaryFile").load(path).select("path", "length")
+    return [(r["path"], int(r["length"])) for r in meta.collect()]
 
-    Archives larger than ``split_bytes`` (or than an even share of the
-    input's bytes, see :func:`spread_split_bytes`) are read as byte-range
-    splits (record- or gzip-member-aligned), so one giant archive
-    parallelizes across the fleet; smaller files map one file to one
-    task.
-    """
-    task_rows, _ = _warc_task_rows(spark, path, split_bytes)
-    if not task_rows:
-        return local_frame(spark, [], WARC_PAGES_SCHEMA)
-    splits = split_table(spark, task_rows, SPLIT_SCHEMA)
-    return map_rows(splits, _warc_split_pages, WARC_PAGES_SCHEMA)
+
+def read_splits(listing: tuple[DataFrame, list[str]], reader, schema: StructType):
+    """``map_rows(splits, reader, schema)`` over a split lister's
+    ``(splits, archives)``; a listing that found no archive gives an
+    empty LocalTableScan, with no Python stage."""
+    splits, archives = listing
+    if not archives:
+        return local_frame(splits.sparkSession, [], schema)
+    return map_rows(splits, reader, schema)
 
 
 def warc_splits(
     spark: SparkSession, path: str, *, split_bytes: int = 256 << 20
 ) -> tuple[DataFrame, list[str]]:
-    """``read_pages_warc``'s split table (one split per partition) and
-    the archive paths its listing found, spelled as the pages'
-    ``source_file`` column spells them."""
-    task_rows, archives = _warc_task_rows(spark, path, split_bytes)
-    return split_table(spark, task_rows, SPLIT_SCHEMA), archives
+    """The split table of ``path``'s WARC archives (one split per
+    partition) and the archive paths the listing found, spelled as the
+    readers' ``source_file`` column spells them.
+
+    Whole files are (path, 0, -1).  An archive larger than
+    ``split_bytes`` (lowered to an even share of the input's bytes, see
+    :func:`spread_split_bytes`) fans out into (path, start, end) byte
+    ranges: uncompressed .warc on verified record boundaries, .warc.gz
+    on verified gzip-member boundaries (a single-member .gz degrades
+    gracefully: the split holding offset 0 reads the whole member, the
+    others find no boundary and emit nothing)."""
+    archives = list_archives(spark, path)
+    split_bytes = spread_split_bytes(spark, [ln for _, ln in archives], split_bytes)
+    rows = [r for p, ln in archives for r in byte_ranges(p, ln, split_bytes)]
+    return split_table(spark, rows, SPLIT_SCHEMA), [p for p, _ in archives]
+
+
+def read_pages_warc(
+    spark: SparkSession, path: str, *, split_bytes: int = 256 << 20
+) -> DataFrame:
+    """Pages from WARC/WARC.GZ files (glob or directory), one task per
+    split of :func:`warc_splits`, so one giant archive parallelizes
+    across the fleet while smaller files map one file to one task."""
+    listing = warc_splits(spark, path, split_bytes=split_bytes)
+    return read_splits(listing, _warc_split_pages, WARC_PAGES_SCHEMA)
 
 
 def warc_split_docs(path: str, start: int, end: int) -> list[tuple]:

@@ -9,11 +9,12 @@ the FIRST dot after the last slash, so multi-suffix parts
 
 Scale design: the SHARD is the parallelism unit — that is WebDataset's
 own contract (shards are written at ~100 MB–1 GiB precisely so a fleet
-parallelizes over them), so this reader maps one task per shard and
-streams members sequentially, grouping adjacent runs by key.  No
-shuffle: sample assembly is a per-task linear pass, and a 100 TB corpus
-is just more shards.  For a monolithic non-WebDataset tarball, use
-``read_docs_tar`` byte-range splits instead and group downstream.
+parallelizes over them), so this reader reads each shard whole in one
+task and streams its members sequentially, grouping adjacent runs by
+key.  No shuffle: sample assembly is a per-task linear pass, and a
+100 TB corpus is just more shards.  For a monolithic non-WebDataset
+tarball, use ``read_docs_tar`` byte-range splits instead and group
+downstream.
 
 Integrity: adjacency is load-bearing (it is what makes grouping
 shuffle-free), so a key that REAPPEARS non-adjacently in a shard raises
@@ -38,9 +39,14 @@ from pyspark.sql.types import (
 )
 
 from pdf_extraction_spark.operators.balance import map_rows
-from pdf_extraction_spark.session import arrow_batch, local_frame
+from pdf_extraction_spark.session import arrow_batch, split_table
 from pdf_extraction_spark.sources.tarsource import iter_tar_bytes
-from pdf_extraction_spark.sources.warc import _gunzip, _read_whole
+from pdf_extraction_spark.sources.warc import (
+    _gunzip,
+    _read_whole,
+    list_archives,
+    read_splits,
+)
 
 WDS_SAMPLE_SCHEMA = StructType(
     [
@@ -178,19 +184,21 @@ def write_webdataset(
     return [r.asDict() for r in manifest.collect()]
 
 
-def read_webdataset(
-    spark: SparkSession, path: str, parallelism: int | None = None
-) -> DataFrame:
-    """(archive, key, parts map<ext, binary>) — one row per sample, one
-    task per shard.  Listing is binaryFile metadata only."""
-    meta = (
-        spark.read.format("binaryFile").load(path).select("path").collect()
+def read_webdataset(spark: SparkSession, path: str) -> DataFrame:
+    """(archive, key, parts map<ext, binary>) — one row per sample, each
+    shard read whole by one task, in at most default-parallelism tasks
+    that share the shards' bytes about evenly.  Listing is binaryFile
+    metadata only, and the shard table has no exchange."""
+    shards = list_archives(spark, path)
+    splits = split_table(
+        spark,
+        [(p,) for p, _ in shards],
+        _PATH_SCHEMA,
+        min(len(shards), spark.sparkContext.defaultParallelism),
+        weights=[ln for _, ln in shards],
     )
-    paths = [(r["path"],) for r in meta]
-    if not paths:
-        return local_frame(spark, [], WDS_SAMPLE_SCHEMA)
-    n = parallelism or spark.sparkContext.defaultParallelism
-    sdf = local_frame(spark, paths, _PATH_SCHEMA).repartition(min(len(paths), n))
-    return map_rows(
-        sdf, lambda shard: _shard_samples(shard, _read_whole(shard)), WDS_SAMPLE_SCHEMA
+    return read_splits(
+        (splits, [p for p, _ in shards]),
+        lambda shard: _shard_samples(shard, _read_whole(shard)),
+        WDS_SAMPLE_SCHEMA,
     )

@@ -29,7 +29,7 @@ from __future__ import annotations
 import struct
 import zlib
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import (
     BinaryType,
     IntegerType,
@@ -39,9 +39,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from pdf_extraction_spark.operators.balance import map_rows
-from pdf_extraction_spark.session import local_frame, split_table
-from pdf_extraction_spark.sources.warc import _open_binary
+from pdf_extraction_spark.session import split_table
+from pdf_extraction_spark.sources.warc import _open_binary, list_archives, read_splits
 
 _EOCD_SIG = b"PK\x05\x06"
 _EOCD64_LOC_SIG = b"PK\x06\x07"
@@ -239,74 +238,38 @@ def _read_member(
     return archive, name, len(data), data
 
 
-def _zip_entry_rows(spark: SparkSession, path: str) -> tuple[list[tuple], list[str]]:
-    """One ``_ENTRY_SCHEMA`` row per member of every archive matching
-    ``path``, and the archive paths the listing found."""
-    meta = (
-        spark.read.format("binaryFile").load(path).select("path", "length").collect()
-    )
-    rows = []
-    for r in meta:
-        for name, off, csize, usize, method, crc in list_zip_entries(
-            r["path"], int(r["length"])
-        ):
-            rows.append((r["path"], name, off, csize, usize, method, crc))
-    return rows, [r["path"] for r in meta]
+def zip_splits(spark: SparkSession, path: str) -> tuple[DataFrame, list[str]]:
+    """The member table of every archive matching ``path`` (one
+    ``_ENTRY_SCHEMA`` row per member, read from each archive's central
+    directory on the driver) and the archive paths the listing found,
+    spelled as the readers' ``source_file`` column spells them.  Each
+    task gets one run of members, the runs sharing the members'
+    uncompressed bytes about evenly, so a run of giant members in one
+    archive still spreads over the tasks."""
+    archives = list_archives(spark, path)
+    rows = [
+        (p, *entry) for p, ln in archives for entry in list_zip_entries(p, ln)
+    ]
+    n = min(len(rows), spark.sparkContext.defaultParallelism)
+    splits = split_table(spark, rows, _ENTRY_SCHEMA, n, weights=[r[4] for r in rows])
+    return splits, [p for p, _ in archives]
 
 
-def _entry_table(spark: SparkSession, rows: list[tuple], parallelism: int | None):
-    """The member table: one run of members per task, the runs sharing
-    the members' uncompressed bytes about evenly, so a run of giant
-    members in one archive still spreads over the tasks."""
-    n = parallelism or spark.sparkContext.defaultParallelism
-    return split_table(
-        spark, rows, _ENTRY_SCHEMA, min(len(rows), n), weights=[r[4] for r in rows]
-    )
-
-
-def read_docs_zip(
-    spark: SparkSession, path: str, parallelism: int | None = None
-) -> DataFrame:
+def read_docs_zip(spark: SparkSession, path: str) -> DataFrame:
     """(archive, name, size, content) for every member of every archive
     matching ``path``.  The driver reads only EOCD + central directory
     per archive; member bytes are read and inflated on executors, one
     seek per member."""
-    rows, _ = _zip_entry_rows(spark, path)
-    if not rows:
-        return local_frame(spark, [], ZIP_DOC_SCHEMA)
-    return map_rows(_entry_table(spark, rows, parallelism), _read_member, ZIP_DOC_SCHEMA)
-
-
-def zip_splits(spark: SparkSession, path: str) -> tuple[DataFrame, list[str]]:
-    """``read_docs_zip``'s member table and the archive paths its listing
-    found, spelled as the pages' ``source_file`` column spells them."""
-    rows, archives = _zip_entry_rows(spark, path)
-    return _entry_table(spark, rows, None), archives
+    return read_splits(zip_splits(spark, path), _read_member, ZIP_DOC_SCHEMA)
 
 
 def zip_split_docs(
     archive: str, name: str, off: int, csize: int, usize: int, method: int, crc: int
 ) -> list[tuple]:
-    """(url, html, text, source_file) of one member-table row, as
-    ``read_pages_zip`` spells them: the reader half of a stage that reads
-    and extracts in one Python call per member."""
+    """(url, html, text, source_file) of one member-table row, the url
+    spelled ``zip://<archive>!<member>``: the reader half of a stage that
+    reads and extracts in one Python call per member.  ``html`` holds the
+    member's bytes and ``text`` is NULL: the kernel reads ``html``
+    whenever it is set."""
     _, _, _, data = _read_member(archive, name, off, csize, usize, method, crc)
     return [(f"zip://{archive}!{name}", data, None, archive)]
-
-
-def read_pages_zip(spark: SparkSession, path: str) -> DataFrame:
-    """Adapt ZIP members to the pages contract (url/html/text): url is
-    ``zip://<archive>!<member>``, html carries the raw bytes and text is
-    NULL, as for WARC pages: the kernel reads ``html`` whenever it is set,
-    so a decoded copy would only double each member's bytes."""
-    return read_docs_zip(spark, path).select(
-        F.concat(F.lit("zip://"), F.col("archive"), F.lit("!"), F.col("name")).alias(
-            "url"
-        ),
-        F.col("content").alias("html"),
-        F.lit(None).cast("string").alias("text"),
-        # lineage provenance: like the WARC source, rows come off a
-        # non-file plan where input_file_name() is empty, so the archive
-        # path rides along explicitly
-        F.col("archive").alias("source_file"),
-    )

@@ -136,14 +136,36 @@ def test_file_list_that_misses_a_file_fails_the_pass_uncommitted(
     read_input = pipeline._read_input
 
     def missing_one(*args):
-        pages, files = read_input(*args)
-        return pages, sorted(files)[1:]
+        docs, extract, files = read_input(*args)
+        return docs, extract, sorted(files)[1:]
 
     monkeypatch.setattr(pipeline, "_read_input", missing_one)
     out = str(tmp_path / "out")
     with pytest.raises(RuntimeError, match="lineage over the pass's 2 input files"):
         run_extraction(spark, src, out, input_format="warc", groups=2)
     assert committed_groups(out) == set()
+
+
+@pytest.mark.parametrize("in_pass", [True, False], ids=["in_pass", "pre_pass"])
+def test_a_tables_own_source_file_column_never_takes_over_lineage(
+    spark, pages_unit, tmp_path, monkeypatch, in_pass
+):
+    """A parquet table carrying a ``source_file`` column of its own:
+    every lineage record still names one of the table's part files,
+    whether the write job or the pre-pass aggregate counts it."""
+    table = str(tmp_path / "table")
+    spark.read.parquet(pages_unit).withColumn(
+        "source_file", F.lit("file:///elsewhere/seg-0.warc.gz")
+    ).repartition(3).write.parquet(table)
+    parts = {f"file://{p}" for p in glob.glob(os.path.join(table, "part-0000*"))}
+    assert len(parts) == 3
+    if not in_pass:
+        monkeypatch.setattr(pipeline, "_IN_PASS_LINEAGE_KEYS", 0)
+    out = str(tmp_path / "out")
+    run_extraction(spark, table, out, groups=3)
+    records = [r for m in _pass_files(out).values() for r in m["lineage"]]
+    assert {r["input_file"] for r in records} <= parts
+    assert sum(r["n_rows"] for r in records) == 200
 
 
 def test_pass_jobs_are_described_and_the_callers_description_restored(

@@ -1,9 +1,8 @@
 """The file-splitting sources plan their split table in the JVM: the
-warc, zip and tar tables as a sliced ``Range`` whose partition i holds
-split i (no exchange, no job before the read), the webdataset table and
-empty listings as a LocalTableScan; no Python task runs before the
-source's own read.  The archive page adapters carry each member's bytes
-once."""
+warc, zip, tar and webdataset tables as a sliced ``Range`` whose
+partition i holds split i (no exchange, no job before the read), empty
+listings as a LocalTableScan; no Python task runs before the source's
+own read.  The archive split readers carry each member's bytes once."""
 
 from __future__ import annotations
 
@@ -24,11 +23,11 @@ from pyspark.sql.types import (
 )
 
 from pdf_extraction_spark.operators.balance import map_rows
-from pdf_extraction_spark.plans.pipeline import _DOCS_SCHEMA
 from pdf_extraction_spark.session import split_table
+from pdf_extraction_spark.sources.pages import DOCS_SCHEMA
 from pdf_extraction_spark.sources.tarsource import (
     read_docs_tar,
-    read_pages_tar,
+    tar_split_docs,
     tar_splits,
     write_tar_members,
 )
@@ -41,17 +40,15 @@ from pdf_extraction_spark.sources.warc import (
 from pdf_extraction_spark.sources.webdataset import read_webdataset
 from pdf_extraction_spark.sources.zipsource import (
     read_docs_zip,
-    read_pages_zip,
+    zip_split_docs,
     zip_splits,
 )
 
 
-def _assert_local_scan(df, partitions=None):
+def _assert_local_scan(df):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "LocalTableScan" in plan, plan
     assert "ExistingRDD" not in plan, plan
-    if partitions is not None:
-        assert f"RoundRobinPartitioning({partitions})" in plan, plan
 
 
 def _assert_split_range(df, partitions):
@@ -188,7 +185,7 @@ def test_giant_archive_spreads_over_the_pipeline_split_table(spark, tmp_path):
     assert [(r["start"], r["end"]) for r in small] == [(0, -1)]
     big = [r for r in rows if r["path"].endswith("giant.warc.gz")]
     assert len(big) >= spark.sparkContext.defaultParallelism
-    docs = map_rows(splits, warc_split_docs, _DOCS_SCHEMA).collect()
+    docs = map_rows(splits, warc_split_docs, DOCS_SCHEMA).collect()
     assert sorted(d["url"] for d in docs) == sorted(u for u, _, _ in giant) + [
         f"http://s.example/{j}" for j in range(3)
     ]
@@ -217,14 +214,14 @@ def test_tar_pipeline_split_table_is_one_split_per_task(spark, tmp_path):
     assert sorted(r[0] for r in got) == sorted(archives)
 
 
-def test_webdataset_shard_table_is_a_local_scan(spark, tmp_path):
+def test_webdataset_shard_table_is_one_shard_per_task(spark, tmp_path):
     for s in range(3):
         _write_tar(
             tmp_path / f"shard-{s}.tar",
             [(f"k{s}-{i}.{ext}", b"x") for i in range(2) for ext in ("txt", "json")],
         )
     samples = read_webdataset(spark, str(tmp_path / "*.tar"))
-    _assert_local_scan(samples, 3)
+    _assert_split_range(samples, 3)
     assert samples.count() == 6
 
 
@@ -256,10 +253,10 @@ def test_archive_pages_carry_member_bytes_once(spark, tmp_path, fmt):
         with zipfile.ZipFile(path, "w") as z:
             for name, body in members:
                 z.writestr(name, body)
-        pages = read_pages_zip(spark, path)
+        pages = map_rows(zip_splits(spark, path)[0], zip_split_docs, DOCS_SCHEMA)
     else:
         _write_tar(path, members)
-        pages = read_pages_tar(spark, path)
+        pages = map_rows(tar_splits(spark, path)[0], tar_split_docs, DOCS_SCHEMA)
     plan = pages._jdf.queryExecution().optimizedPlan().toString()
     assert "makevalid" not in plan.lower().replace("_", ""), plan
     rows = pages.collect()

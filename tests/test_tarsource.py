@@ -17,6 +17,8 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from pdf_extraction_spark.operators.balance import map_rows
+from pdf_extraction_spark.sources.pages import DOCS_SCHEMA
 from pdf_extraction_spark.sources.tarsource import (
     BLOCK,
     _BlockReader,
@@ -24,7 +26,8 @@ from pdf_extraction_spark.sources.tarsource import (
     _parse_header,
     list_tar_entries,
     read_docs_tar,
-    read_pages_tar,
+    tar_split_docs,
+    tar_splits,
 )
 
 
@@ -325,8 +328,8 @@ def test_spark_read_docs_tar_split_and_exact(spark, tmp_path):
         df = read_docs_tar(spark, p, **kw)
         rows = sorted((r["name"], bytes(r["content"])) for r in df.collect())
         assert rows == expect, kw
-    # pages adapter contract
-    pages = read_pages_tar(spark, p, split_bytes=2048)
+    # the split reader's documents, as the pipeline reads them
+    pages = map_rows(tar_splits(spark, p, split_bytes=2048)[0], tar_split_docs, DOCS_SCHEMA)
     assert set(pages.columns) == {"url", "html", "text", "source_file"}
     one = pages.filter(pages.url.endswith("tail.txt")).collect()
     assert len(one) == 1 and bytes(one[0]["html"]) == b"last member"

@@ -9,11 +9,14 @@ import zipfile
 
 import pytest
 
+from pdf_extraction_spark.operators.balance import map_rows
+from pdf_extraction_spark.sources.pages import DOCS_SCHEMA
 from pdf_extraction_spark.sources.zipsource import (
     list_zip_entries,
     read_docs_zip,
-    read_pages_zip,
     read_zip_member,
+    zip_split_docs,
+    zip_splits,
 )
 
 
@@ -158,7 +161,7 @@ def test_spark_pages_contract(spark, tmp_path):
         str(d / "p.zip"),
         [("doc1.txt", "hello zip world".encode(), zipfile.ZIP_DEFLATED)],
     )
-    pages = read_pages_zip(spark, str(d))
+    pages = map_rows(zip_splits(spark, str(d))[0], zip_split_docs, DOCS_SCHEMA)
     validate_pages_schema(pages)
     row = pages.collect()[0]
     assert row["url"].startswith("zip://") and row["url"].endswith("!doc1.txt")
